@@ -23,8 +23,8 @@ object Tables {
     * join analysis) and every action still scans the parquet. Keyed by
     * session identity because the inferred schema is conf-dependent
     * (nanosAsLong); entries are struct-sized. Only the immutable
-    * driver testdata goes through here — the ETL sink/runner re-reads
-    * of freshly WRITTEN scratch dirs stay on direct
+    * driver testdata goes through here — the ETL sink's reads of
+    * freshly WRITTEN scratch dirs stay on direct
     * `spark.read.parquet` (their files change under the path). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), org.apache.spark.sql.types.StructType]()

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** The Adult Cancer Survival ("Table 4") pipeline — reference
   * src/main.py:222-376 as one lazy chain: filters → carve → stamps →
-  * 5 generalisation unions → unpivot → metric-name cleanup → load
-  * projection. Still shuffle-free (unions and unpivot are narrow); the
-  * unpivot doubles rows, which at 100 TB argues for keeping it late —
+  * 5 generalisation rules → unpivot → metric-name cleanup → load
+  * projection. Shuffle-free and union-free: each rule is one explode
+  * (see [[Ops.duplicateWhere]]), so the plan scans the staged sheet once.
+  * The unpivot doubles rows, which at 100 TB argues for keeping it late —
   * as the reference does — so upstream filters run on the narrow table.
   */
 object Adult4Pipeline {

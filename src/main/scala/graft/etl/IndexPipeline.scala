@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The Cancer Survival Index ("Table 5") pipeline — a faithful, lazy
   * re-expression of reference src/main.py:108-219 as one narrow DataFrame
-  * chain (no shuffle anywhere: filters, derivations, one union, final
-  * projection — a single whole-stage-codegen pipeline ending at the sink).
+  * chain (no shuffle and no union anywhere: filters, derivations, an
+  * in-place replace, final projection — one scan of the staged sheet in a
+  * single whole-stage-codegen pipeline ending at the sink).
   */
 object IndexPipeline {
 

@@ -5,34 +5,43 @@ import org.apache.spark.sql.functions._
 
 /** Reusable operator combinators — the reference's signature moves
   * (SURVEY.md §2.3) as thin, composable functions over DataFrames. All are
-  * narrow ops (filter/project/union): no shuffle, one codegen stage.
+  * narrow ops (filter/project/explode): no shuffle, no union, one codegen
+  * stage over one scan of the source.
   */
 object Ops {
 
+  /** Row-local flag column of the generalisation rules; never survives a
+    * rule. */
+  private val Hit = "__generalise_hit"
+
+  /** Apply `overrides` in order to the rows where column [[Hit]] is true,
+    * leaving other rows as they are — a later override sees the earlier
+    * ones, as a chain of `withColumn` calls on the copies would. */
+  private def overrideHits(df: DataFrame, overrides: Map[String, Column]): DataFrame =
+    overrides.foldLeft(df) { case (acc, (c, v)) =>
+      acc.withColumn(c, when(col(Hit), v).otherwise(col(c)))
+    }.drop(Hit)
+
   /** R1 — generalise-and-keep (reference src/main.py:98-105): copy the rows
     * matching `pred`, overwrite columns per `overrides`, append the copies;
-    * originals are KEPT. */
+    * originals are KEPT. One explode of [original, copy-if-pred] instead of
+    * a filtered second scan and a union: a chain of rules reads the source
+    * once, and each rule still sees the copies of the rules before it. */
   def duplicateWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame = {
-    val dupe = overrides.foldLeft(df.filter(pred)) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
-    }
-    df.unionByName(dupe)
+    val tagged = df.withColumn(Hit,
+      explode(when(pred <=> true, array(lit(false), lit(true))).otherwise(array(lit(false)))))
+    overrideHits(tagged, overrides)
   }
 
   /** R2 — generalise-and-replace (reference src/main.py:136-146): like
     * [[duplicateWhere]] but the matching originals are REMOVED — the
     * deliberate asymmetry between the Index pipeline's Breast handling and
-    * the Adult pipeline's gender generalisation. */
-  def replaceWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame = {
-    val dupe = overrides.foldLeft(df.filter(pred)) {
-      case (acc, (c, v)) => acc.withColumn(c, v)
-    }
-    // !(pred <=> true), not !pred: under three-valued logic a NULL cell makes
-    // !pred NULL and filter() would silently DROP the row, where the
-    // reference's pandas ~((..)&(..)) keeps NaN rows. Null-safe equality
-    // keeps the keep-side semantics identical on blank workbook cells.
-    df.filter(!(pred <=> true)).unionByName(dupe)
-  }
+    * the Adult pipeline's gender generalisation. Replacing a row in place is
+    * one projection. `pred <=> true`, not `pred`: under three-valued logic a
+    * NULL cell makes the predicate NULL, and the reference's pandas
+    * ~((..)&(..)) keeps such NaN rows unchanged. */
+  def replaceWhere(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame =
+    overrideHits(df.withColumn(Hit, pred <=> true), overrides)
 
   /** Gender generalisation for a gender-exclusive cancer site (reference
     * src/main.py:98-105): add a "Persons" copy of (site, baseGender) rows. */

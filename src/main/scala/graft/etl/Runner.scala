@@ -1,13 +1,19 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.ops.Metrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.current_timestamp
+import scala.util.Try
 
 /** Batch orchestration — the engine's equivalent of the reference's
   * `main()` (reference src/main.py:378-422): enumerate the staging
   * directory, dispatch each workbook on its filename prefix, run the
   * matching pipeline with its filename/notes-derived stamps, and
   * atomically (over)write the two modelling tables. One Spark job per
-  * sink write; everything upstream stays one lazy plan per file.
+  * sink write; everything upstream stays one lazy plan per file, and the
+  * row count each [[LoadResult]] reports is observed during that write
+  * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
+  * table back. An xlsx workbook is opened once per load.
   */
 object Runner {
 
@@ -50,21 +56,22 @@ object Runner {
       targetGeographies: Seq[String] = Schemas.defaultTargetGeographies,
       destinations: Destinations = Destinations(),
       sinkMode: SinkMode = StagedOverwrite): Seq[LoadResult] = {
-    def publish(df: org.apache.spark.sql.DataFrame, dest: String): Long = sinkMode match {
-      case StagedOverwrite =>
-        Sink.overwriteTable(df, dest)
-        spark.read.parquet(dest).count()
-      case ManifestPointer =>
-        Sink.Manifest.overwrite(spark, dest,
-          df.withColumn("_TIMESTAMP", org.apache.spark.sql.functions.current_timestamp()))
-        Sink.Manifest.read(spark, dest).count()
+    def publish(df: DataFrame, dest: String): Long = {
+      val (observed, obs) = Metrics.audited(df, observationName(dest), Nil)
+      sinkMode match {
+        case StagedOverwrite => Sink.overwriteTable(observed, dest)
+        case ManifestPointer =>
+          Sink.Manifest.overwrite(spark, dest, observed.withColumn("_TIMESTAMP", current_timestamp()))
+      }
+      obs.get("n_rows").asInstanceOf[Long]
     }
     Ingest.listStaged(stagingDir).flatMap { path =>
       val name = path.getFileName.toString
+      val xlsx = name.endsWith(".xlsx")
       Ingest.dispatch(name) match {
         case Ingest.IndexFile =>
           val raw =
-            if (name.endsWith(".xlsx"))
+            if (xlsx)
               Staging.readXlsxSheet(spark, path.toString, "Table 5", Schemas.rawIndexSheet, skipRows = 10)
             else
               Staging.readSheet(spark, path.toString, Schemas.rawIndexSheet, skipRows = 10)
@@ -73,20 +80,12 @@ object Runner {
           Some(LoadResult(name, "index", dest, publish(out, dest)))
 
         case Ingest.AdultFile =>
-          // reference src/main.py:80-84: skiprows=10 makes sheet row 11 the
-          // HEADER, so iloc[0,0] is the first cell of row 12 → drop 11 here
-          val snapshot =
-            if (name.endsWith(".xlsx"))
-              scala.util.Try(
-                Xlsx.readSheet(path.toString, "Notes and definitions")
-                  .drop(11).headOption.flatMap(_.headOption.flatten))
-                .toOption.flatten.flatMap(Ingest.snapshotDate)
-            else None
-          val raw =
-            if (name.endsWith(".xlsx"))
-              Staging.readXlsxSheet(spark, path.toString, "Table 4", Schemas.rawAdultSheet, skipRows = 9)
-            else
-              Staging.readSheet(spark, path.toString, Schemas.rawAdultSheet, skipRows = 9)
+          val (raw, snapshot) =
+            if (xlsx) Xlsx.withWorkbook(path.toString) { wb =>
+              (Staging.readXlsxSheet(spark, wb, "Table 4", Schemas.rawAdultSheet, skipRows = 9),
+                notesSnapshot(wb))
+            }
+            else (Staging.readSheet(spark, path.toString, Schemas.rawAdultSheet, skipRows = 9), None)
           val out = Adult4Pipeline(raw, targetGeographies, Ingest.diagnosisWindow(name), snapshot)
           val dest = s"$outDir/${destinations.adult4}"
           Some(LoadResult(name, "adult4", dest, publish(out, dest)))
@@ -95,4 +94,17 @@ object Runner {
       }
     }
   }
+
+  /** A name no other load's observation shares, so two loads in one
+    * session never read each other's counts. */
+  private[etl] def observationName(dest: String): String =
+    s"load:$dest:${java.util.UUID.randomUUID()}"
+
+  /** The snapshot date on the Notes sheet (reference src/main.py:80-84):
+    * skiprows=10 makes sheet row 11 the HEADER, so iloc[0,0] is the first
+    * cell of row 12. None when the sheet or the date is missing (the
+    * reference's warning path); the rest of the sheet is not read. */
+  private def notesSnapshot(wb: Xlsx.Workbook): Option[String] =
+    Try(wb.rows("Notes and definitions").drop(11).nextOption().flatMap(_.headOption).flatMap(Option(_)))
+      .toOption.flatten.flatMap(Ingest.snapshotDate)
 }

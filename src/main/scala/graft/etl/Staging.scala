@@ -49,9 +49,21 @@ object Staging {
       path: String,
       sheetName: String,
       schema: StructType,
+      skipRows: Int): DataFrame =
+    Xlsx.withWorkbook(path)(readXlsxSheet(spark, _, sheetName, schema, skipRows))
+
+  /** As above, through an open workbook, so several sheets of one file
+    * share its sheet index and shared strings. The CSV lines are built
+    * straight from the row stream; the frame holds them, so the workbook
+    * may be closed once this returns. */
+  def readXlsxSheet(
+      spark: SparkSession,
+      workbook: Xlsx.Workbook,
+      sheetName: String,
+      schema: StructType,
       skipRows: Int): DataFrame = {
     import spark.implicits._
-    val lines = Xlsx.toCsvLines(Xlsx.readSheet(path, sheetName).drop(skipRows))
+    val lines = workbook.rows(sheetName).drop(skipRows).map(Xlsx.csvLine).toVector
     spark.read
       .schema(schema)
       .option("header", "true")

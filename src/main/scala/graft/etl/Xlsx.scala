@@ -1,10 +1,8 @@
 package graft.etl
 
-import java.io.InputStream
-import java.nio.charset.StandardCharsets
 import java.util.zip.ZipFile
-import scala.collection.mutable
-import scala.util.matching.Regex
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import scala.collection.mutable.ArrayBuffer
 
 /** Dependency-free XLSX sheet reader (driver-side).
   *
@@ -18,6 +16,13 @@ import scala.util.matching.Regex
   * from the A1-style cell references (absent cells stay empty, like
   * pandas' NaN).
   *
+  * Each part is read in one streaming StAX pass over its zip entry, so a
+  * sheet is never held as text; DTDs and external entities are off (a
+  * workbook is untrusted input). Text follows openpyxl: character
+  * references decode, rich-text runs join, phonetic (<rPh>) runs are
+  * skipped. A [[Workbook]] handle parses the sheet index and the shared
+  * strings once, for every sheet read through it.
+  *
   * Scope: values only — formulas read their cached <v>, styles/dates come
   * back as the stored literal. That is exactly what the reference's sheets
   * contain. Parsing is driver-side by design: source discovery and staging
@@ -25,122 +30,270 @@ import scala.util.matching.Regex
   */
 object Xlsx {
 
-  private val cellRe: Regex =
-    """(?s)<c\b([^>]*)(?:/>|>(.*?)</c>)""".r
-  private val rowRe: Regex = """(?s)<row\b([^>]*)>(.*?)</row>|<row\b([^>]*)/>""".r
-  private val rowNumRe: Regex = """r="(\d+)"""".r
-  private val vRe: Regex = """(?s)<v[^>]*>(.*?)</v>""".r
-  private val tRe: Regex = """(?s)<t[^>]*>(.*?)</t>""".r
-  private val refRe: Regex = """r="([A-Z]+)(\d+)"""".r
-  private val typeRe: Regex = """t="([^"]+)"""".r
+  private val NoCells = new Array[String](0)
 
-  private def unescape(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">").replace("&quot;", "\"")
-      .replace("&apos;", "'").replace("&amp;", "&")
-
-  private def colIndex(ref: String): Int =
-    ref.foldLeft(0)((acc, c) => acc * 26 + (c - 'A' + 1)) - 1
-
-  private def slurp(zip: ZipFile, name: String): Option[String] = {
-    Option(zip.getEntry(name)).map { e =>
-      val in: InputStream = zip.getInputStream(e)
-      try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
+  private def colIndex(ref: String): Int = {
+    var acc = 0
+    var i = 0
+    while (i < ref.length && ref.charAt(i) >= 'A' && ref.charAt(i) <= 'Z') {
+      acc = acc * 26 + (ref.charAt(i) - 'A' + 1)
+      i += 1
     }
+    acc - 1
+  }
+
+  /** Element name without its namespace prefix (the parser is not
+    * namespace-aware, so `x:row` arrives whole). */
+  private def local(r: XMLStreamReader): String = {
+    val n = r.getLocalName
+    val i = n.indexOf(':')
+    if (i < 0) n else n.substring(i + 1)
+  }
+
+  /** Value of the unprefixed attribute `name`, or null. */
+  private def attr(r: XMLStreamReader, name: String): String = {
+    var i = 0
+    while (i < r.getAttributeCount) {
+      val p = r.getAttributePrefix(i)
+      if ((p == null || p.isEmpty) && r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
+      i += 1
+    }
+    null
+  }
+
+  /** Text of the `<t>` runs inside the current element (`<si>` or `<is>`),
+    * joined, skipping phonetic `<rPh>` runs; null when there is no run.
+    * Leaves the reader on the element's end tag. */
+  private def runText(r: XMLStreamReader): String = {
+    var sb: java.lang.StringBuilder = null
+    var depth = 1
+    var phonetic = 0
+    while (depth > 0) {
+      r.next() match {
+        case XMLStreamConstants.START_ELEMENT =>
+          local(r) match {
+            case "t" if phonetic == 0 =>
+              if (sb == null) sb = new java.lang.StringBuilder
+              sb.append(r.getElementText)
+            case "rPh" => phonetic += 1; depth += 1
+            case _ => depth += 1
+          }
+        case XMLStreamConstants.END_ELEMENT =>
+          if (local(r) == "rPh") phonetic -= 1
+          depth -= 1
+        case _ =>
+      }
+    }
+    if (sb == null) null else sb.toString
+  }
+
+  /** An opened workbook. Close it to release the zip. */
+  final class Workbook(val path: String) extends AutoCloseable {
+    private val zip = new ZipFile(path)
+    // per handle: a factory is configured once and then only read
+    private val factory = {
+      val f = XMLInputFactory.newDefaultFactory()
+      f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+      // prefixes are matched by hand: hand-made workbooks write r:id
+      // without declaring the namespace
+      f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
+      f
+    }
+
+    private def open(name: String): Option[XMLStreamReader] =
+      Option(zip.getEntry(name)).map(e => factory.createXMLStreamReader(zip.getInputStream(e)))
+
+    /** Run `f` over each start tag of a part; None when the part is absent. */
+    private def scan(name: String)(f: XMLStreamReader => Unit): Option[Unit] =
+      open(name).map { r =>
+        try while (r.hasNext) if (r.next() == XMLStreamConstants.START_ELEMENT) f(r)
+        finally r.close()
+      }
+
+    /** (sheet name, part path) in workbook order. */
+    private lazy val sheets: IndexedSeq[(String, String)] = {
+      val named = ArrayBuffer.empty[(String, String)]
+      scan("xl/workbook.xml") { r =>
+        if (local(r) == "sheet") {
+          var name, rid: String = null
+          var i = 0
+          while (i < r.getAttributeCount) {
+            val p = r.getAttributePrefix(i)
+            r.getAttributeLocalName(i) match {
+              case "name" if p == null || p.isEmpty => name = r.getAttributeValue(i)
+              case "id" if p != null && p.nonEmpty => rid = r.getAttributeValue(i)
+              case _ =>
+            }
+            i += 1
+          }
+          if (name != null) named += name -> rid
+        }
+      }.getOrElse(throw new IllegalArgumentException(s"$path: not an xlsx (no xl/workbook.xml)"))
+      val targets = scala.collection.mutable.Map.empty[String, String]
+      scan("xl/_rels/workbook.xml.rels") { r =>
+        if (local(r) == "Relationship") {
+          val id = attr(r, "Id")
+          val target = attr(r, "Target")
+          if (id != null && target != null) targets.getOrElseUpdate(id, target)
+        }
+      }
+      named.map { case (name, rid) =>
+        name -> targets.get(rid).map(t => if (t.startsWith("/")) t.drop(1) else s"xl/$t").orNull
+      }.toIndexedSeq
+    }
+
+    def sheetNames: Seq[String] = sheets.map(_._1)
+
+    /** The shared-string table (empty when the workbook has none). */
+    private[etl] lazy val sharedStrings: Array[String] = {
+      val out = ArrayBuffer.empty[String]
+      scan("xl/sharedStrings.xml") { r =>
+        if (local(r) == "si") out += Option(runText(r)).getOrElse("")
+      }
+      out.toArray
+    }
+
+    private def sheetPart(sheetName: String): String = {
+      val part = sheets.collectFirst { case (n, p) if n == sheetName => p }
+        .getOrElse(throw new IllegalArgumentException(s"sheet '$sheetName' not found in $path"))
+      if (part == null) throw new IllegalArgumentException(s"no relationship for sheet '$sheetName'")
+      part
+    }
+
+    /** The sheet's rows in one streaming pass, positionally aligned: row i
+      * of the iterator is sheet row i+1 and cell j is column j, null when
+      * absent. Excel omits fully-empty rows from the XML entirely; each
+      * row's r attribute is honored and the gaps come back as empty rows,
+      * or every positional consumer (skiprows, the Notes iloc[0,0] chain)
+      * would shift — pandas read_excel counts blank rows and so must we.
+      * A returned array is not reused. */
+    def rows(sheetName: String): Iterator[Array[String]] = {
+      val part = sheetPart(sheetName)
+      val r = open(part).getOrElse(throw new IllegalArgumentException(s"missing $part"))
+      new Iterator[Array[String]] {
+        private var emitted = 0
+        private var pending: Array[String] = null
+        private var pendingIdx = 0
+        private var done = false
+        private val idxBuf = ArrayBuffer.empty[Int]
+        private val valBuf = ArrayBuffer.empty[String]
+
+        /** Move to the next <row> and parse it into `pending`. */
+        private def advance(): Unit = {
+          while (!done && pending == null) {
+            if (!r.hasNext) { done = true; r.close() }
+            else r.next() match {
+              case XMLStreamConstants.START_ELEMENT if local(r) == "row" =>
+                val rn = attr(r, "r")
+                pendingIdx = if (rn != null) rn.trim.toInt - 1 else emitted
+                pending = readRow()
+              case XMLStreamConstants.END_ELEMENT if local(r) == "sheetData" =>
+                done = true; r.close()
+              case _ =>
+            }
+          }
+        }
+
+        private def readRow(): Array[String] = {
+          idxBuf.clear(); valBuf.clear()
+          var nextIdx = 0
+          var inRow = true
+          while (inRow) r.next() match {
+            case XMLStreamConstants.START_ELEMENT if local(r) == "c" =>
+              val ref = attr(r, "r")
+              val idx = if (ref != null) colIndex(ref) else nextIdx
+              nextIdx = idx + 1
+              val v = readCell(attr(r, "t"))
+              if (v != null) { idxBuf += idx; valBuf += v }
+            case XMLStreamConstants.END_ELEMENT if local(r) == "row" => inRow = false
+            case _ =>
+          }
+          if (idxBuf.isEmpty) NoCells
+          else {
+            val out = new Array[String](idxBuf.max + 1)
+            var i = 0
+            while (i < idxBuf.length) { out(idxBuf(i)) = valBuf(i); i += 1 }
+            out
+          }
+        }
+
+        /** The value of the current <c>, null when it has none; leaves the
+          * reader on </c>. */
+        private def readCell(t: String): String = {
+          var value: String = null
+          var inCell = true
+          while (inCell) r.next() match {
+            case XMLStreamConstants.START_ELEMENT =>
+              local(r) match {
+                case "v" if t != "inlineStr" =>
+                  val v = r.getElementText
+                  value = if (t == "s") sharedStrings(v.trim.toInt) else v
+                case "is" if t == "inlineStr" => value = runText(r)
+                case _ => skip()
+              }
+            case XMLStreamConstants.END_ELEMENT => inCell = false
+            case _ =>
+          }
+          value
+        }
+
+        /** Skip the current element and its children. */
+        private def skip(): Unit = {
+          var depth = 1
+          while (depth > 0) r.next() match {
+            case XMLStreamConstants.START_ELEMENT => depth += 1
+            case XMLStreamConstants.END_ELEMENT => depth -= 1
+            case _ =>
+          }
+        }
+
+        override def hasNext: Boolean = {
+          if (pending == null) advance()
+          pending != null
+        }
+
+        override def next(): Array[String] = {
+          if (!hasNext) throw new NoSuchElementException("no more rows")
+          emitted += 1
+          if (emitted <= pendingIdx) NoCells
+          else { val row = pending; pending = null; row }
+        }
+      }
+    }
+
+    /** Read one sheet as rows of optional cell strings (see [[rows]]). */
+    def readSheet(sheetName: String): Seq[Seq[Option[String]]] =
+      rows(sheetName).map(cells => cells.toSeq.map(Option(_))).toVector
+
+    override def close(): Unit = zip.close()
+  }
+
+  /** Open `path`, run `f`, close. */
+  def withWorkbook[T](path: String)(f: Workbook => T): T = {
+    val wb = new Workbook(path)
+    try f(wb) finally wb.close()
   }
 
   /** Sheet names in workbook order. */
-  def sheetNames(path: String): Seq[String] = {
-    val zip = new ZipFile(path)
-    try {
-      val wb = slurp(zip, "xl/workbook.xml").getOrElse("")
-      """<sheet\b[^>]*name="([^"]*)"""".r.findAllMatchIn(wb).map(m => unescape(m.group(1))).toSeq
-    } finally zip.close()
-  }
+  def sheetNames(path: String): Seq[String] = withWorkbook(path)(_.sheetNames)
 
   /** Read one sheet as rows of optional cell strings, positionally aligned
     * (row i, column j); absent cells are None. */
-  def readSheet(path: String, sheetName: String): Seq[Seq[Option[String]]] = {
-    val zip = new ZipFile(path)
-    try {
-      val wb = slurp(zip, "xl/workbook.xml").getOrElse(
-        throw new IllegalArgumentException(s"$path: not an xlsx (no xl/workbook.xml)"))
-      // match each <sheet> element first, then pull name and r:id with
-      // independent attribute regexes — non-Excel producers emit the two
-      // attributes in either order (mirrors the Relationship fallback below)
-      val nameAttr = """name="([^"]*)"""".r
-      val ridAttr = """r:id="([^"]*)"""".r
-      val rid = """<sheet\b[^>]*/?>""".r
-        .findAllIn(wb)
-        .flatMap { el =>
-          for {
-            n <- nameAttr.findFirstMatchIn(el).map(m => unescape(m.group(1)))
-            r <- ridAttr.findFirstMatchIn(el).map(_.group(1))
-          } yield (n, r)
-        }
-        .collectFirst { case (n, r) if n == sheetName => r }
-        .getOrElse(throw new IllegalArgumentException(s"sheet '$sheetName' not found in $path"))
-      val rels = slurp(zip, "xl/_rels/workbook.xml.rels").getOrElse("")
-      val target = (s"""<Relationship\\b[^>]*Id="$rid"[^>]*Target="([^"]*)"""").r
-        .findFirstMatchIn(rels).map(_.group(1))
-        .orElse((s"""<Relationship\\b[^>]*Target="([^"]*)"[^>]*Id="$rid"""").r
-          .findFirstMatchIn(rels).map(_.group(1)))
-        .getOrElse(throw new IllegalArgumentException(s"no relationship for $rid"))
-      val sheetPath = if (target.startsWith("/")) target.drop(1) else s"xl/$target"
-      val shared: IndexedSeq[String] = slurp(zip, "xl/sharedStrings.xml") match {
-        case Some(ss) =>
-          """(?s)<si>(.*?)</si>""".r.findAllMatchIn(ss)
-            .map(m => tRe.findAllMatchIn(m.group(1)).map(t => unescape(t.group(1))).mkString)
-            .toIndexedSeq
-        case None => IndexedSeq.empty
-      }
-      val xml = slurp(zip, sheetPath).getOrElse(
-        throw new IllegalArgumentException(s"missing $sheetPath"))
+  def readSheet(path: String, sheetName: String): Seq[Seq[Option[String]]] =
+    withWorkbook(path)(_.readSheet(sheetName))
 
-      // Excel omits fully-empty rows from the XML entirely; honor each row's
-      // r attribute and pad the gaps, or every positional consumer
-      // (skiprows, the Notes iloc[0,0] chain) would shift — pandas
-      // read_excel counts blank rows and so must we.
-      val out = mutable.ArrayBuffer.empty[Seq[Option[String]]]
-      rowRe.findAllMatchIn(xml).foreach { rm =>
-        val rowAttrs = Option(rm.group(1)).orElse(Option(rm.group(3))).getOrElse("")
-        val rowXml = Option(rm.group(2)).getOrElse("")
-        val targetIdx = rowNumRe.findFirstMatchIn(rowAttrs)
-          .map(_.group(1).toInt - 1).getOrElse(out.length)
-        while (out.length < targetIdx) out += Seq.empty[Option[String]]
-        val cells = mutable.ArrayBuffer.empty[(Int, String)]
-        var nextIdx = 0
-        cellRe.findAllMatchIn(rowXml).foreach { cm =>
-          val attrs = cm.group(1)
-          val body = Option(cm.group(2)).getOrElse("")
-          val idx = refRe.findFirstMatchIn(attrs).map(m => colIndex(m.group(1))).getOrElse(nextIdx)
-          nextIdx = idx + 1
-          val t = typeRe.findFirstMatchIn(attrs).map(_.group(1)).getOrElse("")
-          val value: Option[String] = t match {
-            case "s" => vRe.findFirstMatchIn(body).map(m => shared(unescape(m.group(1)).trim.toInt))
-            case "inlineStr" => tRe.findFirstMatchIn(body).map(m => unescape(m.group(1)))
-            case _ => vRe.findFirstMatchIn(body).map(m => unescape(m.group(1)))
-          }
-          value.foreach(v => cells += idx -> v)
-        }
-        out += (if (cells.isEmpty) Seq.empty[Option[String]]
-        else {
-          val width = cells.map(_._1).max + 1
-          val arr = Array.fill[Option[String]](width)(None)
-          cells.foreach { case (i, v) => arr(i) = Some(v) }
-          arr.toSeq
-        })
-      }
-      out.toSeq
-    } finally zip.close()
-  }
-
-  /** Stage a sheet to CSV text lines (RFC-4180 quoting), the hand-off point
-    * into [[Staging.readSheet]] / `spark.read.csv`. */
-  def toCsvLines(rows: Seq[Seq[Option[String]]]): Seq[String] = {
-    def quote(v: String): String =
-      if (v.exists(c => c == ',' || c == '"' || c == '\n')) "\"" + v.replace("\"", "\"\"") + "\""
+  /** One row of cells (null = absent) as a CSV line (RFC-4180 quoting),
+    * the hand-off point into `spark.read.csv`. */
+  def csvLine(cells: Array[String]): String =
+    cells.iterator.map { v =>
+      if (v == null) ""
+      else if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
+        "\"" + v.replace("\"", "\"\"") + "\""
       else v
-    rows.map(_.map(c => quote(c.getOrElse(""))).mkString(","))
-  }
+    }.mkString(",")
+
+  /** Stage collected rows to CSV text lines (see [[csvLine]]). */
+  def toCsvLines(rows: Seq[Seq[Option[String]]]): Seq[String] =
+    rows.map(r => csvLine(r.map(_.orNull).toArray))
 }

@@ -312,7 +312,7 @@ object EtlQueries {
     (s, d) => Views.reportingIndex(indexTable(s, d))
   }
 
-  /** Full Adult pipeline output (carve, stamps, 5 generalisation unions,
+  /** Full Adult pipeline output (carve, stamps, 5 generalisation rules,
     * unpivot with kept nulls, metric renames). */
   val etlAdult4 = QuerySpec(
     "q_etl_adult4",

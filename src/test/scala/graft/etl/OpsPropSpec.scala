@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -18,6 +19,26 @@ class OpsPropSpec extends SparkSpec {
   private val sites = Gen.oneOf("Breast", "Larynx", "Lung", "Ovary")
   private val genders = Gen.oneOf("Persons", "Male", "Female")
   private val rowGen = for { s <- sites; g <- genders; v <- Gen.choose(0L, 99L) } yield (s, g, v)
+  /** Blank workbook cells too: a null site or gender makes a rule's
+    * predicate NULL. */
+  private val nullableRowGen = for {
+    s <- Gen.frequency(5 -> sites.map(x => x: String), 1 -> Gen.const(null: String))
+    g <- Gen.frequency(5 -> genders.map(x => x: String), 1 -> Gen.const(null: String))
+    v <- Gen.choose(0L, 99L)
+  } yield (s, g, v)
+
+  /** The union formulation the rules had before they were fused: a second
+    * filtered scan of the input, overridden and appended. Kept here as the
+    * reference the single-pass rules must equal. */
+  private def copies(df: DataFrame, pred: Column, overrides: Map[String, Column]): DataFrame =
+    overrides.foldLeft(df.filter(pred)) { case (acc, (c, v)) => acc.withColumn(c, v) }
+  private def unionDuplicate(df: DataFrame, pred: Column, o: Map[String, Column]): DataFrame =
+    df.unionByName(copies(df, pred, o))
+  private def unionReplace(df: DataFrame, pred: Column, o: Map[String, Column]): DataFrame =
+    df.filter(!(pred <=> true)).unionByName(copies(df, pred, o))
+
+  private def multiset(df: DataFrame): Map[Row, Int] =
+    df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
 
   test("duplicateWhere: |out| = |in| + |matching|; replaceWhere: |out| = |in|") {
     for (rows <- samples(Gen.nonEmptyListOf(rowGen), 5)) {
@@ -28,6 +49,38 @@ class OpsPropSpec extends SparkSpec {
         === rows.size + matching.toLong)
       assert(Ops.replaceWhere(df, pred, Map("Gender" -> lit("Persons"))).count()
         === rows.size.toLong)
+    }
+  }
+
+  test("duplicateWhere / replaceWhere equal the union formulation as multisets, null cells included") {
+    val pred = col("Cancer site") === "Breast" && col("Gender") === "Female"
+    // the second override reads the first one's value, as on a withColumn chain
+    val overrides = Map(
+      "Gender" -> lit("Persons"),
+      "v" -> when(col("Gender") === "Persons", col("v") + 1000L).otherwise(col("v")))
+    for (rows <- samples(Gen.nonEmptyListOf(nullableRowGen), 8)) {
+      val df = rows.toDF("Cancer site", "Gender", "v")
+      assert(multiset(Ops.duplicateWhere(df, pred, overrides)) === multiset(unionDuplicate(df, pred, overrides)))
+      assert(multiset(Ops.replaceWhere(df, pred, overrides)) === multiset(unionReplace(df, pred, overrides)))
+    }
+  }
+
+  test("a rule chain sees the earlier rules' copies: the first rule's copy matches the second") {
+    // Breast/Female → a Persons copy; Breast/Persons (the copies included)
+    // → a further copy with a marked value
+    val first = (col("Cancer site") === "Breast" && col("Gender") === "Female", Map("Gender" -> lit("Persons")))
+    val second = (col("Cancer site") === "Breast" && col("Gender") === "Persons", Map("v" -> (col("v") + 500L)))
+    for (rows <- samples(Gen.nonEmptyListOf(nullableRowGen), 8)) {
+      val df = rows.toDF("Cancer site", "Gender", "v")
+      val fused = Ops.duplicateWhere(Ops.duplicateWhere(df, first._1, first._2), second._1, second._2)
+      val reference = unionDuplicate(unionDuplicate(df, first._1, first._2), second._1, second._2)
+      assert(multiset(fused) === multiset(reference))
+      val breastFemale = rows.count(r => r._1 == "Breast" && r._2 == "Female")
+      val breastPersons = rows.count(r => r._1 == "Breast" && r._2 == "Persons")
+      assert(fused.count() === rows.size + breastFemale + breastPersons + breastFemale.toLong)
+      val replaced = Ops.replaceWhere(Ops.duplicateWhere(df, first._1, first._2), second._1, second._2)
+      assert(multiset(replaced) ===
+        multiset(unionReplace(unionDuplicate(df, first._1, first._2), second._1, second._2)))
     }
   }
 

@@ -1,8 +1,12 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end behavior of the two pipelines on tiny NHS-shaped fixtures
   * (FIXTURES.md family A). */
@@ -92,5 +96,33 @@ class PipelinesSpec extends SparkSpec {
   test("Adult4Pipeline: null snapshot stamps NULL") {
     val out = Adult4Pipeline(rawAdult, targets, "2017-2021", None)
     assert(out.filter($"DATE_SNAPSHOT".isNotNull).count() === 0)
+  }
+
+  /** `df` staged the way the Runner stages a sheet — CSV lines read back
+    * with the declared schema — so the plan's leaf is a real scan. */
+  private def staged(df: DataFrame, schema: StructType): DataFrame = {
+    val f = Files.createTempFile("graft-staged", ".csv")
+    val lines = schema.fieldNames.mkString(",") +:
+      df.collect().toSeq.map(_.toSeq.map(v => if (v == null) "" else v.toString).mkString(","))
+    Files.writeString(f, lines.mkString("\n"))
+    Staging.readSheet(spark, f.toString, schema, skipRows = 0)
+  }
+
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.inputPlan
+    case p => p
+  }
+
+  test("each pipeline reads its staged sheet once: one leaf scan and no UnionExec in the executed plan") {
+    val pipelines = Seq(
+      "IndexPipeline" -> (IndexPipeline(staged(rawIndex, Schemas.rawIndexSheet), targets), 3L),
+      "Adult4Pipeline" -> (Adult4Pipeline(staged(rawAdult, Schemas.rawAdultSheet), targets,
+        "2017-2021", Some("December 2023")), 14L))
+    for ((name, (out, rows)) <- pipelines) {
+      val plan = physical(out)
+      assert(plan.collectLeaves().size === 1, s"$name reads its source more than once:\n$plan")
+      assert(plan.collect { case u: UnionExec => u }.isEmpty, s"$name plans a union:\n$plan")
+      assert(out.count() === rows)
+    }
   }
 }

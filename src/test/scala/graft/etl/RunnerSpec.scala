@@ -138,4 +138,154 @@ class RunnerSpec extends SparkSpec {
     assert(adult.select("DATE_DIAGNOSIS_WINDOW").distinct().as[String].collect().toSeq === Seq("2017-2021"))
     assert(adult.count() === 2) // 1 row × 2 metrics (no England rows to generalise)
   }
+
+  // ---- row counts observed during the write --------------------------------
+
+  private val indexRows = Seq(
+    Seq("Cancer Alliance", "NCL", "E56000027", "Breast", "Female", "All ages", "Age-standardised", "2018", "1", "100", "71.5", "70.0", "73.0", "1.0", "0.5", ""),
+    Seq("Cancer Alliance", "NCL", "E56000027", "Breast", "Female", "15-44", "Age-standardised", "2018", "1", "50", "80.0", "78.0", "82.0", "1.0", "0.5", ""),
+    Seq("Cancer Alliance", "WY", "E56000014", "Index", "Persons", "All ages", "Age-standardised", "2018", "1", "200", "65.0", "64.0", "66.0", "1.0", "0.5", "E92000001"),
+    Seq("Country", "England", "E92000001", "Other", "Persons", "All ages", "Age-standardised", "2018", "1", "999", "60.0", "59.0", "61.0", "1.0", "0.5", ""),
+    Seq("Sub-ICB", "Islington", "E38000088", "Lung", "Persons", "All ages", "Age-standardised", "2018", "1", "10", "40.0", "39.0", "41.0", "1.0", "0.5", ""))
+
+  private val adultRows = Seq(
+    Seq("Country", "England", "E92000001", "Breast", "Female", "Age-standardised (5 age groups)", "1", "500", "70.0", "72.0"),
+    Seq("Cancer Alliance", "NCL", "E56000027", "Breast", "Female", "Age-standardised (5 age groups)", "1", "100", "71.0", ""),
+    Seq("Cancer Alliance", "NCL", "E56000027", "Larynx", "Male", "Non-standardised", "1", "20", "50.0", "52.0"),
+    Seq("Cancer Alliance", "WY", "E56000014", "Prostate", "Male", "Age-standardised (all ages)", "5", "80", "85.0", "86.0"),
+    Seq("Country", "England", "E92000001", "Ovary", "Female", "Age-standardised (all ages)", "1", "300", "40.0", "41.0"))
+
+  /** Both staged sheets as CSV with their 10- and 9-line preambles. */
+  private def csvStaging(index: Seq[Seq[String]] = indexRows, adult: Seq[Seq[String]] = adultRows) = {
+    val staging = Files.createTempDirectory("graft-staging-csv")
+    def sheet(preamble: Int, header: Seq[String], rows: Seq[Seq[String]]) =
+      ((1 to preamble).map(i => s"preamble $i") ++ (header +: rows).map(_.mkString(","))).mkString("\n") + "\n"
+    Files.writeString(staging.resolve("Index_2018.csv"),
+      sheet(10, Schemas.rawIndexSheet.fieldNames.toSeq, index))
+    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"),
+      sheet(9, Schemas.rawAdultSheet.fieldNames.toSeq, adult))
+    staging
+  }
+
+  /** Both sheets as xlsx workbooks with the same preambles; the adult one
+    * has its Notes sheet. Empty cells are left out, as Excel does. */
+  private def xlsxStaging() = {
+    import java.util.zip.{ZipEntry, ZipOutputStream}
+    val staging = Files.createTempDirectory("graft-staging-xlsx2")
+    def workbook(file: String, sheets: Seq[(String, Seq[Seq[String]])]): Unit = {
+      val zos = new ZipOutputStream(Files.newOutputStream(staging.resolve(file)))
+      def entry(name: String, content: String): Unit = {
+        zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+      }
+      entry("xl/workbook.xml", "<workbook><sheets>" + sheets.indices.map(i =>
+        s"""<sheet name="${sheets(i)._1}" sheetId="${i + 1}" r:id="rId${i + 1}"/>""").mkString +
+        "</sheets></workbook>")
+      entry("xl/_rels/workbook.xml.rels", "<Relationships>" + sheets.indices.map(i =>
+        s"""<Relationship Id="rId${i + 1}" Type="w" Target="worksheets/sheet${i + 1}.xml"/>""").mkString +
+        "</Relationships>")
+      sheets.zipWithIndex.foreach { case ((_, rows), i) =>
+        entry(s"xl/worksheets/sheet${i + 1}.xml", "<worksheet><sheetData>" +
+          rows.zipWithIndex.map { case (cells, r) =>
+            s"""<row r="${r + 1}">""" + cells.zipWithIndex.collect { case (v, c) if v.nonEmpty =>
+              s"""<c r="${('A' + c).toChar}${r + 1}" t="inlineStr"><is><t>$v</t></is></c>"""
+            }.mkString + "</row>"
+          }.mkString + "</sheetData></worksheet>")
+      }
+      zos.close()
+    }
+    workbook("Index_2018.xlsx", Seq("Table 5" ->
+      ((1 to 10).map(i => Seq(s"preamble $i")) ++ (Schemas.rawIndexSheet.fieldNames.toSeq +: indexRows))))
+    workbook("adult_cancer_survival_2017_2021.xlsx", Seq(
+      "Table 4" -> ((1 to 9).map(i => Seq(s"preamble $i")) ++ (Schemas.rawAdultSheet.fieldNames.toSeq +: adultRows)),
+      "Notes and definitions" -> ((1 to 11).map(i => Seq(s"notes $i")) :+
+        Seq("Figures are based on data extracted in December 2023 snapshot"))))
+    staging
+  }
+
+  private def readBack(table: String, mode: Runner.SinkMode) = mode match {
+    case Runner.StagedOverwrite => spark.read.parquet(table)
+    case Runner.ManifestPointer => Sink.Manifest.read(spark, table)
+  }
+
+  test("run: LoadResult.rows equals a direct count of the written table (CSV and xlsx, both sink modes)") {
+    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging());
+         mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) {
+      val out = Files.createTempDirectory("graft-tables-rows").toString
+      val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
+      assert(results.map(_.kind).sorted === Seq("adult4", "index"), s"$format/$mode")
+      results.foreach { r =>
+        assert(r.rows === readBack(r.table, mode).count(), s"$format/$mode ${r.kind}")
+      }
+      // index: 3 survivors; adult: 5 rows + Persons copies of the national
+      // Breast row and the Larynx, Prostate and Ovary rows = 9, × 2 metrics
+      assert(results.map(r => r.kind -> r.rows).toMap === Map("index" -> 3L, "adult4" -> 18L),
+        s"$format/$mode")
+    }
+  }
+
+  /** Run `body`, and return with its result the scan locations under
+    * `root` of every SQL execution that started meanwhile. A marker job
+    * after `body` is the barrier: listener events arrive in order, so once
+    * its start is seen every earlier execution has been seen too. */
+  private def scansUnder[T](root: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"runner-spec-barrier-${java.util.UUID.randomUUID()}"
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      private def walk(p: SparkPlanInfo): Unit = {
+        p.metadata.get("Location").filter(_.contains(root)).foreach(seen.add)
+        p.children.foreach(walk)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          barrier.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener barrier never arrived")
+      (result, seen.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("run: no job reads the destination tables during Runner.run (a listener sees every scan)") {
+    for ((staging, mode) <- Seq(csvStaging() -> Runner.StagedOverwrite, xlsxStaging() -> Runner.ManifestPointer)) {
+      val out = Files.createTempDirectory("graft-tables-noscan").toString
+      val (results, scans) = scansUnder(out)(Runner.run(spark, staging.toString, out, sinkMode = mode))
+      assert(results.size === 2)
+      assert(scans.isEmpty, s"$mode: Runner.run read its destination: ${scans.mkString("; ")}")
+      // the listener does see a read of the destination when one happens
+      val (_, recount) = scansUnder(out)(results.map(r => readBack(r.table, mode).count()))
+      assert(recount.nonEmpty, "the listener missed a scan of the destination")
+    }
+  }
+
+  test("run: each load observes under its own name, so concurrent loads keep their own counts") {
+    assert(Runner.observationName("t") !== Runner.observationName("t"))
+    // two loads of different sizes at once in one session
+    val small = csvStaging(index = indexRows.take(1), adult = adultRows.take(1))
+    val large = csvStaging(index = indexRows ++ indexRows, adult = adultRows ++ adultRows)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val loads = Seq(small, large).map { staging =>
+      val out = Files.createTempDirectory("graft-tables-conc").toString
+      Future(Runner.run(spark, staging.toString, out))
+    }
+    val results = loads.map(Await.result(_, 5.minutes))
+    results.flatten.foreach(r => assert(r.rows === spark.read.parquet(r.table).count(), r.toString))
+    assert(results.map(_.map(r => r.kind -> r.rows).toMap) === Seq(
+      Map("index" -> 1L, "adult4" -> 4L), Map("index" -> 6L, "adult4" -> 36L)))
+  }
 }

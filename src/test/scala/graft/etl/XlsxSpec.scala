@@ -158,4 +158,75 @@ class XlsxSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Xlsx.readSheet(makeWorkbook(), "Nope"))
     assert(e.getMessage.contains("Nope"))
   }
+
+  /** A one-sheet workbook ("S") with the given sheet and shared-string parts. */
+  private def oneSheet(sheetXml: String, sharedXml: Option[String] = None): String = {
+    val path = Files.createTempFile("graft-one", ".xlsx")
+    val zos = new ZipOutputStream(Files.newOutputStream(path))
+    def entry(name: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    }
+    entry("xl/workbook.xml",
+      """<workbook><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+    entry("xl/_rels/workbook.xml.rels",
+      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
+    sharedXml.foreach(entry("xl/sharedStrings.xml", _))
+    entry("xl/worksheets/sheet1.xml", sheetXml)
+    zos.close()
+    path.toString
+  }
+
+  test("numeric character references decode, decimal and hex (as pandas reads them)") {
+    val path = oneSheet(
+      """<worksheet><sheetData><row r="1">
+        |<c r="A1" t="inlineStr"><is><t>Net&#10;survival</t></is></c>
+        |<c r="B1" t="s"><v>0</v></c>
+        |<c r="C1" t="str"><v>&#x41;&#66;</v></c>
+        |</row></sheetData></worksheet>""".stripMargin,
+      Some("""<sst><si><t>2017&#x2013;2021</t></si></sst>"""))
+    assert(Xlsx.readSheet(path, "S") === Seq(
+      Seq(Some("Net\nsurvival"), Some("2017\u20132021"), Some("AB"))))
+  }
+
+  test("an inline string joins all of its rich-text runs") {
+    val path = oneSheet(
+      """<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is>
+        |<r><rPr><b/></rPr><t>Cancer</t></r><r><t xml:space="preserve"> Alliance</t></r>
+        |</is></c></row></sheetData></worksheet>""".stripMargin)
+    assert(Xlsx.readSheet(path, "S") === Seq(Seq(Some("Cancer Alliance"))))
+  }
+
+  test("shared strings skip phonetic <rPh> runs (as openpyxl does)") {
+    val path = oneSheet(
+      """<worksheet><sheetData><row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>
+        |</sheetData></worksheet>""".stripMargin,
+      Some("""<sst><si><t>Lung</t><rPh sb="0" eb="4"><t>LUNG-READING</t></rPh><phoneticPr fontId="1"/></si>
+        |<si><r><t>Bre</t></r><rPh sb="0" eb="1"><t>X</t></rPh><r><t>ast</t></r></si></sst>""".stripMargin))
+    assert(Xlsx.readSheet(path, "S") === Seq(Seq(Some("Lung"), Some("Breast"))))
+  }
+
+  test("a sheet's DOCTYPE external entity is never resolved (no XXE)") {
+    val secret = Files.createTempFile("graft-secret", ".txt")
+    Files.writeString(secret, "TOP-SECRET-CONTENTS")
+    val path = oneSheet(
+      s"""<?xml version="1.0"?>
+         |<!DOCTYPE worksheet [<!ENTITY xxe SYSTEM "${secret.toUri}">]>
+         |<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>&xxe;</t></is></c></row>
+         |</sheetData></worksheet>""".stripMargin)
+    // either outcome is safe: the read fails, or the entity stays unresolved
+    scala.util.Try(Xlsx.readSheet(path, "S")).foreach { rows =>
+      assert(!rows.flatten.flatten.exists(_.contains("TOP-SECRET")))
+    }
+  }
+
+  test("one Workbook handle serves several sheets and streams rows in position") {
+    Xlsx.withWorkbook(makeWorkbook()) { wb =>
+      assert(wb.sheetNames === Seq("Table 5", "Notes & definitions"))
+      val rows = wb.rows("Table 5").toVector
+      assert(rows.length === 4)
+      assert(rows(2).toSeq === Seq(null, "60"))
+      assert(wb.readSheet("Notes & definitions").head.head.exists(_.contains("December 2023")))
+      assert(wb.sharedStrings.toSeq === Seq("Geography type", "Survival (%)", "Cancer Alliance", "rich text"))
+    }
+  }
 }
