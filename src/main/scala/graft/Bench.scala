@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private val gcBeans = {
     import scala.jdk.CollectionConverters._
@@ -16,56 +15,18 @@ object Bench {
 
   /** One measured query: wall seconds (−1 = failed), the gc-pause and
     * process-CPU deltas that attribute a wall outlier to pause vs plan
-    * cost, and the shuffle bytes the query's tasks wrote (the continuous
-    * form of the point-measured ShuffleProbe: "shuffles carry band keys,
-    * not text" is now enforced by the artifact every round). */
+    * cost, and the shuffle bytes the query's tasks wrote ([[Meter]]'s
+    * write side, which counts each exchange once: "shuffles carry band
+    * keys, not text" is enforced by the artifact every round). */
   final case class Row(name: String, sec: Double, gcMs: Long, cpuMs: Long,
       shuffleBytes: Long)
-
-  /** Listener tallying shuffle WRITE bytes across all completed tasks —
-    * write-side counts each shuffle exactly once (read-side would
-    * double-count reused exchanges). Deltas of the cumulative counter
-    * attribute bytes to whichever query ran between two settled reads. */
-  private final class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-    /** Listener events post asynchronously; poll until the counter holds
-      * still for one interval (bounded) so a query's trailing task-end
-      * events don't leak into the next query's delta. Runs OUTSIDE the
-      * timed window. A FAILED query gets a much longer bound (task kill
-      * can take seconds, far past the normal cap) so its stragglers
-      * can't inflate the next row's shuffle_mb — the exact attribution
-      * signal this tally exists to provide. */
-    def settledRead(maxSpins: Int = 40): Long = { // default <= ~200 ms
-      var prev = bytes.get()
-      var spins = 0
-      while (spins < maxSpins) {
-        Thread.sleep(5)
-        val cur = bytes.get()
-        if (cur == prev) return cur
-        prev = cur
-        spins += 1
-      }
-      prev
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.build(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val meter = Meter(spark.sparkContext)
     // absorb session/executor init so it isn't billed to whichever query
     // happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -109,7 +70,9 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val sh0 = tally.settledRead()
+      // settled reads run OUTSIDE the timed window, so a query's trailing
+      // task-end events bill to it, not to the next row
+      val sh0 = meter.settled().shuffleWriteBytes
       val gc0 = gcMillis
       val cpu0 = cpuMillis
       val t0 = System.nanoTime()
@@ -127,7 +90,7 @@ object Bench {
       val cpuMs = if (cpu0 < 0) -1L else cpuMillis - cpu0
       // a failed query's in-flight tasks may report bytes seconds later —
       // wait them out (<= ~5 s) so they bill to this row, not the next
-      val shBytes = tally.settledRead(maxSpins = if (ok) 40 else 1000) - sh0
+      val shBytes = meter.settled(maxSpins = if (ok) 40 else 1000).shuffleWriteBytes - sh0
       // release this query's scratch caches so storage memory doesn't
       // accumulate across the suite (the r4 sketch-family regression);
       // session-shared memos are not leased and survive

@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.build("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")

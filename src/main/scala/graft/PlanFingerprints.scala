@@ -234,13 +234,7 @@ object PlanFingerprints {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1)
       else "src/test/resources/plan_fingerprints.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.build("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     val fps = collectAll(spark, sfDir)
     val p = java.nio.file.Paths.get(out)

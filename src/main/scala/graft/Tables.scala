@@ -11,7 +11,7 @@ object Tables {
     *
     * `spark.read.parquet` re-infers the schema (footer read + merge) on
     * EVERY call — measured ~100–125 ms warm per call on this testdata
-    * vs ~20 ms with the schema supplied (r14 RelProbe) — and the suite
+    * vs ~20 ms with the schema supplied (measured in r14) — and the suite
     * makes hundreds of such calls per pass, so schema RE-inference
     * alone was tens of seconds of bench wall. Production registers
     * these inputs once as catalog tables, whose whole point is
@@ -54,11 +54,11 @@ object Tables {
     * nanos-as-long mode, then truncated to micros — matching DuckDB's read
     * behavior) and TIMESTAMP(MICROS)/NTZ (read natively). Branch on the
     * inferred schema so both generations work; either way the column leaves
-    * here as session-TZ TimestampType (UTC is pinned by every entry point),
+    * here as session-TZ TimestampType (UTC is pinned by [[Sessions]]),
     * so downstream queries and oracle values are identical.
     *
     * For the nanos generation the legacy conf must come from the SESSION
-    * BUILDER (Verify/Bench/EntrySmoke/SparkSpec all set it): it is consulted
+    * BUILDER ([[Sessions]] sets it for every session): it is consulted
     * again at plan and execution time, so a set-and-restore around this call
     * would break the later action — library code checks, entry points
     * decide. */

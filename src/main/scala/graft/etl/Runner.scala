@@ -34,10 +34,13 @@ object Runner {
   }
 
   /** How table writes land. [[StagedOverwrite]] is the reference's
-    * truncate-replace ([[Sink.overwriteTable]]); [[ManifestPointer]]
-    * publishes through [[Sink.Manifest]] generations — the same rows plus
-    * the `_TIMESTAMP` stamp, but with an atomic pointer swap so dashboard
-    * readers never hit a mid-load table. */
+    * truncate-replace ([[Sink.overwriteTable]]), without its rollback: a
+    * failed load leaves the destination an empty directory.
+    * [[ManifestPointer]] is the atomic mode: it publishes through
+    * [[Sink.Manifest]] generations — the same rows plus the `_TIMESTAMP`
+    * stamp, with a pointer swap after the write, so dashboard readers never
+    * hit a mid-load table and a failed load leaves the previous generation
+    * readable. */
   sealed trait SinkMode
   case object StagedOverwrite extends SinkMode
   case object ManifestPointer extends SinkMode

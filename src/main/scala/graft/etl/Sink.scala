@@ -3,11 +3,14 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Table sink replicating the reference's truncate+append-with-rollback
-  * load (reference src/utils/database_util.py:9-61) on Spark's stronger
-  * primitive: a staged overwrite is atomic at the commit-protocol level, so
-  * "rollback on failure" (database_util.py:56) is subsumed — a failed job
-  * leaves the previous table intact. The `_TIMESTAMP DEFAULT
+/** Table sink replicating the reference's truncate+append load (reference
+  * src/utils/database_util.py:9-61). [[overwriteTable]] does NOT replicate
+  * its rollback on failure (database_util.py:56): the overwrite deletes the
+  * previous table before its job runs, so a failed write leaves an empty
+  * directory that reads as no table at all. [[Sink.Manifest]] is the
+  * atomic mode: a new generation becomes visible only by a pointer swap
+  * after it is fully written, so a failed load leaves the previous
+  * generation readable. The `_TIMESTAMP DEFAULT
   * CURRENT_TIMESTAMP()` column (reference docs/create_index.sql:19) is
   * appended at write; `current_timestamp()` constant-folds to one value per
   * query = the whole batch gets one stamp.
@@ -18,7 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Sink {
 
-  /** Overwrite `path` with `df` + `_TIMESTAMP`, atomically. */
+  /** Overwrite `path` with `df` + `_TIMESTAMP`. Not atomic: a failed write
+    * leaves `path` an empty directory (use [[Manifest]] to keep the previous
+    * table readable). */
   def overwriteTable(df: DataFrame, path: String): Unit =
     df.withColumn("_TIMESTAMP", current_timestamp())
       .write.mode(SaveMode.Overwrite).parquet(path)

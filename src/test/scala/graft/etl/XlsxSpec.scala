@@ -2,9 +2,9 @@ package graft.etl
 
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends SparkSpec {
 
   /** Build a real two-sheet xlsx with java.util.zip (shared strings, inline
     * strings, numbers, a skipped cell, an XML escape). */
@@ -118,8 +118,6 @@ class XlsxSpec extends AnyFunSuite {
         "</sheetData></worksheet>")
     zos.close()
 
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val raw = Staging.readXlsxSheet(spark, path.toString, "Table 5",
       Schemas.rawIndexSheet, skipRows = 2)
     assert(raw.count() === 2)

@@ -11,12 +11,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // and skip extension application); the underlying context is reused
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
+    // same master as SparkSpec: whichever suite starts the shared context
+    // fixes its parallelism for the rest of the run
+    val spark = graft.Sessions.builder("local[4]")
       .withExtensions(new GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val r = spark.sql(
