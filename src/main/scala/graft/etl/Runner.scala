@@ -1,8 +1,10 @@
 package graft.etl
 
 import graft.ops.Metrics
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.current_timestamp
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
 /** Batch orchestration — the engine's equivalent of the reference's
@@ -14,6 +16,18 @@ import scala.util.Try
   * row count each [[LoadResult]] reports is observed during that write
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
   * table back. An xlsx workbook is opened once per load.
+  *
+  * Loads of different destination tables run at the same time, one
+  * driver thread per destination (today INDEX and ADULT_4); files bound
+  * for one destination load one after another in listing order, so the
+  * last of them wins, as in the reference. Each thread is created by the
+  * calling thread and inherits its Spark local properties (job group,
+  * description, scheduler pool), so cancelling the caller's job group
+  * cancels every load. The results come back in listing order. `run`
+  * returns or throws only once every destination's loads have finished:
+  * a failure stops the later files of its own destination but not the
+  * other destination's loads, and the first failure in listing order is
+  * rethrown with the others attached as suppressed exceptions.
   */
 object Runner {
 
@@ -35,7 +49,9 @@ object Runner {
 
   /** How table writes land. [[StagedOverwrite]] is the reference's
     * truncate-replace ([[Sink.overwriteTable]]), without its rollback: a
-    * failed load leaves the destination an empty directory.
+    * failed load leaves the destination an empty directory. A failure in
+    * one table's load does not stop the other table's load, which still
+    * publishes in either mode.
     * [[ManifestPointer]] is the atomic mode: it publishes through
     * [[Sink.Manifest]] generations — the same rows plus the `_TIMESTAMP`
     * stamp, with a pointer swap after the write, so dashboard readers never
@@ -68,33 +84,58 @@ object Runner {
       }
       obs.get("n_rows").asInstanceOf[Long]
     }
-    Ingest.listStaged(stagingDir).flatMap { path =>
+    def load(path: Path, kind: Ingest.PipelineKind, dest: String): LoadResult = {
       val name = path.getFileName.toString
+      val file = path.toString
       val xlsx = name.endsWith(".xlsx")
-      Ingest.dispatch(name) match {
+      kind match {
         case Ingest.IndexFile =>
           val raw =
-            if (xlsx)
-              Staging.readXlsxSheet(spark, path.toString, "Table 5", Schemas.rawIndexSheet, skipRows = 10)
-            else
-              Staging.readSheet(spark, path.toString, Schemas.rawIndexSheet, skipRows = 10)
-          val out = IndexPipeline(raw, targetGeographies)
-          val dest = s"$outDir/${destinations.index}"
-          Some(LoadResult(name, "index", dest, publish(out, dest)))
+            if (xlsx) Staging.readXlsxSheet(spark, file, "Table 5", Schemas.rawIndexSheet, skipRows = 10)
+            else Staging.readSheet(spark, file, Schemas.rawIndexSheet, skipRows = 10)
+          LoadResult(name, "index", dest, publish(IndexPipeline(raw, targetGeographies), dest))
 
-        case Ingest.AdultFile =>
+        case _ => // an AdultFile: unknown files are never staged
           val (raw, snapshot) =
-            if (xlsx) Xlsx.withWorkbook(path.toString) { wb =>
+            if (xlsx) Xlsx.withWorkbook(file) { wb =>
               (Staging.readXlsxSheet(spark, wb, "Table 4", Schemas.rawAdultSheet, skipRows = 9),
                 notesSnapshot(wb))
             }
-            else (Staging.readSheet(spark, path.toString, Schemas.rawAdultSheet, skipRows = 9), None)
+            else (Staging.readSheet(spark, file, Schemas.rawAdultSheet, skipRows = 9), None)
           val out = Adult4Pipeline(raw, targetGeographies, Ingest.diagnosisWindow(name), snapshot)
-          val dest = s"$outDir/${destinations.adult4}"
-          Some(LoadResult(name, "adult4", dest, publish(out, dest)))
+          LoadResult(name, "adult4", dest, publish(out, dest))
+      }
+    }
 
+    val staged = Ingest.listStaged(stagingDir).flatMap { path =>
+      val kind = Ingest.dispatch(path.getFileName.toString)
+      val table = kind match {
+        case Ingest.IndexFile => Some(destinations.index)
+        case Ingest.AdultFile => Some(destinations.adult4)
         case Ingest.UnknownFile => None
       }
+      table.map(t => (path, kind, s"$outDir/$t"))
+    }
+    // One thread per destination loads its files in listing order and
+    // stops at its first failure; slot i holds staged file i's outcome.
+    val results = new Array[LoadResult](staged.size)
+    val failures = new Array[Throwable](staged.size)
+    val threads = staged.indices.groupBy(i => staged(i)._3).toSeq.map { case (dest, files) =>
+      // constructed on the caller, so it inherits the caller's Spark local
+      // properties (job group, description, scheduler pool)
+      new Thread(() => files.find { i =>
+        try { results(i) = load(staged(i)._1, staged(i)._2, dest); false }
+        catch { case t: Throwable => failures(i) = t; true }
+      }, s"graft-load:$dest")
+    }
+    val started = ArrayBuffer.empty[Thread]
+    try threads.foreach { t => t.start(); started += t }
+    finally started.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ => results.toSeq
     }
   }
 

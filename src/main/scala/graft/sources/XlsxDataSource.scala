@@ -38,8 +38,9 @@ import graft.etl.Xlsx
   * splittable — so the honest partitioning is one InputPartition per
   * workbook file, with parallelism across FILES (load a directory of
   * workbooks; the NHS publication is many small workbooks, reference
-  * docs/: one file per release). Column pruning is pushed into the reader
-  * ([[XlsxScanBuilder]] implements SupportsPushDownRequiredColumns): a
+  * docs/: one file per release). A reader streams its partition's sheet
+  * row by row and never holds the whole sheet. Column pruning is pushed
+  * into the reader ([[XlsxScanBuilder]] implements SupportsPushDownRequiredColumns): a
   * `select(2 cols)` of a 40-column sheet materializes 2 strings per row,
   * and `.explain` shows ReadSchema with exactly those columns. Filters
   * push likewise (SupportsPushDownFilters): IsNull/IsNotNull, EqualTo,
@@ -94,15 +95,20 @@ object XlsxDataSource {
     Conf(files, sheet, options.getInt("skipRows", 0), options.getBoolean("header", true))
   }
 
+  /** Column names from one streaming pass over the first file's sheet:
+    * the header row (or none) and the width of the widest row. */
   private[sources] def headerSchema(c: Conf): StructType = {
-    val rows = Xlsx.readSheet(c.files.head, c.sheet).drop(c.skipRows)
-    require(rows.nonEmpty, s"sheet '${c.sheet}' has no rows after skipRows=${c.skipRows}")
-    val width = rows.map(_.size).max
+    val (head, width) = Xlsx.withWorkbook(c.files.head) { wb =>
+      val rows = wb.rows(c.sheet).drop(c.skipRows)
+      require(rows.hasNext, s"sheet '${c.sheet}' has no rows after skipRows=${c.skipRows}")
+      val head = rows.next()
+      (head, rows.foldLeft(head.length)((w, r) => math.max(w, r.length)))
+    }
     val raw =
       if (c.header)
-        rows.head.padTo(width, None).zipWithIndex.map {
-          case (Some(n), _) if n.nonEmpty => n
-          case (_, i) => s"_c$i"
+        (0 until width).map { i =>
+          val n = if (i < head.length) head(i) else null
+          if (n != null && n.nonEmpty) n else s"_c$i"
         }
       else (0 until width).map(i => s"_c$i")
     // uniquify duplicate header labels positionally: a repeated "Total"
@@ -202,15 +208,18 @@ case class XlsxReaderFactory(
     pushed: Array[Filter])
   extends PartitionReaderFactory {
 
+  /** Streams the sheet's rows from the workbook, which the reader's
+    * `close()` closes. */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val file = p.asInstanceOf[XlsxInputPartition].file
-    val body = Xlsx.readSheet(file, sheet).drop(skipRows).drop(if (header) 1 else 0)
+    val wb = new Xlsx.Workbook(p.asInstanceOf[XlsxInputPartition].file)
+    val it =
+      try wb.rows(sheet).drop(skipRows).drop(if (header) 1 else 0)
+      catch { case e: Throwable => wb.close(); throw e }
     // pruning pushdown: only the required columns' cell positions are read
     val idx = requiredNames.map(n => fullNames.indexOf(n))
     val nameIdx = fullNames.zipWithIndex.toMap
-    def cellOf(cells: Seq[Option[String]])(name: String): Option[String] =
-      nameIdx.get(name).flatMap(i => if (i < cells.size) cells(i) else None)
-    val it = body.iterator
+    def cellOf(cells: Array[String])(name: String): Option[String] =
+      nameIdx.get(name).flatMap(i => if (i < cells.length) Option(cells(i)) else None)
     new PartitionReader[InternalRow] {
       private var row: InternalRow = _
       @annotation.tailrec
@@ -223,8 +232,8 @@ case class XlsxReaderFactory(
           val out = new GenericInternalRow(idx.length)
           var i = 0
           while (i < idx.length) {
-            val v = if (idx(i) >= 0 && idx(i) < cells.size) cells(idx(i)) else None
-            out.update(i, v.map(UTF8String.fromString).orNull)
+            val v = if (idx(i) >= 0 && idx(i) < cells.length) cells(idx(i)) else null
+            if (v != null) out.update(i, UTF8String.fromString(v))
             i += 1
           }
           row = out
@@ -232,7 +241,7 @@ case class XlsxReaderFactory(
         }
       }
       override def get(): InternalRow = row
-      override def close(): Unit = ()
+      override def close(): Unit = wb.close()
     }
   }
 }

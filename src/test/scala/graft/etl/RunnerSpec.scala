@@ -155,15 +155,20 @@ class RunnerSpec extends SparkSpec {
     Seq("Cancer Alliance", "WY", "E56000014", "Prostate", "Male", "Age-standardised (all ages)", "5", "80", "85.0", "86.0"),
     Seq("Country", "England", "E92000001", "Ovary", "Female", "Age-standardised (all ages)", "1", "300", "40.0", "41.0"))
 
-  /** Both staged sheets as CSV with their 10- and 9-line preambles. */
+  /** A staged Index sheet as CSV, with its 10-line preamble. */
+  private def indexCsv(rows: Seq[Seq[String]]) = csvSheet(10, Schemas.rawIndexSheet.fieldNames.toSeq, rows)
+
+  /** A staged adult sheet as CSV, with its 9-line preamble. */
+  private def adultCsv(rows: Seq[Seq[String]]) = csvSheet(9, Schemas.rawAdultSheet.fieldNames.toSeq, rows)
+
+  private def csvSheet(preamble: Int, header: Seq[String], rows: Seq[Seq[String]]) =
+    ((1 to preamble).map(i => s"preamble $i") ++ (header +: rows).map(_.mkString(","))).mkString("\n") + "\n"
+
+  /** Both staged sheets as CSV. */
   private def csvStaging(index: Seq[Seq[String]] = indexRows, adult: Seq[Seq[String]] = adultRows) = {
     val staging = Files.createTempDirectory("graft-staging-csv")
-    def sheet(preamble: Int, header: Seq[String], rows: Seq[Seq[String]]) =
-      ((1 to preamble).map(i => s"preamble $i") ++ (header +: rows).map(_.mkString(","))).mkString("\n") + "\n"
-    Files.writeString(staging.resolve("Index_2018.csv"),
-      sheet(10, Schemas.rawIndexSheet.fieldNames.toSeq, index))
-    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"),
-      sheet(9, Schemas.rawAdultSheet.fieldNames.toSeq, adult))
+    Files.writeString(staging.resolve("Index_2018.csv"), indexCsv(index))
+    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adult))
     staging
   }
 
@@ -287,5 +292,98 @@ class RunnerSpec extends SparkSpec {
     results.flatten.foreach(r => assert(r.rows === spark.read.parquet(r.table).count(), r.toString))
     assert(results.map(_.map(r => r.kind -> r.rows).toMap) === Seq(
       Map("index" -> 1L, "adult4" -> 4L), Map("index" -> 6L, "adult4" -> 36L)))
+  }
+
+  // ---- one load thread per destination --------------------------------------
+
+  test("run: files bound for one table load in listing order, the last wins; results keep listing order") {
+    val index2017 = indexRows.map(_.updated(7, "2017"))
+    for (mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) {
+      val staging = Files.createTempDirectory("graft-staging-same")
+      Files.writeString(staging.resolve("Index_2017.csv"), indexCsv(index2017))
+      Files.writeString(staging.resolve("Index_2018.csv"), indexCsv(indexRows))
+      Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows))
+      val out = Files.createTempDirectory("graft-tables-same").toString
+      val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
+      assert(results.map(_.file) === Seq("Index_2017.csv", "Index_2018.csv", "adult_survival_2017_2021.csv"), mode)
+      assert(results.map(r => r.kind -> r.rows) === Seq("index" -> 3L, "index" -> 3L, "adult4" -> 18L), mode)
+      val index = readBack(s"$out/INDEX", mode)
+      assert(index.count() === 3, mode)
+      assert(index.select("YEAR_OF_DIAGNOSIS").distinct().as[Long].collect().toSeq === Seq(2018L), mode)
+      assert(readBack(s"$out/ADULT_4", mode).count() === 18, mode)
+      if (mode == Runner.ManifestPointer) {
+        // one generation per load, in order: gen-0 is 2017's, gen-1 (live) 2018's
+        assert(Sink.Manifest.generations(spark, s"$out/INDEX") === Seq(0L, 1L))
+        assert(Sink.Manifest.readAt(spark, s"$out/INDEX", 0)
+          .select("YEAR_OF_DIAGNOSIS").distinct().as[Long].collect().toSeq === Seq(2017L))
+        assert(Sink.Manifest.generations(spark, s"$out/ADULT_4") === Seq(0L))
+      }
+    }
+  }
+
+  /** Live threads that load into a table under `out`. */
+  private def loadThreadsUnder(out: String): Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith("graft-load:") && t.getName.contains(out) && t.isAlive)
+  }
+
+  test("run: a failed Index load does not stop the adult load; run throws only after both finish") {
+    val staging = Files.createTempDirectory("graft-staging-fail")
+    Files.writeString(staging.resolve("Index_2018.xlsx"), "not a zip")
+    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows))
+    val out = Files.createTempDirectory("graft-tables-fail").toString
+    val e = intercept[java.util.zip.ZipException](Runner.run(spark, staging.toString, out))
+    assert(e.getSuppressed.isEmpty)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(loadThreadsUnder(out).isEmpty)
+
+    // ADULT_4 holds what a load of the adult sheet alone writes
+    val solo = Files.createTempDirectory("graft-staging-solo")
+    Files.copy(staging.resolve("adult_survival_2017_2021.csv"), solo.resolve("adult_survival_2017_2021.csv"))
+    val soloOut = Files.createTempDirectory("graft-tables-solo").toString
+    assert(Runner.run(spark, solo.toString, soloOut).map(_.rows) === Seq(18L))
+    def rows(table: String) =
+      spark.read.parquet(table).drop("_TIMESTAMP").collect().map(_.toString).sorted.toSeq
+    assert(rows(s"$out/ADULT_4") === rows(s"$soloOut/ADULT_4"))
+  }
+
+  test("run: when both tables fail, the first failure in listing order is thrown, the other suppressed") {
+    val staging = Files.createTempDirectory("graft-staging-fail2")
+    Files.writeString(staging.resolve("Index_2018.xlsx"), "not a zip")
+    // a zip without xl/workbook.xml
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(staging.resolve("adult_survival_2017_2021.xlsx")))
+    zos.putNextEntry(new java.util.zip.ZipEntry("readme.txt")); zos.closeEntry(); zos.close()
+    val out = Files.createTempDirectory("graft-tables-fail2").toString
+    val e = intercept[java.util.zip.ZipException](Runner.run(spark, staging.toString, out))
+    assert(e.getSuppressed.toSeq.map(_.getClass) === Seq(classOf[IllegalArgumentException]))
+    assert(e.getSuppressed.head.getMessage.contains("not an xlsx"))
+    assert(loadThreadsUnder(out).isEmpty)
+  }
+
+  test("run: every load job carries the caller's job group, description and local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = props.add(j.properties)
+    }
+    val out = Files.createTempDirectory("graft-tables-props").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("runner-spec-group", "runner spec load")
+      sc.setLocalProperty("runner.spec.op", "load-1")
+      try Runner.run(spark, csvStaging().toString, out)
+      finally { sc.clearJobGroup(); sc.setLocalProperty("runner.spec.op", null) }
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = props.asScala.toSeq
+    assert(seen.size >= 2, "expected at least one job per table")
+    seen.foreach { p =>
+      assert(p.getProperty("spark.jobGroup.id") === "runner-spec-group")
+      assert(p.getProperty("spark.job.description") === "runner spec load")
+      assert(p.getProperty("runner.spec.op") === "load-1")
+    }
   }
 }

@@ -155,4 +155,50 @@ class XlsxSourceSpec extends SparkSpec {
       .option("sheet", "Data").option("skipRows", 1).load(one)
     assert(viaSource.collect().map(_.toSeq).toSet === viaStaging.collect().map(_.toSeq).toSet)
   }
+
+  test("ragged rows and absent rows stream through pruning and pushed filters") {
+    val path = dir.resolve("ragged.xlsx")
+    val zos = new ZipOutputStream(Files.newOutputStream(path))
+    def entry(n: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(n)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    }
+    // cells by reference: an absent <c> is an empty cell, an absent <row> an empty row
+    def row(r: Int, cells: (Char, String)*) =
+      s"""<row r="$r">""" + cells.map { case (col, v) =>
+        s"""<c r="$col$r" t="inlineStr"><is><t>$v</t></is></c>"""
+      }.mkString + "</row>"
+    entry("xl/workbook.xml",
+      """<workbook><sheets><sheet name="Data" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+    entry("xl/_rels/workbook.xml.rels",
+      """<Relationships><Relationship Id="rId1" Type="ws" Target="worksheets/sheet1.xml"/></Relationships>""")
+    entry("xl/worksheets/sheet1.xml", "<worksheet><sheetData>" +
+      row(1, 'A' -> "preamble") +
+      row(2, 'A' -> "area", 'B' -> "metric", 'C' -> "pct") +
+      row(3, 'A' -> "London", 'B' -> "1yr", 'C' -> "71.5", 'D' -> "extra") +
+      row(4, 'A' -> "North") +
+      // row 5 is absent
+      row(6, 'A' -> "West", 'C' -> "49.1") +
+      row(7, 'B' -> "5yr") +
+      "</sheetData></worksheet>")
+    zos.close()
+    val df = spark.read.format("xlsx").option("sheet", "Data").option("skipRows", 1).load(path.toString)
+    // the widest row names the fourth column
+    assert(df.schema.fieldNames === Array("area", "metric", "pct", "_c3"))
+    assert(df.count() === 5)
+
+    def scanned(q: org.apache.spark.sql.DataFrame, output: Seq[String]): Seq[Seq[Any]] = {
+      val scan = q.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+      assert(scan.output.map(_.name).toSet === output.toSet, scan.toString)
+      assert(scan.scan.asInstanceOf[XlsxScan].pushed.nonEmpty, scan.scan.description())
+      q.collect().map(_.toSeq).toSeq
+    }
+    assert(scanned(df.filter(col("metric").isNull).select("area", "pct"), Seq("area", "metric", "pct")) ===
+      Seq(Seq("North", null), Seq(null, null), Seq("West", "49.1")))
+    assert(scanned(df.filter(col("area") === "London").select("_c3"), Seq("area", "_c3")) ===
+      Seq(Seq("extra")))
+    assert(scanned(df.filter(col("metric").isin("1yr", "5yr")).select("area"), Seq("area", "metric")) ===
+      Seq(Seq("London"), Seq(null)))
+    assert(scanned(df.filter(col("pct") < "60" && col("_c3").isNull).select("area"), Seq("area", "pct", "_c3")) ===
+      Seq(Seq("West")))
+  }
 }
