@@ -15,7 +15,11 @@ import scala.util.Try
   * sink write; everything upstream stays one lazy plan per file, and the
   * row count each [[LoadResult]] reports is observed during that write
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
-  * table back. An xlsx workbook is opened once per load.
+  * table back. An xlsx workbook is opened on the driver only to resolve
+  * its sheet and, for an adult workbook, to read the Notes snapshot; the
+  * sheet itself is parsed inside the write's one task ([[Staging]]), so a
+  * load runs one task and writes one file per workbook, and a malformed
+  * sheet body fails the write, not the driver.
   *
   * Loads of different destination tables run at the same time, one
   * driver thread per destination (today INDEX and ADULT_4); files bound
@@ -47,16 +51,17 @@ object Runner {
         adult4 = env.getOrElse("GRAFT_DEST_ADULT4", "ADULT_4"))
   }
 
-  /** How table writes land. [[StagedOverwrite]] is the reference's
-    * truncate-replace ([[Sink.overwriteTable]]), without its rollback: a
-    * failed load leaves the destination an empty directory. A failure in
-    * one table's load does not stop the other table's load, which still
-    * publishes in either mode.
-    * [[ManifestPointer]] is the atomic mode: it publishes through
-    * [[Sink.Manifest]] generations — the same rows plus the `_TIMESTAMP`
-    * stamp, with a pointer swap after the write, so dashboard readers never
-    * hit a mid-load table and a failed load leaves the previous generation
-    * readable. */
+  /** How table writes land. In either mode a failed load leaves the
+    * previous table readable and unchanged, and a failure in one table's
+    * load does not stop the other table's load, which still publishes.
+    * [[StagedOverwrite]] is the reference's truncate-replace with its
+    * rollback ([[Sink.overwriteTable]]): the write goes to a sibling
+    * directory that is renamed into place after it commits, so the table
+    * path is missing only between two renames.
+    * [[ManifestPointer]] publishes through [[Sink.Manifest]] generations —
+    * the same rows plus the `_TIMESTAMP` stamp, with a pointer swap after
+    * the write, so the table path is never missing and a dashboard reader
+    * that resolved the previous generation keeps reading it. */
   sealed trait SinkMode
   case object StagedOverwrite extends SinkMode
   case object ManifestPointer extends SinkMode

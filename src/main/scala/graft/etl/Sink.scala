@@ -1,16 +1,20 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 /** Table sink replicating the reference's truncate+append load (reference
-  * src/utils/database_util.py:9-61). [[overwriteTable]] does NOT replicate
-  * its rollback on failure (database_util.py:56): the overwrite deletes the
-  * previous table before its job runs, so a failed write leaves an empty
-  * directory that reads as no table at all. [[Sink.Manifest]] is the
-  * atomic mode: a new generation becomes visible only by a pointer swap
-  * after it is fully written, so a failed load leaves the previous
-  * generation readable. The `_TIMESTAMP DEFAULT
+  * src/utils/database_util.py:9-61), rollback on failure included
+  * (database_util.py:56) for [[overwriteTable]]: the new rows are written
+  * beside the table and swapped in only after the write job commits, so a
+  * failed load leaves the previous table readable and unchanged.
+  * [[Sink.Manifest]] goes further: a new generation becomes visible by a
+  * pointer swap, so there is no moment at which the table path is missing.
+  * [[overwriteManaged]], [[overwritePartitioned]] and [[overwriteBucketed]]
+  * still overwrite in place, and a failed write there loses the previous
+  * table. The `_TIMESTAMP DEFAULT
   * CURRENT_TIMESTAMP()` column (reference docs/create_index.sql:19) is
   * appended at write; `current_timestamp()` constant-folds to one value per
   * query = the whole batch gets one stamp.
@@ -21,12 +25,40 @@ import org.apache.spark.sql.functions._
   */
 object Sink {
 
-  /** Overwrite `path` with `df` + `_TIMESTAMP`. Not atomic: a failed write
-    * leaves `path` an empty directory (use [[Manifest]] to keep the previous
-    * table readable). */
-  def overwriteTable(df: DataFrame, path: String): Unit =
-    df.withColumn("_TIMESTAMP", current_timestamp())
-      .write.mode(SaveMode.Overwrite).parquet(path)
+  /** Overwrite `path` with `df` + `_TIMESTAMP`. The rows are written to the
+    * sibling `<path>_staging` and swapped in by [[swapIn]] once the write
+    * job has committed. A failed write removes the staging directory and
+    * leaves the previous table as it was; readers never see a partly
+    * written table. */
+  def overwriteTable(df: DataFrame, path: String): Unit = {
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staged = dst.suffix("_staging")
+    try df.withColumn("_TIMESTAMP", current_timestamp())
+      .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    catch {
+      case e: Throwable =>
+        Try(fs.delete(staged, true)).failed.foreach(e.addSuppressed)
+        throw e
+    }
+    swapIn(fs, staged, dst)
+  }
+
+  /** Replace `dst` with the fully written sibling directory `staged`:
+    * rename-aside → rename-in → delete-old. A restorable copy of the data
+    * exists at every step (a crash leaves either `dst` or `<dst>_old` and
+    * `staged` intact), and the no-table window is a single rename rather
+    * than a delete+rename pair. A real deployment swaps via a metastore or
+    * table-format pointer for true atomicity. */
+  private def swapIn(fs: FileSystem, staged: Path, dst: Path): Unit = {
+    val old = dst.suffix("_old")
+    if (fs.exists(old)) require(fs.delete(old, true), s"failed to clear stale $old")
+    val replacing = fs.exists(dst)
+    if (replacing) require(fs.rename(dst, old), s"rename $dst -> $old failed; table untouched")
+    require(fs.rename(staged, dst),
+      s"rename $staged -> $dst failed; previous table intact at $old, new one at $staged")
+    if (replacing) require(fs.delete(old, true), s"failed to delete $old after swap (table is live)")
+  }
 
   /** Managed-table variant (`saveAsTable`) for catalog-backed deployments. */
   def overwriteManaged(df: DataFrame, table: String): Unit =
@@ -49,42 +81,31 @@ object Sink {
   /** Small-file compaction — lakehouse maintenance: rewrite a FLAT parquet
     * table into `targetFiles` right-sized files (streaming sinks and
     * frequent appends accumulate small files that throttle scan
-    * parallelism at 100 TB). The swap is rename-aside → rename-in →
-    * delete-old: a restorable copy of the data exists at EVERY step (a
-    * crash leaves either `<path>` or `<path>_old`/`<path>_compacting`
-    * intact), and the no-table window is a single rename rather than a
-    * delete+rename pair. A real deployment swaps via a metastore/
-    * table-format pointer for true atomicity. Partition-layout tables are
-    * refused: flattening them would break later dynamic partition
-    * overwrites.
+    * parallelism at 100 TB). The rewrite lands in `<path>_compacting` and
+    * is swapped in by [[swapIn]]. Partition-layout tables are refused:
+    * flattening them would break later dynamic partition overwrites.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String, targetFiles: Int): Unit = {
     require(targetFiles > 0)
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), hadoopConf)
-    val dst = new org.apache.hadoop.fs.Path(path)
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partitioned = fs.listStatus(dst)
       .exists(st => st.isDirectory && st.getPath.getName.contains("="))
     require(!partitioned,
       s"$path has a partition directory layout; compact would flatten it " +
         "and corrupt later dynamic partition overwrites - compact per partition instead")
-    val staged = new org.apache.hadoop.fs.Path(path + "_compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
+    val staged = dst.suffix("_compacting")
     spark.read.parquet(path).repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    if (fs.exists(old)) require(fs.delete(old, true), s"failed to clear stale $old")
-    require(fs.rename(dst, old), s"rename $dst -> $old failed; table untouched")
-    require(fs.rename(staged, dst),
-      s"rename $staged -> $dst failed; original intact at $old, compacted at $staged")
-    require(fs.delete(old, true), s"failed to delete $old after swap (table is live)")
+    swapIn(fs, staged, dst)
   }
 
   /** Manifest-indirection table: data lives in immutable generation dirs
     * (`<base>/gen-N`); `<base>/MANIFEST` holds the live generation's name
     * and is replaced ATOMICALLY (FileContext rename with OVERWRITE — atomic
     * on both HDFS and local filesystems). Readers resolve the manifest and
-    * scan a complete, immutable directory, so — unlike [[compact]]'s
-    * rename-aside swap — there is NO window where the table path does not
+    * scan a complete, immutable directory, so — unlike the rename-aside
+    * swap of [[overwriteTable]] and [[compact]] — there is NO window where the table path does not
     * exist, and a rewrite never disturbs in-flight readers (the previous
     * generation is retained until the NEXT rewrite). This is the root-
     * pointer pattern table formats (Iceberg/Delta) build on, reduced to

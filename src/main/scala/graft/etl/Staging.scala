@@ -1,19 +1,23 @@
 package graft.etl
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Staged-sheet reader — the engine-side half of the reference's
   * `pd.read_excel(sheet, skiprows=N)` (reference src/main.py:112-113, :227).
-  * Excel itself is staged to CSV driver-side (no spark-excel in a
-  * zero-egress JVM — SURVEY.md §7.4 risk 1); this reads "CSV with N
-  * preamble lines before the header" with a DECLARED schema, which plain
-  * `spark.read.csv` cannot express.
+  * There is no spark-excel in a zero-egress JVM (SURVEY.md §7.4 risk 1),
+  * so both staged formats enter Spark as CSV lines parsed with a DECLARED
+  * schema: "CSV with N preamble lines before the header", which plain
+  * `spark.read.csv` cannot express. Neither path holds a sheet on the
+  * driver, so a large staged sheet streams through the tasks.
   *
-  * Implementation: one pass that tags each line with its position via the
-  * text datasource, drops the preamble, then parses the remainder as CSV
-  * from the in-plan Dataset[String] — no driver-side materialization, so a
-  * multi-GB staged sheet still streams through executors.
+  * A CSV sheet is read in one pass that tags each line with its position
+  * via the text datasource, drops the preamble, then parses the remainder
+  * as CSV from the in-plan Dataset[String]. An xlsx sheet is streamed by
+  * [[Xlsx]] inside the task that consumes it, one partition per workbook.
   */
 object Staging {
 
@@ -40,10 +44,12 @@ object Staging {
 
   /** Excel sheet → DataFrame: the reference's
     * `pd.read_excel(sheet_name, skiprows=N)` end-to-end (reference
-    * src/main.py:112-113). The sheet is parsed driver-side ([[Xlsx]] —
-    * bounded by Excel's 1,048,576-row sheet limit, the same driver-memory
-    * profile as the reference's pandas read) and enters the cluster as an
-    * in-plan CSV dataset with the declared schema. */
+    * src/main.py:112-113). The driver opens the workbook only to resolve
+    * the sheet, so a corrupt file (`ZipException`) or a missing sheet (the
+    * named `IllegalArgumentException`) fails here, before any job; the rows
+    * are read inside the task that consumes the frame (see the overload
+    * below). The workbook must be readable where the tasks run, as a
+    * staged CSV sheet must be for [[readSheet]]. */
   def readXlsxSheet(
       spark: SparkSession,
       path: String,
@@ -52,10 +58,18 @@ object Staging {
       skipRows: Int): DataFrame =
     Xlsx.withWorkbook(path)(readXlsxSheet(spark, _, sheetName, schema, skipRows))
 
-  /** As above, through an open workbook, so several sheets of one file
-    * share its sheet index and shared strings. The CSV lines are built
-    * straight from the row stream; the frame holds them, so the workbook
-    * may be closed once this returns. */
+  /** As above, through a workbook the caller has open (the Runner reads
+    * the adult workbook's Notes sheet through the same handle). Only the
+    * sheet is resolved through it; the frame does not hold the handle, so
+    * it may be closed once this returns.
+    *
+    * The frame's one partition opens the workbook in its task, streams the
+    * sheet's rows after `skipRows` as CSV lines ([[Xlsx.csvLine]]) and
+    * closes the workbook when the task completes. The lines are parsed by
+    * `spark.read.schema(schema).csv`, as a staged CSV sheet's are; the
+    * header is taken off in the stream ([[dropHeader]]) rather than by the
+    * `header` option, which would run a job of its own to find the first
+    * line. */
   def readXlsxSheet(
       spark: SparkSession,
       workbook: Xlsx.Workbook,
@@ -63,11 +77,44 @@ object Staging {
       schema: StructType,
       skipRows: Int): DataFrame = {
     import spark.implicits._
-    val lines = workbook.rows(sheetName).drop(skipRows).map(Xlsx.csvLine).toVector
+    workbook.sheetPart(sheetName)
+    val lines = new SheetLines(spark.sparkContext, workbook.path, sheetName, skipRows)
     spark.read
       .schema(schema)
-      .option("header", "true")
       .option("nullValue", "")
       .csv(spark.createDataset(lines))
+  }
+
+  /** What `csv(Dataset[String])` does to its lines with `header=true`:
+    * blank lines (empty once Spark's `trim` has taken the spaces off both
+    * ends) are dropped, the first remaining line is the header, and every
+    * line equal to the header is dropped. */
+  private[etl] def dropHeader(lines: Iterator[String]): Iterator[String] = {
+    val kept = lines.filter(l => UTF8String.fromString(l).trim().numBytes() > 0)
+    if (!kept.hasNext) Iterator.empty
+    else {
+      val header = kept.next()
+      kept.filter(_ != header)
+    }
+  }
+
+  /** One sheet's CSV lines after `skipRows`, header dropped, read in the
+    * task: a worksheet is one deflate stream, so the workbook is one
+    * partition. */
+  private final class SheetLines(sc: SparkContext, path: String, sheetName: String, skipRows: Int)
+      extends RDD[String](sc, Nil) {
+    setName(s"$path [$sheetName]")
+
+    override protected def getPartitions: Array[Partition] = Array(OnePartition)
+
+    override def compute(split: Partition, context: TaskContext): Iterator[String] = {
+      val wb = new Xlsx.Workbook(path)
+      context.addTaskCompletionListener[Unit](_ => wb.close())
+      dropHeader(wb.rows(sheetName).drop(skipRows).map(Xlsx.csvLine))
+    }
+  }
+
+  private case object OnePartition extends Partition {
+    override def index: Int = 0
   }
 }

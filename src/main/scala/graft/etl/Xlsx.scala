@@ -4,7 +4,7 @@ import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import scala.collection.mutable.ArrayBuffer
 
-/** Dependency-free XLSX sheet reader (driver-side).
+/** Dependency-free XLSX sheet reader.
   *
   * The reference consumes NHS Excel workbooks directly
   * (`pd.read_excel(sheet_name=…, skiprows=N)`, reference src/main.py:113,
@@ -25,8 +25,10 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Scope: values only — formulas read their cached <v>, styles/dates come
   * back as the stored literal. That is exactly what the reference's sheets
-  * contain. Parsing is driver-side by design: source discovery and staging
-  * feed `spark.read`, they are not cluster ops (SURVEY.md §2.1 S1-S6).
+  * contain. The reader runs wherever its caller does: [[Staging]] opens a
+  * workbook on the driver only to resolve a sheet ([[Workbook.sheetPart]])
+  * and streams the sheet's rows inside the task that consumes them; the
+  * Runner reads the Notes sheet on the driver and stops at row 12.
   */
 object Xlsx {
 
@@ -154,10 +156,13 @@ object Xlsx {
       out.toArray
     }
 
-    private def sheetPart(sheetName: String): String = {
+    /** The zip entry holding `sheetName`; a named IllegalArgumentException
+      * when the sheet, its relationship or its part is missing. */
+    private[etl] def sheetPart(sheetName: String): String = {
       val part = sheets.collectFirst { case (n, p) if n == sheetName => p }
         .getOrElse(throw new IllegalArgumentException(s"sheet '$sheetName' not found in $path"))
       if (part == null) throw new IllegalArgumentException(s"no relationship for sheet '$sheetName'")
+      if (zip.getEntry(part) == null) throw new IllegalArgumentException(s"missing $part")
       part
     }
 
@@ -169,8 +174,7 @@ object Xlsx {
       * would shift — pandas read_excel counts blank rows and so must we.
       * A returned array is not reused. */
     def rows(sheetName: String): Iterator[Array[String]] = {
-      val part = sheetPart(sheetName)
-      val r = open(part).getOrElse(throw new IllegalArgumentException(s"missing $part"))
+      val r = open(sheetPart(sheetName)).get
       new Iterator[Array[String]] {
         private var emitted = 0
         private var pending: Array[String] = null

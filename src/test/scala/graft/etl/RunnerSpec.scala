@@ -172,38 +172,55 @@ class RunnerSpec extends SparkSpec {
     staging
   }
 
-  /** Both sheets as xlsx workbooks with the same preambles; the adult one
-    * has its Notes sheet. Empty cells are left out, as Excel does. */
-  private def xlsxStaging() = {
+  /** Rows as a sheet's <sheetData> content, from sheet row `first` on;
+    * empty cells are left out, as Excel does. */
+  private def sheetRows(rows: Seq[Seq[String]], first: Int = 1): String =
+    rows.zipWithIndex.map { case (cells, i) =>
+      val r = first + i
+      s"""<row r="$r">""" + cells.zipWithIndex.collect { case (v, c) if v.nonEmpty =>
+        s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
+      }.mkString + "</row>"
+    }.mkString
+
+  /** An xlsx workbook in `dir`: each sheet is a name and its <sheetData>
+    * content. */
+  private def workbook(dir: java.nio.file.Path, file: String, sheets: Seq[(String, String)]): Unit = {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val staging = Files.createTempDirectory("graft-staging-xlsx2")
-    def workbook(file: String, sheets: Seq[(String, Seq[Seq[String]])]): Unit = {
-      val zos = new ZipOutputStream(Files.newOutputStream(staging.resolve(file)))
-      def entry(name: String, content: String): Unit = {
-        zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
-      }
-      entry("xl/workbook.xml", "<workbook><sheets>" + sheets.indices.map(i =>
-        s"""<sheet name="${sheets(i)._1}" sheetId="${i + 1}" r:id="rId${i + 1}"/>""").mkString +
-        "</sheets></workbook>")
-      entry("xl/_rels/workbook.xml.rels", "<Relationships>" + sheets.indices.map(i =>
-        s"""<Relationship Id="rId${i + 1}" Type="w" Target="worksheets/sheet${i + 1}.xml"/>""").mkString +
-        "</Relationships>")
-      sheets.zipWithIndex.foreach { case ((_, rows), i) =>
-        entry(s"xl/worksheets/sheet${i + 1}.xml", "<worksheet><sheetData>" +
-          rows.zipWithIndex.map { case (cells, r) =>
-            s"""<row r="${r + 1}">""" + cells.zipWithIndex.collect { case (v, c) if v.nonEmpty =>
-              s"""<c r="${('A' + c).toChar}${r + 1}" t="inlineStr"><is><t>$v</t></is></c>"""
-            }.mkString + "</row>"
-          }.mkString + "</sheetData></worksheet>")
-      }
-      zos.close()
+    val zos = new ZipOutputStream(Files.newOutputStream(dir.resolve(file)))
+    def entry(name: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
     }
-    workbook("Index_2018.xlsx", Seq("Table 5" ->
-      ((1 to 10).map(i => Seq(s"preamble $i")) ++ (Schemas.rawIndexSheet.fieldNames.toSeq +: indexRows))))
-    workbook("adult_cancer_survival_2017_2021.xlsx", Seq(
-      "Table 4" -> ((1 to 9).map(i => Seq(s"preamble $i")) ++ (Schemas.rawAdultSheet.fieldNames.toSeq +: adultRows)),
-      "Notes and definitions" -> ((1 to 11).map(i => Seq(s"notes $i")) :+
+    entry("xl/workbook.xml", "<workbook><sheets>" + sheets.indices.map(i =>
+      s"""<sheet name="${sheets(i)._1}" sheetId="${i + 1}" r:id="rId${i + 1}"/>""").mkString +
+      "</sheets></workbook>")
+    entry("xl/_rels/workbook.xml.rels", "<Relationships>" + sheets.indices.map(i =>
+      s"""<Relationship Id="rId${i + 1}" Type="w" Target="worksheets/sheet${i + 1}.xml"/>""").mkString +
+      "</Relationships>")
+    sheets.zipWithIndex.foreach { case ((_, data), i) =>
+      entry(s"xl/worksheets/sheet${i + 1}.xml", s"<worksheet><sheetData>$data</sheetData></worksheet>")
+    }
+    zos.close()
+  }
+
+  private def indexWorkbook(dir: java.nio.file.Path, rows: Seq[Seq[String]] = indexRows): Unit =
+    workbook(dir, "Index_2018.xlsx", Seq("Table 5" ->
+      sheetRows((1 to 10).map(i => Seq(s"preamble $i")) ++ (Schemas.rawIndexSheet.fieldNames.toSeq +: rows))))
+
+  /** The adult workbook: "Table 4" with `body` after its preamble and
+    * header, and the Notes sheet. */
+  private def adultWorkbook(dir: java.nio.file.Path,
+      body: String = sheetRows(adultRows, first = 11)): Unit =
+    workbook(dir, "adult_cancer_survival_2017_2021.xlsx", Seq(
+      "Table 4" -> (sheetRows((1 to 9).map(i => Seq(s"preamble $i")) :+ Schemas.rawAdultSheet.fieldNames.toSeq) + body),
+      "Notes and definitions" -> sheetRows((1 to 11).map(i => Seq(s"notes $i")) :+
         Seq("Figures are based on data extracted in December 2023 snapshot"))))
+
+  /** Both sheets as xlsx workbooks with the same preambles; the adult one
+    * has its Notes sheet. */
+  private def xlsxStaging() = {
+    val staging = Files.createTempDirectory("graft-staging-xlsx2")
+    indexWorkbook(staging)
+    adultWorkbook(staging)
     staging
   }
 
@@ -385,5 +402,67 @@ class RunnerSpec extends SparkSpec {
       assert(p.getProperty("spark.job.description") === "runner spec load")
       assert(p.getProperty("runner.spec.op") === "load-1")
     }
+  }
+
+  // ---- the xlsx sheet is parsed inside the write's task ----------------------
+
+  test("run: one job and one task per destination over an Index and an adult workbook, and no header job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val staging = xlsxStaging()
+    val out = Files.createTempDirectory("graft-tables-shape").toString
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()   // execution id -> plan
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Seq[Int])]() // job, execution, stages
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()          // stage of each finished task
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId.toString, s.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add((j.jobId, Option(j.properties).map(_.getProperty("spark.sql.execution.id")).orNull, j.stageIds))
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(t.stageId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      Runner.run(spark, staging.toString, out)
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    // each job is attributed to the destination its SQL execution writes
+    def destination(execution: String): String =
+      Seq("INDEX", "ADULT_4").filter(t => Option(plans.get(execution)).exists(_.contains(s"$out/$t")))
+        .mkString("+")
+    val perDest = jobs.asScala.toSeq.groupBy { case (_, execution, _) => destination(execution) }
+    assert(perDest.keySet === Set("INDEX", "ADULT_4"), jobs.asScala.mkString("; "))
+    perDest.foreach { case (dest, js) =>
+      assert(js.size === 1, s"$dest ran ${js.size} jobs")
+      val stages = js.flatMap(_._3).toSet
+      assert(tasks.asScala.count(stages) === 1, s"$dest ran more than one task")
+    }
+    assert(tasks.size === 2)
+  }
+
+  test("run: a malformed Table 4 body fails the adult load in its write; ADULT_4 keeps the prior load, INDEX publishes") {
+    val out = Files.createTempDirectory("graft-tables-malformed").toString
+    Runner.run(spark, xlsxStaging().toString, out)
+    def rows(table: String) = spark.read.parquet(s"$out/$table").collect().map(_.toString).sorted.toSeq
+    val priorAdult = rows("ADULT_4")
+    assert(priorAdult.size === 18)
+
+    // the header reads, then a cell points past the (absent) shared-string table
+    val staging = Files.createTempDirectory("graft-staging-malformed")
+    indexWorkbook(staging, indexRows.take(1))
+    adultWorkbook(staging, body = sheetRows(adultRows.take(1), first = 11) +
+      """<row r="12"><c r="A12" t="s"><v>7</v></c></row>""")
+    val e = intercept[org.apache.spark.SparkException](Runner.run(spark, staging.toString, out))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]), chain.mkString("\n"))
+
+    // _TIMESTAMP included: the prior load's rows, not a rewrite of them
+    assert(rows("ADULT_4") === priorAdult)
+    assert(spark.read.parquet(s"$out/INDEX").count() === 1)
+    assert(new java.io.File(out).list().toSeq.sorted === Seq("ADULT_4", "INDEX"))
   }
 }

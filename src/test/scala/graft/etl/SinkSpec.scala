@@ -17,6 +17,25 @@ class SinkSpec extends SparkSpec {
     Sink.overwriteTable(Seq((9, "z")).toDF("k", "v"), dir)
     val second = spark.read.parquet(dir)
     assert(second.select("k").as[Int].collect().toSeq === Seq(9))
+    // the staging and set-aside directories are gone once the swap is done
+    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"))
+  }
+
+  test("overwriteTable: a task that fails mid-write leaves the previous table readable and unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-fail").toString + "/t"
+    Sink.overwriteTable((1 to 100).map(i => (i, s"v$i")).toDF("k", "v").repartition(4), dir)
+    def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val before = rows()
+    // four tasks; the one holding k = 77 throws, the others write their files
+    val failing = (1 to 100).toDF("k").repartition(4)
+      .select($"k", when($"k" === 77, raise_error(lit("injected write failure")))
+        .otherwise(concat(lit("w"), $"k".cast("string"))).as("v"))
+    val e = intercept[Exception](Sink.overwriteTable(failing, dir))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => String.valueOf(c.getMessage).contains("injected write failure")), chain.mkString("\n"))
+    // _TIMESTAMP included: the same rows the first load wrote
+    assert(rows() === before)
+    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"))
   }
 
   test("compact rewrites many small files into the target count, data intact") {
@@ -27,6 +46,7 @@ class SinkSpec extends SparkSpec {
     assert(parquetFiles >= 30)
     Sink.compact(spark, dir, targetFiles = 2)
     assert(parquetFiles === 2)
+    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"))
     val back = spark.read.parquet(dir)
     assert(back.count() === 500)
     assert(back.agg(sum("k")).head().getLong(0) === 500L * 501 / 2)

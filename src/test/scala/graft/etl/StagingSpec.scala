@@ -1,7 +1,13 @@
 package graft.etl
 
-import graft.SparkSpec
 import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipOutputStream}
+import graft.SparkSpec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.types._
 
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -49,5 +55,149 @@ class StagingSpec extends SparkSpec {
     assert(row.getAs[Long]("RANK_BASE") === 3L)
     assert(row.getAs[Long]("RANK_CA") === 2L) // 81 > 71 > 61
     assert(row.getAs[String]("NCL_QUARTILE") === "-") // cohort < 4
+  }
+
+  // ---- xlsx: the sheet is streamed inside the consuming task ----------------
+  // It must read back exactly as the driver-collected formulation it replaced.
+
+  /** The staging of an xlsx sheet before it moved into the load's task:
+    * the rows collected on the driver as CSV lines, shipped as a local
+    * Dataset, the header taken off by `csv`'s `header` option. Kept as the
+    * reference the task-side staging is compared with. */
+  private def driverCollected(path: String, sheet: String, schema: StructType, skipRows: Int): DataFrame =
+    Xlsx.withWorkbook(path) { wb =>
+      val lines = wb.rows(sheet).drop(skipRows).map(Xlsx.csvLine).toVector
+      spark.read.schema(schema).option("header", "true").option("nullValue", "")
+        .csv(spark.createDataset(lines))
+    }
+
+  private def xml(v: String) = v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+
+  /** A workbook with one sheet "S": each row at its sheet row number, a
+    * null cell left out as Excel does. */
+  private def workbook(rows: (Int, Seq[String])*): String = {
+    val path = Files.createTempFile("graft-staging", ".xlsx")
+    val zos = new ZipOutputStream(Files.newOutputStream(path))
+    def entry(name: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    }
+    entry("xl/workbook.xml", """<workbook><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+    entry("xl/_rels/workbook.xml.rels",
+      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
+    entry("xl/worksheets/sheet1.xml", "<worksheet><sheetData>" + rows.map { case (r, cells) =>
+      s"""<row r="$r">""" + cells.zipWithIndex.collect { case (v, c) if v != null =>
+        s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t xml:space="preserve">${xml(v)}</t></is></c>"""
+      }.mkString + "</row>"
+    }.mkString + "</sheetData></worksheet>")
+    zos.close()
+    path.toString
+  }
+
+  private val schema = StructType(Seq(
+    StructField("name", StringType), StructField("n", LongType), StructField("x", DoubleType)))
+  private val withCorrupt = schema.add("_corrupt_record", StringType)
+  private val header = Seq("name", "n", "x")
+
+  private def multiset(df: DataFrame): Map[Row, Int] =
+    df.collect().toSeq.groupBy(identity).map { case (r, same) => r -> same.size }
+
+  /** Both formulations over the same sheet, under both schemas; returns the
+    * task-side rows read with the plain schema. */
+  private def same(path: String, skipRows: Int): Seq[Row] = {
+    for (s <- Seq(schema, withCorrupt)) {
+      val staged = Staging.readXlsxSheet(spark, path, "S", s, skipRows)
+      assert(staged.schema === s)
+      assert(multiset(staged) === multiset(driverCollected(path, "S", s, skipRows)), s"schema $s")
+    }
+    Staging.readXlsxSheet(spark, path, "S", schema, skipRows).collect().toSeq
+  }
+
+  test("task-side staging equals the driver-collected formulation: blank rows before the header") {
+    val path = workbook(
+      1 -> Seq("preamble"), 2 -> Seq("preamble 2"),
+      // sheet rows 3 and 5 are absent; row 4 holds only spaces
+      4 -> Seq("   "), 6 -> Seq(null, null), 7 -> header,
+      8 -> Seq("a", "1", "1.5"), 9 -> Seq("b", "2", "2.5"))
+    assert(same(path, skipRows = 2).toSet === Set(Row("a", 1L, 1.5), Row("b", 2L, 2.5)))
+  }
+
+  test("task-side staging equals the driver-collected formulation: a row that only Spark's trim does not blank becomes the header") {
+    // a tab is not among the characters trim takes off, so the tab row is
+    // the header and the real header line reads as data
+    val path = workbook(1 -> Seq("\t"), 2 -> header, 3 -> Seq("a", "1", "1.5"))
+    assert(same(path, skipRows = 0).toSet === Set(Row("name", null, null), Row("a", 1L, 1.5)))
+  }
+
+  test("task-side staging equals the driver-collected formulation: every data row equal to the header is dropped") {
+    val path = workbook(1 -> header, 2 -> Seq("a", "1", "1.5"), 3 -> header,
+      4 -> Seq("b", "2", "2.5"), 5 -> header, 6 -> Seq("name", "n"))
+    assert(same(path, skipRows = 0).toSet === Set(Row("a", 1L, 1.5), Row("b", 2L, 2.5), Row("name", null, null)))
+  }
+
+  test("task-side staging equals the driver-collected formulation: commas, quotes and newlines in cells") {
+    val path = workbook(1 -> header,
+      2 -> Seq("Bath, Swindon & Wiltshire", "1", "1.0"),
+      3 -> Seq("say \"hi\"", "2", "2.0"),
+      4 -> Seq("two\nlines", "3", "3.0"),
+      5 -> Seq("crlf\r\nend", "4", "4.0"),
+      6 -> Seq("\"quoted\"", "5", "5.0"),
+      7 -> Seq(" padded ", "6", "6.0"))
+    val rows = same(path, skipRows = 0)
+    assert(rows.size === 6)
+    assert(rows.map(_.getString(0)).toSet.contains("Bath, Swindon & Wiltshire"))
+    assert(rows.map(_.getString(0)).toSet.contains("two\nlines"))
+  }
+
+  test("task-side staging equals the driver-collected formulation: rows wider than the header, and absent rows") {
+    val path = workbook(1 -> Seq("preamble"), 2 -> header,
+      3 -> Seq("wide", "1", "1.0", "extra", "more"),
+      6 -> Seq("after a gap", "2", "2.0"),
+      7 -> Seq("short"),
+      9 -> Seq(null, "3"))
+    assert(same(path, skipRows = 1).toSet === Set(Row("wide", 1L, 1.0), Row("after a gap", 2L, 2.0),
+      Row("short", null, null), Row(null, 3L, null)))
+  }
+
+  test("task-side staging equals the driver-collected formulation: a numeric cell that is no long reads as null") {
+    val path = workbook(1 -> header,
+      2 -> Seq("fraction", "12.5", "1.0"),
+      3 -> Seq("word", "abc", "2.0"),
+      4 -> Seq("empty", "", "3.0"),
+      5 -> Seq("big", "99999999999999999999", "4.0"),
+      6 -> Seq("ok", "7", "x"))
+    val rows = same(path, skipRows = 0)
+    assert(rows.filter(_.getString(0) != "ok").forall(_.isNullAt(1)))
+    assert(rows.find(_.getString(0) == "ok").get === Row("ok", 7L, null))
+  }
+
+  test("task-side staging equals the driver-collected formulation: nothing after skipRows") {
+    val path = workbook(1 -> Seq("preamble"), 2 -> Seq("preamble 2"), 4 -> Seq(" "))
+    // sheet row 3 is absent and row 4 blank, so nothing follows row 2
+    Seq(2, 3, 10).foreach(skip => assert(same(path, skipRows = skip).isEmpty, s"skipRows $skip"))
+    // a header and nothing else
+    assert(same(workbook(1 -> Seq("preamble"), 2 -> header), skipRows = 1).isEmpty)
+  }
+
+  test("a staged xlsx frame holds no local relation: the sheet is read by the frame's one task") {
+    val path = workbook(1 -> header, 2 -> Seq("a", "1", "1.5"))
+    val df = Staging.readXlsxSheet(spark, path, "S", schema, 0)
+    assert(df.queryExecution.analyzed.collect { case l: LocalRelation => l }.isEmpty)
+    assert(df.queryExecution.executedPlan.collect { case l: LocalTableScanExec => l }.isEmpty)
+    // a local relation's rows sit in the lineage as a parallelized collection
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val rdds = lineage(df.rdd)
+    assert(!rdds.exists(_.getClass.getSimpleName == "ParallelCollectionRDD"), rdds.mkString("\n"))
+    assert(rdds.last.name === s"$path [S]")
+    assert(df.rdd.getNumPartitions === 1)
+  }
+
+  test("the driver resolves the sheet before any job: corrupt file, missing sheet") {
+    val corrupt = Files.createTempFile("graft-corrupt", ".xlsx")
+    Files.writeString(corrupt, "not a zip")
+    intercept[java.util.zip.ZipException](
+      Staging.readXlsxSheet(spark, corrupt.toString, "S", schema, 0))
+    val e = intercept[IllegalArgumentException](
+      Staging.readXlsxSheet(spark, workbook(1 -> header), "Nope", schema, 0))
+    assert(e.getMessage.contains("sheet 'Nope' not found"))
   }
 }

@@ -157,15 +157,15 @@ class XlsxSpec extends SparkSpec {
     assert(e.getMessage.contains("Nope"))
   }
 
-  /** A one-sheet workbook ("S") with the given sheet and shared-string parts. */
-  private def oneSheet(sheetXml: String, sharedXml: Option[String] = None): String = {
+  /** A one-sheet workbook with the given sheet and shared-string parts. */
+  private def oneSheet(sheetXml: String, sharedXml: Option[String] = None, sheet: String = "S"): String = {
     val path = Files.createTempFile("graft-one", ".xlsx")
     val zos = new ZipOutputStream(Files.newOutputStream(path))
     def entry(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
     }
     entry("xl/workbook.xml",
-      """<workbook><sheets><sheet name="S" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+      s"""<workbook><sheets><sheet name="$sheet" sheetId="1" r:id="rId1"/></sheets></workbook>""")
     entry("xl/_rels/workbook.xml.rels",
       """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
     sharedXml.foreach(entry("xl/sharedStrings.xml", _))
@@ -203,18 +203,30 @@ class XlsxSpec extends SparkSpec {
     assert(Xlsx.readSheet(path, "S") === Seq(Seq(Some("Lung"), Some("Breast"))))
   }
 
-  test("a sheet's DOCTYPE external entity is never resolved (no XXE)") {
+  test("a sheet's DOCTYPE external entity is never resolved (no XXE), on the driver or in a load's task") {
     val secret = Files.createTempFile("graft-secret", ".txt")
     Files.writeString(secret, "TOP-SECRET-CONTENTS")
-    val path = oneSheet(
+    val sheetXml =
       s"""<?xml version="1.0"?>
          |<!DOCTYPE worksheet [<!ENTITY xxe SYSTEM "${secret.toUri}">]>
          |<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>&xxe;</t></is></c></row>
-         |</sheetData></worksheet>""".stripMargin)
+         |</sheetData></worksheet>""".stripMargin
+    val path = oneSheet(sheetXml)
     // either outcome is safe: the read fails, or the entity stays unresolved
     scala.util.Try(Xlsx.readSheet(path, "S")).foreach { rows =>
       assert(!rows.flatten.flatten.exists(_.contains("TOP-SECRET")))
     }
+    // the task-side read of a load: the load fails, and nothing it reports
+    // or writes holds the entity's contents
+    val staging = Files.createTempDirectory("graft-staging-xxe")
+    Files.copy(java.nio.file.Paths.get(oneSheet(sheetXml, sheet = "Table 5")), staging.resolve("Index_2018.xlsx"))
+    val out = Files.createTempDirectory("graft-tables-xxe").toString
+    val e = intercept[org.apache.spark.SparkException](Runner.run(spark, staging.toString, out))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => String.valueOf(c.getMessage).contains("\"xxe\" was referenced, but not declared")),
+      chain.mkString("\n"))
+    assert(!chain.exists(c => String.valueOf(c.getMessage).contains("TOP-SECRET")))
+    assert(!new java.io.File(s"$out/INDEX").exists())
   }
 
   test("one Workbook handle serves several sheets and streams rows in position") {
