@@ -1,16 +1,15 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of the benchmark, summarised per metric.
 
-    scripts/bench_pairs.py [--change REV] [--seconds S] [--trace] [--json PATH] \
-        PARENT_REV WORKLOAD SEED [SEED ...]
+    scripts/bench_pairs.py [--trace] [--json PATH] PARENT_REV WORKLOAD SEED [SEED ...]
 
-Exports the committed files of PARENT_REV and of the change (HEAD unless
---change names another revision) with `git archive` into two directories
-under a fresh temporary directory, builds both, then runs
-`perfbench/run.py --workload WORKLOAD --seed SEED` once on each side for
-every seed. Pairs alternate which side runs first, so a drift in the host's
-speed lands on both sides equally. Each run happens in its own export, as
-the benchmark's own comparison does; nothing in this checkout is written.
+Exports the committed files of PARENT_REV and of HEAD (the change) with
+`git archive` into two directories under a fresh temporary directory,
+builds both, then runs `perfbench/run.py --workload WORKLOAD --seed SEED`
+once on each side for every seed, for the run length BENCHMARK.json sets.
+Pairs alternate which side runs first, so a drift in the host's speed
+lands on both sides equally. Each run happens in its own export, as the
+benchmark's own comparison does; nothing in this checkout is written.
 
 Prints, for every metric of BENCHMARK.json (the end-to-end ones, or with
 --trace the per-layer ones), each side's median and quartiles, the change's
@@ -79,7 +78,9 @@ def quartiles(xs):
 
 
 def summarise(specs, runs):
-    print(f"{'metric':<40} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} "
+    def cell(q):
+        return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
+    print(f"{'metric':<40} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30} "
           f"{'move':>8} {'wins':>6} {'gap>iqr':>8}")
     for m in specs:
         name = m["name"]
@@ -87,16 +88,14 @@ def summarise(specs, runs):
                  if name in p["metrics"] and name in c["metrics"]]
         if not pairs:
             continue
-        par = [p for p, _ in pairs]
-        chg = [c for _, c in pairs]
-        pq, cq = quartiles(par), quartiles(chg)
+        pq = quartiles([p for p, _ in pairs])
+        cq = quartiles([c for _, c in pairs])
         lower = m["better"] == "lower"
         wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
         gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
         move = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
-        print(f"{name:<40} {pq[1]:>12.4g} [{pq[0]:.4g}, {pq[2]:.4g}]".ljust(71) +
-              f" {cq[1]:>12.4g} [{cq[0]:.4g}, {cq[2]:.4g}]".ljust(31) +
-              f" {move:>+7.1f}% {wins:>3}/{len(pairs):<2} {str(gap > pq[2] - pq[0]):>8}")
+        print(f"{name:<40} {cell(pq):<30} {cell(cq):<30} {move:>+7.1f}% "
+              f"{f'{wins}/{len(pairs)}':>6} {str(gap > pq[2] - pq[0]):>8}")
 
 
 def main():
@@ -104,17 +103,15 @@ def main():
     ap.add_argument("parent")
     ap.add_argument("workload")
     ap.add_argument("seeds", nargs="+", type=int)
-    ap.add_argument("--change", default="HEAD")
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--trace", action="store_true")
     ap.add_argument("--json")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    seconds = args.seconds if args.seconds is not None else spec.get("run_seconds", 15)
+    seconds = spec["run_seconds"]
     specs = spec["per_layer"] if args.trace else spec["end_to_end"]
-    shas = {"parent": rev(args.parent), "change": rev(args.change)}
+    shas = {"parent": rev(args.parent), "change": rev("HEAD")}
 
     tmp = tempfile.mkdtemp(prefix="bench_pairs-")
     try:

@@ -105,9 +105,9 @@ object Sink {
     * and is replaced ATOMICALLY (FileContext rename with OVERWRITE — atomic
     * on both HDFS and local filesystems). Readers resolve the manifest and
     * scan a complete, immutable directory, so — unlike the rename-aside
-    * swap of [[overwriteTable]] and [[compact]] — there is NO window where the table path does not
-    * exist, and a rewrite never disturbs in-flight readers (the previous
-    * generation is retained until the NEXT rewrite). This is the root-
+    * swap of [[overwriteTable]] and [[compact]] — there is NO window where
+    * the table path does not exist, and a rewrite never disturbs in-flight
+    * readers (the previous generation is retained until the NEXT rewrite). This is the root-
     * pointer pattern table formats (Iceberg/Delta) build on, reduced to
     * one pointer file for a filesystem-only sink. */
   object Manifest {

@@ -89,7 +89,7 @@ object Staging {
     * blank lines (empty once Spark's `trim` has taken the spaces off both
     * ends) are dropped, the first remaining line is the header, and every
     * line equal to the header is dropped. */
-  private[etl] def dropHeader(lines: Iterator[String]): Iterator[String] = {
+  private def dropHeader(lines: Iterator[String]): Iterator[String] = {
     val kept = lines.filter(l => UTF8String.fromString(l).trim().numBytes() > 0)
     if (!kept.hasNext) Iterator.empty
     else {

@@ -425,6 +425,8 @@ class RunnerSpec extends SparkSpec {
         jobs.add((j.jobId, Option(j.properties).map(_.getProperty("spark.sql.execution.id")).orNull, j.stageIds))
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(t.stageId)
     }
+    // events still queued from earlier work would reach the new listener
+    org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
     sc.addSparkListener(listener)
     try {
       Runner.run(spark, staging.toString, out)

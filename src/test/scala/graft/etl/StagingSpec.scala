@@ -191,7 +191,7 @@ class StagingSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions === 1)
   }
 
-  test("the driver resolves the sheet before any job: corrupt file, missing sheet") {
+  test("the driver resolves the sheet: a corrupt file or a missing sheet fails before the frame exists") {
     val corrupt = Files.createTempFile("graft-corrupt", ".xlsx")
     Files.writeString(corrupt, "not a zip")
     intercept[java.util.zip.ZipException](
