@@ -1,22 +1,22 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of the benchmark, summarised per metric.
 
-    scripts/bench_pairs.py [--trace] [--json PATH] PARENT_REV WORKLOAD SEED [SEED ...]
+    scripts/bench_pairs.py [--trace] PARENT_REV WORKLOAD SEED [SEED ...]
 
 Exports the committed files of PARENT_REV and of HEAD (the change) with
 `git archive` into two directories under a fresh temporary directory,
-builds both, then runs `perfbench/run.py --workload WORKLOAD --seed SEED`
-once on each side for every seed, for the run length BENCHMARK.json sets.
-Pairs alternate which side runs first, so a drift in the host's speed
+then runs `perfbench/run.py --workload WORKLOAD --seed SEED` (which builds
+its side before it starts timing) once on each side for every seed, for
+the run length BENCHMARK.json sets. Pairs alternate which side runs first, so a drift in the host's speed
 lands on both sides equally. Each run happens in its own export, as the
 benchmark's own comparison does; nothing in this checkout is written.
 
-Prints, for every metric of BENCHMARK.json (the end-to-end ones, or with
---trace the per-layer ones), each side's median and quartiles, the change's
+Each run's metrics go to stderr as it finishes. Then it prints, for every
+metric of BENCHMARK.json (the end-to-end ones, or with --trace the
+per-layer ones), each side's median and quartiles, the change's
 relative move of the median, the pairs the change won (by the metric's
 "better" direction), and whether the median gap exceeds the parent's
-interquartile distance. --json writes every run's metrics as well. The
-temporary directory is removed at the end.
+interquartile distance. The temporary directory is removed at the end.
 """
 import argparse
 import json
@@ -45,29 +45,15 @@ def export(sha, dest):
         raise SystemExit(f"git archive {sha} failed")
 
 
-def build(side):
-    """Compile a side before its first timed run."""
-    subprocess.run([sys.executable, "-c",
-                    "import sys; sys.dont_write_bytecode = True; sys.path.insert(0, 'perfbench'); "
-                    "import build; build.build('.')"],
-                   cwd=side, check=True)
-
-
 def run(side, workload, seed, seconds, trace):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
     proc = subprocess.run(cmd, cwd=side, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     if proc.returncode != 0:
         return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0}
-    lines = proc.stdout.strip().splitlines()
-    res = json.loads(lines[-1])
-    try:
-        ctx = json.loads(lines[-2]).get("context", {})
-    except (IndexError, ValueError, AttributeError):
-        ctx = {}
+    res = json.loads(proc.stdout.strip().splitlines()[-1])
     return {"ok": res["correct"], "attempted": res["attempted"], "failed": res["failed"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
-            "effective_cores": ctx.get("effective_cores"), "load_avg": ctx.get("load_avg")}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
 
 
 def quartiles(xs):
@@ -104,7 +90,6 @@ def main():
     ap.add_argument("workload")
     ap.add_argument("seeds", nargs="+", type=int)
     ap.add_argument("--trace", action="store_true")
-    ap.add_argument("--json")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -119,7 +104,6 @@ def main():
         for side, sha in shas.items():
             sides[side] = os.path.join(tmp, side)
             export(sha, sides[side])
-            build(sides[side])
         runs = []
         for i, seed in enumerate(args.seeds):
             order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
@@ -128,8 +112,7 @@ def main():
                 got[side] = run(sides[side], args.workload, seed, seconds, args.trace)
                 r = got[side]
                 print(f"[bench_pairs] seed {seed} {side}: ok={r['ok']} failed={r['failed']}/"
-                      f"{r['attempted']} " + " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()
-                                                     if k in {m['name'] for m in spec['end_to_end']}),
+                      f"{r['attempted']} " + " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()),
                       file=sys.stderr, flush=True)
             runs.append((got["parent"], got["change"]))
     finally:
@@ -143,12 +126,6 @@ def main():
         print(f"{side}: {sum(r['ok'] for r in rs)}/{len(rs)} runs correct, "
               f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed")
     summarise(specs, runs)
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump({"workload": args.workload, "seeds": args.seeds, "seconds": seconds,
-                       "parent": shas["parent"], "change": shas["change"],
-                       "runs": [{"seed": s, "parent": p, "change": c}
-                                for s, (p, c) in zip(args.seeds, runs)]}, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -19,7 +19,9 @@ import scala.util.Try
   * its sheet and, for an adult workbook, to read the Notes snapshot; the
   * sheet itself is parsed inside the write's one task ([[Staging]]), so a
   * load runs one task and writes one file per workbook, and a malformed
-  * sheet body fails the write, not the driver.
+  * sheet body fails the write, not the driver. One task per workbook is
+  * meant for reference-sized NHS sheets: its gain was measured on 20k-row
+  * sheets, and a much larger sheet's load is not measured.
   *
   * Loads of different destination tables run at the same time, one
   * driver thread per destination (today INDEX and ADULT_4); files bound

