@@ -12,11 +12,10 @@ import scala.util.Try
   * failed load leaves the previous table readable and unchanged.
   * [[Sink.Manifest]] goes further: a new generation becomes visible by a
   * pointer swap, so there is no moment at which the table path is missing.
-  * [[overwriteManaged]], [[overwritePartitioned]] and [[overwriteBucketed]]
-  * still overwrite in place, and a failed write there loses the previous
-  * table. The `_TIMESTAMP DEFAULT
-  * CURRENT_TIMESTAMP()` column (reference docs/create_index.sql:19) is
-  * appended at write; `current_timestamp()` constant-folds to one value per
+  * [[overwritePartitioned]] and [[overwriteBucketed]] still overwrite in
+  * place, and a failed write there loses the previous table. The
+  * `_TIMESTAMP DEFAULT CURRENT_TIMESTAMP()` column (reference
+  * docs/create_index.sql:19) is appended at write; `current_timestamp()` constant-folds to one value per
   * query = the whole batch gets one stamp.
   *
   * The reference's NaN→NULL normalization pre-write
@@ -59,11 +58,6 @@ object Sink {
       s"rename $staged -> $dst failed; previous table intact at $old, new one at $staged")
     if (replacing) require(fs.delete(old, true), s"failed to delete $old after swap (table is live)")
   }
-
-  /** Managed-table variant (`saveAsTable`) for catalog-backed deployments. */
-  def overwriteManaged(df: DataFrame, table: String): Unit =
-    df.withColumn("_TIMESTAMP", current_timestamp())
-      .write.mode(SaveMode.Overwrite).saveAsTable(table)
 
   /** Hive-style partitioned layout: one directory per partition value.
     * This is the 100 TB at-rest layout — queries filtering on the partition

@@ -75,22 +75,28 @@ object Views {
       .withColumn("JOIN_KEY", joinKey)
       .withColumn("SORT_GENDER", when(col("GENDER") === "Persons", 1).otherwise(2).cast("long"))
 
-  /** PUBLISHED.PROCESSED_ADULT_4 (reference docs/reporting_adult4.sql:21-43):
-    * dashboard-facing column renames. */
+  /** The dashboard-facing column renames of the published ADULT_4 layer
+    * (reference docs/reporting_adult4.sql:21-43), which the published
+    * Cancer Alliance comparison repeats (the two views share the base
+    * schema). */
+  private val publishedAdult4Names = Seq(
+    "AREA_TYPE" -> "Area_Type", "AREA_CODE" -> "Area_Code",
+    "AREA_NAME" -> "Area_Name", "IS_AREA_CORE" -> "Area_Core",
+    "CANCER_SITE" -> "Cancer_Site", "GENDER" -> "Gender",
+    "STANDARDISATION_TYPE" -> "Standardisation_Type",
+    "STANDARDISATION_TYPE_SUBCATEGORY" -> "Standardisation_Subcategory",
+    "YEARS_SINCE_DIAGNOSIS" -> "Years_Since_Diagnosis",
+    "PATIENT_NUMBERS" -> "Patient_Numbers",
+    "SURVIVAL_METRIC" -> "Survival_Metric",
+    "SURVIVAL_PERCENT" -> "Survival_Per",
+    "DATE_DIAGNOSIS_WINDOW" -> "Date_Diagnosis_Window",
+    "DATE_SNAPSHOT" -> "Date_Snapshot",
+    "JOIN_KEY" -> "JOIN_KEY", "SORT_GENDER" -> "Sort_Gender")
+
+  /** PUBLISHED.PROCESSED_ADULT_4: [[processedAdult4]] under
+    * [[publishedAdult4Names]]. */
   def publishedAdult4(adult4: DataFrame): DataFrame =
-    Ops.renameSelect(processedAdult4(adult4), Seq(
-      "AREA_TYPE" -> "Area_Type", "AREA_CODE" -> "Area_Code",
-      "AREA_NAME" -> "Area_Name", "IS_AREA_CORE" -> "Area_Core",
-      "CANCER_SITE" -> "Cancer_Site", "GENDER" -> "Gender",
-      "STANDARDISATION_TYPE" -> "Standardisation_Type",
-      "STANDARDISATION_TYPE_SUBCATEGORY" -> "Standardisation_Subcategory",
-      "YEARS_SINCE_DIAGNOSIS" -> "Years_Since_Diagnosis",
-      "PATIENT_NUMBERS" -> "Patient_Numbers",
-      "SURVIVAL_METRIC" -> "Survival_Metric",
-      "SURVIVAL_PERCENT" -> "Survival_Per",
-      "DATE_DIAGNOSIS_WINDOW" -> "Date_Diagnosis_Window",
-      "DATE_SNAPSHOT" -> "Date_Snapshot",
-      "JOIN_KEY" -> "JOIN_KEY", "SORT_GENDER" -> "Sort_Gender"))
+    Ops.renameSelect(processedAdult4(adult4), publishedAdult4Names)
 
   /** REPORTING.CANCER_ALLIANCE_COMPARISON (reference
     * docs/reporting_cancer_alliance_reporting.sql:1-32): all Cancer
@@ -109,19 +115,7 @@ object Views {
     * docs/reporting_cancer_alliance_reporting.sql:34-56). Same rename map as
     * the published ADULT_4 layer (the two views share the base schema). */
   def publishedCancerAllianceComparison(adult4: DataFrame): DataFrame =
-    Ops.renameSelect(cancerAllianceComparison(adult4), Seq(
-      "AREA_TYPE" -> "Area_Type", "AREA_CODE" -> "Area_Code",
-      "AREA_NAME" -> "Area_Name", "IS_AREA_CORE" -> "Area_Core",
-      "CANCER_SITE" -> "Cancer_Site", "GENDER" -> "Gender",
-      "STANDARDISATION_TYPE" -> "Standardisation_Type",
-      "STANDARDISATION_TYPE_SUBCATEGORY" -> "Standardisation_Subcategory",
-      "YEARS_SINCE_DIAGNOSIS" -> "Years_Since_Diagnosis",
-      "PATIENT_NUMBERS" -> "Patient_Numbers",
-      "SURVIVAL_METRIC" -> "Survival_Metric",
-      "SURVIVAL_PERCENT" -> "Survival_Per",
-      "DATE_DIAGNOSIS_WINDOW" -> "Date_Diagnosis_Window",
-      "DATE_SNAPSHOT" -> "Date_Snapshot",
-      "JOIN_KEY" -> "JOIN_KEY", "SORT_GENDER" -> "Sort_Gender"))
+    Ops.renameSelect(cancerAllianceComparison(adult4), publishedAdult4Names)
 
   /** The shared CA base: age-standardised net-survival Cancer-Alliance rows
     * (reference docs/reporting_rank.sql:11-15). */

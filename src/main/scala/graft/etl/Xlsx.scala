@@ -21,7 +21,10 @@ import scala.collection.mutable.ArrayBuffer
   * workbook is untrusted input). Text follows openpyxl: character
   * references decode, rich-text runs join, phonetic (<rPh>) runs are
   * skipped. A [[Workbook]] handle parses the sheet index and the shared
-  * strings once, for every sheet read through it.
+  * strings once, for every sheet read through it. Cell references are read
+  * as openpyxl reads them (`$` anchors, letters of either case); a
+  * malformed reference or a shared-string index outside the table fails
+  * with an IllegalArgumentException naming the sheet and the cell.
   *
   * Scope: values only — formulas read their cached <v>, styles/dates come
   * back as the stored literal. That is exactly what the reference's sheets
@@ -34,14 +37,29 @@ object Xlsx {
 
   private val NoCells = new Array[String](0)
 
+  /** 1-26 for an ASCII letter of either case, else 0. */
+  private def letter(c: Char): Int = {
+    val l = c | 0x20
+    if (l >= 'a' && l <= 'z') l - 'a' + 1 else 0
+  }
+
+  /** Zero-based column of an A1-style cell reference, read as openpyxl
+    * reads one: an optional `$`, one to three letters of either case, an
+    * optional `$`, then the row's digits. -1 for any other string. */
   private def colIndex(ref: String): Int = {
+    val n = ref.length
+    var i = if (n > 0 && ref.charAt(0) == '$') 1 else 0
+    val letters = i
     var acc = 0
-    var i = 0
-    while (i < ref.length && ref.charAt(i) >= 'A' && ref.charAt(i) <= 'Z') {
-      acc = acc * 26 + (ref.charAt(i) - 'A' + 1)
+    while (i < n && i - letters < 3 && letter(ref.charAt(i)) > 0) {
+      acc = acc * 26 + letter(ref.charAt(i))
       i += 1
     }
-    acc - 1
+    if (i == letters) return -1
+    if (i < n && ref.charAt(i) == '$') i += 1
+    val digits = i
+    while (i < n && ref.charAt(i) >= '0' && ref.charAt(i) <= '9') i += 1
+    if (i == digits || i < n) -1 else acc - 1
   }
 
   /** Element name without its namespace prefix (the parser is not
@@ -207,8 +225,9 @@ object Xlsx {
             case XMLStreamConstants.START_ELEMENT if local(r) == "c" =>
               val ref = attr(r, "r")
               val idx = if (ref != null) colIndex(ref) else nextIdx
+              if (idx < 0) throw malformed(s"cell reference '$ref'")
               nextIdx = idx + 1
-              val v = readCell(attr(r, "t"))
+              val v = readCell(attr(r, "t"), ref, idx)
               if (v != null) { idxBuf += idx; valBuf += v }
             case XMLStreamConstants.END_ELEMENT if local(r) == "row" => inRow = false
             case _ =>
@@ -222,9 +241,9 @@ object Xlsx {
           }
         }
 
-        /** The value of the current <c>, null when it has none; leaves the
-          * reader on </c>. */
-        private def readCell(t: String): String = {
+        /** The value of the current <c> (at `ref`, column `idx`), null when
+          * it has none; leaves the reader on </c>. */
+        private def readCell(t: String, ref: String, idx: Int): String = {
           var value: String = null
           var inCell = true
           while (inCell) r.next() match {
@@ -232,7 +251,7 @@ object Xlsx {
               local(r) match {
                 case "v" if t != "inlineStr" =>
                   val v = r.getElementText
-                  value = if (t == "s") sharedStrings(v.trim.toInt) else v
+                  value = if (t == "s") shared(v, ref, idx) else v
                 case "is" if t == "inlineStr" => value = runText(r)
                 case _ => skip()
               }
@@ -241,6 +260,19 @@ object Xlsx {
           }
           value
         }
+
+        /** The shared string `v` indexes. */
+        private def shared(v: String, ref: String, idx: Int): String = {
+          val i = try v.trim.toInt catch { case _: NumberFormatException => -1 }
+          if (i < 0 || i >= sharedStrings.length) {
+            val cell = if (ref != null) ref else s"in column ${idx + 1} of row ${pendingIdx + 1}"
+            throw malformed(s"cell $cell: shared-string index '$v' outside the table of ${sharedStrings.length}")
+          }
+          sharedStrings(i)
+        }
+
+        private def malformed(what: String) =
+          new IllegalArgumentException(s"$path, sheet '$sheetName': malformed $what")
 
         /** Skip the current element and its children. */
         private def skip(): Unit = {

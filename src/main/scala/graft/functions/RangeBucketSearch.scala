@@ -142,8 +142,6 @@ object RangeBucketSearch {
     * evaluated ONCE here and frozen into the expression — the per-row
     * plan carries only the key children plus one reference object. */
   private[functions] def build(es: Seq[Expression]): Expression = {
-    require(es.length >= 3,
-      "range_bucket_search(desc_flags, boundaries, key1, ...) takes >= 3 arguments")
     val descE = es.head
     val bndE = es(1)
     val keys = es.drop(2)

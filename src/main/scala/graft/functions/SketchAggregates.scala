@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -275,7 +275,6 @@ object SketchAggregates {
   }
 
   private[functions] def buildMg(es: Seq[Expression]): Expression = {
-    require(es.size == 2, "mg_topk(string_col, k) takes exactly 2 arguments")
     require(es(1).foldable, "mg_topk k must be a literal")
     es(1).eval() match {
       case n: Number => MgTopKAgg(es.head, n.intValue())
@@ -287,7 +286,6 @@ object SketchAggregates {
 
   /** SQL builder: second argument must be a foldable integer literal. */
   private[functions] def build(es: Seq[Expression]): Expression = {
-    require(es.size == 2, "kmv_sketch(hash_col, k) takes exactly 2 arguments")
     require(es(1).foldable, "kmv_sketch k must be a literal")
     val kv = es(1).eval()
     kv match {
@@ -298,17 +296,9 @@ object SketchAggregates {
     }
   }
 
-  /** Install in the session's FunctionRegistry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("kmv_sketch", build, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("mg_topk", buildMg, "built-in")
-  }
-
-  /** Column entry point (requires register(spark) or GraftExtensions). */
+  /** Column entry point (requires VectorExpressions.register(spark) or GraftExtensions). */
   def kmv_sketch(c: Column, k: Int): Column = call_function("kmv_sketch", c, lit(k))
 
-  /** Column entry point (requires register(spark) or GraftExtensions). */
+  /** Column entry point (requires VectorExpressions.register(spark) or GraftExtensions). */
   def mg_topk(c: Column, k: Int): Column = call_function("mg_topk", c, lit(k))
 }

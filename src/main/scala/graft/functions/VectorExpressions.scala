@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a tight static kernel) while preserving the exact sequential-fold
   * arithmetic the DuckDB oracles replicate.
   *
-  * Exposure is the fully-public path: [[register]] installs them in the
+  * Exposure is the fully-public path: [[register]] installs the
+  * [[FunctionCatalog]] (these and the other engine functions) in the
   * session's FunctionRegistry; the Column helpers resolve by name via
   * `call_function` (the `Column(expr)` bridge is private[sql] in Spark 4).
   */
@@ -185,7 +186,6 @@ object VectorExpressions {
   }
 
   private[functions] val charHistEntriesBuilder: Seq[Expression] => Expression = { es =>
-    require(es.length == 2, s"charhist_entries expects (text, blocks), got ${es.length} args")
     val blocks = (es(1) match {
       case e if e.foldable => e.eval()
       case other => throw new IllegalArgumentException(
@@ -201,7 +201,9 @@ object VectorExpressions {
   }
 
   /** Aligned count vector over sorted (k, c) entries — see
-    * [[VectorKernels.alignedCounts]]. */
+    * [[VectorKernels.alignedCounts]]. Both inputs must be sorted
+    * ascending (entries by k, keys by value): the kernel binary-searches,
+    * so an unsorted caller gets wrong counts, not an error. */
   case class AlignedCounts(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullIntolerant: Boolean = true
@@ -219,7 +221,8 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** mod-1000 marginal count vector — see [[VectorKernels.marginalCounts]]. */
+  /** mod-1000 marginal count vector — see [[VectorKernels.marginalCounts]].
+    * Same sorted-input contract as [[AlignedCounts]]. */
   case class MarginalCounts(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullIntolerant: Boolean = true
@@ -258,7 +261,6 @@ object VectorExpressions {
   /** Registry builder: k must be a foldable integral literal (the
     * hilbert_d2 convention). */
   private[functions] val minhashBands8Builder: Seq[Expression] => Expression = { es =>
-    require(es.length == 2, s"minhash_bands8 expects (text, k), got ${es.length} args")
     val lit = es(1) match {
       case e if e.foldable => e.eval()
       case other => throw new IllegalArgumentException(
@@ -272,26 +274,6 @@ object VectorExpressions {
     }
     require(k >= 1, s"minhash_bands8: k must be >= 1, got $k")
     MinhashBands8(es.head, k)
-  }
-
-  /** Registry builders with arity checks (ADVICE r13: `es.head`/`es(1)`
-    * without a length guard surfaced wrong SQL arity as a raw
-    * IndexOutOfBoundsException, or silently IGNORED extra arguments).
-    * The entries/keys inputs of aligned_counts and marginal_counts must
-    * be sorted (entries by k asc; keys asc) — a binary-search contract
-    * the registered description strings also state, since an unsorted
-    * caller gets silently wrong counts, not an error. */
-  private[functions] val alignedCountsBuilder: Seq[Expression] => Expression = { es =>
-    require(es.length == 2, s"aligned_counts expects (entries, keys), got ${es.length} args")
-    AlignedCounts(es.head, es(1))
-  }
-  private[functions] val marginalCountsBuilder: Seq[Expression] => Expression = { es =>
-    require(es.length == 2, s"marginal_counts expects (entries, keys), got ${es.length} args")
-    MarginalCounts(es.head, es(1))
-  }
-  private[functions] val md5Seeded8Builder: Seq[Expression] => Expression = { es =>
-    require(es.length == 1, s"md5_seeded8 expects (s), got ${es.length} args")
-    Md5Seeded8(es.head)
   }
 
   case class RollingHash31(child: Expression) extends UnaryExpression {
@@ -382,8 +364,7 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  private def hilbertBuilder(es: Seq[Expression]): Expression = {
-    require(es.length == 3, "hilbert_d2(x, y, bits) takes exactly 3 arguments")
+  private[functions] def hilbertBuilder(es: Seq[Expression]): Expression = {
     val lit = es(2) match {
       case l if l.foldable => l.eval()
       case _ => throw new IllegalArgumentException(
@@ -399,28 +380,15 @@ object VectorExpressions {
     HilbertD2(es(0), es(1), b)
   }
 
-  /** Install in the session's FunctionRegistry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vector_dot_f32", es => VectorDotF32(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vector_norm_f32", es => VectorNormF32(es.head), "built-in")
-    reg.createOrReplaceTempFunction("vector_dot_f64", es => VectorDotF64(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vector_norm_f64", es => VectorNormF64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash31", es => RollingHash31(es.head), "built-in")
-    reg.createOrReplaceTempFunction("window_hash31", es => WindowHash31(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("hilbert_d2", hilbertBuilder, "built-in")
-    reg.createOrReplaceTempFunction("vector_l1_i64", es => VectorL1I64(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vector_distsq_i64", es => VectorDistSqI64(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("damerau_levenshtein", es => DamerauLevenshtein(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("range_bucket_search", RangeBucketSearch.build, "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands8", minhashBands8Builder, "built-in")
-    reg.createOrReplaceTempFunction("md5_seeded8", md5Seeded8Builder, "built-in")
-    reg.createOrReplaceTempFunction("charhist_entries", charHistEntriesBuilder, "built-in")
-    reg.createOrReplaceTempFunction("aligned_counts", alignedCountsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("marginal_counts", marginalCountsBuilder, "built-in")
-  }
+  /** Install every [[FunctionCatalog]] entry in the session's
+    * FunctionRegistry (idempotent) — the per-session route to the table
+    * [[GraftExtensions]] injects deploy-wide. */
+  def register(spark: SparkSession): Unit =
+    FunctionCatalog.entries.foreach { e =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(e.name, e.builder, "built-in")
+    }
 
-  // Column-level entry points (require register(spark) on the session)
+  // Column-level entry points (require register(spark) or GraftExtensions)
   def vector_dot_f32(a: Column, b: Column): Column = call_function("vector_dot_f32", a, b)
   def vector_norm_f32(a: Column): Column = call_function("vector_norm_f32", a)
   def vector_dot_f64(a: Column, b: Column): Column = call_function("vector_dot_f64", a, b)

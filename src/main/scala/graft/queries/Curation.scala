@@ -1612,7 +1612,7 @@ object Curation {
                  CAST((len(skl) - 1) * 4294967296 // skl[-1] AS BIGINT) AS est_distinct
           FROM sk""") {
       (s, d) =>
-        graft.functions.SketchAggregates.register(s)
+        graft.functions.VectorExpressions.register(s)
         docs(s, d)
           .select(col("source"), explode(split(col("text"), " ")).as("token"))
           .distinct()

@@ -460,7 +460,8 @@ class RunnerSpec extends SparkSpec {
       """<row r="12"><c r="A12" t="s"><v>7</v></c></row>""")
     val e = intercept[org.apache.spark.SparkException](Runner.run(spark, staging.toString, out))
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(chain.exists(_.isInstanceOf[ArrayIndexOutOfBoundsException]), chain.mkString("\n"))
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("sheet 'Table 4'") && c.getMessage.contains("cell A12")), chain.mkString("\n"))
 
     // _TIMESTAMP included: the prior load's rows, not a rewrite of them
     assert(rows("ADULT_4") === priorAdult)

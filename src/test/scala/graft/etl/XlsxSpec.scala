@@ -239,4 +239,40 @@ class XlsxSpec extends SparkSpec {
       assert(wb.sharedStrings.toSeq === Seq("Geography type", "Survival (%)", "Cancer Alliance", "rich text"))
     }
   }
+
+  private def rows(path: String): Seq[Seq[String]] =
+    Xlsx.withWorkbook(path)(_.rows("S").map(_.toSeq).toVector)
+
+  test("cell references read as openpyxl reads them: `$` anchors, letters of either case") {
+    val path = oneSheet(
+      """<worksheet><sheetData><row r="1">
+        |<c r="a1" t="inlineStr"><is><t>a</t></is></c>
+        |<c r="$C1" t="inlineStr"><is><t>c</t></is></c>
+        |<c r="d$1" t="inlineStr"><is><t>d</t></is></c>
+        |<c r="$aA$1" t="inlineStr"><is><t>aa</t></is></c>
+        |</row></sheetData></worksheet>""".stripMargin)
+    assert(rows(path) === Seq(Seq("a", null, "c", "d") ++ Seq.fill(22)(null) :+ "aa"))
+  }
+
+  test("a malformed cell reference fails with an error naming the sheet and the cell") {
+    for (ref <- Seq("1", "A", "$", "A1B", "ABCD1", "$$A1", "A$$1", "-A1", "")) {
+      val path = oneSheet(
+        s"""<worksheet><sheetData><row r="1"><c r="$ref"><v>7</v></c></row></sheetData></worksheet>""")
+      val e = intercept[IllegalArgumentException](rows(path))
+      assert(e.getMessage.contains("sheet 'S'") && e.getMessage.contains(s"reference '$ref'"), e.getMessage)
+    }
+  }
+
+  test("a shared-string index outside the table fails with an error naming the sheet and the cell") {
+    val table = Some("""<sst><si><t>only</t></si></sst>""")
+    for ((cell, v) <- Seq(("""r="B1"""", "5"), ("""r="B1"""", "1"), ("""r="B1"""", "-1"), ("""r="B1"""", "x"), ("", "5"))) {
+      val path = oneSheet(
+        s"""<worksheet><sheetData><row r="1"><c r="A1" t="s"><v>0</v></c><c $cell t="s"><v>$v</v></c></row>
+           |</sheetData></worksheet>""".stripMargin, table)
+      val e = intercept[IllegalArgumentException](rows(path))
+      val named = if (cell.nonEmpty) "cell B1" else "column 2 of row 1"
+      assert(e.getMessage.contains("sheet 'S'") && e.getMessage.contains(named) &&
+        e.getMessage.contains(s"index '$v'"), e.getMessage)
+    }
+  }
 }
