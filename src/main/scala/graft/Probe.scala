@@ -24,10 +24,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Probe {
   /** Named query sets: `scale`, the headline operators across tiers;
-    * `shuffle`, the shuffle-bearing set; and the three families that the
+    * `shuffle`, the shuffle-bearing set; the three families that the
     * derived tiers of [[TierGen]] scale (`dedup` over documents, `er` over
     * customer, `sim` over embeddings; q_entity_cluster reads part, which
-    * the tiers do not derive). */
+    * the tiers do not derive); and `kernels`, every query whose plans call
+    * one of the scalar kernel functions of
+    * [[graft.functions.FunctionCatalog]] (read from the SQL execution
+    * plans of each query's noop write at sf0.01). */
   val families: Map[String, Seq[String]] = Map(
     "scale" -> Seq(
       "q_dedup_exact", "q_dedup_minhash_lsh", "q_dedup_jaccard",
@@ -53,7 +56,15 @@ object Probe {
     "er" -> Seq("q_snm_pairs", "q_linkage_fs", "q_er_golden", "q_er_incremental"),
     "sim" -> Seq(
       "q_sim_topk", "q_sim_lsh_bucketed", "q_sim_ivf", "q_sim_pq",
-      "q_sim_ivfpq", "q_sim_maxsim", "q_dedup_embed_cosine", "q_semdedup"))
+      "q_sim_ivfpq", "q_sim_maxsim", "q_dedup_embed_cosine", "q_semdedup"),
+    "kernels" -> Seq(
+      "q_bfs_hops", "q_chunk_content", "q_cluster_kmeans", "q_dedup_adversarial_bucket",
+      "q_dedup_embed_cosine", "q_dedup_incremental_lsh", "q_dedup_minhash_estimate",
+      "q_embed_stats", "q_entity_cluster", "q_fuzzy_damerau", "q_hard_negatives",
+      "q_hilbert_key", "q_multimodal_blockhash", "q_multimodal_histdup", "q_semdedup",
+      "q_sim_adversarial_bucket", "q_sim_ivf", "q_sim_ivfpq", "q_sim_lsh_bucketed",
+      "q_sim_lsh_multiprobe", "q_sim_maxsim", "q_sim_pq", "q_sim_recall", "q_sim_topk",
+      "q_sketch_countmin", "q_text_fingerprint"))
 
   /** One measured run: driver seconds per phase, the meter's counts over
     * it and the jobs it submitted. */

@@ -23,8 +23,9 @@ import scala.collection.mutable.ArrayBuffer
   * skipped. A [[Workbook]] handle parses the sheet index and the shared
   * strings once, for every sheet read through it. Cell references are read
   * as openpyxl reads them (`$` anchors, letters of either case); a
-  * malformed reference or a shared-string index outside the table fails
-  * with an IllegalArgumentException naming the sheet and the cell.
+  * malformed reference, a row number that is not a positive integer or a
+  * shared-string index outside the table fails with an
+  * IllegalArgumentException naming the workbook and the sheet.
   *
   * Scope: values only — formulas read their cached <v>, styles/dates come
   * back as the stored literal. That is exactly what the reference's sheets
@@ -208,7 +209,11 @@ object Xlsx {
             else r.next() match {
               case XMLStreamConstants.START_ELEMENT if local(r) == "row" =>
                 val rn = attr(r, "r")
-                pendingIdx = if (rn != null) rn.trim.toInt - 1 else emitted
+                pendingIdx = if (rn == null) emitted else {
+                  val n = try rn.trim.toInt catch { case _: NumberFormatException => 0 }
+                  if (n < 1) throw malformed(s"row number '$rn'")
+                  n - 1
+                }
                 pending = readRow()
               case XMLStreamConstants.END_ELEMENT if local(r) == "sheetData" =>
                 done = true; r.close()

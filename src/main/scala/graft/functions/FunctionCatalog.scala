@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types._
 
-import graft.functions.VectorExpressions._
+import graft.functions.VectorExpressions.KernelCall
 
 /** Every engine SQL function, in one table. The deploy-wide
   * [[GraftExtensions]] injects it and the per-session
@@ -12,9 +13,12 @@ import graft.functions.VectorExpressions._
   * Each entry states its argument count, and [[Entry.builder]] checks it
   * before the entry's own builder runs: a call with too few or too many
   * arguments fails with an IllegalArgumentException that names the
-  * function. Checks beyond the count (a literal `k` or `bits`, the
-  * matching lengths of `range_bucket_search`'s flags and keys) stay in the
-  * builders.
+  * function. The fifteen scalar entries are one line each: a
+  * [[VectorExpressions.KernelCall]] of a [[VectorKernels]] method with its
+  * result type, its column arguments and the literal Int arguments it
+  * reads through [[intLiteral]]. The three others build their own
+  * expression; `kmv_sketch` and `mg_topk` read `k` through [[intLiteral]]
+  * too, and `range_bucket_search` checks that its flags and keys match.
   */
 object FunctionCatalog {
 
@@ -36,22 +40,58 @@ object FunctionCatalog {
     }
   }
 
+  /** A literal Int argument of a kernel function, read when the call is
+    * built and passed to the kernel after the column arguments. */
+  final case class IntParam(name: String, lo: Int, hi: Int = Int.MaxValue)
+
+  /** The value `e` gives argument `p` of function `fn`: `e` must be a
+    * non-null integral literal in [p.lo, p.hi], or this throws an
+    * IllegalArgumentException that names `fn` and `p`. A bigint is never
+    * wrapped and a fraction never truncated into range. */
+  def intLiteral(fn: String, p: IntParam, e: Expression): Int = {
+    if (!e.foldable)
+      throw new IllegalArgumentException(s"$fn: ${p.name} must be a literal, got $e")
+    val v = e.eval() match {
+      case n @ (_: Byte | _: Short | _: Int | _: Long) => n.asInstanceOf[Number].longValue
+      case other => throw new IllegalArgumentException(
+        s"$fn: ${p.name} must be a non-null integer literal, got " +
+          (if (other == null) "NULL" else s"$other (${e.dataType.simpleString})"))
+    }
+    if (v < p.lo || v > p.hi)
+      throw new IllegalArgumentException(s"$fn: ${p.name} must be " +
+        (if (p.hi == Int.MaxValue) s">= ${p.lo}" else s"in [${p.lo}, ${p.hi}]") + s", got $v")
+    v.toInt
+  }
+
+  /** `name(c1, …, cN, p1, …)` as a call of `VectorKernels.<method>` on N
+    * column arguments and the literal `params`. */
+  private def kernel(name: String, method: String, dataType: DataType, columns: Int,
+      params: IntParam*): Entry =
+    Entry(name, columns + params.length, es => KernelCall(name, method, dataType,
+      es.take(columns), params.zip(es.drop(columns)).map { case (p, e) => intLiteral(name, p, e) }))
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
+  private val HistEntries = ArrayType(StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("c", LongType, nullable = false))), containsNull = false)
+
   val entries: Seq[Entry] = Seq(
-    Entry("vector_dot_f32", 2, es => VectorDotF32(es(0), es(1))),
-    Entry("vector_norm_f32", 1, es => VectorNormF32(es(0))),
-    Entry("vector_dot_f64", 2, es => VectorDotF64(es(0), es(1))),
-    Entry("vector_norm_f64", 1, es => VectorNormF64(es(0))),
-    Entry("vector_l1_i64", 2, es => VectorL1I64(es(0), es(1))),
-    Entry("vector_distsq_i64", 2, es => VectorDistSqI64(es(0), es(1))),
-    Entry("rolling_hash31", 1, es => RollingHash31(es(0))),
-    Entry("window_hash31", 2, es => WindowHash31(es(0), es(1))),
-    Entry("hilbert_d2", 3, hilbertBuilder),
-    Entry("damerau_levenshtein", 2, es => DamerauLevenshtein(es(0), es(1))),
-    Entry("minhash_bands8", 2, minhashBands8Builder),
-    Entry("md5_seeded8", 1, es => Md5Seeded8(es(0))),
-    Entry("charhist_entries", 2, charHistEntriesBuilder),
-    Entry("aligned_counts", 2, es => AlignedCounts(es(0), es(1))),
-    Entry("marginal_counts", 2, es => MarginalCounts(es(0), es(1))),
+    kernel("vector_dot_f32", "dotF32", DoubleType, 2),
+    kernel("vector_norm_f32", "normF32", DoubleType, 1),
+    kernel("vector_dot_f64", "dotF64", DoubleType, 2),
+    kernel("vector_norm_f64", "normF64", DoubleType, 1),
+    kernel("vector_l1_i64", "l1I64", LongType, 2),
+    kernel("vector_distsq_i64", "distSqI64", LongType, 2),
+    kernel("rolling_hash31", "rollingHash31", LongType, 1),
+    kernel("window_hash31", "windowHash31", Longs, 2),
+    kernel("hilbert_d2", "hilbertD2", LongType, 2, IntParam("bits", 1, 31)),
+    kernel("damerau_levenshtein", "damerauLevenshtein", LongType, 2),
+    kernel("minhash_bands8", "minhashBands8", Strings, 1, IntParam("k", 1)),
+    kernel("md5_seeded8", "md5Seeded8", Strings, 1),
+    kernel("charhist_entries", "charHistEntries", HistEntries, 1, IntParam("blocks", 1)),
+    kernel("aligned_counts", "alignedCounts", Longs, 2),
+    kernel("marginal_counts", "marginalCounts", Longs, 2),
     Entry("range_bucket_search", 3, RangeBucketSearch.build, variadic = true),
     Entry("kmv_sketch", 2, SketchAggregates.build),
     Entry("mg_topk", 2, SketchAggregates.buildMg))

@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
+import graft.functions.FunctionCatalog.IntParam
+
 /** Custom AGGREGATE functions — the §2.11 tier between built-in aggregates
   * and mapPartitions: a `TypedImperativeAggregate` participates in Spark's
   * partial/final aggregation exactly like a built-in (map-side combine,
@@ -274,27 +276,12 @@ object SketchAggregates {
       copy(child = newChildren.head)
   }
 
-  private[functions] def buildMg(es: Seq[Expression]): Expression = {
-    require(es(1).foldable, "mg_topk k must be a literal")
-    es(1).eval() match {
-      case n: Number => MgTopKAgg(es.head, n.intValue())
-      case other => throw new IllegalArgumentException(
-        s"mg_topk k must be a non-null integer literal, got " +
-          (if (other == null) "NULL" else s"$other (${es(1).dataType.simpleString})"))
-    }
-  }
+  /** SQL builders: the second argument is the literal `k`. */
+  private[functions] def buildMg(es: Seq[Expression]): Expression =
+    MgTopKAgg(es.head, FunctionCatalog.intLiteral("mg_topk", IntParam("k", 1), es(1)))
 
-  /** SQL builder: second argument must be a foldable integer literal. */
-  private[functions] def build(es: Seq[Expression]): Expression = {
-    require(es(1).foldable, "kmv_sketch k must be a literal")
-    val kv = es(1).eval()
-    kv match {
-      case n: Number => KmvSketchAgg(es.head, n.intValue())
-      case other => throw new IllegalArgumentException(
-        s"kmv_sketch k must be a non-null integer literal, got " +
-          (if (other == null) "NULL" else s"$other (${es(1).dataType.simpleString})"))
-    }
-  }
+  private[functions] def build(es: Seq[Expression]): Expression =
+    KmvSketchAgg(es.head, FunctionCatalog.intLiteral("kmv_sketch", IntParam("k", 1), es(1)))
 
   /** Column entry point (requires VectorExpressions.register(spark) or GraftExtensions). */
   def kmv_sketch(c: Column, k: Int): Column = call_function("kmv_sketch", c, lit(k))

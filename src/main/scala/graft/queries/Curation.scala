@@ -1502,7 +1502,7 @@ object Curation {
     * chunk — the dedup-ratio measure).
     *
     * Scale shape: boundary detection is a pure per-row explode of the
-    * codegen'd [[graft.functions.VectorExpressions.RollingHash31]] over
+    * codegen'd [[graft.functions.VectorKernels.rollingHash31]] over
     * the byte stream (no shuffle); chunk assembly is a per-DOCUMENT
     * window over ~n/61 boundary rows; the sharing rollup keys on
     * chunk_hash. Expected chunk length = the modulus (61 bytes here —

@@ -281,7 +281,7 @@ object EventsMultimodal {
     * Verification is candidate-linear: per-item histograms align to the
     * observed alphabet once (≤256 ints of driver metadata), and each pair
     * evaluates one codegen'd fixed-stride L1 kernel
-    * ([[graft.functions.VectorExpressions.VectorL1I64]]) — no per-byte
+    * ([[graft.functions.VectorKernels.l1I64]]) — no per-byte
     * row blowup, no all-pairs join, no interpreted per-pair lambda (the
     * `map_zip_with` formulation measured 7× slower end-to-end on the
     * sf0.1 corpus). At 100 TB the banding key
@@ -429,7 +429,7 @@ object EventsMultimodal {
     * Same scale shape as histdup: length-band candidates, one composite
     * (block·1000+byte)-keyed count pass, vectors aligned to the observed
     * composite alphabet (≤4·256 ints of driver metadata), per-pair
-    * verify via the codegen [[graft.functions.VectorExpressions.VectorL1I64]]
+    * verify via the codegen [[graft.functions.VectorKernels.l1I64]]
     * kernel. All-integer, bitwise cross-engine. */
   val multimodalBlockhash = QuerySpec(
     "q_multimodal_blockhash",

@@ -780,7 +780,7 @@ object Relational {
   /** Transposition-aware fuzzy match: the q_fuzzy_match blocking (two
     * equi-join candidate passes, union, dedup) re-scored with TRUE
     * Damerau-Levenshtein via the custom codegen expression
-    * ([[graft.functions.VectorExpressions.DamerauLevenshtein]]) — Spark
+    * ([[graft.functions.VectorKernels.damerauLevenshtein]]) — Spark
     * ships no transposition-aware distance, and typo pairs ("hte"/"the")
     * cost 2 under plain levenshtein but 1 under DL, so a lev-thresholded
     * matcher systematically under-merges swapped-token typos. Output
@@ -1119,7 +1119,7 @@ object Relational {
     * consecutive Hilbert indices are always grid-ADJACENT (proven
     * exhaustively in VectorExpressionsSpec), where Morton order takes
     * diagonal jumps that widen file bounding boxes. Spark computes it
-    * with the codegen [[graft.functions.VectorExpressions.HilbertD2]]
+    * with the codegen [[graft.functions.VectorKernels.hilbertD2]]
     * kernel (O(bits) per row); the oracle unrolls the identical
     * mask-and-rotate steps as chained CTEs, so the hash-match proves the
     * kernel IS the textbook transform step for step. */

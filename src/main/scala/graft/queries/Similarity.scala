@@ -780,7 +780,7 @@ object Similarity {
     * the query's M×K table of subspace distances — candidates' raw
     * vectors are NEVER touched during search. All-integer end-to-end
     * (int8 lanes → integer squared L2 via the codegen
-    * [[graft.functions.VectorExpressions.VectorDistSqI64]] kernel), so
+    * [[graft.functions.VectorKernels.distSqI64]] kernel), so
     * every distance and rank is bitwise cross-engine.
     *
     * Codebook: the subvectors of the K lowest-vec_id items (sampled

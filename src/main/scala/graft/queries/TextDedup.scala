@@ -225,7 +225,7 @@ object TextDedup {
               END AS fingerprint
        FROM documents""") {
     (s, d) => {
-      // custom codegen expression (graft.functions.RollingHash31) — the
+      // codegen kernel call (graft.functions.VectorKernels.rollingHash31) — the
       // aggregate() HOF form is semantically identical but interpreted
       VectorExpressions.register(s)
       docs(s, d).select(

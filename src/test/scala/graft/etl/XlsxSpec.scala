@@ -263,6 +263,16 @@ class XlsxSpec extends SparkSpec {
     }
   }
 
+  test("a malformed row number fails with an error naming the workbook, the sheet and the number") {
+    for (rn <- Seq("x", "1.5", "", "0", "-3", "99999999999")) {
+      val path = oneSheet(
+        s"""<worksheet><sheetData><row r="$rn"><c r="A1"><v>7</v></c></row></sheetData></worksheet>""")
+      val e = intercept[IllegalArgumentException](rows(path))
+      assert(e.getMessage.contains(path) && e.getMessage.contains("sheet 'S'") &&
+        e.getMessage.contains(s"row number '$rn'"), e.getMessage)
+    }
+  }
+
   test("a shared-string index outside the table fails with an error naming the sheet and the cell") {
     val table = Some("""<sst><si><t>only</t></si></sst>""")
     for ((cell, v) <- Seq(("""r="B1"""", "5"), ("""r="B1"""", "1"), ("""r="B1"""", "-1"), ("""r="B1"""", "x"), ("", "5"))) {

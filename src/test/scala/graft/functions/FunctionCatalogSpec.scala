@@ -1,13 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.VectorExpressions.KernelCall
 
 /** Both routes install the whole [[FunctionCatalog]]: a session built with
   * [[GraftExtensions]] and a plain session after
   * [[VectorExpressions.register]] resolve every entry to the same answer,
   * and a call with the wrong number of arguments fails with an error that
-  * names the function and the count it got. */
+  * names the function and the count it got. Each scalar kernel entry gives
+  * the same bits through generated and interpreted code, and a literal Int
+  * argument is read only when it is an integer in range. */
 class FunctionCatalogSpec extends AnyFunSuite {
 
   /** One well-formed call per entry, over the row (x, s) = (5, 'a'). */
@@ -75,6 +80,131 @@ class FunctionCatalogSpec extends AnyFunSuite {
         assert(ex.getMessage.contains(e.name) && ex.getMessage.contains(s"got $n"),
           s"${e.name} with $n arguments: ${ex.getMessage}")
       }
+    }
+  }
+
+  test("a literal Int argument is a non-null integer literal in range, never wrapped or truncated") {
+    val bad = Seq(
+      "hilbert_d2(3L, x, 4294967300)" -> ("hilbert_d2", "bits"),
+      "hilbert_d2(3L, x, 32)" -> ("hilbert_d2", "bits"),
+      "hilbert_d2(3L, x, 4.0D)" -> ("hilbert_d2", "bits"),
+      "hilbert_d2(3L, x, CAST(NULL AS INT))" -> ("hilbert_d2", "bits"),
+      "hilbert_d2(3L, x, x)" -> ("hilbert_d2", "bits"),
+      "minhash_bands8('a b c', 4294967297)" -> ("minhash_bands8", "k"),
+      "minhash_bands8('a b c', 0)" -> ("minhash_bands8", "k"),
+      "charhist_entries('abca', 4294967298)" -> ("charhist_entries", "blocks"),
+      "charhist_entries('abca', 2.5BD)" -> ("charhist_entries", "blocks"),
+      "kmv_sketch(x, 2.9D)" -> ("kmv_sketch", "k"),
+      "kmv_sketch(x, 4294967298)" -> ("kmv_sketch", "k"),
+      "mg_topk(s, 2.5D)" -> ("mg_topk", "k"),
+      "mg_topk(s, -2147483647L)" -> ("mg_topk", "k"))
+    for (s <- Seq(extended, plain); (call, (fn, arg)) <- bad) {
+      val ex = intercept[Exception](run(s, call))
+      val named = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).exists {
+        case e: IllegalArgumentException => e.getMessage.contains(s"$fn: $arg must be")
+        case _ => false
+      }
+      assert(named, s"$call: ${ex.getMessage}")
+    }
+    // an in-range literal of any integral width reads as its value
+    for (s <- Seq(extended, plain)) {
+      assert(run(s, "hilbert_d2(3L, x, 4L)") === run(s, "hilbert_d2(3L, x, 4)"))
+      assert(run(s, "hilbert_d2(3L, x, CAST(4 AS TINYINT))") === run(s, "hilbert_d2(3L, x, 4)"))
+      assert(run(s, "kmv_sketch(x, 2L)") === run(s, "kmv_sketch(x, 2)"))
+      assert(run(s, "mg_topk(s, CAST(2 AS SMALLINT))") === run(s, "mg_topk(s, 2)"))
+    }
+  }
+
+  /** One call per scalar kernel entry over the columns of [[kernelInput]]. */
+  private val kernelCalls = Map(
+    "vector_dot_f32" -> "vector_dot_f32(fa, fb)",
+    "vector_norm_f32" -> "vector_norm_f32(fa)",
+    "vector_dot_f64" -> "vector_dot_f64(da, db)",
+    "vector_norm_f64" -> "vector_norm_f64(da)",
+    "vector_l1_i64" -> "vector_l1_i64(la, lb)",
+    "vector_distsq_i64" -> "vector_distsq_i64(la, lb)",
+    "rolling_hash31" -> "rolling_hash31(s)",
+    "window_hash31" -> "window_hash31(s, w)",
+    "hilbert_d2" -> "hilbert_d2(x, y, 5)",
+    "damerau_levenshtein" -> "damerau_levenshtein(s, t)",
+    "minhash_bands8" -> "minhash_bands8(s, 2)",
+    "md5_seeded8" -> "md5_seeded8(s)",
+    "charhist_entries" -> "charhist_entries(s, 3)",
+    "aligned_counts" -> "aligned_counts(e, keys)",
+    "marginal_counts" -> "marginal_counts(e, keys)")
+
+  /** 240 rows written to parquet and read back, so each kernel reads a
+    * scan (not a local relation the optimizer evaluates itself) and its
+    * arguments are plain columns; every column is null on every 13th row,
+    * and the floats are not exact binary fractions. */
+  private lazy val kernelInput: String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-kernels").resolve("input").toString
+    plain.range(0, 240, 1, 2).selectExpr("id",
+      "transform(sequence(0, id % 7), i -> CAST((id * 0.37 + i * 1.3) % 5.1 - 2.2 AS FLOAT)) AS fa",
+      "transform(sequence(0, id % 5), i -> CAST((id * 0.11 - i * 0.7) % 3.3 AS FLOAT)) AS fb",
+      "transform(sequence(0, 8), i -> (id * 31 + i * 7) % 23 - 11) AS la",
+      "transform(sequence(0, 8), i -> (id * 17 + i * 5) % 19 - 9) AS lb",
+      "concat_ws(' ', transform(sequence(0, id % 9), i -> " +
+        "substr('the quick brown fox jumps over the lazy dog', 1 + (id * 7 + i * 3) % 40, 1 + i % 4))) AS s",
+      "substr('hte quick borwn fox jumsp over teh lazy dgo', 1 + id % 20, 3 + id % 11) AS t",
+      "CAST(1 + id % 5 AS INT) AS w",
+      "id * 37 % 256 AS x", "id * 11 % 256 AS y",
+      "array_sort(transform(sequence(0, id % 6), i -> " +
+        "named_struct('k', (i * 211 + id) % 3000, 'c', i + 1))) AS e",
+      "array_sort(array_distinct(transform(sequence(0, 9), i -> (i * 97 + id) % 300 + 1000 * (i % 2)))) AS keys")
+      .selectExpr("*", "transform(fa, v -> CAST(v AS DOUBLE) / 3) AS da",
+        "transform(fb, v -> CAST(v AS DOUBLE) * 1.1) AS db")
+      .selectExpr("id" +: Seq("fa", "fb", "da", "db", "la", "lb", "s", "t", "w", "x", "y", "e", "keys")
+        .map(c => s"CASE WHEN id % 13 = 0 THEN NULL ELSE $c END AS $c"): _*)
+      .write.parquet(path)
+    path
+  }
+
+  /** `call` under `conf` over every input row, then over the rows whose
+    * columns are all non-null (so generated code takes its non-nullable
+    * branch): for each, the results by id and the executed plan. */
+  private def kernelRun(call: String, conf: Map[String, String]): Seq[(Seq[Seq[Any]], SparkPlan)] = {
+    conf.foreach { case (k, v) => plain.conf.set(k, v) }
+    try {
+      val all = plain.read.parquet(kernelInput)
+      val nonNull = all.where(all.columns.map(c => s"$c IS NOT NULL").mkString(" AND "))
+      Seq(all, nonNull).map { in =>
+        val df = in.selectExpr("id", s"$call AS r")
+        val rows = df.collect().toSeq.sortBy(_.getLong(0)).map(_.toSeq.map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d) // bitwise, NaN included
+          case v => v
+        })
+        (rows, df.queryExecution.executedPlan)
+      }
+    } finally conf.keys.foreach(plain.conf.unset)
+  }
+
+  private def kernelProject(p: SparkPlan): Boolean = p.exists {
+    case pr: ProjectExec => pr.projectList.exists(_.exists(_.isInstanceOf[KernelCall]))
+    case _ => false
+  }
+
+  test("every scalar kernel entry has a codegen sample") {
+    assert(kernelCalls.keySet ===
+      FunctionCatalog.entries.map(_.name).toSet -- Set("range_bucket_search", "kmv_sketch", "mg_topk"))
+  }
+
+  kernelCalls.toSeq.sortBy(_._1).foreach { case (name, call) =>
+    test(s"$name: generated and interpreted code give the same bits over a scan") {
+      val generated = kernelRun(call, Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+      val interpreted = kernelRun(call, Map(
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false"))
+      for (((gRows, gPlan), (iRows, iPlan)) <- generated.zip(interpreted)) {
+        assert(gPlan.exists {
+          case w: WholeStageCodegenExec => kernelProject(w.child)
+          case _ => false
+        }, s"$name is not projected inside whole-stage codegen:\n$gPlan")
+        assert(kernelProject(iPlan) && !iPlan.exists(_.isInstanceOf[WholeStageCodegenExec]), iPlan.toString)
+        assert(gRows === iRows)
+      }
+      val Seq(all, nonNull) = generated.map(_._1)
+      assert(all.length === 240 && all.count(_(1) == null) === 19, "a null argument gives null")
+      assert(nonNull.length === 221 && !nonNull.exists(_(1) == null))
     }
   }
 }
