@@ -11,7 +11,10 @@ the run length BENCHMARK.json sets. Pairs alternate which side runs first, so a 
 lands on both sides equally. Each run happens in its own export, as the
 benchmark's own comparison does; nothing in this checkout is written.
 
-Each run's metrics go to stderr as it finishes. Then it prints, for every
+Each run's metrics go to stderr as it finishes, with the effective cores
+and the load average of the host that `perfbench/run.py` reports for it
+on its `context` line: a drift in either is a drift in the host, not in
+the code. Then it prints, for every
 metric of BENCHMARK.json (the end-to-end ones, or with --trace the
 per-layer ones), each side's median and quartiles, the change's
 relative move of the median, the pairs the change won (by the metric's
@@ -50,10 +53,13 @@ def run(side, workload, seed, seconds, trace):
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
     proc = subprocess.run(cmd, cwd=side, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     if proc.returncode != 0:
-        return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0}
-    res = json.loads(proc.stdout.strip().splitlines()[-1])
+        return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0, "host": {}}
+    lines = [json.loads(l) for l in proc.stdout.strip().splitlines() if l.startswith("{")]
+    res = lines[-1]
+    context = next((l["context"] for l in lines if "context" in l), {})
     return {"ok": res["correct"], "attempted": res["attempted"], "failed": res["failed"],
-            "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+            "host": {k: context[k] for k in ("effective_cores", "load_avg") if k in context}}
 
 
 def quartiles(xs):
@@ -112,7 +118,8 @@ def main():
                 got[side] = run(sides[side], args.workload, seed, seconds, args.trace)
                 r = got[side]
                 print(f"[bench_pairs] seed {seed} {side}: ok={r['ok']} failed={r['failed']}/"
-                      f"{r['attempted']} " + " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()),
+                      f"{r['attempted']} " + " ".join(f"{k}={v:.4g}" for k, v in r["host"].items())
+                      + " | " + " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()),
                       file=sys.stderr, flush=True)
             runs.append((got["parent"], got["change"]))
     finally:

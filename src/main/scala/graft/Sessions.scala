@@ -10,7 +10,14 @@ import org.apache.spark.sql.SparkSession
   *    generation of `events` must be readable (see [[Tables.events]]);
   *  - the Spark UI off;
   *  - `spark.sql.shuffle.partitions` equal to the master's
-  *    defaultParallelism, one reducer per task slot.
+  *    defaultParallelism, one reducer per task slot;
+  *  - `spark.hadoop.fs.file.impl` = [[NioLocalFileSystem]], which sets
+  *    the permission bits of the files and directories a write creates
+  *    in-process instead of forking `chmod` for each one. Hadoop caches a
+  *    FileSystem per scheme and user, not per conf: a `file:` FileSystem
+  *    created in the JVM before the first session (by
+  *    `FileSystem.getLocal(new Configuration())`, say) is the one every
+  *    session gets, and it keeps forking.
   * Nothing else: AQE runs on Spark's defaults, and no optimizer rule or
   * strategy is injected — queries whose plans need one register it on
   * their session, and [[graft.functions.GraftExtensions]] remains the
@@ -38,6 +45,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", parallelism(master).toString)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   def build(master: String): SparkSession = builder(master).getOrCreate()
 }

@@ -3,7 +3,6 @@ package graft.etl
 import graft.ops.Metrics
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.current_timestamp
 import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
 
@@ -17,9 +16,12 @@ import scala.util.Try
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
   * table back. An xlsx workbook is opened on the driver only to resolve
   * its sheet and, for an adult workbook, to read the Notes snapshot; the
-  * sheet itself is parsed inside the write's one task ([[Staging]]), so a
-  * load runs one task and writes one file per workbook, and a malformed
-  * sheet body fails the write, not the driver. One task per workbook is
+  * sheet itself is streamed and CSV-parsed inside the write's one task
+  * ([[Staging]]), so a load runs one task and writes one file per
+  * workbook, and a malformed sheet body fails the write, not the driver.
+  * Both sink modes stamp `_TIMESTAMP` through [[Sink.stamped]], one
+  * instant per write that generated code reads by reference, so a repeated
+  * load of the same staging compiles no new class. One task per workbook is
   * meant for reference-sized NHS sheets: its gain was measured on 20k-row
   * sheets, and a much larger sheet's load is not measured.
   *
@@ -61,7 +63,7 @@ object Runner {
     * directory that is renamed into place after it commits, so the table
     * path is missing only between two renames.
     * [[ManifestPointer]] publishes through [[Sink.Manifest]] generations —
-    * the same rows plus the `_TIMESTAMP` stamp, with a pointer swap after
+    * the same rows plus the same `_TIMESTAMP` stamp, with a pointer swap after
     * the write, so the table path is never missing and a dashboard reader
     * that resolved the previous generation keeps reading it. */
   sealed trait SinkMode
@@ -87,7 +89,7 @@ object Runner {
       sinkMode match {
         case StagedOverwrite => Sink.overwriteTable(observed, dest)
         case ManifestPointer =>
-          Sink.Manifest.overwrite(spark, dest, observed.withColumn("_TIMESTAMP", current_timestamp()))
+          Sink.Manifest.overwrite(spark, dest, Sink.stamped(observed))
       }
       obs.get("n_rows").asInstanceOf[Long]
     }

@@ -1,8 +1,15 @@
 package graft.etl
 
+import java.time.Instant
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{DataType, TimestampType}
 import scala.util.Try
 
 /** Table sink replicating the reference's truncate+append load (reference
@@ -15,14 +22,44 @@ import scala.util.Try
   * [[overwritePartitioned]] and [[overwriteBucketed]] still overwrite in
   * place, and a failed write there loses the previous table. The
   * `_TIMESTAMP DEFAULT CURRENT_TIMESTAMP()` column (reference
-  * docs/create_index.sql:19) is appended at write; `current_timestamp()` constant-folds to one value per
-  * query = the whole batch gets one stamp.
+  * docs/create_index.sql:19) is appended by [[stamped]]: one instant per
+  * write, read on the driver as the write starts, so the whole batch gets
+  * one stamp. Generated code reads that instant from the plan's reference
+  * array rather than inlining it, so a repeated write of the same shape
+  * reuses the classes the last one compiled.
   *
   * The reference's NaN→NULL normalization pre-write
   * (database_util.py:29-30) is a no-op here: Spark nulls already surface as
   * SQL NULLs, and the staged parquet path never materializes NaN-for-null.
   */
 object Sink {
+
+  /** `df` with `_TIMESTAMP` (replacing a column of that name): the instant
+    * of this call, the same for every row. Every write path that stamps
+    * calls this once per write. */
+  def stamped(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    val stamp = Alias(WriteStamp(DateTimeUtils.instantToMicros(Instant.now())), "_TIMESTAMP")()
+    GraftSqlBridge.ofRows(df.sparkSession,
+      Project(plan.output.filterNot(a => resolver(a.name, "_TIMESTAMP")) :+ stamp, plan))
+  }
+
+  /** A timestamp known when the plan is built. It is not foldable, so it
+    * stays out of the generated code as a literal: the code reads `micros`
+    * through `ctx.addReferenceObj`, and two writes of the same plan shape
+    * generate the same code. */
+  private case class WriteStamp(micros: Long) extends LeafExpression {
+    override def dataType: DataType = TimestampType
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = micros
+    override def prettyName: String = "write_stamp"
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("writeStamp", micros, "java.lang.Long")
+      ev.copy(code = code"final long ${ev.value} = $ref.longValue();", isNull = FalseLiteral)
+    }
+  }
 
   /** Overwrite `path` with `df` + `_TIMESTAMP`. The rows are written to the
     * sibling `<path>_staging` and swapped in by [[swapIn]] once the write
@@ -33,7 +70,7 @@ object Sink {
     val dst = new Path(path)
     val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val staged = dst.suffix("_staging")
-    try df.withColumn("_TIMESTAMP", current_timestamp())
+    try stamped(df)
       .write.mode(SaveMode.Overwrite).parquet(staged.toString)
     catch {
       case e: Throwable =>
@@ -65,7 +102,7 @@ object Sink {
     * scan), and `partitionOverwriteMode=dynamic` makes re-loads replace
     * only the partitions present in the batch. */
   def overwritePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.withColumn("_TIMESTAMP", current_timestamp())
+    stamped(df)
       .write.mode(SaveMode.Overwrite)
       // writer-scoped: does NOT mutate the session-wide overwrite mode
       .option("partitionOverwriteMode", "dynamic")
@@ -194,7 +231,7 @@ object Sink {
     * equi-join on the bucket key from a full exchange into a local
     * zip-merge of co-located buckets. */
   def overwriteBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
-    df.withColumn("_TIMESTAMP", current_timestamp())
+    stamped(df)
       .write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)

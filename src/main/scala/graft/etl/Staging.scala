@@ -1,26 +1,31 @@
 package graft.etl
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.expressions.ExprUtils
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Staged-sheet reader — the engine-side half of the reference's
   * `pd.read_excel(sheet, skiprows=N)` (reference src/main.py:112-113, :227).
   * There is no spark-excel in a zero-egress JVM (SURVEY.md §7.4 risk 1),
-  * so both staged formats enter Spark as CSV lines parsed with a DECLARED
-  * schema: "CSV with N preamble lines before the header", which plain
-  * `spark.read.csv` cannot express. Neither path holds a sheet on the
-  * driver.
+  * so both staged formats are read as CSV lines parsed with a DECLARED
+  * schema by Spark's own CSV parser: "CSV with N preamble lines before the
+  * header", which plain `spark.read.csv` cannot express. Neither path
+  * holds a sheet on the driver.
   *
   * A CSV sheet is read in one pass that tags each line with its position
   * via the text datasource, drops the preamble, then parses the remainder
-  * as CSV from the in-plan Dataset[String]. An xlsx sheet is streamed by
-  * [[Xlsx]] through the one task that consumes it, one partition per
-  * workbook, so its parse, the pipeline over it and its write share one
-  * core. That suits the reference's NHS sheets, which are small; the gain
-  * over the earlier four-task read was measured on 20k-row sheets only,
-  * and how a much larger sheet fares on one task is not measured.
+  * with `csv()` from the in-plan Dataset[String]. An xlsx sheet is
+  * streamed by [[Xlsx]] through the one task that consumes it, one
+  * partition per workbook, and that task runs the parser chain `csv()`
+  * runs over its lines, so its parse, the pipeline over it and its write
+  * share one core. That suits the reference's NHS sheets, which are small;
+  * the gain over the earlier four-task read was measured on 20k-row sheets
+  * only, and how a much larger sheet fares on one task is not measured.
   */
 object Staging {
 
@@ -67,31 +72,42 @@ object Staging {
     * it may be closed once this returns.
     *
     * The frame's one partition opens the workbook in its task, streams the
-    * sheet's rows after `skipRows` as CSV lines ([[Xlsx.csvLine]]) and
-    * closes the workbook when the task completes. The lines are parsed by
-    * `spark.read.schema(schema).csv`, as a staged CSV sheet's are; the
-    * header is taken off in the stream ([[dropHeader]]) rather than by the
-    * `header` option, which would run a job of its own to find the first
-    * line. */
+    * sheet's rows after `skipRows` as CSV lines ([[Xlsx.csvLine]]), takes
+    * the header off them ([[dropHeader]]) and closes the workbook when the
+    * task completes. Each line goes through the parsers
+    * `spark.read.schema(schema).option("nullValue", "").csv(lines)` runs
+    * inside its own task: a `UnivocityParser` over the schema without its
+    * corrupt-record column, wrapped in a `FailureSafeParser` over the whole
+    * schema, with `CSVOptions` built from the session conf. So the rows,
+    * the parse mode and the errors are those of a staged CSV sheet, without
+    * the round trip of the lines through a Dataset[String]. */
   def readXlsxSheet(
       spark: SparkSession,
       workbook: Xlsx.Workbook,
       sheetName: String,
       schema: StructType,
       skipRows: Int): DataFrame = {
-    import spark.implicits._
     workbook.sheetPart(sheetName)
     val path = workbook.path
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("nullValue" -> ""), conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    // as csv(Dataset) does: the declared schema turns nullable (CSV columns
+    // are flat) unless the legacy conf says otherwise
+    val full =
+      if (conf.getConf(SQLConf.LEGACY_RESPECT_NULLABILITY_IN_TEXT_DATASET_CONVERSION)) schema
+      else StructType(schema.map(_.copy(nullable = true)))
+    val corrupt = options.columnNameOfCorruptRecord
+    ExprUtils.verifyColumnNameOfCorruptRecord(full, corrupt)
+    val parsed = StructType(full.filterNot(_.name == corrupt))
     // a worksheet is one deflate stream, so the workbook is one partition
-    val lines = spark.range(0, 1, 1, 1).mapPartitions { _ =>
-      val wb = new Xlsx.Workbook(path)
-      TaskContext.get.addTaskCompletionListener[Unit](_ => wb.close())
-      dropHeader(wb.rows(sheetName).drop(skipRows).map(Xlsx.csvLine))
+    val rows = spark.sparkContext.parallelize(Seq(path), 1).mapPartitions { paths =>
+      val wb = new Xlsx.Workbook(paths.next())
+      TaskContext.get().addTaskCompletionListener[Unit](_ => wb.close())
+      val raw = new UnivocityParser(parsed, options)
+      val parser = new FailureSafeParser[String](raw.parse(_), options.parseMode, full, corrupt)
+      dropHeader(wb.rows(sheetName).drop(skipRows).map(Xlsx.csvLine)).flatMap(parser.parse)
     }
-    spark.read
-      .schema(schema)
-      .option("nullValue", "")
-      .csv(lines)
+    GraftSqlBridge.internalCreateDataFrame(spark, rows, full)
   }
 
   /** What `csv(Dataset[String])` does to its lines with `header=true`:

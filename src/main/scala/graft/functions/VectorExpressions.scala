@@ -4,11 +4,12 @@ import java.lang.reflect.{InvocationTargetException, Method}
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, NullType}
 
 /** The Catalyst expression behind the engine's scalar kernel functions.
   *
@@ -41,7 +42,13 @@ object VectorExpressions {
     * `name(children)`. The call is null-intolerant: a
     * null argument gives null without calling the kernel. Generated code
     * calls the kernel directly; interpreted [[eval]] calls the same static
-    * method by reflection. Equality comes from the fields. */
+    * method by reflection. Equality comes from the fields.
+    *
+    * The analyzer checks each argument against the kernel's Java
+    * parameter: the Java class of its Spark type must be that parameter's
+    * class, or a primitive Java widens to it (an int column where the
+    * kernel takes long), which both the generated call and reflection do.
+    * A NULL literal fits any parameter. */
   case class KernelCall(name: String, kernel: String, dataType: DataType,
       children: Seq[Expression], params: Seq[Int]) extends Expression {
     override def nullable: Boolean = children.exists(_.nullable)
@@ -52,6 +59,18 @@ object VectorExpressions {
     @transient private lazy val method: Method =
       Class.forName(Kernels).getMethods.find(_.getName == kernel).getOrElse(
         throw new IllegalArgumentException(s"$name: no kernel $Kernels.$kernel"))
+
+    override def checkInputDataTypes(): TypeCheckResult = {
+      val expected = method.getParameterTypes
+      if (expected.length != children.length + params.length)
+        return TypeCheckResult.TypeCheckFailure(s"$name: kernel $kernel takes ${expected.length} " +
+          s"arguments, the call passes ${children.length + params.length}")
+      children.zip(expected).zipWithIndex.collectFirst {
+        case ((c, want), i) if c.dataType != NullType && !fits(CodeGenerator.javaClass(c.dataType), want) =>
+          TypeCheckResult.TypeCheckFailure(s"$name: argument ${i + 1} is ${c.dataType.simpleString}, " +
+            s"but kernel $kernel takes ${want.getSimpleName} there")
+      }.getOrElse(TypeCheckResult.TypeCheckSuccess)
+    }
 
     override def eval(input: InternalRow): Any = {
       val args = new Array[AnyRef](children.length + params.length)
@@ -89,6 +108,21 @@ object VectorExpressions {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(children = newChildren)
   }
+
+  /** Java's widening primitive conversions (JLS 5.1.2), by target. */
+  private val widensTo: Map[Class[_], Set[Class[_]]] = {
+    import java.lang.{Byte => B, Character => C, Double => D, Float => F, Integer => I, Long => L, Short => S}
+    Map(
+      S.TYPE -> Set(B.TYPE),
+      I.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE),
+      L.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE),
+      F.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE, L.TYPE),
+      D.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE, L.TYPE, F.TYPE))
+  }
+
+  /** A value of Java class `got` can be passed where `want` is declared. */
+  private def fits(got: Class[_], want: Class[_]): Boolean =
+    want.isAssignableFrom(got) || widensTo.get(want).exists(_.contains(got))
 
   /** Install every [[FunctionCatalog]] entry in the session's
     * FunctionRegistry (idempotent) — the per-session route to the table

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -12,6 +14,7 @@ class SessionsSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(s.sparkContext.uiWebUrl.isEmpty, "the Spark UI must be off")
     assert(s.conf.get("spark.sql.shuffle.partitions").toInt === s.sparkContext.defaultParallelism)
+    assert(s.sparkContext.getConf.get("spark.hadoop.fs.file.impl") === classOf[NioLocalFileSystem].getName)
   }
 
   private def levenshteinBanded(s: SparkSession): Boolean = {
@@ -53,6 +56,24 @@ class SessionsSpec extends SparkSpec {
   test("the shared test session comes from the factory") {
     assertPinned(spark)
     assert(spark.sparkContext.appName === "graft")
+  }
+
+  test("a session's file: paths resolve to the local filesystem that sets permissions without forking") {
+    val table = java.nio.file.Files.createTempDirectory("graft-fs").resolve("t").toString
+    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass === classOf[NioLocalFileSystem])
+    assert(fs.asInstanceOf[NioLocalFileSystem].getRawFileSystem.getClass === classOf[NioRawLocalFileSystem])
+  }
+
+  test("NioRawLocalFileSystem sets rwx bits itself and hands other bits to Hadoop's call") {
+    val fs = new NioRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Files.createTempDirectory("graft-perm")
+    def mode = java.nio.file.Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0xfff
+    for (bits <- Seq("700", "755", "640", "000", "777", "1755").map(Integer.parseInt(_, 8))) {
+      fs.setPermission(new Path(dir.toUri), new FsPermission(bits.toShort))
+      assert(mode === bits, f"set $bits%o, got $mode%o")
+    }
   }
 
   test("parallelism follows the local master; other masters are refused") {

@@ -446,6 +446,16 @@ class RunnerSpec extends SparkSpec {
     assert(tasks.size === 2)
   }
 
+  test("run: a second load of the same xlsx staging compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val staging = xlsxStaging()
+    val out = Files.createTempDirectory("graft-tables-codegen").toString
+    Runner.run(spark, staging.toString, out)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    Runner.run(spark, staging.toString, out)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0)
+  }
+
   test("run: a malformed Table 4 body fails the adult load in its write; ADULT_4 keeps the prior load, INDEX publishes") {
     val out = Files.createTempDirectory("graft-tables-malformed").toString
     Runner.run(spark, xlsxStaging().toString, out)

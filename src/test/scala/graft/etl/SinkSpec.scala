@@ -1,7 +1,14 @@
 package graft.etl
 
 import graft.SparkSpec
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class SinkSpec extends SparkSpec {
   import spark.implicits._
@@ -11,7 +18,7 @@ class SinkSpec extends SparkSpec {
     Sink.overwriteTable(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
     val first = spark.read.parquet(dir)
     assert(first.count() === 2)
-    // whole batch carries ONE stamp (current_timestamp constant-folds per query)
+    // whole batch carries ONE stamp (Sink.stamped reads one instant per write)
     assert(first.select("_TIMESTAMP").distinct().count() === 1)
     // truncate-replace semantics: second load fully replaces the first
     Sink.overwriteTable(Seq((9, "z")).toDF("k", "v"), dir)
@@ -124,5 +131,86 @@ class SinkSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange hashpartitioning"), s"unexpected shuffle:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  // ---- _TIMESTAMP: one instant per write, on every path that stamps ----------
+
+  /** Rows spread over four tasks. */
+  private def batch(): DataFrame = (1 to 200).map(i => (i, s"v${i % 3}")).toDF("k", "v").repartition(4)
+
+  /** A staged Index sheet as CSV, for a Runner load. */
+  private def indexStaging(): String = {
+    val staging = Files.createTempDirectory("graft-sink-staging")
+    Files.writeString(staging.resolve("Index_2018.csv"),
+      ((1 to 10).map(i => s"preamble $i") ++ Seq(Schemas.rawIndexSheet.fieldNames.mkString(","),
+        "Cancer Alliance,NCL,E56000027,Breast,Female,All ages,Age-standardised,2018,1,100,71.5,70.0,73.0,1.0,0.5,",
+        "Cancer Alliance,WY,E56000014,Lung,Persons,All ages,Age-standardised,2018,1,50,55.0,54.0,56.0,1.0,0.5,"))
+        .mkString("\n") + "\n")
+    staging.toString
+  }
+
+  /** Each write path: a write of a fresh batch, and a read of what it left. */
+  private lazy val writePaths: Seq[(String, () => DataFrame)] = {
+    val root = Files.createTempDirectory("graft-stamps")
+    val staging = indexStaging()
+    Seq(
+      "overwriteTable" -> { () =>
+        Sink.overwriteTable(batch(), s"$root/table"); spark.read.parquet(s"$root/table")
+      },
+      "Runner ManifestPointer" -> { () =>
+        Runner.run(spark, staging, s"$root/runner", sinkMode = Runner.ManifestPointer)
+        Sink.Manifest.read(spark, s"$root/runner/INDEX")
+      },
+      "overwritePartitioned" -> { () =>
+        Sink.overwritePartitioned(batch(), s"$root/partitioned", Seq("v")); spark.read.parquet(s"$root/partitioned")
+      },
+      "overwriteBucketed" -> { () =>
+        Sink.overwriteBucketed(batch(), "sink_spec_stamped", "k", 4); spark.table("sink_spec_stamped")
+      })
+  }
+
+  /** The distinct stamps one write leaves, and wall-clock readings taken
+    * just before and just after it, at the stamp's microsecond precision. */
+  private def stampOf(write: () => DataFrame): (Instant, Seq[Instant], Instant) = {
+    val before = Instant.now().truncatedTo(ChronoUnit.MICROS)
+    val written = write()
+    val after = Instant.now()
+    val stamps = written.select("_TIMESTAMP").distinct().collect().map(_.getTimestamp(0).toInstant).toSeq
+    (before, stamps, after)
+  }
+
+  test("every write path stamps one _TIMESTAMP per write, read during the write; the next write gets a new one") {
+    for ((name, write) <- writePaths) {
+      val runs = Seq.fill(2)(stampOf(write))
+      for ((before, stamps, after) <- runs) {
+        assert(stamps.size === 1, s"$name: one write left stamps $stamps")
+        assert(!stamps.head.isBefore(before) && !stamps.head.isAfter(after),
+          s"$name: stamp ${stamps.head} outside [$before, $after]")
+      }
+      assert(runs(0)._2.head.isBefore(runs(1)._2.head), s"$name: two writes, stamps ${runs.map(_._2)}")
+    }
+  }
+
+  test("a written table's directories and files carry the modes of Hadoop's local filesystem (0755/0644 under umask 022)") {
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    assert(umask.toShort === Integer.parseInt("022", 8))
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toString
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toString
+    assert((dirMode, fileMode) === ("rwxr-xr-x", "rw-r--r--"))
+    val root = Files.createTempDirectory("graft-modes")
+    Sink.overwriteTable(batch(), s"$root/flat")
+    Sink.overwritePartitioned(batch(), s"$root/partitioned", Seq("v"))
+    for (table <- Seq("flat", "partitioned")) {
+      val entries = Files.walk(root.resolve(table)).iterator.asScala.toSeq
+      def mode(p: Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      val (dirs, files) = entries.partition(Files.isDirectory(_))
+      assert(files.map(_.getFileName.toString).exists(_.endsWith(".parquet")))
+      assert(files.map(_.getFileName.toString).exists(_.endsWith(".crc")))
+      // a dynamic partition overwrite leaves no _SUCCESS marker
+      assert(files.exists(_.getFileName.toString == "_SUCCESS") === (table == "flat"))
+      assert(dirs.size === (if (table == "flat") 1 else 4))
+      dirs.foreach(d => assert(mode(d) === dirMode, d.toString))
+      files.foreach(f => assert(mode(f) === fileMode, f.toString))
+    }
   }
 }

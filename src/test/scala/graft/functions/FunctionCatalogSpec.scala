@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -113,6 +113,38 @@ class FunctionCatalogSpec extends AnyFunSuite {
       assert(run(s, "kmv_sketch(x, 2L)") === run(s, "kmv_sketch(x, 2)"))
       assert(run(s, "mg_topk(s, CAST(2 AS SMALLINT))") === run(s, "mg_topk(s, 2)"))
     }
+  }
+
+  test("an argument the kernel's Java parameter cannot take fails at analysis, naming the function") {
+    val bad = Seq(
+      "window_hash31('abcd', CAST(2 AS BIGINT))" -> ("window_hash31", 2),
+      "window_hash31(s, x)" -> ("window_hash31", 2),
+      "rolling_hash31(x)" -> ("rolling_hash31", 1),
+      "vector_norm_f32(x)" -> ("vector_norm_f32", 1),
+      "vector_dot_f64(array(1D), 3D)" -> ("vector_dot_f64", 2),
+      "hilbert_d2(s, x, 4)" -> ("hilbert_d2", 1),
+      "hilbert_d2(3L, 2.5D, 4)" -> ("hilbert_d2", 2),
+      "damerau_levenshtein('a', x)" -> ("damerau_levenshtein", 2))
+    for (s <- Seq(extended, plain); (call, (fn, arg)) <- bad) {
+      // analysis runs when the query is built; nothing is executed
+      val ex = intercept[AnalysisException](s.sql(s"SELECT $call AS r FROM VALUES (5L, 'a') AS t(x, s)"))
+      assert(ex.getMessage.contains(s"$fn: argument $arg is"), s"$call: ${ex.getMessage}")
+    }
+  }
+
+  test("an argument Java widens to the kernel's parameter, or a NULL, is taken as before") {
+    for (s <- Seq(extended, plain)) {
+      assert(run(s, "hilbert_d2(CAST(3 AS INT), CAST(x AS SMALLINT), 4)") === run(s, "hilbert_d2(3L, x, 4)"))
+      assert(run(s, "hilbert_d2(CAST(3 AS TINYINT), x, 4)") === run(s, "hilbert_d2(3L, x, 4)"))
+      assert(run(s, "rolling_hash31(NULL)") === Seq(Row(null)))
+    }
+    // an int column where the kernel takes long: the same bits through
+    // generated and interpreted code as the bigint columns give
+    val widened = "hilbert_d2(CAST(x AS INT), CAST(y AS INT), 5)"
+    val generated = Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val interpreted = Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    for (conf <- Seq(generated, interpreted))
+      assert(kernelRun(widened, conf).map(_._1) === kernelRun(kernelCalls("hilbert_d2"), conf).map(_._1))
   }
 
   /** One call per scalar kernel entry over the columns of [[kernelInput]]. */
