@@ -79,8 +79,7 @@ object Staging {
     * inside its own task: a `UnivocityParser` over the schema without its
     * corrupt-record column, wrapped in a `FailureSafeParser` over the whole
     * schema, with `CSVOptions` built from the session conf. So the rows,
-    * the parse mode and the errors are those of a staged CSV sheet, without
-    * the round trip of the lines through a Dataset[String]. */
+    * the parse mode and the errors are those of a staged CSV sheet. */
   def readXlsxSheet(
       spark: SparkSession,
       workbook: Xlsx.Workbook,

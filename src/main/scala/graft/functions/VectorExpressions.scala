@@ -60,17 +60,12 @@ object VectorExpressions {
       Class.forName(Kernels).getMethods.find(_.getName == kernel).getOrElse(
         throw new IllegalArgumentException(s"$name: no kernel $Kernels.$kernel"))
 
-    override def checkInputDataTypes(): TypeCheckResult = {
-      val expected = method.getParameterTypes
-      if (expected.length != children.length + params.length)
-        return TypeCheckResult.TypeCheckFailure(s"$name: kernel $kernel takes ${expected.length} " +
-          s"arguments, the call passes ${children.length + params.length}")
-      children.zip(expected).zipWithIndex.collectFirst {
+    override def checkInputDataTypes(): TypeCheckResult =
+      children.zip(method.getParameterTypes).zipWithIndex.collectFirst {
         case ((c, want), i) if c.dataType != NullType && !fits(CodeGenerator.javaClass(c.dataType), want) =>
           TypeCheckResult.TypeCheckFailure(s"$name: argument ${i + 1} is ${c.dataType.simpleString}, " +
             s"but kernel $kernel takes ${want.getSimpleName} there")
       }.getOrElse(TypeCheckResult.TypeCheckSuccess)
-    }
 
     override def eval(input: InternalRow): Any = {
       val args = new Array[AnyRef](children.length + params.length)
@@ -109,20 +104,14 @@ object VectorExpressions {
       copy(children = newChildren)
   }
 
-  /** Java's widening primitive conversions (JLS 5.1.2), by target. */
-  private val widensTo: Map[Class[_], Set[Class[_]]] = {
-    import java.lang.{Byte => B, Character => C, Double => D, Float => F, Integer => I, Long => L, Short => S}
-    Map(
-      S.TYPE -> Set(B.TYPE),
-      I.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE),
-      L.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE),
-      F.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE, L.TYPE),
-      D.TYPE -> Set(B.TYPE, S.TYPE, C.TYPE, I.TYPE, L.TYPE, F.TYPE))
-  }
+  /** Java's primitive types in widening order: each widens to every later
+    * one (JLS 5.1.2, less `char`, which no Spark type maps to). */
+  private val widening: Seq[Class[_]] = Seq(java.lang.Byte.TYPE, java.lang.Short.TYPE,
+    java.lang.Integer.TYPE, java.lang.Long.TYPE, java.lang.Float.TYPE, java.lang.Double.TYPE)
 
   /** A value of Java class `got` can be passed where `want` is declared. */
   private def fits(got: Class[_], want: Class[_]): Boolean =
-    want.isAssignableFrom(got) || widensTo.get(want).exists(_.contains(got))
+    want.isAssignableFrom(got) || widening.indexOf(got) >= 0 && widening.indexOf(want) > widening.indexOf(got)
 
   /** Install every [[FunctionCatalog]] entry in the session's
     * FunctionRegistry (idempotent) — the per-session route to the table

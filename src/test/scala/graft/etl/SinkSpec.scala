@@ -149,11 +149,21 @@ class SinkSpec extends SparkSpec {
     staging.toString
   }
 
-  /** Each write path: a write of a fresh batch, and a read of what it left. */
-  private lazy val writePaths: Seq[(String, () => DataFrame)] = {
+  /** The distinct stamps one write leaves, and wall-clock readings taken
+    * just before and just after it, at the stamp's microsecond precision. */
+  private def stampOf(write: () => DataFrame): (Instant, Seq[Instant], Instant) = {
+    val before = Instant.now().truncatedTo(ChronoUnit.MICROS)
+    val written = write()
+    val after = Instant.now()
+    val stamps = written.select("_TIMESTAMP").distinct().collect().map(_.getTimestamp(0).toInstant).toSeq
+    (before, stamps, after)
+  }
+
+  test("every write path stamps one _TIMESTAMP per write, read during the write; the next write gets a new one") {
     val root = Files.createTempDirectory("graft-stamps")
     val staging = indexStaging()
-    Seq(
+    // each write path: a write of a fresh batch, and a read of what it left
+    val writePaths: Seq[(String, () => DataFrame)] = Seq(
       "overwriteTable" -> { () =>
         Sink.overwriteTable(batch(), s"$root/table"); spark.read.parquet(s"$root/table")
       },
@@ -167,19 +177,6 @@ class SinkSpec extends SparkSpec {
       "overwriteBucketed" -> { () =>
         Sink.overwriteBucketed(batch(), "sink_spec_stamped", "k", 4); spark.table("sink_spec_stamped")
       })
-  }
-
-  /** The distinct stamps one write leaves, and wall-clock readings taken
-    * just before and just after it, at the stamp's microsecond precision. */
-  private def stampOf(write: () => DataFrame): (Instant, Seq[Instant], Instant) = {
-    val before = Instant.now().truncatedTo(ChronoUnit.MICROS)
-    val written = write()
-    val after = Instant.now()
-    val stamps = written.select("_TIMESTAMP").distinct().collect().map(_.getTimestamp(0).toInstant).toSeq
-    (before, stamps, after)
-  }
-
-  test("every write path stamps one _TIMESTAMP per write, read during the write; the next write gets a new one") {
     for ((name, write) <- writePaths) {
       val runs = Seq.fill(2)(stampOf(write))
       for ((before, stamps, after) <- runs) {
