@@ -65,7 +65,7 @@ class SessionsSpec extends SparkSpec {
     assert(fs.asInstanceOf[NioLocalFileSystem].getRawFileSystem.getClass === classOf[NioRawLocalFileSystem])
   }
 
-  test("NioRawLocalFileSystem sets rwx bits itself and hands other bits to Hadoop's call") {
+  test("NioRawLocalFileSystem sets the permission bits asked for, rwx and sticky alike") {
     val fs = new NioRawLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
     val dir = java.nio.file.Files.createTempDirectory("graft-perm")
