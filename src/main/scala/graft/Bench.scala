@@ -31,8 +31,7 @@ object Bench {
     // happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
     // opt-in single-query iteration filter (the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = SparkEntry.onlyQueries
     // materialize the session-shared memoized tables (LSH candidates, IVF
     // quantizer, gram universe, BPE merges, ETL processed tables) OUTSIDE
     // per-query timing: in production these are snapshot tables written by

@@ -21,6 +21,12 @@ object SparkEntry {
       graft.queries.Curation.specs ++
       graft.queries.EtlQueries.specs
 
+  /** The query names in `SPARK_GRAFT_ONLY` (comma-separated, blanks
+    * dropped), for local iteration on a few queries; None when it is
+    * unset, and [[Verify]] and [[Bench]] run every query. */
+  def onlyQueries: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The deepest composite: benchmarking-rank (W1+A2+J1+F12, SURVEY.md §7.2). */
   def entry(spark: SparkSession): DataFrame =

@@ -25,9 +25,12 @@ object Tables {
     * (nanosAsLong); entries are struct-sized. Only the immutable
     * driver testdata goes through here — the ETL sink's reads of
     * freshly WRITTEN scratch dirs stay on direct
-    * `spark.read.parquet` (their files change under the path). */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
+    * `spark.read.parquet` (their files change under the path). A
+    * [[graft.ops.SessionMemo]], so a stopped session's entries are
+    * released; its cap is far above the number of tables a session
+    * reads. */
+  private val schemaMemo =
+    new graft.ops.SessionMemo[String, org.apache.spark.sql.types.StructType](maxEntries = 1024)
 
   /** Plain single-file scans. NOTE the testdata parquet is single
     * row group, so every scan is ONE task until the first exchange —
@@ -37,8 +40,7 @@ object Tables {
     * blocks column pruning, so narrow queries shuffled wide columns). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent((spark, path),
-      key => key._1.read.parquet(key._2).schema)
+    val schema = schemaMemo.getOrElseUpdate(spark, path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 
@@ -63,8 +65,6 @@ object Tables {
     * would break the later action — library code checks, entry points
     * decide. */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     // schema inference itself rejects TIMESTAMP(NANOS) when the legacy
     // conf is off ("Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))")
     // — surface the actionable conf message instead of Spark's raw error
@@ -75,12 +75,23 @@ object Tables {
           requireNanosAsLong(s) // throws the curated message when conf unset
           throw e
       }
-    raw.schema("ts").dataType match {
+    eventsTs(raw)
+  }
+
+  /** `events` with `ts` as session-TZ TimestampType, branching on the
+    * physical type the frame read: legacy TIMESTAMP(NANOS) read as long is
+    * truncated to micros, micros are kept, NTZ is cast. Shared by the batch
+    * reader above and the streaming one
+    * ([[graft.streaming.StreamOps.readEvents]]). */
+  private[graft] def eventsTs(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    events.schema("ts").dataType match {
       case LongType => // legacy TIMESTAMP(NANOS) read as long: truncate to micros
-        requireNanosAsLong(s)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => raw
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+        requireNanosAsLong(events.sparkSession)
+        events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampType => events
+      case TimestampNTZType => events.withColumn("ts", col("ts").cast(TimestampType))
       case other =>
         throw new IllegalStateException(s"events.ts: unsupported parquet type $other")
     }

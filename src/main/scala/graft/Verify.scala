@@ -11,8 +11,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Optional local-iteration filter (driver never sets it): run only the
     // named queries, e.g. SPARK_GRAFT_ONLY=q_semdedup,q_cluster_kmeans.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = SparkEntry.onlyQueries
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -61,17 +61,20 @@ object Sink {
     }
   }
 
-  /** Overwrite `path` with `df` + `_TIMESTAMP`. The rows are written to the
-    * sibling `<path>_staging` and swapped in by [[swapIn]] once the write
-    * job has committed. A failed write removes the staging directory and
-    * leaves the previous table as it was; readers never see a partly
-    * written table. */
-  def overwriteTable(df: DataFrame, path: String): Unit = {
+  /** Overwrite `path` with `df` + `_TIMESTAMP`, through [[replaceStaged]]:
+    * readers never see a partly written table, and a failed write leaves
+    * the previous one as it was. */
+  def overwriteTable(df: DataFrame, path: String): Unit =
+    replaceStaged(stamped(df), path)
+
+  /** Write `df` to the sibling `<path>_staging` and swap it in by [[swapIn]]
+    * once the write job has committed. A failed write removes the staging
+    * directory and leaves the previous table as it was. */
+  private def replaceStaged(df: DataFrame, path: String): Unit = {
     val dst = new Path(path)
     val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val staged = dst.suffix("_staging")
-    try stamped(df)
-      .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    try df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
     catch {
       case e: Throwable =>
         Try(fs.delete(staged, true)).failed.foreach(e.addSuppressed)
@@ -112,9 +115,10 @@ object Sink {
   /** Small-file compaction — lakehouse maintenance: rewrite a FLAT parquet
     * table into `targetFiles` right-sized files (streaming sinks and
     * frequent appends accumulate small files that throttle scan
-    * parallelism at 100 TB). The rewrite lands in `<path>_compacting` and
-    * is swapped in by [[swapIn]]. Partition-layout tables are refused:
-    * flattening them would break later dynamic partition overwrites.
+    * parallelism at 100 TB). The rewrite is swapped in by
+    * [[replaceStaged]], so a failed one leaves the table as it was.
+    * Partition-layout tables are refused: flattening them would break
+    * later dynamic partition overwrites.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String, targetFiles: Int): Unit = {
     require(targetFiles > 0)
@@ -125,10 +129,7 @@ object Sink {
     require(!partitioned,
       s"$path has a partition directory layout; compact would flatten it " +
         "and corrupt later dynamic partition overwrites - compact per partition instead")
-    val staged = dst.suffix("_compacting")
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    swapIn(fs, staged, dst)
+    replaceStaged(spark.read.parquet(path).repartition(targetFiles), path)
   }
 
   /** Manifest-indirection table: data lives in immutable generation dirs

@@ -108,7 +108,9 @@ object Relational {
   }
 
   /** R1+C1 — generalise-and-keep: duplicate a predicate's rows with one
-    * column overwritten, append, originals kept (src/main.py:98-105). */
+    * column overwritten, append, originals kept (src/main.py:98-105). The
+    * pipelines' operator, [[graft.etl.Ops.duplicateWhere]]; the SQL twin
+    * is the union formulation. */
   val generaliseKeep = QuerySpec(
     "q_generalise_keep",
     """WITH s AS (SELECT s_suppkey, s_name, n_name
@@ -122,14 +124,14 @@ object Relational {
       val sup = Tables.supplier(s, d)
         .join(n, col("s_nationkey") === col("n_nationkey"))
         .select("s_suppkey", "s_name", "n_name")
-      val dupe = sup
-        .filter(col("n_name").isin("NATION_3", "NATION_8"))
-        .withColumn("n_name", lit("ALL_NATIONS"))
-      sup.unionByName(dupe)
+      graft.etl.Ops.duplicateWhere(sup, col("n_name").isin("NATION_3", "NATION_8"),
+        Map("n_name" -> lit("ALL_NATIONS")))
   }
 
   /** R2 — generalise-and-replace: duplicate-overwrite then REMOVE the
-    * originals (src/main.py:136-146 — the deliberate asymmetry vs R1). */
+    * originals (src/main.py:136-146 — the deliberate asymmetry vs R1). The
+    * pipelines' operator, [[graft.etl.Ops.replaceWhere]]; the SQL twin is
+    * the union formulation. */
   val generaliseReplace = QuerySpec(
     "q_generalise_replace",
     """WITH s AS (SELECT s_suppkey, s_name, n_name
@@ -143,9 +145,8 @@ object Relational {
       val sup = Tables.supplier(s, d)
         .join(n, col("s_nationkey") === col("n_nationkey"))
         .select("s_suppkey", "s_name", "n_name")
-      val matched = col("n_name") === "NATION_3"
-      sup.filter(!matched)
-        .unionByName(sup.filter(matched).withColumn("n_name", lit("ALL_NATIONS")))
+      graft.etl.Ops.replaceWhere(sup, col("n_name") === "NATION_3",
+        Map("n_name" -> lit("ALL_NATIONS")))
   }
 
   /** R4 — unpivot/melt wide→long over two measure columns, KEEPING null

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StatefulProcessor, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming extension (SURVEY.md §7.5 — the reference is
@@ -21,14 +22,6 @@ object StreamOps {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** Streaming source over a directory of event parquet files. Streaming
-    * needs a declared schema, so sniff the generation with a one-time
-    * driver-side batch footer read and branch exactly like
-    * [[graft.Tables.events]]: legacy nanos-as-long → truncate to micros
-    * (conf checked, not mutated, here — it must come from the session
-    * builder); native micros/NTZ → read with the inferred schema and cast
-    * to session-TZ TimestampType. Either way `ts` leaves as TimestampType,
-    * so every downstream windowed op and its batch twin agree. */
   /** Declared schema for the current (micros) generation — also the
     * fallback when the directory is EMPTY at stream start (the standard
     * topology where the writer job starts after the reader: a streaming
@@ -51,6 +44,14 @@ object StreamOps {
     * [[eventsRawSchema]] by hand for that (historical) generation. */
   private val emptyStartConditions = Seq("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")
 
+  /** Streaming source over a directory of event parquet files. Streaming
+    * needs a declared schema, so sniff the generation with a one-time
+    * driver-side batch footer read, stream with the inferred schema, and
+    * convert `ts` with the batch reader's [[graft.Tables.eventsTs]]: legacy
+    * nanos-as-long → truncate to micros (conf checked, not mutated, here —
+    * it must come from the session builder); native micros/NTZ → cast to
+    * session-TZ TimestampType. Either way `ts` leaves as TimestampType, so
+    * every downstream windowed op and its batch twin agree. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val inferredOpt =
       try Some(spark.read.parquet(dir).schema)
@@ -64,20 +65,11 @@ object StreamOps {
             if emptyStartConditions.exists(String.valueOf(e.getCondition).contains) =>
           None // empty / not-yet-populated directory: fall back below
       }
-    inferredOpt.map(_("ts").dataType) match {
-      case Some(LongType) =>
-        graft.Tables.requireNanosAsLong(spark)
-        spark.readStream.schema(eventsRawSchema).parquet(dir)
-          .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case Some(TimestampType) =>
-        spark.readStream.schema(inferredOpt.get).parquet(dir)
-      case Some(TimestampNTZType) =>
-        spark.readStream.schema(inferredOpt.get).parquet(dir)
-          .withColumn("ts", col("ts").cast(TimestampType))
+    inferredOpt match {
+      case Some(inferred) =>
+        graft.Tables.eventsTs(spark.readStream.schema(inferred).parquet(dir))
       case None =>
         spark.readStream.schema(eventsMicrosSchema).parquet(dir)
-      case Some(other) =>
-        throw new IllegalStateException(s"events.ts: unsupported parquet type $other")
     }
   }
 
@@ -175,22 +167,15 @@ object StreamOps {
   case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, total_value: Double)
 
-  /** Stateful sessionization via flatMapGroupsWithState: a session closes
-    * when a >30-min event gap arrives, emitting one row per closed session —
-    * the streaming twin of q_sessionize's gap logic. State is one small
-    * struct per active user: O(active users), not O(events). Production
-    * deployments pass ProcessingTimeTimeout so idle users' last sessions
-    * flush and their state evicts; tests use the NoTimeout default (a
-    * processing-time timeout keeps scheduling wake-up batches, which never
-    * lets `processAllAvailable` quiesce). */
   /** Stream–stream time-interval join: pair each click with the same
     * user's views from the preceding 10 minutes. BOTH sides carry
     * watermarks and the join condition bounds the event-time gap, so
     * Spark can evict buffered rows once the other side's watermark passes
     * them — state stays proportional to the interval, not the stream.
     * (An unbounded-condition stream-stream join would buffer forever;
-    * the time bound is what makes this a 100 TB-viable operator.) */
-  /** `joinType` extends the operator to the OUTER stream-stream case:
+    * the time bound is what makes this a 100 TB-viable operator.)
+    *
+    * `joinType` extends the operator to the OUTER stream-stream case:
     * with "left_outer", a click whose lookback window closes (both
     * watermarks past click_ts) without any view emits once with NULL
     * view columns — the "unattributed click" row an attribution pipeline
@@ -213,6 +198,45 @@ object StreamOps {
         col("click_ts"), col("view_ts"))
   }
 
+  /** One `ValueState` per key on Spark 4's `transformWithState`, folded
+    * by `step` — the shape every typed-state operator below shares. For
+    * each key a micro-batch touches, `step(key, previous, rows)` gets the
+    * key's stored value (`None` on its first batch, or once a `ttl` has
+    * expired it) and that batch's rows, and returns the value to store and
+    * the rows to emit (Update mode).
+    *
+    * The state is registered as `stateName` with `stateEncoder`; these two
+    * are the checkpoint's state layout, so an operator must keep them to
+    * resume an existing checkpoint. A set `ttl` expires a key's state that
+    * long after its last update; TTL needs a clock, so it runs the
+    * processor under TimeMode.ProcessingTime, while no `ttl` keeps state
+    * forever under TimeMode.None. `step` runs on the executors and is
+    * serialized with the processor. */
+  private def foldByKey[K, V, S, O: Encoder](
+      grouped: KeyValueGroupedDataset[K, V], stateName: String, stateEncoder: Encoder[S],
+      ttl: Option[java.time.Duration] = None)(
+      step: (K, Option[S], Iterator[V]) => (S, Iterator[O])): Dataset[O] =
+    grouped.transformWithState(new FoldProcessor(stateName, stateEncoder, ttl, step),
+      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(), OutputMode.Update())
+
+  /** The processor behind [[foldByKey]]. */
+  private final class FoldProcessor[K, V, S, O](
+      stateName: String, stateEncoder: Encoder[S], ttl: Option[java.time.Duration],
+      step: (K, Option[S], Iterator[V]) => (S, Iterator[O]))
+    extends StatefulProcessor[K, V, O] {
+    @transient private var state: ValueState[S] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      import org.apache.spark.sql.streaming.TTLConfig
+      state = getHandle.getValueState[S](
+        stateName, stateEncoder, ttl.fold(TTLConfig.NONE)(TTLConfig(_)))
+    }
+    override def handleInputRows(key: K, rows: Iterator[V], tv: TimerValues): Iterator[O] = {
+      val (next, out) = step(key, if (state.exists()) Some(state.get()) else None, rows)
+      state.update(next)
+      out
+    }
+  }
+
   case class Totals(n: Long, sumCents: Long)
   case class TotalsOut(user_id: Long, n_events: Long, total_cents: Long)
 
@@ -224,29 +248,18 @@ object StreamOps {
     * emits the user's updated lifetime totals (Update mode). Values
     * accumulate as INTEGER cents, so totals are exact under any
     * micro-batch slicing — the stream==batch equality the spec pins.
-    * State is O(distinct users); production deployments add a TTLConfig
-    * to evict dormant keys, which this API scopes PER STATE, not per
-    * processor (the improvement over GroupState timeouts). */
+    * State is O(distinct users); production deployments would pass a
+    * [[foldByKey]] `ttl` to evict dormant keys, which this API scopes PER
+    * STATE, not per processor (the improvement over GroupState
+    * timeouts). */
   def runningTotals(events: Dataset[Event]): Dataset[TotalsOut] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{TimeMode, TTLConfig, TimerValues, ValueState}
-    class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, TotalsOut] {
-      @transient private var state: ValueState[Totals] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[Totals](
-          "totals", org.apache.spark.sql.Encoders.product[Totals], TTLConfig.NONE)
-      override def handleInputRows(
-          key: Long, rows: Iterator[Event], tv: TimerValues): Iterator[TotalsOut] = {
-        val prev = if (state.exists()) state.get() else Totals(0L, 0L)
-        var n = prev.n; var s = prev.sumCents
+    foldByKey(events.groupByKey(_.user_id), "totals", Encoders.product[Totals]) {
+      (user: Long, prev: Option[Totals], rows: Iterator[Event]) =>
+        var n = prev.fold(0L)(_.n); var s = prev.fold(0L)(_.sumCents)
         rows.foreach { e => n += 1; s += math.round(e.value * 100) }
-        state.update(Totals(n, s))
-        Iterator.single(TotalsOut(key, n, s))
-      }
+        (Totals(n, s), Iterator.single(TotalsOut(user, n, s)))
     }
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor(), TimeMode.None(), OutputMode.Update())
   }
 
   case class HHEntry(id: Long, est: Long, err: Long)
@@ -271,18 +284,10 @@ object StreamOps {
   def heavyHitters(events: Dataset[Event], k: Int): Dataset[HHOut] = {
     require(k >= 1)
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    class SpaceSavingProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, HHOut] {
-      @transient private var state: ValueState[HHState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[HHState](
-          "hh", org.apache.spark.sql.Encoders.product[HHState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: String, rows: Iterator[Event], tv: TimerValues): Iterator[HHOut] = {
+    foldByKey(events.groupByKey(_.event_type), "hh", Encoders.product[HHState]) {
+      (eventType: String, prev: Option[HHState], rows: Iterator[Event]) =>
         val m = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-        (if (state.exists()) state.get().entries else Seq.empty)
-          .foreach(e => m(e.id) = (e.est, e.err))
+        prev.foreach(_.entries.foreach(e => m(e.id) = (e.est, e.err)))
         rows.foreach { e =>
           val x = e.user_id
           m.get(x) match {
@@ -296,12 +301,8 @@ object StreamOps {
         }
         val entries = m.toSeq.map { case (id, (c, err)) => HHEntry(id, c, err) }
           .sortBy(e => (-e.est, e.id))
-        state.update(HHState(entries))
-        entries.iterator.map(e => HHOut(key, e.id, e.est, e.err))
-      }
+        (HHState(entries), entries.iterator.map(e => HHOut(eventType, e.id, e.est, e.err)))
     }
-    events.groupByKey(_.event_type)
-      .transformWithState(new SpaceSavingProcessor(), TimeMode.None(), OutputMode.Update())
   }
 
   case class KmvState(hashes: Seq[Long])
@@ -325,26 +326,15 @@ object StreamOps {
   def distinctKmv(events: Dataset[Event], k: Int): Dataset[KmvOut] = {
     require(k >= 2)
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    class KmvProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, KmvOut] {
-      @transient private var state: ValueState[KmvState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[KmvState](
-          "kmv", org.apache.spark.sql.Encoders.product[KmvState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: String, rows: Iterator[Event], tv: TimerValues): Iterator[KmvOut] = {
-        val prev = if (state.exists()) state.get().hashes else Seq.empty[Long]
-        val merged = (prev ++ rows.map(e => hash32(e.user_id))).distinct.sorted.take(k)
-        state.update(KmvState(merged))
+    foldByKey(events.groupByKey(_.event_type), "kmv", Encoders.product[KmvState]) {
+      (eventType: String, prev: Option[KmvState], rows: Iterator[Event]) =>
+        val merged = (prev.fold(Seq.empty[Long])(_.hashes) ++ rows.map(e => hash32(e.user_id)))
+          .distinct.sorted.take(k)
         val est =
           if (merged.size < k) merged.size.toLong
           else (k - 1).toLong * 4294967296L / math.max(merged.last, 1L)
-        Iterator.single(KmvOut(key, merged.size.toLong, est))
-      }
+        (KmvState(merged), Iterator.single(KmvOut(eventType, merged.size.toLong, est)))
     }
-    events.groupByKey(_.event_type)
-      .transformWithState(new KmvProcessor(), TimeMode.None(), OutputMode.Update())
   }
 
   case class HdrQState(idx: Seq[Int], cnt: Seq[Long])
@@ -365,18 +355,10 @@ object StreamOps {
     * IDENTICAL to the batch query's estimate over the same rows. */
   def hdrQuantiles(events: Dataset[Event]): Dataset[HdrQOut] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    class HdrProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, HdrQOut] {
-      @transient private var state: ValueState[HdrQState] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[HdrQState](
-          "hdr", org.apache.spark.sql.Encoders.product[HdrQState], TTLConfig.NONE)
-      override def handleInputRows(
-          key: String, rows: Iterator[Event], tv: TimerValues): Iterator[HdrQOut] = {
+    foldByKey(events.groupByKey(_.event_type), "hdr", Encoders.product[HdrQState]) {
+      (eventType: String, prev: Option[HdrQState], rows: Iterator[Event]) =>
         val m = scala.collection.mutable.LongMap.empty[Long]
-        if (state.exists()) {
-          val s = state.get()
+        prev.foreach { s =>
           s.idx.iterator.zip(s.cnt.iterator).foreach { case (i, c) => m(i.toLong) = c }
         }
         rows.foreach { e =>
@@ -391,31 +373,28 @@ object StreamOps {
           }
         }
         val sorted = m.toSeq.sortBy(_._1)
-        state.update(HdrQState(sorted.map(_._1.toInt), sorted.map(_._2)))
         val n = sorted.iterator.map(_._2).sum
-        if (n == 0L) Iterator.empty
-        else {
-          // estimate = lower bound of the first bucket whose cumulative
-          // count reaches ceil(q·n) — the batch query's rule verbatim,
-          // over the ≤ ~200-entry table
-          def est(pct: Long): Long = {
-            val rk = (pct * n + 99L) / 100L
-            var cum = 0L
-            var res = 0
-            val it = sorted.iterator
-            var found = false
-            while (it.hasNext && !found) {
-              val (i, c) = it.next(); cum += c
-              if (cum >= rk) { res = i.toInt; found = true }
+        (HdrQState(sorted.map(_._1.toInt), sorted.map(_._2)),
+          if (n == 0L) Iterator.empty
+          else {
+            // estimate = lower bound of the first bucket whose cumulative
+            // count reaches ceil(q·n) — the batch query's rule verbatim,
+            // over the ≤ ~200-entry table
+            def est(pct: Long): Long = {
+              val rk = (pct * n + 99L) / 100L
+              var cum = 0L
+              var res = 0
+              val it = sorted.iterator
+              var found = false
+              while (it.hasNext && !found) {
+                val (i, c) = it.next(); cum += c
+                if (cum >= rk) { res = i.toInt; found = true }
+              }
+              graft.queries.Curation.hdrLb(res)
             }
-            graft.queries.Curation.hdrLb(res)
-          }
-          Iterator.single(HdrQOut(key, n, est(50), est(95), est(99)))
-        }
-      }
+            Iterator.single(HdrQOut(eventType, n, est(50), est(95), est(99)))
+          })
     }
-    events.groupByKey(_.event_type)
-      .transformWithState(new HdrProcessor(), TimeMode.None(), OutputMode.Update())
   }
 
   case class ErCand(new_key: Long, cand_key: Option[Long], score: Option[Long])
@@ -473,7 +452,6 @@ object StreamOps {
       ttl: Option[java.time.Duration] = None): Dataset[ErRouteOut] = {
     val spark = arrivals.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
     val wRow = graft.queries.Profiling.erFrozenWeights(corpus).head()
     // length(bin(...)) yields INT — widen driver-side, not in the shared
     // SQL (a cast there would churn the batch twin's plan for nothing)
@@ -488,17 +466,10 @@ object StreamOps {
         when(col("cand_key").isNotNull,
           graft.queries.Profiling.erAgreementScore).as("score"))
       .as[ErCand]
-    class ErRouteProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, ErCand, ErRouteOut] {
-      @transient private var state: ValueState[ErBest] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        state = getHandle.getValueState[ErBest](
-          "best", org.apache.spark.sql.Encoders.product[ErBest],
-          ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE))
-      override def handleInputRows(
-          key: Long, rows: Iterator[ErCand], tv: TimerValues): Iterator[ErRouteOut] = {
+    foldByKey(cand.groupByKey(_.new_key), "best", Encoders.product[ErBest], ttl) {
+      (newKey: Long, prev: Option[ErBest], rows: Iterator[ErCand]) =>
         var k = 0L; var s = 0L; var n = 0L
-        if (state.exists()) { val p = state.get(); k = p.k; s = p.s; n = p.n }
+        prev.foreach { p => k = p.k; s = p.s; n = p.n }
         rows.foreach { r =>
           (r.cand_key, r.score) match {
             case (Some(ck), Some(sc)) =>
@@ -508,20 +479,14 @@ object StreamOps {
             case _ => () // candidate-less left-join row: seen, no candidate
           }
         }
-        state.update(ErBest(k, s, n))
         // the batch routing CASE verbatim (null candidate → 'new')
         val decision =
           if (n == 0L) "new" else if (s >= 14L) "attach"
           else if (s >= 4L) "review" else "new"
-        Iterator.single(ErRouteOut(key,
+        (ErBest(k, s, n), Iterator.single(ErRouteOut(newKey,
           if (n == 0L) None else Some(k),
-          if (n == 0L) None else Some(s), n, decision))
-      }
+          if (n == 0L) None else Some(s), n, decision)))
     }
-    cand.groupByKey(_.new_key)
-      .transformWithState(new ErRouteProcessor(),
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
-        OutputMode.Update())
   }
 
   /** The same md5-hex-prefix hash the batch KMV queries use
@@ -534,6 +499,14 @@ object StreamOps {
     java.lang.Long.parseLong(hex, 16)
   }
 
+  /** Stateful sessionization via flatMapGroupsWithState: a session closes
+    * when a >30-min event gap arrives, emitting one row per closed session —
+    * the streaming twin of q_sessionize's gap logic. State is one small
+    * struct per active user: O(active users), not O(events). Production
+    * deployments pass ProcessingTimeTimeout so idle users' last sessions
+    * flush and their state evicts; tests use the NoTimeout default (a
+    * processing-time timeout keeps scheduling wake-up batches, which never
+    * lets `processAllAvailable` quiesce). */
   def sessionize(
       events: Dataset[Event],
       timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout): Dataset[SessionOut] = {

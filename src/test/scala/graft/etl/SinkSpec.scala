@@ -59,6 +59,46 @@ class SinkSpec extends SparkSpec {
     assert(back.agg(sum("k")).head().getLong(0) === 500L * 501 / 2)
   }
 
+  test("compact: a write task that fails leaves the previous table readable and unchanged, and no sibling directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-fail").toString + "/t"
+    // no dictionary: each column chunk starts with its first data page
+    spark.range(0, 400, 1, 4).selectExpr("id", "concat('row-', id) AS payload")
+      .write.option("parquet.enable.dictionary", "false").parquet(dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(files.length === 4)
+    // overwrite the header of one file's first `payload` data page: its
+    // footer still reads, but any task that decodes that page fails
+    val victim = files.head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(victim.toURI), spark.sparkContext.hadoopConfiguration))
+    val pageAt = try footer.getFooter.getBlocks.get(0).getColumns.asScala
+        .find(_.getPath.toDotString == "payload").get.getFirstDataPageOffset
+      finally footer.close()
+    val raf = new java.io.RandomAccessFile(victim, "rw")
+    try { raf.seek(pageAt); raf.write(Array.fill[Byte](16)(-1)) } finally raf.close()
+    // the page no longer matches its checksum sidecar; drop the sidecar so
+    // the failure comes from decoding the page, as on a store without one
+    new java.io.File(victim.getParentFile, s".${victim.getName}.crc").delete()
+    def contents() = new java.io.File(dir).listFiles().sortBy(_.getName)
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toSeq
+    def ids() = spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
+    val before = contents()
+    assert(ids() === (0L until 400L))
+    // with adaptive execution the shuffle stage that reads the page runs
+    // before the write job is set up; without it, the failing tasks run
+    // inside the write job, after its output directory exists
+    Seq("true", "false").foreach { adaptive =>
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+      try intercept[Exception](Sink.compact(spark, dir, targetFiles = 2))
+      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      assert(contents() === before, s"adaptive=$adaptive")
+      assert(ids() === (0L until 400L), s"adaptive=$adaptive")
+      assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"), s"adaptive=$adaptive")
+    }
+  }
+
   test("Manifest: atomic pointer swap, previous generation retained, older retired") {
     val base = java.nio.file.Files.createTempDirectory("graft-manifest").toString + "/t"
     Sink.Manifest.overwrite(spark, base, (1 to 100).map(i => (i, s"v$i")).toDF("k", "v"))

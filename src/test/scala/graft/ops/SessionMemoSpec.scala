@@ -24,6 +24,14 @@ class SessionMemoSpec extends SparkSpec {
     graft.queries.Relational.fuzzyDamerau.fn(s, sf).count()
     assert(SessionMemos.entriesFor(s) > 0,
       "expected the fuzzy-pair memo to be registered for the live session")
+    // the inferred-schema memo behind Tables is one of them: a table read
+    // through it adds an entry under the session
+    val dir = java.nio.file.Files.createTempDirectory("memo-table").toString
+    s.range(3).write.parquet(s"$dir/t.parquet")
+    val beforeRead = SessionMemos.entriesFor(s)
+    graft.Tables.table(s, dir, "t").count()
+    assert(SessionMemos.entriesFor(s) === beforeRead + 1,
+      "a Tables read must memoize its schema in a session memo")
     s.stop()
     // the application-end listener sweeps during stop(); the listener bus
     // is flushed before stop() returns, but poll briefly to be safe
