@@ -18,10 +18,16 @@ the code. Then it prints, for every
 metric of BENCHMARK.json (the end-to-end ones, or with --trace the
 per-layer ones), each side's median and quartiles, the change's
 relative move of the median, the pairs the change won (by the metric's
-"better" direction), and whether the median gap exceeds the parent's
-interquartile distance. The temporary directory is removed at the end.
+"better" direction), whether the median gap exceeds the parent's
+interquartile distance, and, for a metric with a `bound`, whether the
+change's median is worse than the parent's by more than that bound (the
+rule by which the benchmark rejects a change). A run that exits non-zero
+is reported as it happens, with its side, seed, exit code and the end of
+its stderr, and counted in the summary. The temporary directory is
+removed at the end.
 """
 import argparse
+import collections
 import json
 import os
 import shutil
@@ -48,18 +54,28 @@ def export(sha, dest):
         raise SystemExit(f"git archive {sha} failed")
 
 
+STDERR_TAIL = 20
+
+
 def run(side, workload, seed, seconds, trace):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
-    proc = subprocess.run(cmd, cwd=side, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    tail = collections.deque(maxlen=STDERR_TAIL)
+    with tempfile.TemporaryFile("w+") as err:
+        proc = subprocess.run(cmd, cwd=side, stdout=subprocess.PIPE, stderr=err, text=True)
+        if proc.returncode != 0:
+            err.seek(0)
+            tail.extend(line.rstrip("\n") for line in err)
     if proc.returncode != 0:
-        return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0, "host": {}}
+        return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0, "host": {},
+                "exit": proc.returncode, "stderr_tail": list(tail)}
     lines = [json.loads(l) for l in proc.stdout.strip().splitlines() if l.startswith("{")]
     res = lines[-1]
     context = next((l["context"] for l in lines if "context" in l), {})
     return {"ok": res["correct"], "attempted": res["attempted"], "failed": res["failed"],
             "metrics": {k: v["value"] for k, v in res["metrics"].items()},
-            "host": {k: context[k] for k in ("effective_cores", "load_avg") if k in context}}
+            "host": {k: context[k] for k in ("effective_cores", "load_avg") if k in context},
+            "exit": 0}
 
 
 def quartiles(xs):
@@ -73,7 +89,7 @@ def summarise(specs, runs):
     def cell(q):
         return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
     print(f"{'metric':<40} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30} "
-          f"{'move':>8} {'wins':>6} {'gap>iqr':>8}")
+          f"{'move':>8} {'wins':>6} {'gap>iqr':>8} {'past bound':>12}")
     for m in specs:
         name = m["name"]
         pairs = [(p["metrics"][name], c["metrics"][name]) for p, c in runs
@@ -86,8 +102,11 @@ def summarise(specs, runs):
         wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
         gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
         move = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
+        # worse by more than the bound, as a share of the parent's median
+        past = (str(-gap > m["bound"] * abs(pq[1])) + f" ({m['bound']:.0%})"
+                if "bound" in m else "-")
         print(f"{name:<40} {cell(pq):<30} {cell(cq):<30} {move:>+7.1f}% "
-              f"{f'{wins}/{len(pairs)}':>6} {str(gap > pq[2] - pq[0]):>8}")
+              f"{f'{wins}/{len(pairs)}':>6} {str(gap > pq[2] - pq[0]):>8} {past:>12}")
 
 
 def main():
@@ -117,6 +136,10 @@ def main():
             for side in order:
                 got[side] = run(sides[side], args.workload, seed, seconds, args.trace)
                 r = got[side]
+                if r["exit"] != 0:
+                    print(f"[bench_pairs] seed {seed} {side}: exited {r['exit']}; last "
+                          f"{len(r['stderr_tail'])} lines of its stderr:\n"
+                          + "\n".join("    " + l for l in r["stderr_tail"]), file=sys.stderr, flush=True)
                 print(f"[bench_pairs] seed {seed} {side}: ok={r['ok']} failed={r['failed']}/"
                       f"{r['attempted']} " + " ".join(f"{k}={v:.4g}" for k, v in r["host"].items())
                       + " | " + " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items()),
@@ -130,8 +153,10 @@ def main():
           f"{', traced' if args.trace else ''}")
     for side, idx in (("parent", 0), ("change", 1)):
         rs = [r[idx] for r in runs]
+        exited = [f"seed {seed} (exit {r['exit']})" for seed, r in zip(args.seeds, rs) if r["exit"] != 0]
         print(f"{side}: {sum(r['ok'] for r in rs)}/{len(rs)} runs correct, "
-              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed")
+              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed, "
+              f"{len(exited)} exited non-zero" + (f": {', '.join(exited)}" if exited else ""))
     summarise(specs, runs)
 
 

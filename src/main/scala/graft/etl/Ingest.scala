@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.Locale
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
@@ -34,6 +35,19 @@ object Ingest {
     if (fileName.startsWith("Index")) IndexFile
     else if (fileName.startsWith("adult")) AdultFile
     else UnknownFile
+
+  /** The staged format of a dispatched file, from its extension read
+    * case-insensitively: true for a `.xlsx` workbook, false for a `.csv`
+    * sheet. Any other file, or a directory, is refused with an
+    * IllegalArgumentException naming it, so a load never reads a file as
+    * a format it is not. */
+  def isXlsx(path: Path): Boolean = {
+    val name = path.getFileName.toString.toLowerCase(Locale.ROOT)
+    if (Files.isDirectory(path) || !(name.endsWith(".xlsx") || name.endsWith(".csv")))
+      throw new IllegalArgumentException(
+        s"$path: a staged Index or adult file must be a .xlsx workbook or a .csv sheet")
+    name.endsWith(".xlsx")
+  }
 
   /** F8 — diagnosis window from the filename (reference src/main.py:265-267):
     * `…_2017_2021.xlsx` → "2017-2021" (last two '_'-separated tokens of the

@@ -10,7 +10,9 @@ import scala.util.Try
   * `main()` (reference src/main.py:378-422): enumerate the staging
   * directory, dispatch each workbook on its filename prefix, run the
   * matching pipeline with its filename/notes-derived stamps, and
-  * atomically (over)write the two modelling tables. One Spark job per
+  * atomically (over)write the two modelling tables. A dispatched file is
+  * read as xlsx or CSV by its extension ([[Ingest.isXlsx]]); a file of any
+  * other kind fails its own load before any job. One Spark job per
   * sink write; everything upstream stays one lazy plan per file, and the
   * row count each [[LoadResult]] reports is observed during that write
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
@@ -96,7 +98,7 @@ object Runner {
     def load(path: Path, kind: Ingest.PipelineKind, dest: String): LoadResult = {
       val name = path.getFileName.toString
       val file = path.toString
-      val xlsx = name.endsWith(".xlsx")
+      val xlsx = Ingest.isXlsx(path)
       kind match {
         case Ingest.IndexFile =>
           val raw =

@@ -19,8 +19,8 @@ import scala.util.Try
   * failed load leaves the previous table readable and unchanged.
   * [[Sink.Manifest]] goes further: a new generation becomes visible by a
   * pointer swap, so there is no moment at which the table path is missing.
-  * [[overwritePartitioned]] and [[overwriteBucketed]] still overwrite in
-  * place, and a failed write there loses the previous table. The
+  * [[overwriteBucketed]] is the one path that still overwrites in place,
+  * and a failed write there loses the previous table. The
   * `_TIMESTAMP DEFAULT CURRENT_TIMESTAMP()` column (reference
   * docs/create_index.sql:19) is appended by [[stamped]]: one instant per
   * write, read on the driver as the write starts, so the whole batch gets
@@ -98,19 +98,6 @@ object Sink {
       s"rename $staged -> $dst failed; previous table intact at $old, new one at $staged")
     if (replacing) require(fs.delete(old, true), s"failed to delete $old after swap (table is live)")
   }
-
-  /** Hive-style partitioned layout: one directory per partition value.
-    * This is the 100 TB at-rest layout — queries filtering on the partition
-    * column prune whole directories before any IO (PartitionFilters in the
-    * scan), and `partitionOverwriteMode=dynamic` makes re-loads replace
-    * only the partitions present in the batch. */
-  def overwritePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    stamped(df)
-      .write.mode(SaveMode.Overwrite)
-      // writer-scoped: does NOT mutate the session-wide overwrite mode
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
 
   /** Small-file compaction — lakehouse maintenance: rewrite a FLAT parquet
     * table into `targetFiles` right-sized files (streaming sinks and

@@ -303,10 +303,6 @@ object Xlsx {
       }
     }
 
-    /** Read one sheet as rows of optional cell strings (see [[rows]]). */
-    def readSheet(sheetName: String): Seq[Seq[Option[String]]] =
-      rows(sheetName).map(cells => cells.toSeq.map(Option(_))).toVector
-
     override def close(): Unit = zip.close()
   }
 
@@ -316,13 +312,12 @@ object Xlsx {
     try f(wb) finally wb.close()
   }
 
-  /** Sheet names in workbook order. */
-  def sheetNames(path: String): Seq[String] = withWorkbook(path)(_.sheetNames)
-
-  /** Read one sheet as rows of optional cell strings, positionally aligned
-    * (row i, column j); absent cells are None. */
+  /** Collect one sheet on the driver as rows of optional cell strings,
+    * positionally aligned as [[Workbook.rows]] streams them (row i, column
+    * j); absent cells are None. No load collects a sheet: loads stream it
+    * through [[Workbook.rows]]. */
   def readSheet(path: String, sheetName: String): Seq[Seq[Option[String]]] =
-    withWorkbook(path)(_.readSheet(sheetName))
+    withWorkbook(path)(_.rows(sheetName).map(cells => cells.toSeq.map(Option(_))).toVector)
 
   /** One row of cells (null = absent) as a CSV line (RFC-4180 quoting),
     * the hand-off point into `spark.read.csv`. */
@@ -333,8 +328,4 @@ object Xlsx {
         "\"" + v.replace("\"", "\"\"") + "\""
       else v
     }.mkString(",")
-
-  /** Stage collected rows to CSV text lines (see [[csvLine]]). */
-  def toCsvLines(rows: Seq[Seq[Option[String]]]): Seq[String] =
-    rows.map(r => csvLine(r.map(_.orNull).toArray))
 }

@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.spark.sql.functions.max
 
 /** Full orchestration: staged workbooks in, modelling tables out
   * (reference src/main.py:378-422 end-to-end). */
@@ -202,8 +203,9 @@ class RunnerSpec extends SparkSpec {
     zos.close()
   }
 
-  private def indexWorkbook(dir: java.nio.file.Path, rows: Seq[Seq[String]] = indexRows): Unit =
-    workbook(dir, "Index_2018.xlsx", Seq("Table 5" ->
+  private def indexWorkbook(dir: java.nio.file.Path, rows: Seq[Seq[String]] = indexRows,
+      file: String = "Index_2018.xlsx"): Unit =
+    workbook(dir, file, Seq("Table 5" ->
       sheetRows((1 to 10).map(i => Seq(s"preamble $i")) ++ (Schemas.rawIndexSheet.fieldNames.toSeq +: rows))))
 
   /** The adult workbook: "Table 4" with `body` after its preamble and
@@ -230,8 +232,8 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("run: LoadResult.rows equals a direct count of the written table (CSV and xlsx, both sink modes)") {
-    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging());
-         mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) {
+    val published = for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging());
+         mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) yield {
       val out = Files.createTempDirectory("graft-tables-rows").toString
       val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
       assert(results.map(_.kind).sorted === Seq("adult4", "index"), s"$format/$mode")
@@ -242,7 +244,16 @@ class RunnerSpec extends SparkSpec {
       // Breast row and the Larynx, Prostate and Ovary rows = 9, × 2 metrics
       assert(results.map(r => r.kind -> r.rows).toMap === Map("index" -> 3L, "adult4" -> 18L),
         s"$format/$mode")
+      // the published rows as a multiset, without the write's stamp and the
+      // Notes snapshot, which only a workbook has
+      def rows(table: String) = readBack(s"$out/$table", mode).drop("_TIMESTAMP", "DATE_SNAPSHOT")
+        .collect().map(_.toString).sorted.toSeq
+      (format, mode) -> Seq("INDEX", "ADULT_4").map(rows)
     }
+    // the two staged formats of the same sheets publish the same rows
+    val byRun = published.toMap
+    for (mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer))
+      assert(byRun(("csv", mode)) === byRun(("xlsx", mode)), s"$mode")
   }
 
   /** Run `body`, and return with its result the scan locations under
@@ -363,6 +374,33 @@ class RunnerSpec extends SparkSpec {
     def rows(table: String) =
       spark.read.parquet(table).drop("_TIMESTAMP").collect().map(_.toString).sorted.toSeq
     assert(rows(s"$out/ADULT_4") === rows(s"$soloOut/ADULT_4"))
+  }
+
+  test("run: a staged Index file that is neither .xlsx nor .csv fails its own load before any job; INDEX keeps its rows") {
+    val out = Files.createTempDirectory("graft-tables-ext").toString
+    Runner.run(spark, csvStaging().toString, out)
+    def rows(table: String) = spark.read.parquet(s"$out/$table").collect().map(_.toString).sorted.toSeq
+    def stamp(table: String) = spark.read.parquet(s"$out/$table").select(max("_TIMESTAMP")).head.getTimestamp(0)
+    val index = rows("INDEX")
+    assert(index.size === 3)
+    // an Index workbook under another extension, and a directory named as a CSV sheet
+    for (bad <- Seq("Index_2019.xls", "Index_2020.csv")) {
+      val staging = Files.createTempDirectory("graft-staging-ext")
+      if (bad.endsWith(".xls")) indexWorkbook(staging, file = bad) else Files.createDirectory(staging.resolve(bad))
+      Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows.take(1)))
+      val adultBefore = stamp("ADULT_4")
+      val e = intercept[IllegalArgumentException](Runner.run(spark, staging.toString, out))
+      assert(e.getMessage.contains(staging.resolve(bad).toString), e.getMessage)
+      assert(e.getSuppressed.isEmpty)
+      assert(rows("INDEX") === index, bad)
+      // the adult load still published: a new stamp over the one-row sheet's rows
+      assert(stamp("ADULT_4").after(adultBefore), bad)
+      assert(rows("ADULT_4").size === 4, bad)
+    }
+    // the extension is read case-insensitively
+    val upper = Files.createTempDirectory("graft-staging-ext-upper")
+    indexWorkbook(upper, file = "Index_2019.XLSX")
+    assert(Runner.run(spark, upper.toString, out).map(r => r.file -> r.rows) === Seq("Index_2019.XLSX" -> 3L))
   }
 
   test("run: when both tables fail, the first failure in listing order is thrown, the other suppressed") {

@@ -138,25 +138,6 @@ class SinkSpec extends SparkSpec {
     assert(e.getMessage.contains("retired"))
   }
 
-  test("overwritePartitioned: directory-per-value layout, pruned scans, dynamic overwrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/t"
-    val df = Seq(("click", 1L), ("click", 2L), ("view", 3L)).toDF("event_type", "v")
-    Sink.overwritePartitioned(df, dir, Seq("event_type"))
-    // layout: one directory per partition value
-    assert(new java.io.File(s"$dir/event_type=click").isDirectory)
-    assert(new java.io.File(s"$dir/event_type=view").isDirectory)
-    // partition filter prunes before IO
-    val q = spark.read.parquet(dir).filter($"event_type" === "click")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"), plan)
-    assert(q.count() === 2)
-    // dynamic overwrite replaces only the partitions present in the batch
-    Sink.overwritePartitioned(Seq(("click", 9L)).toDF("event_type", "v"), dir, Seq("event_type"))
-    val after = spark.read.parquet(dir)
-    assert(after.filter($"event_type" === "view").count() === 1)   // untouched
-    assert(after.filter($"event_type" === "click").select("v").as[Long].collect().toSeq === Seq(9L))
-  }
-
   test("overwriteBucketed: same-bucketed tables join with no shuffle exchange") {
     val left = (1 to 500).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
     val right = (1 to 500).map(i => (i.toLong, i * 2.0)).toDF("k", "rv")
@@ -211,9 +192,6 @@ class SinkSpec extends SparkSpec {
         Runner.run(spark, staging, s"$root/runner", sinkMode = Runner.ManifestPointer)
         Sink.Manifest.read(spark, s"$root/runner/INDEX")
       },
-      "overwritePartitioned" -> { () =>
-        Sink.overwritePartitioned(batch(), s"$root/partitioned", Seq("v")); spark.read.parquet(s"$root/partitioned")
-      },
       "overwriteBucketed" -> { () =>
         Sink.overwriteBucketed(batch(), "sink_spec_stamped", "k", 4); spark.table("sink_spec_stamped")
       })
@@ -236,7 +214,9 @@ class SinkSpec extends SparkSpec {
     assert((dirMode, fileMode) === ("rwxr-xr-x", "rw-r--r--"))
     val root = Files.createTempDirectory("graft-modes")
     Sink.overwriteTable(batch(), s"$root/flat")
-    Sink.overwritePartitioned(batch(), s"$root/partitioned", Seq("v"))
+    // a partitioned table written by dynamic overwrite, for its nested directories
+    batch().write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("v").parquet(s"$root/partitioned")
     for (table <- Seq("flat", "partitioned")) {
       val entries = Files.walk(root.resolve(table)).iterator.asScala.toSeq
       def mode(p: Path) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))

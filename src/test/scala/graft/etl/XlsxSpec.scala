@@ -45,7 +45,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("sheetNames lists workbook order with unescaping") {
-    assert(Xlsx.sheetNames(makeWorkbook()) === Seq("Table 5", "Notes & definitions"))
+    assert(Xlsx.withWorkbook(makeWorkbook())(_.sheetNames) === Seq("Table 5", "Notes & definitions"))
   }
 
   test("readSheet: shared/inline/number cells, positional alignment, missing cells as None") {
@@ -82,11 +82,10 @@ class XlsxSpec extends SparkSpec {
     assert(Ingest.snapshotDate(first) === Some("December 2023"))
   }
 
-  test("toCsvLines quotes commas/quotes and round-trips through a CSV write") {
-    val lines = Xlsx.toCsvLines(Seq(
-      Seq(Some("a,b"), Some("say \"hi\""), None),
-      Seq(Some("plain"), Some("2"), Some("3"))))
-    assert(lines === Seq("\"a,b\",\"say \"\"hi\"\"\",", "plain,2,3"))
+  test("csvLine quotes commas, quotes and line breaks, and leaves an absent cell empty") {
+    assert(Xlsx.csvLine(Array("a,b", "say \"hi\"", null)) === "\"a,b\",\"say \"\"hi\"\"\",")
+    assert(Xlsx.csvLine(Array("two\nlines", "cr\r")) === "\"two\nlines\",\"cr\r\"")
+    assert(Xlsx.csvLine(Array("plain", "2", "3")) === "plain,2,3")
   }
 
   test("NHS-shaped workbook → Staging.readXlsxSheet → IndexPipeline end-to-end") {
@@ -235,7 +234,7 @@ class XlsxSpec extends SparkSpec {
       val rows = wb.rows("Table 5").toVector
       assert(rows.length === 4)
       assert(rows(2).toSeq === Seq(null, "60"))
-      assert(wb.readSheet("Notes & definitions").head.head.exists(_.contains("December 2023")))
+      assert(wb.rows("Notes & definitions").next().head.contains("December 2023"))
       assert(wb.sharedStrings.toSeq === Seq("Geography type", "Survival (%)", "Cancer Alliance", "rich text"))
     }
   }
