@@ -60,15 +60,13 @@ STDERR_TAIL = 20
 def run(side, workload, seed, seconds, trace):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "1" if trace else "0"]
-    tail = collections.deque(maxlen=STDERR_TAIL)
     with tempfile.TemporaryFile("w+") as err:
         proc = subprocess.run(cmd, cwd=side, stdout=subprocess.PIPE, stderr=err, text=True)
         if proc.returncode != 0:
             err.seek(0)
-            tail.extend(line.rstrip("\n") for line in err)
-    if proc.returncode != 0:
-        return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0, "host": {},
-                "exit": proc.returncode, "stderr_tail": list(tail)}
+            tail = collections.deque(err, maxlen=STDERR_TAIL)
+            return {"ok": False, "metrics": {}, "attempted": 0, "failed": 0, "host": {},
+                    "exit": proc.returncode, "stderr_tail": [l.rstrip("\n") for l in tail]}
     lines = [json.loads(l) for l in proc.stdout.strip().splitlines() if l.startswith("{")]
     res = lines[-1]
     context = next((l["context"] for l in lines if "context" in l), {})
