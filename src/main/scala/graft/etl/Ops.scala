@@ -67,12 +67,6 @@ object Ops {
           regexp_extract(col(srcCol), "\\(([^)]*)\\)", 1)))
       .withColumn(srcCol, trim(regexp_replace(col(srcCol), "\\s*\\(.*$", "")))
 
-  /** F6 — header normalization (reference src/main.py:187-189): newline→
-    * space, strip, space→underscore, lowercase. */
-  def normalizeHeaders(df: DataFrame): DataFrame =
-    df.toDF(df.columns.toIndexedSeq.map(c =>
-      c.replace("\n", " ").trim.replaceAll(" ", "_").toLowerCase): _*)
-
   /** P7 — load-boundary projection: keep exactly the mapped columns, in
     * order, renamed (reference src/main.py:193-212). */
   def renameSelect(df: DataFrame, mapping: Seq[(String, String)]): DataFrame =

@@ -19,8 +19,8 @@ import scala.util.Try
   * failed load leaves the previous table readable and unchanged.
   * [[Sink.Manifest]] goes further: a new generation becomes visible by a
   * pointer swap, so there is no moment at which the table path is missing.
-  * [[overwriteBucketed]] is the one path that still overwrites in place,
-  * and a failed write there loses the previous table. The
+  * Every write path is staged or swapped: none overwrites a table in
+  * place, so no failed write loses the previous table. The
   * `_TIMESTAMP DEFAULT CURRENT_TIMESTAMP()` column (reference
   * docs/create_index.sql:19) is appended by [[stamped]]: one instant per
   * write, read on the driver as the write starts, so the whole batch gets
@@ -212,16 +212,4 @@ object Sink {
       overwrite(spark, base, read(spark, base).repartition(targetFiles))
     }
   }
-
-  /** Bucketed managed table: rows hash-partitioned into `buckets` files by
-    * `bucketCol` and sorted within buckets. Two tables bucketed the same
-    * way join WITHOUT a shuffle — at 100 TB this converts every recurring
-    * equi-join on the bucket key from a full exchange into a local
-    * zip-merge of co-located buckets. */
-  def overwriteBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int): Unit =
-    stamped(df)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
 }

@@ -90,6 +90,11 @@ object FunctionCatalog {
     kernel("minhash_bands8", "minhashBands8", Strings, 1, IntParam("k", 1)),
     kernel("md5_seeded8", "md5Seeded8", Strings, 1),
     kernel("charhist_entries", "charHistEntries", HistEntries, 1, IntParam("blocks", 1)),
+    // aligned_counts(entries, keys) and marginal_counts(entries, keys)
+    // binary-search sorted input: entries as charhist_entries gives them
+    // ((k, c) structs, k strictly ascending) and keys ascending (strictly
+    // for marginal_counts). Unsorted input fails the row with an
+    // IllegalArgumentException naming the function, never a wrong count.
     kernel("aligned_counts", "alignedCounts", Longs, 2),
     kernel("marginal_counts", "marginalCounts", Longs, 2),
     Entry("range_bucket_search", 3, RangeBucketSearch.build, variadic = true),

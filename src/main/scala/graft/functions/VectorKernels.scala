@@ -304,19 +304,39 @@ object VectorKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** The [[charHistEntries]] contract the two count kernels binary-search
+    * on: `entries`' k strictly ascending. One pass over the entries; `fn`
+    * names the SQL function in the IllegalArgumentException. */
+  private def requireSortedEntries(fn: String, entries: ArrayData): Unit = {
+    var prev = Long.MinValue
+    var i = 0
+    while (i < entries.numElements()) {
+      val k = entries.getStruct(i, 2).getLong(0)
+      if (i > 0 && k <= prev)
+        throw new IllegalArgumentException(s"$fn: entries must be sorted by k without repeats, got k $k after $prev")
+      prev = k
+      i += 1
+    }
+  }
+
   /** Count vector of `entries` ((k, c) structs SORTED by k — the
     * [[charHistEntries]] contract) aligned to `keys`: out(i) = c of the
     * entry with k == keys(i), else 0 — exactly
     * `transform(keys, x → coalesce(map(x), 0))` over the entry map, but
     * one binary search per key instead of a linear MapData scan inside
     * an interpreted lambda (O(|keys| · log m) vs O(|keys| · m) per
-    * item). */
+    * item). Entries out of order, or `keys` not ascending, fail with an
+    * IllegalArgumentException ([[requireSortedEntries]]): a binary search
+    * over them would count silently wrong. */
   def alignedCounts(entries: ArrayData, keys: ArrayData): ArrayData = {
     val m = entries.numElements()
+    requireSortedEntries("aligned_counts", entries)
     val out = new Array[Long](keys.numElements())
     var i = 0
     while (i < out.length) {
       val key = keys.getLong(i)
+      if (i > 0 && key < keys.getLong(i - 1))
+        throw new IllegalArgumentException(s"aligned_counts: keys must be ascending, got $key after ${keys.getLong(i - 1)}")
       var lo = 0
       var hi = m - 1
       var c = 0L
@@ -338,10 +358,19 @@ object VectorKernels {
     * k mod 1000 == keys(i) — the 4-block marginal
     * `coalesce(map(g),0) + coalesce(map(g+1000),0) + …` of the
     * blockhash family, generalized to any block count. `keys` must be
-    * SORTED ascending (the observed-byte alphabet is); one binary
-    * search per ENTRY. */
+    * SORTED ascending without repeats (the observed-byte alphabet is);
+    * one binary search per ENTRY. Unsorted entries or keys fail with an
+    * IllegalArgumentException, as in [[alignedCounts]]. */
   def marginalCounts(entries: ArrayData, keys: ArrayData): ArrayData = {
+    requireSortedEntries("marginal_counts", entries)
     val nk = keys.numElements()
+    var j = 1
+    while (j < nk) {
+      if (keys.getLong(j) <= keys.getLong(j - 1))
+        throw new IllegalArgumentException(
+          s"marginal_counts: keys must be strictly ascending, got ${keys.getLong(j)} after ${keys.getLong(j - 1)}")
+      j += 1
+    }
     val out = new Array[Long](nk)
     var e = 0
     val m = entries.numElements()

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * (doc_id % 10 == 7, shifted by 1e6 — disjoint from every real id).
   *
   * Scale design: both operators are single hash-joins keyed on the natural
-  * key — the merge shuffles (key, 3 columns), never document text. With
-  * the target persisted bucketed-by-key ([[graft.etl.Sink.overwriteBucketed]];
-  * plan proof in PlanSpec's bucketed-corpus anti-join), the target side
-  * joins with NO exchange, so an ingest batch costs one scan of the batch
-  * plus a co-located join — the same topology as q_dedup_incremental.
+  * key — the merge shuffles (key, 3 columns), never document text. A
+  * target persisted bucketed by key would join with no exchange on its
+  * side (Spark's `bucketBy`); the engine writes no bucketed table, since
+  * such a write overwrites in place and a failed one loses the table.
   */
 object MergeOps {
 

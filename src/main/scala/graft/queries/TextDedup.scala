@@ -1516,8 +1516,7 @@ object TextDedup {
   /** Incremental dedup — the steady-state ingest shape: a NEW batch
     * (doc_id ≥ 250 stands in for today's crawl) anti-joined on normalized
     * fingerprint against the EXISTING corpus, keeping only first-seen
-    * content. One shuffle on the fingerprint; at 100 TB the corpus side is
-    * a bucketed fingerprint table so the anti-join is co-located. */
+    * content. One shuffle on the fingerprint. */
   val dedupIncremental = QuerySpec(
     "q_dedup_incremental",
     s"""WITH fp AS (
@@ -1534,31 +1533,6 @@ object TextDedup {
       val corpus = fp.filter(col("doc_id") < 250).select("fingerprint")
       batch.join(corpus, Seq("fingerprint"), "left_anti")
         .select("doc_id", "fingerprint")
-  }
-
-  /** The corpus half of the steady-state incremental-dedup pair: persist
-    * the existing corpus' fingerprints bucketed BY fingerprint
-    * ([[graft.etl.Sink.overwriteBucketed]]). At 100 TB this is the at-rest
-    * layout that makes every subsequent ingest anti-join co-located. */
-  def writeCorpusFingerprints(s: SparkSession, d: String, table: String, buckets: Int): Unit =
-    graft.etl.Sink.overwriteBucketed(
-      docs(s, d).filter(col("doc_id") < 250)
-        .select(col("doc_id"), normFingerprint.as("fingerprint")),
-      table, "fingerprint", buckets)
-
-  /** [[dedupIncremental]]'s scaladoc claim made real: anti-join the new
-    * batch against a corpus fingerprint table persisted by
-    * [[writeCorpusFingerprints]]. The bucketed scan already satisfies the
-    * join's hash-partitioning requirement, so the (huge) corpus side has NO
-    * exchange — only the small new batch shuffles to align with the
-    * bucketing (pinned in PlanSpec). */
-  def incrementalAgainstBucketedCorpus(
-      s: SparkSession, d: String, corpusTable: String): DataFrame = {
-    val batch = docs(s, d).filter(col("doc_id") >= 250)
-      .select(col("doc_id"), normFingerprint.as("fingerprint"))
-    batch.join(s.table(corpusTable).select("fingerprint"),
-        Seq("fingerprint"), "left_anti")
-      .select("doc_id", "fingerprint")
   }
 
   /** Deterministic content-hash sampling: keep docs whose md5 falls in a

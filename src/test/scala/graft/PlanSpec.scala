@@ -84,26 +84,6 @@ class PlanSpec extends SparkSpec {
       s"expected broadcast left_anti for the hot-shingle drop:\n$plan")
   }
 
-  test("incremental dedup vs bucketed corpus: NO exchange on the corpus side") {
-    import graft.queries.TextDedup
-    TextDedup.writeCorpusFingerprints(spark, sf, "corpus_fp", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val out = TextDedup.incrementalAgainstBucketedCorpus(spark, sf, "corpus_fp")
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") && plan.contains("LeftAnti"), plan)
-      // exactly ONE exchange: the new batch aligning to the corpus bucketing.
-      // A second one would mean the corpus is being reshuffled on every
-      // ingest — the thing bucketing exists to avoid.
-      val n = "Exchange hashpartitioning".r.findAllIn(plan).size
-      assert(n == 1, s"expected 1 exchange (batch side only), got $n:\n$plan")
-      // same answer as the plain anti-join oracle query
-      val expected = SparkEntry.queries("q_dedup_incremental")(spark, sf)
-      assert(out.collect().toSet === expected.collect().toSet)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("q_sample_balanced lowers to partial+final WindowGroupLimit") {
     // the balanced sample must stay bounded-heap per partition — a full
     // per-group sort here would regress the one shape that makes

@@ -83,12 +83,6 @@ class OpsSpec extends SparkSpec {
       ("Age-standardised", None))) // paren-less non-Non-standardised → NULL (pandas .str[1] of 1-elem split)
   }
 
-  test("normalizeHeaders: newline→space, strip, space→underscore, lowercase") {
-    val df = Seq((1, 2, 3)).toDF("Years since\ndiagnosis", " Survival (%) ", "OK")
-    assert(Ops.normalizeHeaders(df).columns.toSeq ===
-      Seq("years_since_diagnosis", "survival_(%)", "ok"))
-  }
-
   test("unpivotMetrics keeps null measure values (pandas melt semantics)") {
     val df = Seq((1L, Some(10.0), None: Option[Double]), (2L, Some(20.0), Some(5.0)))
       .toDF("id", "Net survival (%)", "Overall survival (%)")

@@ -516,4 +516,37 @@ class RunnerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/INDEX").count() === 1)
     assert(new java.io.File(out).list().toSeq.sorted === Seq("ADULT_4", "INDEX"))
   }
+
+  test("run: an Index sheet that is not well-formed UTF-8 XML fails its load, naming the workbook and the sheet; INDEX keeps its rows, ADULT_4 publishes") {
+    val out = Files.createTempDirectory("graft-tables-badxml").toString
+    Runner.run(spark, xlsxStaging().toString, out)
+    def rows(table: String) = spark.read.parquet(s"$out/$table").collect().map(_.toString).sorted.toSeq
+    def stamp(table: String) = spark.read.parquet(s"$out/$table").select(max("_TIMESTAMP")).head.getTimestamp(0)
+    val index = rows("INDEX")
+    assert(index.size === 3)
+    val good = sheetRows((1 to 10).map(i => Seq(s"preamble $i")) ++ (Schemas.rawIndexSheet.fieldNames.toSeq +: indexRows))
+    for ((sheetXml, fault) <- XlsxSpec.malformedSheets(good)) {
+      val staging = Files.createTempDirectory("graft-staging-badxml")
+      val file = staging.resolve("Index_2018.xlsx")
+      val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(file))
+      def entry(name: String, content: Array[Byte]): Unit = {
+        zos.putNextEntry(new java.util.zip.ZipEntry(name)); zos.write(content); zos.closeEntry()
+      }
+      entry("xl/workbook.xml", """<workbook><sheets><sheet name="Table 5" sheetId="1" r:id="rId1"/></sheets></workbook>""".getBytes("UTF-8"))
+      entry("xl/_rels/workbook.xml.rels",
+        """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""".getBytes("UTF-8"))
+      entry("xl/worksheets/sheet1.xml", sheetXml)
+      zos.close()
+      Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows.take(1)))
+      val adultBefore = stamp("ADULT_4")
+      val e = intercept[org.apache.spark.SparkException](Runner.run(spark, staging.toString, out))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains(file.toString) &&
+        c.getMessage.contains("sheet 'Table 5'") && c.getMessage.contains(fault)), chain.mkString("\n"))
+      assert(rows("INDEX") === index, fault)
+      // the adult load still published: a new stamp over the one-row sheet's rows
+      assert(stamp("ADULT_4").after(adultBefore), fault)
+      assert(rows("ADULT_4").size === 4, fault)
+    }
+  }
 }

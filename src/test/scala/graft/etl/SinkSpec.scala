@@ -138,22 +138,6 @@ class SinkSpec extends SparkSpec {
     assert(e.getMessage.contains("retired"))
   }
 
-  test("overwriteBucketed: same-bucketed tables join with no shuffle exchange") {
-    val left = (1 to 500).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
-    val right = (1 to 500).map(i => (i.toLong, i * 2.0)).toDF("k", "rv")
-    Sink.overwriteBucketed(left, "bkt_left", "k", 4)
-    Sink.overwriteBucketed(right, "bkt_right", "k", 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-      assert(joined.count() === 500)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"))
-      assert(!plan.contains("Exchange hashpartitioning"), s"unexpected shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   // ---- _TIMESTAMP: one instant per write, on every path that stamps ----------
 
   /** Rows spread over four tasks. */
@@ -191,9 +175,6 @@ class SinkSpec extends SparkSpec {
       "Runner ManifestPointer" -> { () =>
         Runner.run(spark, staging, s"$root/runner", sinkMode = Runner.ManifestPointer)
         Sink.Manifest.read(spark, s"$root/runner/INDEX")
-      },
-      "overwriteBucketed" -> { () =>
-        Sink.overwriteBucketed(batch(), "sink_spec_stamped", "k", 4); spark.table("sink_spec_stamped")
       })
     for ((name, write) <- writePaths) {
       val runs = Seq.fill(2)(stampOf(write))

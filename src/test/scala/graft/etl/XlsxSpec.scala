@@ -157,17 +157,21 @@ class XlsxSpec extends SparkSpec {
   }
 
   /** A one-sheet workbook with the given sheet and shared-string parts. */
-  private def oneSheet(sheetXml: String, sharedXml: Option[String] = None, sheet: String = "S"): String = {
+  private def oneSheet(sheetXml: String, sharedXml: Option[String] = None, sheet: String = "S"): String =
+    oneSheetBytes(sheetXml.getBytes("UTF-8"), sharedXml, sheet)
+
+  /** As [[oneSheet]], the sheet part given as bytes. */
+  private def oneSheetBytes(sheetXml: Array[Byte], sharedXml: Option[String] = None, sheet: String = "S"): String = {
     val path = Files.createTempFile("graft-one", ".xlsx")
     val zos = new ZipOutputStream(Files.newOutputStream(path))
-    def entry(name: String, content: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    def entry(name: String, content: Array[Byte]): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content); zos.closeEntry()
     }
     entry("xl/workbook.xml",
-      s"""<workbook><sheets><sheet name="$sheet" sheetId="1" r:id="rId1"/></sheets></workbook>""")
+      s"""<workbook><sheets><sheet name="$sheet" sheetId="1" r:id="rId1"/></sheets></workbook>""".getBytes("UTF-8"))
     entry("xl/_rels/workbook.xml.rels",
-      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""")
-    sharedXml.foreach(entry("xl/sharedStrings.xml", _))
+      """<Relationships><Relationship Id="rId1" Type="w" Target="worksheets/sheet1.xml"/></Relationships>""".getBytes("UTF-8"))
+    sharedXml.foreach(x => entry("xl/sharedStrings.xml", x.getBytes("UTF-8")))
     entry("xl/worksheets/sheet1.xml", sheetXml)
     zos.close()
     path.toString
@@ -283,5 +287,43 @@ class XlsxSpec extends SparkSpec {
       assert(e.getMessage.contains("sheet 'S'") && e.getMessage.contains(named) &&
         e.getMessage.contains(s"index '$v'"), e.getMessage)
     }
+  }
+
+  test("a sheet that is not well-formed UTF-8 XML fails with an error naming the workbook, the sheet and the fault") {
+    for ((sheetXml, fault) <- XlsxSpec.malformedSheets("""<row r="1"><c r="A1"><v>1</v></c></row>""")) {
+      val path = oneSheetBytes(sheetXml)
+      val e = intercept[IllegalArgumentException](rows(path))
+      assert(e.getMessage.contains(path) && e.getMessage.contains("sheet 'S'") && e.getMessage.contains(fault),
+        e.getMessage)
+    }
+  }
+
+  test("a DOCTYPE is skipped unread, and a predefined entity or character reference still resolves") {
+    val path = oneSheet(
+      """<?xml version="1.0" encoding="utf-8"?>
+        |<!DOCTYPE worksheet [<!ENTITY a "]>"> <!ELEMENT worksheet ANY>]>
+        |<worksheet><sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>&lt;&#65;&gt;</t></is></c></row>
+        |</sheetData></worksheet>""".stripMargin)
+    assert(rows(path) === Seq(Seq("<A>")))
+  }
+}
+
+object XlsxSpec {
+
+  /** Sheet parts that each hold, after the well-formed `<row>`s `rows`,
+    * one fault the reader must refuse, with the words its error names the
+    * fault with. */
+  def malformedSheets(rows: String): Seq[(Array[Byte], String)] = {
+    def sheet(body: String) = s"""<worksheet><sheetData>$rows$body</sheetData></worksheet>""".getBytes("UTF-8")
+    Seq(
+      sheet("""<row><c><v>2</v></row>""") -> "the end tag </row> does not match <c>",
+      s"""<worksheet><sheetData>$rows<row><c><v>2</v></c>""".getBytes("UTF-8") -> "the part ends before </row>",
+      sheet("""<row><c r="A<2"><v>2</v></c></row>""") -> "an attribute value holds '<'",
+      (s"""<worksheet><sheetData>$rows<row><c><v>""".getBytes("UTF-8") ++ Array(0xc3.toByte, '('.toByte) ++
+        "</v></c></row></sheetData></worksheet>".getBytes("UTF-8")) -> "malformed UTF-8",
+      ("""<?xml version="1.0" encoding="ISO-8859-1"?>""".getBytes("UTF-8") ++ sheet("")) ->
+        "declares encoding \"ISO-8859-1\"",
+      sheet("""<row><c t="inlineStr"><is><t>a&nbsp;b</t></is></c></row>""") ->
+        "\"nbsp\" was referenced, but not declared")
   }
 }

@@ -216,6 +216,35 @@ class FunctionCatalogSpec extends AnyFunSuite {
     case _ => false
   }
 
+  test("aligned_counts and marginal_counts refuse unsorted entries or keys, naming the function") {
+    val sorted = "array(named_struct('k', 1L, 'c', 2L), named_struct('k', 1001L, 'c', 3L))"
+    val unsorted = "array(named_struct('k', 1001L, 'c', 3L), named_struct('k', 1L, 'c', 2L))"
+    val repeated = "array(named_struct('k', 1L, 'c', 2L), named_struct('k', 1L, 'c', 3L))"
+    // sorted input counts as before, through both routes
+    for (s <- Seq(plain, extended)) {
+      assert(run(s, s"aligned_counts($sorted, array(1L, 2L, 1001L))").head.getSeq[Long](0) === Seq(2L, 0L, 3L))
+      assert(run(s, s"marginal_counts($sorted, array(1L, 5L))").head.getSeq[Long](0) === Seq(5L, 0L))
+    }
+    val bad = Seq(
+      "aligned_counts" -> s"aligned_counts($unsorted, array(1L))",
+      "aligned_counts" -> s"aligned_counts($repeated, array(1L))",
+      "aligned_counts" -> s"aligned_counts($sorted, array(1001L, 1L))",
+      "marginal_counts" -> s"marginal_counts($unsorted, array(1L))",
+      "marginal_counts" -> s"marginal_counts($repeated, array(1L))",
+      "marginal_counts" -> s"marginal_counts($sorted, array(5L, 1L))",
+      "marginal_counts" -> s"marginal_counts($sorted, array(1L, 1L))")
+    for ((name, call) <- bad; mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      plain.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val e = intercept[Exception](run(plain, call))
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.startsWith(s"$name:") && (c.getMessage.contains("sorted") || c.getMessage.contains("ascending"))),
+          s"$mode $call: ${chain.mkString("\n")}")
+      } finally plain.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
   test("every scalar kernel entry has a codegen sample") {
     assert(kernelCalls.keySet ===
       FunctionCatalog.entries.map(_.name).toSet -- Set("range_bucket_search", "kmv_sketch", "mg_topk"))
