@@ -18,8 +18,8 @@ import scala.util.Try
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
   * table back. An xlsx workbook is opened on the driver only to resolve
   * its sheet and, for an adult workbook, to read the Notes snapshot; the
-  * sheet itself is streamed and CSV-parsed inside the write's one task
-  * ([[Staging]]), so a load runs one task and writes one file per
+  * sheet itself is streamed and typed cell by cell inside the write's one
+  * task ([[Staging]]), so a load runs one task and writes one file per
   * workbook, and a malformed sheet body fails the write, not the driver.
   * Both sink modes stamp `_TIMESTAMP` through [[Sink.stamped]], one
   * instant per write that generated code reads by reference, so a repeated

@@ -90,6 +90,7 @@ object Xlsx {
     private final val ToText = 1
     private final val ToName = 2
     private final val ToAttrName = 3
+    private val XmlTarget = ascii("xml")
     private val Encoding = """encoding\s*=\s*["']([^"']*)["']""".r.unanchored
   }
 
@@ -330,19 +331,22 @@ object Xlsx {
 
     private def isSpace(c: Int) = c == ' ' || c == '\n' || c == '\t' || c == '\r'
 
+    private def endsName(c: Int) = isSpace(c) || c == '>' || c == '/' || c == '=' || c == '?'
+
     /** The next byte inside markup, read straight from the buffer when it
       * holds one. */
     private def nextByte(): Int = if (pos < lim) { val b = buf(pos) & 0xff; pos += 1; b } else need()
 
     /** A name whose first byte is `first`: the tag's name for `ToName`,
-      * else the attribute's. Returns the byte after it. */
+      * else the attribute's (or a processing instruction's target).
+      * Returns the byte after it. */
     private def readName(first: Int, to: Int): Int = {
       var c = first
-      if (isSpace(c) || c == '>' || c == '/' || c == '=') fail("a name is missing")
+      if (endsName(c)) fail("a name is missing")
       var arr = if (to == ToName) name else attrName
       var len = 0
       var from = 0
-      while (!isSpace(c) && c != '>' && c != '/' && c != '=') {
+      while (!endsName(c)) {
         if (c == '<' || c == '&' || c == '"' || c == '\'' || c < 0x20) fail(s"a name holds '${c.toChar}'")
         if (c == ':' && from == 0) from = len + 1
         if (c >= 0x80) {
@@ -402,8 +406,6 @@ object Xlsx {
 
     /** A start tag after its `<`, whose name starts with `first`. */
     private def startTag(first: Int): Unit = {
-      nameLen = 0
-      local = 0
       var c = readName(first, ToName)
       var a = 0
       while (a < attr.length) { attr(a) = null; a += 1 }
@@ -412,7 +414,6 @@ object Xlsx {
         if (isSpace(c)) { spaced = true; c = skipSpace() }
         else {
           if (!spaced) fail(s"the attributes of <$tagName> are not separated by white space")
-          attrNameLen = 0
           c = readName(c, ToAttrName)
           if (isSpace(c)) c = skipSpace()
           if (c != '=') fail(s"an attribute of <$tagName> has no value")
@@ -444,8 +445,6 @@ object Xlsx {
 
     /** An end tag after its `</`; it must close the innermost open element. */
     private def endTag(): Unit = {
-      nameLen = 0
-      local = 0
       var c = readName(need(), ToName)
       if (isSpace(c)) c = skipSpace()
       if (c != '>') fail(s"the end tag </$tagName> does not end with '>'")
@@ -480,14 +479,8 @@ object Xlsx {
     /** A processing instruction after its `<?`; the XML declaration's
       * encoding must be UTF-8. */
     private def instruction(): Unit = {
-      attrNameLen = 0
-      var c = need()
-      while (!isSpace(c) && c != '?') {
-        if (c >= 0x80) utf8(c, ToAttrName) else put(ToAttrName, c)
-        c = need()
-      }
-      if (attrNameLen == 0) fail("a processing instruction has no target")
-      val decl = attrNameLen == 3 && new String(attrName, 0, 3, ISO_8859_1) == "xml"
+      val c = readName(need(), ToAttrName)
+      val decl = same(attrName, 0, attrNameLen, XmlTarget, 0, XmlTarget.length)
       attrNameLen = 0
       if (c == '?' && peek() == '>') pos += 1
       else {
