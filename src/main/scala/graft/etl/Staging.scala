@@ -117,9 +117,9 @@ object Staging {
     *
     * Spark's CSV parser escapes a quote with `\`, so it does not undo the
     * doubled quotes of an RFC-4180 field: `"say ""hi"""` reads back whole.
-    * A row with a cell holding `"`, `\` or a carriage return is therefore
-    * split by that parser's own tokenizer from its CSV line, so it reads as
-    * a staged CSV line of it does; every other cell is its own token. */
+    * So a row with a cell holding `"`, `\` or a carriage return is split
+    * from its CSV line by that parser's own tokenizer and reads exactly as
+    * the same row staged as CSV; every other cell is its own token. */
   private def typedRows(full: StructType, options: CSVOptions): Array[String] => InternalRow = {
     val corrupt = full.fieldNames.indexOf(options.columnNameOfCorruptRecord)
     val parsed = StructType(full.filterNot(_.name == options.columnNameOfCorruptRecord))

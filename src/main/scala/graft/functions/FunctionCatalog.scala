@@ -92,8 +92,8 @@ object FunctionCatalog {
     kernel("charhist_entries", "charHistEntries", HistEntries, 1, IntParam("blocks", 1)),
     // aligned_counts(entries, keys) and marginal_counts(entries, keys)
     // binary-search sorted input: entries as charhist_entries gives them
-    // ((k, c) structs, k strictly ascending) and keys ascending (strictly
-    // for marginal_counts). Unsorted input fails the row with an
+    // ((k, c) structs, k strictly ascending), and for marginal_counts keys
+    // strictly ascending too. Unsorted input fails the row with an
     // IllegalArgumentException naming the function, never a wrong count.
     kernel("aligned_counts", "alignedCounts", Longs, 2),
     kernel("marginal_counts", "marginalCounts", Longs, 2),

@@ -325,9 +325,9 @@ object VectorKernels {
     * `transform(keys, x → coalesce(map(x), 0))` over the entry map, but
     * one binary search per key instead of a linear MapData scan inside
     * an interpreted lambda (O(|keys| · log m) vs O(|keys| · m) per
-    * item). Entries out of order, or `keys` not ascending, fail with an
-    * IllegalArgumentException ([[requireSortedEntries]]): a binary search
-    * over them would count silently wrong. */
+    * item). Entries out of order fail with an IllegalArgumentException
+    * ([[requireSortedEntries]]): a binary search over them would count
+    * silently wrong. `keys` may come in any order. */
   def alignedCounts(entries: ArrayData, keys: ArrayData): ArrayData = {
     val m = entries.numElements()
     requireSortedEntries("aligned_counts", entries)
@@ -335,8 +335,6 @@ object VectorKernels {
     var i = 0
     while (i < out.length) {
       val key = keys.getLong(i)
-      if (i > 0 && key < keys.getLong(i - 1))
-        throw new IllegalArgumentException(s"aligned_counts: keys must be ascending, got $key after ${keys.getLong(i - 1)}")
       var lo = 0
       var hi = m - 1
       var c = 0L
