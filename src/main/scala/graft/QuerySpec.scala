@@ -4,21 +4,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-/** One verifiable query: a Spark DataFrame program plus (optionally) the
-  * equivalent ANSI SQL the driver runs in DuckDB on the same parquet tables.
+/** One verifiable query: a Spark DataFrame program plus the equivalent
+  * ANSI SQL the driver runs in DuckDB on the same parquet tables.
   * Column names of `fn`'s result and the oracle's result must match exactly
   * (the driver sorts columns by name before hashing values).
   */
 final case class QuerySpec(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QuerySpec {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, fn, None)
+    QuerySpec(name, fn, oracle)
 }
 
 /** Cross-engine determinism helpers.
@@ -69,9 +67,6 @@ object Exact {
   private[graft] def sumDDecimal(c: Column): Column =
     (sum((floor(c * 256d + 0.5d) / 256d).cast(DecimalType(30, 8))) * 256)
       .cast(LongType).cast(DoubleType) / lit(256d)
-
-  /** Deterministic average. DuckDB twin: sumSql(x) / COUNT(x). */
-  def avgD(c: Column): Column = sumD(c) / count(c)
 
   /** SQL fragment for the DuckDB side of [[sumD]]. */
   def sumSql(x: String): String =

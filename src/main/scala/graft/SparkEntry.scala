@@ -37,7 +37,7 @@ object SparkEntry {
     allSpecs.map(s => s.name -> s.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    allSpecs.flatMap(s => s.oracle.map(s.name -> _)).toMap
+    allSpecs.map(s => s.name -> s.oracle).toMap
 }

@@ -68,27 +68,18 @@ object Tables {
     // schema inference itself rejects TIMESTAMP(NANOS) when the legacy
     // conf is off ("Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))")
     // — surface the actionable conf message instead of Spark's raw error
-    val raw =
+    val events =
       try table(s, d, "events")
       catch {
         case e: Throwable if String.valueOf(e.getMessage).contains("NANOS") =>
           requireNanosAsLong(s) // throws the curated message when conf unset
           throw e
       }
-    eventsTs(raw)
-  }
-
-  /** `events` with `ts` as session-TZ TimestampType, branching on the
-    * physical type the frame read: legacy TIMESTAMP(NANOS) read as long is
-    * truncated to micros, micros are kept, NTZ is cast. Shared by the batch
-    * reader above and the streaming one
-    * ([[graft.streaming.StreamOps.readEvents]]). */
-  private[graft] def eventsTs(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     events.schema("ts").dataType match {
       case LongType => // legacy TIMESTAMP(NANOS) read as long: truncate to micros
-        requireNanosAsLong(events.sparkSession)
+        requireNanosAsLong(s)
         events.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampType => events
       case TimestampNTZType => events.withColumn("ts", col("ts").cast(TimestampType))

@@ -99,36 +99,16 @@ object Sink {
     if (replacing) require(fs.delete(old, true), s"failed to delete $old after swap (table is live)")
   }
 
-  /** Small-file compaction — lakehouse maintenance: rewrite a FLAT parquet
-    * table into `targetFiles` right-sized files (streaming sinks and
-    * frequent appends accumulate small files that throttle scan
-    * parallelism at 100 TB). The rewrite is swapped in by
-    * [[replaceStaged]], so a failed one leaves the table as it was.
-    * Partition-layout tables are refused: flattening them would break
-    * later dynamic partition overwrites.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String, targetFiles: Int): Unit = {
-    require(targetFiles > 0)
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partitioned = fs.listStatus(dst)
-      .exists(st => st.isDirectory && st.getPath.getName.contains("="))
-    require(!partitioned,
-      s"$path has a partition directory layout; compact would flatten it " +
-        "and corrupt later dynamic partition overwrites - compact per partition instead")
-    replaceStaged(spark.read.parquet(path).repartition(targetFiles), path)
-  }
-
   /** Manifest-indirection table: data lives in immutable generation dirs
     * (`<base>/gen-N`); `<base>/MANIFEST` holds the live generation's name
     * and is replaced ATOMICALLY (FileContext rename with OVERWRITE — atomic
     * on both HDFS and local filesystems). Readers resolve the manifest and
     * scan a complete, immutable directory, so — unlike the rename-aside
-    * swap of [[overwriteTable]] and [[compact]] — there is NO window where
-    * the table path does not exist, and a rewrite never disturbs in-flight
-    * readers (the previous generation is retained until the NEXT rewrite). This is the root-
-    * pointer pattern table formats (Iceberg/Delta) build on, reduced to
-    * one pointer file for a filesystem-only sink. */
+    * swap of [[overwriteTable]] — there is NO window where the table path
+    * does not exist, and a rewrite never disturbs in-flight readers (the
+    * previous generation is retained until the NEXT rewrite). This is the
+    * root-pointer pattern table formats (Iceberg/Delta) build on, reduced
+    * to one pointer file for a filesystem-only sink. */
   object Manifest {
     private val Name = "MANIFEST"
 
@@ -202,14 +182,6 @@ object Sink {
       if (!f.exists(b)) Seq.empty
       else f.listStatus(b).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong).sorted
-    }
-
-    /** Compact the live generation into `targetFiles` files — a rewrite
-      * with zero reader-visible swap window. */
-    def compact(
-        spark: org.apache.spark.sql.SparkSession, base: String, targetFiles: Int): Unit = {
-      require(targetFiles > 0)
-      overwrite(spark, base, read(spark, base).repartition(targetFiles))
     }
   }
 }

@@ -31,6 +31,11 @@ import scala.util.control.NonFatal
   */
 object Staging {
 
+  /** The CSV options both staged formats are typed under: an empty cell is
+    * null, and a quote inside a quoted field is doubled (RFC 4180, as
+    * pandas' `to_csv` writes it), so `"say ""hi"""` reads `say "hi"`. */
+  private val csvOptions = Map("nullValue" -> "", "escape" -> "\"")
+
   def readSheet(
       spark: SparkSession,
       path: String,
@@ -48,7 +53,7 @@ object Staging {
     spark.read
       .schema(schema)
       .option("header", "true")
-      .option("nullValue", "")
+      .options(csvOptions)
       .csv(lines)
   }
 
@@ -78,8 +83,8 @@ object Staging {
     * ([[dropHeader]]) and closes the workbook when the task completes.
     * Each cell goes straight to the converter Spark's CSV parser builds
     * for its column (`UnivocityParser.makeConverter`, from the
-    * `CSVOptions` `spark.read.schema(schema).option("nullValue", "").csv`
-    * builds from the session conf), so the rows are those of a staged CSV
+    * `CSVOptions` [[readSheet]]'s `csv` builds from [[csvOptions]] and the
+    * session conf), so the rows are those of a staged CSV
     * sheet in PERMISSIVE mode ([[typedRows]]) without a CSV line between
     * the reader and the converter. */
   def readXlsxSheet(
@@ -91,7 +96,7 @@ object Staging {
     workbook.sheetPart(sheetName)
     val path = workbook.path
     val conf = spark.sessionState.conf
-    val options = new CSVOptions(Map("nullValue" -> ""), conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val options = new CSVOptions(csvOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
     // as csv(Dataset) does: the declared schema turns nullable (CSV columns
     // are flat) unless the legacy conf says otherwise
     val full =
@@ -113,30 +118,19 @@ object Staging {
     * null. A row with more or fewer cells than the columns, or with a
     * rejected cell, is a bad record: its `_corrupt_record` column, when
     * the schema has one, holds the row as a CSV line ([[Xlsx.csvLine]]),
-    * and is null otherwise. The returned row is reused.
-    *
-    * Spark's CSV parser escapes a quote with `\`, so it does not undo the
-    * doubled quotes of an RFC-4180 field: `"say ""hi"""` reads back whole.
-    * So a row with a cell holding `"`, `\` or a carriage return is split
-    * from its CSV line by that parser's own tokenizer and reads exactly as
-    * the same row staged as CSV; every other cell is its own token. */
+    * and is null otherwise. The returned row is reused. */
   private def typedRows(full: StructType, options: CSVOptions): Array[String] => InternalRow = {
     val corrupt = full.fieldNames.indexOf(options.columnNameOfCorruptRecord)
     val parsed = StructType(full.filterNot(_.name == options.columnNameOfCorruptRecord))
     val parser = new UnivocityParser(parsed, options)
     val convert = parsed.map(f => parser.makeConverter(f.name, f.dataType, f.nullable)).toArray
     val row = new GenericInternalRow(full.length)
-    def quoted(cell: String) =
-      cell != null && (cell.indexOf('"') >= 0 || cell.indexOf('\\') >= 0 || cell.indexOf('\r') >= 0)
     cells => {
-      val tokens =
-        if (cells.exists(quoted)) Option(parser.tokenizer.parseLine(Xlsx.csvLine(cells))).getOrElse(Array.empty[String])
-        else cells
-      var bad = tokens.length != convert.length
+      var bad = cells.length != convert.length
       var i = 0
       while (i < convert.length) {
         val v =
-          try convert(i)(if (i < tokens.length) tokens(i) else null)
+          try convert(i)(if (i < cells.length) cells(i) else null)
           catch {
             // a SparkUpgradeException (package-private): the parser rethrows it
             case e: SparkThrowable if e.getCondition.startsWith("INCONSISTENT_BEHAVIOR_CROSS_VERSION") => throw e

@@ -8,9 +8,8 @@ import org.apache.spark.sql.functions._
   * that MIGHT be in the corpus. The three hash functions are disjoint
   * 16-bit slices of the fingerprint itself (already an md5), so no extra
   * hashing; words are 32-bit so every mask is a positive int64 (no
-  * sign-bit hazards in either engine). m = 65536 bits (2048 words) — at
-  * larger corpora scale m, shard the filter by fingerprint prefix, or
-  * keep per-shard blooms; the query shape is unchanged.
+  * sign-bit hazards in either engine). m = 65536 bits (2048 words), one
+  * filter for the whole corpus.
   *
   * The filter is METADATA-sized (16 KB dense), so probing is a pure
   * per-row projection against an array LITERAL ([[candidateCol]]) — no
@@ -56,55 +55,5 @@ object Bloom {
       val mask = expr(s"shiftleft(cast(1 as bigint), cast($hSql % 32 as int))")
       element_at(lut, word + 1).bitwiseAND(mask) =!= 0
     }.reduce(_ && _)
-  }
-
-  // -------------------------------------------------------------------
-  // Sharded bloom — the scale-up path the single-filter scaladoc names
-  // -------------------------------------------------------------------
-
-  /** Shard id of a fingerprint: its LAST hex digit mod `shards`. The
-    * last digit is independent of the three probe slices (hex chars
-    * 1-12), so sharding never correlates with the probed bits. */
-  private def shardExpr(fpCol: String, shards: Int): Column =
-    expr(s"cast(conv(substring($fpCol, 32, 1), 16, 10) as int) % $shards")
-
-  /** Per-shard bloom build: each fingerprint lands in exactly ONE shard's
-    * filter, so each shard is a complete filter for its slice of the
-    * keyspace. This is how m scales past a broadcastable literal: a
-    * 10× corpus keeps the per-shard FP rate by growing the SHARD COUNT,
-    * each filter stays 16 KB, the aggregation state per task stays
-    * bounded at shards × 2048 words, and a probe still touches exactly
-    * one filter (selected by the row's own shard digit). */
-  def buildSharded(fps: DataFrame, shards: Int, fpCol: String = "fp"): DataFrame = {
-    require(shards >= 1)
-    fps.select(shardExpr(fpCol, shards).as("shard"), col(fpCol))
-      .select(col("shard"), explode(array((0 until K).map(i =>
-        conv(substring(col(fpCol), i * 4 + 1, 4), 16, 10).cast("long")): _*)).as("h"))
-      .groupBy(col("shard"), expr("h div 32").as("word"))
-      .agg(expr("bit_or(shiftleft(cast(1 as bigint), cast(h % 32 as int)))").as("bits"))
-  }
-
-  /** Densify a sharded build to shard-indexed word arrays —
-    * shards × 16 KB of driver metadata. */
-  def collectShardedBits(bloom: DataFrame, shards: Int): Array[Array[Long]] = {
-    val arr = Array.fill(shards)(new Array[Long](Words))
-    bloom.collect().foreach { r =>
-      arr(r.getInt(0))(r.getLong(1).toInt) = r.getLong(2)
-    }
-    arr
-  }
-
-  /** Per-row membership test against the sharded filter set: the row's
-    * shard digit selects which filter literal to probe — still a pure
-    * codegen projection (a CASE over [[candidateCol]] probes), no join,
-    * no shuffle, and each row evaluates exactly one shard's lookups. */
-  def candidateColSharded(fpCol: String, bitsByShard: Array[Array[Long]]): Column = {
-    require(bitsByShard.nonEmpty)
-    val shard = shardExpr(fpCol, bitsByShard.length)
-    bitsByShard.zipWithIndex.tail
-      .foldLeft(when(shard === 0, candidateCol(fpCol, bitsByShard.head))) {
-        case (acc, (bits, i)) => acc.when(shard === i, candidateCol(fpCol, bits))
-      }
-      .otherwise(lit(false))
   }
 }

@@ -1,26 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Data-layout operators: multi-dimensional clustering so file/row-group
-  * min-max statistics prune on EVERY clustered dimension, not just the
-  * leading sort key.
-  *
-  * A linear sort on (a, b) localizes predicates on `a` but scatters `b`
-  * across every file; interleaving the bits of both (the Z-order / Morton
-  * curve) keeps each file's bounding box small in BOTH dimensions, so a
-  * selective predicate on either column (or a box on both) touches only
-  * the files whose box intersects it. This is the clustering scheme lake
-  * formats expose as `OPTIMIZE ... ZORDER BY`; here it is a plain column
-  * expression plus a range-partitioned write, nothing engine-private.
+/** Multi-dimensional clustering keys. A linear sort on (a, b) localizes
+  * predicates on `a` but scatters `b`; interleaving the bits of both (the
+  * Z-order / Morton curve) gives a key under which neighbouring values
+  * stay close in BOTH dimensions. q_zorder_key computes it.
   */
 object Layout {
 
   /** Morton (Z-order) interleave of `cols`, `bits` low bits each —
     * a pure integer expression (codegen'd, no UDF). Columns must already
-    * be non-negative integers; scale/clamp-encode first if not (see
-    * [[clampEncode]]). Bit j of column i lands at output bit
+    * be non-negative integers. Bit j of column i lands at output bit
     * `j * n_cols + i`, so output width = bits × n_cols ≤ 63. */
   def zValue(cols: Seq[Column], bits: Int): Column = {
     require(cols.nonEmpty && bits * cols.size <= 63,
@@ -36,37 +28,4 @@ object Layout {
     }
     terms.reduce(_ + _) // disjoint bit positions: + == | and stays codegen
   }
-
-  /** Clamp-and-shift a possibly-negative / wide-range long column into
-    * `bits` non-negative bits by subtracting `lo` and saturating at the
-    * top — the cheap static encode when the value range is known. */
-  def clampEncode(c: Column, lo: Long, bits: Int): Column =
-    least(greatest(c.cast("long") - lo, lit(0L)), lit((1L << bits) - 1))
-
-  /** Write `df` clustered on an arbitrary integer layout key:
-    * range-partition by it (so files own disjoint key ranges — each file
-    * a small box in the clustered space) and sort within partitions (so
-    * parquet ROW GROUPS inside each file get tight min-max stats too).
-    * The key column is dropped before writing; it exists only to drive
-    * placement. */
-  def writeClustered(df: DataFrame, path: String, key: Column, files: Int): Unit =
-    df.withColumn("_ck", key)
-      .repartitionByRange(files, col("_ck"))
-      .sortWithinPartitions("_ck")
-      .drop("_ck")
-      .write.mode("overwrite").parquet(path)
-
-  /** [[writeClustered]] on the Morton interleave of `zCols`. */
-  def writeZOrdered(
-      df: DataFrame, path: String, zCols: Seq[Column], bits: Int, files: Int): Unit =
-    writeClustered(df, path, zValue(zCols, bits), files)
-
-  /** [[writeClustered]] on the 2-D Hilbert index — same pruning story as
-    * Z-order with strictly better box locality (consecutive curve
-    * positions are always grid-adjacent; Morton takes diagonal jumps).
-    * Requires [[graft.functions.VectorExpressions.register]]. */
-  def writeHilbert(
-      df: DataFrame, path: String, x: Column, y: Column, bits: Int, files: Int): Unit =
-    writeClustered(df, path,
-      graft.functions.VectorExpressions.hilbert_d2(x, y, lit(bits)), files)
 }

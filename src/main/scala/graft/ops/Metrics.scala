@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * attaches the aggregates to the EXISTING plan: metrics accumulate on the
   * executors while the real action runs and cost nothing beyond the
   * accumulator traffic. This is the mechanism behind every "rows written /
-  * rejected" dashboard number that doesn't double the job's IO; the same
-  * call works under Structured Streaming (per-micro-batch metrics via
-  * QueryProgressEvent.observedMetrics).
+  * rejected" dashboard number that doesn't double the job's IO.
   */
 object Metrics {
 

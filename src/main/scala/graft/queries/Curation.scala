@@ -456,33 +456,18 @@ object Curation {
     * mantissa), so both engines bucket bit-identically. Lower bound of
     * index i ≥ 8: (8 + i mod 8) · 2^(i div 8 − 3). Relative bucket
     * width ≤ 1/8 ⇒ quantile estimates carry ≤ 12.5% relative error. */
-  private[queries] val hdrIdxSql =
+  private[queries] val hdrIndexSql =
     """CASE WHEN cents < 8 THEN cents
             ELSE 8 * (length(bin(cents)) - 1)
                  + (shiftright(cents, length(bin(cents)) - 4) & 7) END"""
-  private[queries] val hdrIdxDuck =
+  private[queries] val hdrIndexDuck =
     """CASE WHEN cents < 8 THEN cents
             ELSE 8 * (length(bin(cents)) - 1)
                  + ((cents >> (length(bin(cents)) - 4)) & 7) END"""
-  private[queries] val hdrLbSql =
+  private[queries] val hdrLowerSql =
     "CASE WHEN eidx < 8 THEN eidx ELSE shiftleft(8 + eidx % 8, CAST(eidx div 8 AS INT) - 3) END"
-  private[queries] val hdrLbDuck =
+  private[queries] val hdrLowerDuck =
     "CASE WHEN eidx < 8 THEN eidx ELSE (8 + eidx % 8) << (eidx // 8 - 3) END"
-
-  /** Scala twins of [[hdrIdxSql]] / [[hdrLbSql]] for the STREAMING
-    * sketch ([[graft.streaming.StreamOps]] hdrQuantiles) — CurationSpec
-    * pins them bit-equal to the SQL forms over the same exhaustive grid
-    * the error-bound case sweeps, so a streaming shard's sketch and a
-    * batch shard's sketch are mergeable WITH EACH OTHER, not merely
-    * with themselves. */
-  private[graft] def hdrIdx(c: Long): Int =
-    if (c < 8) c.toInt
-    else {
-      val bl = 64 - java.lang.Long.numberOfLeadingZeros(c)
-      (8L * (bl - 1) + ((c >> (bl - 4)) & 7L)).toInt
-    }
-  private[graft] def hdrLb(i: Int): Long =
-    if (i < 8) i.toLong else (8L + i % 8) << (i / 8 - 3)
 
   /** Mergeable quantile sketch — the member the sketch family (KMV /
     * Bloom / HLL / count-min) was missing: relative-error quantiles
@@ -508,7 +493,7 @@ object Curation {
     s"""WITH c AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
                    FROM lineitem
                    WHERE l_extendedprice > 0),
-        i AS (SELECT cents, $hdrIdxDuck AS idx FROM c),
+        i AS (SELECT cents, $hdrIndexDuck AS idx FROM c),
         b AS (SELECT idx, count(*) AS cnt FROM i GROUP BY 1),
         n AS (SELECT sum(cnt) AS n FROM b),
         cum AS (SELECT idx, sum(cnt) OVER (ORDER BY idx) AS cum FROM b),
@@ -516,7 +501,7 @@ object Curation {
         r AS (SELECT pct, (pct * n.n + 99) // 100 AS rk FROM qs CROSS JOIN n),
         est0 AS (SELECT r.pct, min(cum.idx) AS eidx
                  FROM r JOIN cum ON cum.cum >= r.rk GROUP BY 1),
-        est AS (SELECT pct, $hdrLbDuck AS est_cents FROM est0),
+        est AS (SELECT pct, $hdrLowerDuck AS est_cents FROM est0),
         ex AS (SELECT 50 AS pct, percentile_disc(0.50) WITHIN GROUP (ORDER BY cents) AS exact_cents FROM c
                UNION ALL SELECT 90, percentile_disc(0.90) WITHIN GROUP (ORDER BY cents) FROM c
                UNION ALL SELECT 95, percentile_disc(0.95) WITHIN GROUP (ORDER BY cents) FROM c
@@ -535,7 +520,7 @@ object Curation {
       val cents = Tables.lineitem(s, d)
         .filter(col("l_extendedprice") > 0)
         .select(expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      val b = cents.groupBy(expr(hdrIdxSql).as("idx")).agg(count(lit(1)).as("cnt"))
+      val b = cents.groupBy(expr(hdrIndexSql).as("idx")).agg(count(lit(1)).as("cnt"))
       val n = b.agg(sum("cnt").as("n"))
       val r = n.select(
           explode(array(Seq(50, 90, 95, 99).map(q => lit(q.toLong)): _*)).as("pct"),
@@ -546,7 +531,7 @@ object Curation {
       val cum = b.withColumn("cum", sum("cnt").over(Window.orderBy("idx")))
       val est = broadcast(r).join(cum, col("cum") >= col("rk"))
         .groupBy("pct").agg(min("idx").as("eidx"))
-        .select(col("pct"), expr(hdrLbSql).as("est_cents"))
+        .select(col("pct"), expr(hdrLowerSql).as("est_cents"))
       // the exact gate via the DISTRIBUTED histogram-refinement selector
       // (ops.Quantiles — PERCENTILE_DISC semantics, ceil(q·n) ranks,
       // matching the sketch's rk and the oracle's WITHIN GROUP): a plain
@@ -588,7 +573,7 @@ object Curation {
                           CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
                    FROM lineitem
                    WHERE l_extendedprice > 0),
-        i AS (SELECT shard, cents, $hdrIdxDuck AS idx FROM c),
+        i AS (SELECT shard, cents, $hdrIndexDuck AS idx FROM c),
         b AS (SELECT shard, idx, CAST(count(*) AS BIGINT) AS cnt FROM i GROUP BY 1, 2),
         ba AS (SELECT shard, idx, cnt FROM b
                UNION ALL
@@ -604,7 +589,7 @@ object Curation {
                  FROM r JOIN cum ON cum.shard = r.shard AND cum.cum >= r.rk
                  GROUP BY 1, 2, 3)
         SELECT shard, CAST(pct AS BIGINT) AS pct, n,
-               CAST($hdrLbDuck AS BIGINT) AS est_cents
+               CAST($hdrLowerDuck AS BIGINT) AS est_cents
         FROM est0""") {
     (s, d) =>
       import org.apache.spark.sql.expressions.Window
@@ -612,7 +597,7 @@ object Curation {
         .filter(col("l_extendedprice") > 0)
         .select(col("l_returnflag").as("shard"),
           expr("CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)").as("cents"))
-      val b = c.groupBy(col("shard"), expr(hdrIdxSql).as("idx"))
+      val b = c.groupBy(col("shard"), expr(hdrIndexSql).as("idx"))
         .agg(count(lit(1)).cast("long").as("cnt"))
       // sketch MERGE: the global tenant is the per-shard tables summed —
       // pure algebra on the metadata-sized bucket table, no second scan
@@ -629,7 +614,7 @@ object Curation {
           col("cshard") === col("shard") && col("cum") >= col("rk"))
         .groupBy("shard", "pct", "n").agg(min("idx").as("eidx"))
         .select(col("shard"), col("pct").cast("long").as("pct"), col("n"),
-          expr(hdrLbSql).cast("long").as("est_cents"))
+          expr(hdrLowerSql).cast("long").as("est_cents"))
   }
 
   // -------------------------------------------------------------------

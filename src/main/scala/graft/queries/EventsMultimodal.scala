@@ -5,15 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-stream analytics (batch form of the Structured Streaming ops in
-  * graft.streaming) and the multimodal binary-column plumbing.
+/** Batch analytics over the event log, and the multimodal queries that
+  * treat document content as an opaque payload with a deterministic,
+  * SQL-expressible fake decode.
   */
 object EventsMultimodal {
 
-  /** Tumbling-window aggregation over the event stream: Spark's `window()`
-    * bucketing (epoch-aligned 1h tumble) with count + exact sum. The same
-    * plan runs unchanged under `readStream` with a watermark — see
-    * graft.streaming.StreamOps. */
+  /** Tumbling-window aggregation over the event log: Spark's `window()`
+    * bucketing (epoch-aligned 1h tumble) with count + exact sum. */
   val streamWindow = QuerySpec(
     "q_stream_window",
     s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -30,10 +29,10 @@ object EventsMultimodal {
           Exact.sumD(col("value")).as("total_value"))
   }
 
-  /** Sliding (hopping) 1-hour windows every 30 minutes — the batch twin of
-    * graft.streaming.StreamOps.slidingAgg. Spark's window() assigns each
-    * event to its duration/slide = 2 covering windows in one Expand (no
-    * join); the oracle unnests the same two half-hour-aligned starts.
+  /** Sliding (hopping) 1-hour windows every 30 minutes. Spark's window()
+    * assigns each event to its duration/slide = 2 covering windows in one
+    * Expand (no join); the oracle unnests the same two half-hour-aligned
+    * starts.
     * Alignment is to the epoch in both engines, so starts agree exactly. */
   val streamSliding = QuerySpec(
     "q_stream_sliding",
@@ -243,9 +242,8 @@ object EventsMultimodal {
 
   /** Multimodal-column plumbing: treat content as an opaque binary payload
     * with typed metadata — byte length, content hash, a prefix sample, and
-    * stub "decoded" features (graft.multimodal.Multimodal holds the real
-    * mapPartitions decode harness; the decode itself is a deterministic
-    * fake since no media libs ship in this environment). */
+    * "decoded" features from a deterministic fake decode (no media codec
+    * is linked). */
   val multimodalMeta = QuerySpec(
     "q_multimodal_meta",
     """SELECT doc_id, source,
@@ -364,13 +362,9 @@ object EventsMultimodal {
     * ingest runs before training: item counts, payload-size distribution
     * (exact PERCENTILE_DISC selection, no interpolation arithmetic), and
     * decoded-dimension ranges per modality. The modality tag and decoded
-    * metadata ride in a typed STRUCT column (the shape
-    * [[graft.multimodal.Multimodal.MediaFeatures]] produces); the decode
-    * itself is the same SQL-expressible deterministic fake as
-    * [[multimodalMeta]] (media codecs don't ship here — a real deployment
-    * swaps the struct's source for the mapPartitions decoder, the
-    * aggregation is unchanged). One scan, one groupBy: integers
-    * end-to-end. */
+    * metadata ride in a typed STRUCT column; the decode itself is the same
+    * SQL-expressible deterministic fake as [[multimodalMeta]]. One scan,
+    * one groupBy: integers end-to-end. */
   val multimodalQuality = QuerySpec(
     "q_multimodal_quality",
     """WITH m AS (
@@ -424,7 +418,7 @@ object EventsMultimodal {
     * that share a byte distribution but not a layout — a shuffled copy
     * passes the global histogram gate and fails this one; blockhash pairs
     * are a SUBSET of histdup pairs at the same threshold (pinned in
-    * MultimodalSpec).
+    * EventsInvariantsSpec).
     *
     * Same scale shape as histdup: length-band candidates, one composite
     * (block·1000+byte)-keyed count pass, vectors aligned to the observed
@@ -510,8 +504,7 @@ object EventsMultimodal {
         .select("a_id", "b_id", "na", "nb", "block_l1")
   }
 
-  /** Frame-sampling index as an ORACLE query (the relational core of
-    * [[graft.multimodal.Multimodal.sampleFrames]]): every 8th frame per
+  /** Frame-sampling index as an ORACLE query: every 8th frame per
     * video item, with the per-item coverage audit a decode budget reads
     * (frames sampled, stride coverage, first/last sampled index). The
     * fan-out is `sequence` + `explode` — Catalyst plans it, the
@@ -622,10 +615,7 @@ object EventsMultimodal {
     * clipping count (samples at the rail, here bytes ≥ 120), and the
     * LONGEST QUIET RUN — consecutive near-zero samples, the
     * silence-trim/dead-air signal — via gaps-and-islands on the quiet
-    * positions (pos − row_number is constant along a run). A real
-    * deployment swaps the byte source for the mapPartitions decoder in
-    * [[graft.multimodal.Multimodal]]; every aggregation downstream is
-    * unchanged.
+    * positions (pos − row_number is constant along a run).
     *
     * Scale shape: the byte stream is the O(payload) split-to-chars
     * posexplode (never per-position substring — that's O(doc²)); both

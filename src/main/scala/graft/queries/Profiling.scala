@@ -1442,41 +1442,28 @@ object Profiling {
     * c_mktsegment, cents, blk) corpus/arrival split — factored so the
     * spec can drive crafted corpora (frozen-weight and no-candidate
     * cases) directly. */
-  /** Frozen Fellegi–Sunter u-probability weights of the standing corpus
-    * — one (w_nat, w_seg) row from three metadata-sized aggregates.
-    * Shared by the batch incremental pass and the streaming arrival
-    * router ([[graft.streaming.StreamOps.erRouteArrivals]]), which
-    * freezes the two scalars at stream construction. */
-  private[graft] def erFrozenWeights(corpus: DataFrame): DataFrame = {
+  private[graft] def erIncrementalOf(corpus: DataFrame, arr: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // frozen Fellegi–Sunter u-probability weights of the standing corpus:
+    // one (w_nat, w_seg) row from three metadata-sized aggregates
     val n = corpus.agg(count(lit(1)).as("n"))
     val uNat = corpus.groupBy("c_nationkey").agg(count(lit(1)).as("cnt"))
       .agg(sum(expr("cnt * (cnt - 1)")).as("s_nat"))
     val uSeg = corpus.groupBy("c_mktsegment").agg(count(lit(1)).as("cnt"))
       .agg(sum(expr("cnt * (cnt - 1)")).as("s_seg"))
-    n.crossJoin(uNat).crossJoin(uSeg)
+    val w = n.crossJoin(uNat).crossJoin(uSeg)
       .select(expr("length(bin(n * (n - 1) div s_nat))").as("w_nat"),
         expr("length(bin(n * (n - 1) div s_seg))").as("w_seg"))
-  }
-
-  /** The frozen-weight agreement score of one (arrival, candidate) row —
-    * shared VERBATIM by the batch incremental pass and the streaming
-    * router so the two faces cannot drift (the q_langid_eval
-    * convention). Reads a_name/b_name, a_nat/b_nat, a_seg/b_seg,
-    * a_cents/b_cents plus the weight columns w_nat/w_seg. */
-  private[graft] def erAgreementScore: org.apache.spark.sql.Column =
-    (when(levenshtein(col("a_name"), col("b_name")) <= 1, 12).otherwise(-2)
-      + when(col("a_nat") === col("b_nat"), col("w_nat")).otherwise(-2)
-      + when(col("a_seg") === col("b_seg"), col("w_seg")).otherwise(-2)
-      + when(abs(col("a_cents") - col("b_cents")) <= 10000, 4).otherwise(-2))
-      .cast("long")
-
-  private[graft] def erIncrementalOf(corpus: DataFrame, arr: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = erFrozenWeights(corpus)
+    val score =
+      (when(levenshtein(col("a_name"), col("b_name")) <= 1, 12).otherwise(-2)
+        + when(col("a_nat") === col("b_nat"), col("w_nat")).otherwise(-2)
+        + when(col("a_seg") === col("b_seg"), col("w_seg")).otherwise(-2)
+        + when(abs(col("a_cents") - col("b_cents")) <= 10000, 4).otherwise(-2))
+        .cast("long")
     val a = arr.toDF("new_key", "a_name", "a_nat", "a_seg", "a_cents", "blk")
     val b = corpus.toDF("cand_key", "b_name", "b_nat", "b_seg", "b_cents", "blk")
     val cand = a.join(b, "blk").crossJoin(broadcast(w))
-      .select(col("new_key"), col("cand_key"), erAgreementScore.as("score"))
+      .select(col("new_key"), col("cand_key"), score.as("score"))
     val win = Window.partitionBy("new_key")
     val best = cand
       .withColumn("rn", row_number().over(win.orderBy(col("score").desc, col("cand_key"))))

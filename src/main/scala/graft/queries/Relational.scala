@@ -1091,12 +1091,12 @@ object Relational {
         .select("o_orderkey", "cust", "o_totalprice", "c_name")
   }
 
-  /** Z-order (Morton) clustering key over two dimensions — the layout
-    * column [[graft.ops.Layout.writeZOrdered]] range-partitions on so
-    * file/row-group min-max stats prune on BOTH dimensions (a linear sort
-    * localizes only its leading key). The interleave is pure integer
-    * bit-arithmetic — codegen'd in Spark, replicated term-by-term in the
-    * oracle — over 16 low bits of each dimension. */
+  /** Z-order (Morton) clustering key over two dimensions
+    * ([[graft.ops.Layout.zValue]]): sorting on it keeps rows close in BOTH
+    * dimensions, where a linear sort localizes only its leading key, so
+    * file/row-group min-max stats can prune on either. The interleave is
+    * pure integer bit-arithmetic — codegen'd in Spark, replicated
+    * term-by-term in the oracle — over 16 low bits of each dimension. */
   val zorderKey = {
     val bits = 16
     val zSql = (0 until bits).flatMap { j =>

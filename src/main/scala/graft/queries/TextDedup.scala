@@ -558,20 +558,19 @@ object TextDedup {
   private[queries] def minhashSigShared(s: SparkSession, d: String): DataFrame =
     memo.getOrElseUpdate(s, (d, "sig3"))(minhashSig(shingled(s, d, 3)).cache())
 
-  /** Per-ROW MinHash band table over a (doc_id, text, …) frame — a pure
-    * scalar projection (shingle array → k md5 mins → band concats →
-    * explode), NO aggregation, so the same code runs unchanged on a
-    * STREAMING DataFrame: the builder behind
-    * [[graft.streaming.StreamOps.nearDupCandidates]]. Bitwise-equal to
-    * the aggregate form (`minhashSig` over the exploded shingle stream)
-    * because min distributes: `array_min` over a doc's shingle-hash array
-    * IS the min-aggregate over its exploded rows — TextDedupSpec pins the
+  /** Per-ROW MinHash band table (doc_id, band_id, band_val) over a
+    * (doc_id, text, …) frame — a pure scalar projection (shingle array →
+    * k md5 mins → band concats → explode), NO aggregation: a doc's bands
+    * come from its own row. Bitwise-equal to the aggregate form
+    * (`minhashSig` over the exploded shingle stream) because min
+    * distributes: `array_min` over a doc's shingle-hash array IS the
+    * min-aggregate over its exploded rows — TextDedupSpec pins the
     * equality on real docs. Uses the UNCAPPED shingles (the df-cap is a
-    * corpus-level PAIRING guard; a single row sees only its own doc);
-    * at scale, band skew is bounded bucket-side instead — see
-    * [[minhashCorpusBands]]. Docs with <k words carry no shingle and
-    * drop, as in the batch path. Non-text columns (e.g. `ts`) pass
-    * through for downstream watermarks. */
+    * corpus-level PAIRING guard; a single row sees only its own doc); band
+    * skew is bounded bucket-side instead, by the [[MaxBandBucket]]
+    * dense-drop of [[dedupIncrementalLsh]] and [[dedupAdversarialBucket]].
+    * Docs with <k words carry no shingle and drop, as in the aggregate
+    * path. */
   def minhashBandsFor(docs: DataFrame, k: Int = 3): DataFrame = {
     // r13: the composed built-in chain (split → shingle transform →
     // array_distinct → 8 × array_min(transform(md5)) → band concats) ran
@@ -585,25 +584,19 @@ object TextDedup {
     // the filter. Bitwise equality vs the aggregate derivation stays
     // pinned by TextDedupSpec; the DuckDB oracles are unchanged.
     graft.functions.VectorExpressions.register(docs.sparkSession)
-    val keep = docs.columns.toSeq
-    docs.select((keep.map(col) :+
+    docs.select(col("doc_id"),
       posexplode(graft.functions.VectorExpressions.minhash_bands8(
-        col("text"), lit(k))).as(Seq("band_id", "band_val"))): _*)
+        col("text"), lit(k))).as(Seq("band_id", "band_val")))
   }
 
   /** Incremental NEAR-dup: LSH band candidates of a NEW batch (doc_id ≡ 1
     * mod 4, the q_dedup_incremental split) against the EXISTING corpus
-    * (the rest) — the batch twin of the streaming
-    * [[graft.streaming.StreamOps.nearDupCandidates]] operator, and the
-    * near-dup complement of q_dedup_incremental's exact-fingerprint
-    * anti-join. New-side bands come from the per-row scalar projection
-    * ([[minhashBandsFor]] — the stream-safe form), corpus-side from
-    * [[minhashCorpusBands]] with dense buckets dropped; the join is
-    * band-equi (at scale: corpus bands bucketed on (band_id, band_val),
-    * arriving batches join co-located — no corpus-side exchange, same
-    * topology q_dedup_incremental pins). Candidates feed the standard
-    * exact verification; uncapped shingles on both sides so stream and
-    * batch derivations agree bitwise. */
+    * (the rest) — the near-dup complement of q_dedup_incremental's
+    * exact-fingerprint anti-join. Both sides come from one per-row scalar
+    * projection ([[minhashBandsFor]]), the corpus side with dense buckets
+    * ([[MaxBandBucket]]) dropped; the join is band-equi. Candidates feed
+    * the standard exact verification; uncapped shingles on both sides so
+    * the per-row and aggregate derivations agree bitwise. */
   val dedupIncrementalLsh = QuerySpec(
     "q_dedup_incremental_lsh",
     s"""WITH ${shingleSql(3)},
@@ -625,14 +618,10 @@ object TextDedup {
     (s, d) =>
       // ONE scalar band pass over the whole table, leased: the new side,
       // the corpus side, and the dense-bucket audit all read it — deriving
-      // each side separately would run the shingle+8×md5 projection twice.
-      // Projected BEFORE the lease: minhashBandsFor passes `text` through
-      // (the streaming caller needs its other columns), and caching it
-      // here would store every doc's text 4× for nothing
+      // each side separately would run the shingle+8×md5 projection twice
       val bands = graft.ops.Caches.lease(
         minhashBandsFor(graft.ops.Scale.fanOutScan(
-            docs(s, d).select("doc_id", "text"), col("doc_id")))
-          .select("doc_id", "band_id", "band_val"))
+            docs(s, d).select("doc_id", "text"), col("doc_id"))))
       val nb = bands.filter(col("doc_id") % 4 === 1)
       val cb = bands.filter(col("doc_id") % 4 =!= 1)
         .withColumnRenamed("doc_id", "corpus_doc_id")
@@ -657,7 +646,7 @@ object TextDedup {
     * groupBy) — this query pins that the near-dup plan stays bounded when
     * fed the worst case, with the oracle agreeing on exactly which pairs
     * survive. Same per-row band builder + dense-drop topology as
-    * [[dedupIncrementalLsh]] / [[minhashCorpusBands]]. */
+    * [[dedupIncrementalLsh]]. */
   val dedupAdversarialBucket = QuerySpec(
     "q_dedup_adversarial_bucket",
     s"""WITH adv AS (SELECT doc_id,
@@ -685,8 +674,7 @@ object TextDedup {
           when(col("doc_id") % 2 === 0, lit(AdversarialText))
             .otherwise(col("text")).as("text"))
       // one leased band pass; the dense audit and both join sides read it
-      val bands = graft.ops.Caches.lease(
-        minhashBandsFor(adv).select("doc_id", "band_id", "band_val"))
+      val bands = graft.ops.Caches.lease(minhashBandsFor(adv))
       val dense = bands.groupBy("band_id", "band_val")
         .agg(count(lit(1)).as("n")).filter(col("n") > MaxBandBucket)
         .select("band_id", "band_val")
@@ -698,23 +686,6 @@ object TextDedup {
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id")
         .distinct()
-  }
-
-  /** Static corpus band table for stream-static near-dup: the per-row
-    * band builder over the corpus, DENSE BUCKETS DROPPED (a bucket with
-    * n members contributes O(n) join hits per arriving probe and O(n²)
-    * pairs corpus-side — same skew bomb and same treatment as
-    * [[MaxBandBucket]]; degenerate identical-signature clusters belong to
-    * the exact-dedup family). At 100 TB this table is written once by the
-    * corpus snapshot job, bucketed on (band_id, band_val), and every
-    * streaming ingest joins it co-located. */
-  def minhashCorpusBands(corpus: DataFrame): DataFrame = {
-    val bands = minhashBandsFor(corpus.select("doc_id", "text"))
-      .select(col("doc_id").as("corpus_doc_id"), col("band_id"), col("band_val"))
-    val dense = bands.groupBy("band_id", "band_val")
-      .agg(count(lit(1)).as("n")).filter(col("n") > MaxBandBucket)
-      .select("band_id", "band_val")
-    bands.join(broadcast(dense), Seq("band_id", "band_val"), "left_anti")
   }
 
   /** The shared LSH candidate table is the most-referenced memo (ten dedup

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.TimestampType
   * for a quarter of the suite — NOTES.md playbook #6). Real data for the
   * legacy generation no longer exists, so each branch is pinned on a
   * crafted table: the same instant must come out of every physical
-  * encoding, as session-TZ TimestampType, batch and streaming alike. */
+  * encoding, as session-TZ TimestampType. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,32 +46,6 @@ class TablesSpec extends SparkSpec {
       assert(df.select("event_id", "user_id", "event_type").head().toSeq ===
         Seq(1L, 7L, "click"), s"$tag: non-ts columns must flow through untouched")
     }
-  }
-
-  test("streaming events reader branches per generation like the batch reader") {
-    generations.foreach { case (tag, dir) =>
-      val stream = graft.streaming.StreamOps.readEvents(spark, s"$dir/events.parquet")
-      assert(stream.isStreaming)
-      assert(stream.schema("ts").dataType === TimestampType, s"$tag: wrong stream type")
-      val name = s"ts_gen_${tag.replace('-', '_')}"
-      val q = stream.select(unix_micros(col("ts")).as("us"))
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val got = spark.table(name).head().getLong(0)
-      assert(got === micros, s"$tag: streaming adapter diverged")
-    }
-  }
-
-  test("streaming reader starts on an EMPTY directory (writer-starts-later topology)") {
-    val dir = java.nio.file.Files.createTempDirectory("events-empty").toString
-    val stream = graft.streaming.StreamOps.readEvents(spark, dir)
-    assert(stream.isStreaming)
-    assert(stream.schema("ts").dataType === TimestampType,
-      "empty dir must fall back to the declared micros schema")
-    val q = stream.writeStream.format("memory").queryName("empty_dir_stream")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.table("empty_dir_stream").count() === 0)
   }
 
   test("schema memo: repeated reads keep fresh expression ids (self-joins stay unambiguous)") {

@@ -256,6 +256,27 @@ class RunnerSpec extends SparkSpec {
       assert(byRun(("csv", mode)) === byRun(("xlsx", mode)), s"$mode")
   }
 
+  test("run: cells holding quotes, a backslash or a comma publish as written from a CSV and an xlsx staging alike") {
+    // the three surviving Index rows get these Geography names, which the
+    // pipeline carries to AREA_NAME unchanged; the CSV quotes them as
+    // RFC 4180 and pandas' to_csv do
+    val names = Seq("say \"hi\"", "\"quoted\", a\\\"b", "tail\\ x\\,y")
+    val index = indexRows.zipWithIndex.map { case (r, i) => if (i < names.size) r.updated(1, names(i)) else r }
+    val csv = Files.createTempDirectory("graft-staging-quoted-csv")
+    Files.writeString(csv.resolve("Index_2018.csv"), ((1 to 10).map(i => s"preamble $i") ++
+      (Schemas.rawIndexSheet.fieldNames.toSeq +: index).map(r => Xlsx.csvLine(r.toArray))).mkString("\n") + "\n")
+    val xlsx = Files.createTempDirectory("graft-staging-quoted-xlsx")
+    indexWorkbook(xlsx, index)
+    val published = Seq(csv, xlsx).map { staging =>
+      val out = Files.createTempDirectory("graft-tables-quoted").toString
+      Runner.run(spark, staging.toString, out)
+      val t = spark.read.parquet(s"$out/INDEX").drop("_TIMESTAMP")
+      (t.select("AREA_NAME").as[String].collect().toSet, t.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(published.map(_._1) === Seq(names.toSet, names.toSet))
+    assert(published(0)._2 === published(1)._2)
+  }
+
   /** Run `body`, and return with its result the scan locations under
     * `root` of every SQL execution that started meanwhile. A marker job
     * after `body` is the barrier: listener events arrive in order, so once

@@ -32,70 +32,37 @@ class SinkSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink-fail").toString + "/t"
     Sink.overwriteTable((1 to 100).map(i => (i, s"v$i")).toDF("k", "v").repartition(4), dir)
     def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    def files() = new java.io.File(dir).listFiles().sortBy(_.getName)
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toSeq
     val before = rows()
+    val beforeFiles = files()
     // four tasks; the one holding k = 77 throws, the others write their files
     val failing = (1 to 100).toDF("k").repartition(4)
       .select($"k", when($"k" === 77, raise_error(lit("injected write failure")))
         .otherwise(concat(lit("w"), $"k".cast("string"))).as("v"))
-    val e = intercept[Exception](Sink.overwriteTable(failing, dir))
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(chain.exists(c => String.valueOf(c.getMessage).contains("injected write failure")), chain.mkString("\n"))
-    // _TIMESTAMP included: the same rows the first load wrote
-    assert(rows() === before)
-    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"))
-  }
-
-  test("compact rewrites many small files into the target count, data intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
-    (1 to 500).map(i => (i, s"v$i")).toDF("k", "v")
-      .repartition(40).write.parquet(dir)  // 40 small files
-    def parquetFiles = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles >= 30)
-    Sink.compact(spark, dir, targetFiles = 2)
-    assert(parquetFiles === 2)
-    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"))
-    val back = spark.read.parquet(dir)
-    assert(back.count() === 500)
-    assert(back.agg(sum("k")).head().getLong(0) === 500L * 501 / 2)
-  }
-
-  test("compact: a write task that fails leaves the previous table readable and unchanged, and no sibling directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-fail").toString + "/t"
-    // no dictionary: each column chunk starts with its first data page
-    spark.range(0, 400, 1, 4).selectExpr("id", "concat('row-', id) AS payload")
-      .write.option("parquet.enable.dictionary", "false").parquet(dir)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    assert(files.length === 4)
-    // overwrite the header of one file's first `payload` data page: its
-    // footer still reads, but any task that decodes that page fails
-    val victim = files.head
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(victim.toURI), spark.sparkContext.hadoopConfiguration))
-    val pageAt = try footer.getFooter.getBlocks.get(0).getColumns.asScala
-        .find(_.getPath.toDotString == "payload").get.getFirstDataPageOffset
-      finally footer.close()
-    val raf = new java.io.RandomAccessFile(victim, "rw")
-    try { raf.seek(pageAt); raf.write(Array.fill[Byte](16)(-1)) } finally raf.close()
-    // the page no longer matches its checksum sidecar; drop the sidecar so
-    // the failure comes from decoding the page, as on a store without one
-    new java.io.File(victim.getParentFile, s".${victim.getName}.crc").delete()
-    def contents() = new java.io.File(dir).listFiles().sortBy(_.getName)
-      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toSeq
-    def ids() = spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
-    val before = contents()
-    assert(ids() === (0L until 400L))
-    // with adaptive execution the shuffle stage that reads the page runs
-    // before the write job is set up; without it, the failing tasks run
-    // inside the write job, after its output directory exists
-    Seq("true", "false").foreach { adaptive =>
+    // the same projection below the shuffle: with adaptive execution its
+    // map stage runs before the write job is set up; without it, inside
+    // the write job, after the staging directory exists
+    val failingBelowShuffle = spark.range(1, 101, 1, 4).select($"id".cast("int").as("k"))
+      .select($"k", when($"k" === 77, raise_error(lit("injected write failure")))
+        .otherwise(concat(lit("w"), $"k".cast("string"))).as("v"))
+      .repartition(4)
+    for {
+      (shape, df) <- Seq("above the shuffle" -> failing, "below the shuffle" -> failingBelowShuffle)
+      adaptive <- Seq("true", "false")
+    } {
+      val clue = s"$shape, adaptive=$adaptive"
       val prev = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", adaptive)
-      try intercept[Exception](Sink.compact(spark, dir, targetFiles = 2))
-      finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-      assert(contents() === before, s"adaptive=$adaptive")
-      assert(ids() === (0L until 400L), s"adaptive=$adaptive")
-      assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"), s"adaptive=$adaptive")
+      val e = try intercept[Exception](Sink.overwriteTable(df, dir))
+        finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains("injected write failure")),
+        s"$clue\n${chain.mkString("\n")}")
+      // _TIMESTAMP included: the same rows the first load wrote
+      assert(rows() === before, clue)
+      assert(files() === beforeFiles, clue)
+      assert(new java.io.File(dir).getParentFile.list().toSeq === Seq("t"), clue)
     }
   }
 
@@ -112,13 +79,6 @@ class SinkSpec extends SparkSpec {
     Sink.Manifest.overwrite(spark, base, Seq((7, "y")).toDF("k", "v"))
     assert(!new java.io.File(s"$base/gen-0").exists, "gen-0 should be retired")
     assert(new java.io.File(s"$base/gen-1").exists, "previous generation must be retained")
-    // compaction rewrites files without any reader-visible gap
-    Sink.Manifest.overwrite(spark, base,
-      (1 to 500).map(i => (i, s"v$i")).toDF("k", "v").repartition(40))
-    Sink.Manifest.compact(spark, base, targetFiles = 2)
-    val live = Sink.Manifest.read(spark, base)
-    assert(live.count() === 500)
-    assert(live.inputFiles.length === 2)
   }
 
   test("Manifest time travel: readAt pins a generation, retention bounds it, retired reads fail loudly") {

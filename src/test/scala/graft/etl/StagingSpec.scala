@@ -31,6 +31,15 @@ class StagingSpec extends SparkSpec {
     val out = IndexPipeline(df, Schemas.defaultTargetGeographies)
     assert(out.count() === 2)
     assert(out.filter($"CANCER_SITE" === "Breast" && $"GENDER" === "Persons").count() === 1)
+    // a field quoted the way RFC 4180 and pandas' to_csv quote it reads
+    // back as the cell was written: doubled quotes undone, a backslash literal
+    val q = Files.createTempFile("sheet", ".csv")
+    Files.writeString(q, "preamble\n" + Schemas.rawIndexSheet.fieldNames.mkString(",") + "\n" +
+      "Cancer Alliance,\"say \"\"hi\"\", a\\b\",E56000027,Breast,Female,All ages,Age-standardised," +
+      "2018,1,100,71.5,70.0,73.0,1.0,0.5,\n")
+    val quoted = Staging.readSheet(spark, q.toString, Schemas.rawIndexSheet, skipRows = 1)
+    assert(quoted.select("Geography name", "Patient numbers").as[(String, Long)].collect().toSeq ===
+      Seq("say \"hi\", a\\b" -> 100L))
   }
 
   test("staged adult sheet (skiprows=9) → Adult4Pipeline → benchmarkingRank chain") {
@@ -66,11 +75,14 @@ class StagingSpec extends SparkSpec {
   private def driverCollected(path: String, sheet: String, schema: StructType, skipRows: Int): DataFrame =
     Xlsx.withWorkbook(path) { wb =>
       val lines = wb.rows(sheet).drop(skipRows).map(Xlsx.csvLine).toVector
-      spark.read.schema(schema).option("header", "true").option("nullValue", "")
+      spark.read.schema(schema).option("header", "true").option("nullValue", "").option("escape", "\"")
         .csv(spark.createDataset(lines))
     }
 
-  private def xml(v: String) = v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+  // a carriage return is written as a character reference: XML reads a
+  // literal one in text as a line feed
+  private def xml(v: String) =
+    v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\r", "&#13;")
 
   /** A workbook with one sheet "S": each row at its sheet row number, a
     * null cell left out as Excel does. */
@@ -140,11 +152,20 @@ class StagingSpec extends SparkSpec {
       4 -> Seq("two\nlines", "3", "3.0"),
       5 -> Seq("crlf\r\nend", "4", "4.0"),
       6 -> Seq("\"quoted\"", "5", "5.0"),
-      7 -> Seq(" padded ", "6", "6.0"))
+      7 -> Seq(" padded ", "6", "6.0"),
+      8 -> Seq("a\\\"b", "7", "7.0"),
+      9 -> Seq("tail\\", "8", "8.0"),
+      10 -> Seq("x\\,y", "9", "9.0"),
+      11 -> Seq("lone\rcr", "10", "10.0"))
     val rows = same(path, skipRows = 0)
-    assert(rows.size === 6)
+    assert(rows.size === 10)
     assert(rows.map(_.getString(0)).toSet.contains("Bath, Swindon & Wiltshire"))
     assert(rows.map(_.getString(0)).toSet.contains("two\nlines"))
+    // every cell reads back as it was written
+    assert(rows.map(r => r.getLong(1) -> r.getString(0)).sortBy(_._1) === Seq(
+      1L -> "Bath, Swindon & Wiltshire", 2L -> "say \"hi\"", 3L -> "two\nlines", 4L -> "crlf\r\nend",
+      5L -> "\"quoted\"", 6L -> " padded ", 7L -> "a\\\"b", 8L -> "tail\\", 9L -> "x\\,y",
+      10L -> "lone\rcr"))
   }
 
   test("task-side staging equals the driver-collected formulation: rows wider than the header, and absent rows") {

@@ -24,65 +24,4 @@ class LayoutSpec extends SparkSpec {
       Layout.zValue(Seq($"x", $"y"), 32)
     }
   }
-
-  test("clampEncode shifts, floors at 0, saturates at the top") {
-    val out = Seq(-5L, 10L, 100L, 1000000L).toDF("v")
-      .select(Layout.clampEncode($"v", lo = 10L, bits = 8).as("e")).as[Long].collect()
-    assert(out.toSeq === Seq(0L, 0L, 90L, 255L))
-  }
-
-  test("z-ordered layout localizes a 2-dim box query to fewer files than a linear sort") {
-    // uniform 2-d grid: 256×256 points, 16 files
-    val n = 256
-    val grid = spark.range(0L, n.toLong * n).select(
-      (col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
-    val zDir = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
-    val linDir = java.nio.file.Files.createTempDirectory("graft-lin").toString + "/t"
-    Layout.writeZOrdered(grid, zDir, Seq(col("x"), col("y")), bits = 8, files = 16)
-    grid.repartitionByRange(16, col("x"), col("y")).sortWithinPartitions("x", "y")
-      .write.parquet(linDir)
-
-    // selective in the SECOND dim only — the case a linear (x, y) sort
-    // cannot help: every file's x-range contains the full y range, so all
-    // 16 files hold matching rows. Under z-order each file is a compact
-    // box, and a 1/16 y-slice intersects only the boxes in that y band.
-    def filesTouched(dir: String): Long =
-      spark.read.parquet(dir)
-        .filter(col("y").between(128, 143))
-        .select(input_file_name()).distinct().count()
-
-    val zFiles = filesTouched(zDir)
-    val linFiles = filesTouched(linDir)
-    assert(linFiles >= 12, s"linear sort should scatter y (got $linFiles of 16 files)")
-    // 16 aligned curve-segment boxes give <= 6 in a 1/16 band; the range
-    // partitioner's SAMPLED split points (seeded by RDD id, so they move
-    // with suite ordering) can land one boundary mid-box — allow +1
-    assert(zFiles <= 7, s"z-order should confine a y-slice (touched $zFiles files)")
-    assert(zFiles < linFiles)
-    // and the data round-trips intact
-    assert(spark.read.parquet(zDir).count() === n.toLong * n)
-  }
-
-  test("hilbert layout localizes both dims at least as tightly as z-order") {
-    graft.functions.VectorExpressions.register(spark)
-    val n = 256
-    val grid = spark.range(0L, n.toLong * n).select(
-      (col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
-    val hDir = java.nio.file.Files.createTempDirectory("graft-h").toString + "/t"
-    Layout.writeHilbert(grid, hDir, col("x"), col("y"), bits = 8, files = 16)
-    def filesTouched(dir: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(dir).filter(pred)
-        .select(input_file_name()).distinct().count()
-    // a 1/16 slice in EITHER dimension stays confined: each file covers a
-    // contiguous curve segment, and the curve's unit-step locality keeps
-    // that segment a compact box
-    val ySlice = filesTouched(hDir, col("y").between(128, 143))
-    val xSlice = filesTouched(hDir, col("x").between(64, 79))
-    // <= 6 aligned boxes per 1/16 band, +1 for a sampled (RDD-id-seeded,
-    // suite-order-dependent) range boundary landing mid-box — see the
-    // z-order test above
-    assert(ySlice <= 7, s"hilbert y-slice touched $ySlice of 16 files")
-    assert(xSlice <= 7, s"hilbert x-slice touched $xSlice of 16 files")
-    assert(spark.read.parquet(hDir).count() === n.toLong * n)
-  }
 }

@@ -44,9 +44,9 @@ class CurationSpec extends SparkSpec {
     // engines run) over every cents value up to 200k: index monotone
     // nondecreasing, lower bound ≤ value, relative error ≤ 1/8
     val grid = spark.range(1, 200001).selectExpr("id AS cents")
-      .selectExpr("cents", s"${Curation.hdrIdxSql} AS idx")
+      .selectExpr("cents", s"${Curation.hdrIndexSql} AS idx")
       .selectExpr("cents", "idx",
-        s"${Curation.hdrLbSql.replace("eidx", "idx")} AS lb")
+        s"${Curation.hdrLowerSql.replace("eidx", "idx")} AS lb")
     val bad = grid.filter("lb > cents OR (cents - lb) * 8 > cents").count()
     assert(bad === 0, "lower bound must satisfy lb <= c and (c - lb)/c <= 1/8")
     val nonMono = grid
@@ -57,7 +57,7 @@ class CurationSpec extends SparkSpec {
     val a = spark.range(1, 5000).selectExpr("id * 7 % 90000 + 1 AS cents")
     val b = spark.range(1, 3000).selectExpr("id * 11 % 70000 + 1 AS cents")
     def sketch(df: org.apache.spark.sql.DataFrame) =
-      df.selectExpr(s"${Curation.hdrIdxSql} AS idx")
+      df.selectExpr(s"${Curation.hdrIndexSql} AS idx")
         .groupBy("idx").agg(count(lit(1)).as("cnt"))
     val whole = sketch(a.union(b))
     val merged = sketch(a).union(sketch(b))
@@ -360,26 +360,6 @@ class CurationSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(census === mine)
     graft.ops.Caches.drain()
-  }
-
-  test("hdrIdx/hdrLb: the streaming Scala kernels are bit-equal to the batch SQL bucket math") {
-    // the property that makes a streaming shard's sketch mergeable with
-    // a batch shard's: identical bucketing on both paths. Dense sweep of
-    // the low range plus power-of-two boundaries up to 2^62.
-    val cents = (1L to 65536L) ++
-      (3 to 62).flatMap(k => Seq((1L << k) - 1, 1L << k, (1L << k) + 1))
-    val idxRows = cents.toDF("cents")
-      .select(col("cents"), expr(Curation.hdrIdxSql).cast("long").as("idx"))
-      .as[(Long, Long)].collect()
-    idxRows.foreach { case (c, i) =>
-      assert(i === Curation.hdrIdx(c).toLong, s"idx($c)")
-    }
-    val lbRows = (0L to 500L).toDF("eidx")
-      .select(col("eidx"), expr(Curation.hdrLbSql).cast("long").as("lb"))
-      .as[(Long, Long)].collect()
-    lbRows.foreach { case (i, lb) =>
-      assert(lb === Curation.hdrLb(i.toInt), s"lb($i)")
-    }
   }
 
   test("sketchHdrGrouped: the merged '__all__' rollup equals the single-tenant sketch") {
