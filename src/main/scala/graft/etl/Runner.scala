@@ -16,16 +16,16 @@ import scala.util.Try
   * sink write; everything upstream stays one lazy plan per file, and the
   * row count each [[LoadResult]] reports is observed during that write
   * (the [[graft.ops.Metrics.audited]] pattern), never by reading the
-  * table back. An xlsx workbook is opened on the driver only to resolve
-  * its sheet and, for an adult workbook, to read the Notes snapshot; the
-  * sheet itself is streamed and typed cell by cell inside the write's one
-  * task ([[Staging]]), so a load runs one task and writes one file per
-  * workbook, and a malformed sheet body fails the write, not the driver.
+  * table back. A staged sheet, CSV or xlsx, is read and typed cell by cell
+  * inside the write's one task ([[Staging]]), so a load runs one task and
+  * writes one file per staged file, and a malformed sheet body fails the
+  * write, not the driver; an xlsx workbook is opened on the driver only to
+  * resolve its sheet and, for an adult workbook, the Notes snapshot.
   * Both sink modes stamp `_TIMESTAMP` through [[Sink.stamped]], one
   * instant per write that generated code reads by reference, so a repeated
-  * load of the same staging compiles no new class. One task per workbook is
-  * meant for reference-sized NHS sheets: its gain was measured on 20k-row
-  * sheets, and a much larger sheet's load is not measured.
+  * load of the same staging compiles no new class. One task per staged
+  * file is meant for reference-sized NHS sheets: its gain was measured on
+  * 20k-row sheets, and a much larger sheet's load is not measured.
   *
   * Loads of different destination tables run at the same time, one
   * driver thread per destination (today INDEX and ADULT_4); files bound

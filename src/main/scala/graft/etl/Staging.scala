@@ -1,5 +1,8 @@
 package graft.etl
 
+import com.univocity.parsers.csv.CsvParser
+import java.io.{File, FileInputStream, FileNotFoundException, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,19 +18,15 @@ import scala.util.control.NonFatal
   * There is no spark-excel in a zero-egress JVM (SURVEY.md §7.4 risk 1),
   * so both staged formats are typed against a DECLARED schema by Spark's
   * own CSV value converters: "CSV with N preamble lines before the header",
-  * which plain `spark.read.csv` cannot express. Neither path holds a sheet
-  * on the driver.
+  * which plain `spark.read.csv` cannot express.
   *
-  * A CSV sheet is read in one pass that tags each line with its position
-  * via the text datasource, drops the preamble, then parses the remainder
-  * with `csv()` from the in-plan Dataset[String]. An xlsx sheet is
-  * streamed by [[Xlsx]] through the one task that consumes it, one
-  * partition per workbook, and that task hands each cell to the converter
-  * `csv()` would run on it, with no CSV line in between, so its parse, the
-  * pipeline over it and its write share one core. That suits the
-  * reference's NHS sheets, which are small; the gain over the earlier
-  * four-task read was measured on 20k-row sheets only, and how a much
-  * larger sheet fares on one task is not measured.
+  * Both formats take one route ([[typed]]): the frame's one task reads the
+  * staged file as rows of cells (an xlsx sheet streamed by [[Xlsx]], a CSV
+  * tokenized record by record, so a quoted cell may hold a line break),
+  * drops `skipRows` rows and the header and types each cell, so no sheet
+  * is held on the driver and the parse, the pipeline over it and its write
+  * share one core. That suits the reference's NHS sheets, which are small;
+  * how a much larger sheet fares on one task is not measured.
   */
 object Staging {
 
@@ -36,35 +35,36 @@ object Staging {
     * pandas' `to_csv` writes it), so `"say ""hi"""` reads `say "hi"`. */
   private val csvOptions = Map("nullValue" -> "", "escape" -> "\"")
 
+  /** Staged CSV sheet → DataFrame, decoded as UTF-8 (a malformed byte reads
+    * as U+FFFD). A missing path or one that is not a regular file fails
+    * here, before any job. The file is tokenized under [[csvOptions]] with
+    * empty lines kept (so a blank preamble line counts toward `skipRows`),
+    * line breaks inside quoted cells kept as written, and the line end (LF,
+    * CRLF or CR) detected from the file's first line break. */
   def readSheet(
       spark: SparkSession,
       path: String,
       schema: StructType,
       skipRows: Int): DataFrame = {
-    import spark.implicits._
-    // monotonically_increasing_id is 0..k within the file's first split, so
-    // dropping the preamble needs no global ordering (the header and
-    // preamble always sit in split 0); later splits keep ids >= 2^33 and
-    // pass the filter untouched — no sort, no shuffle.
-    val lines = spark.read.textFile(path)
-      .withColumn("_idx", org.apache.spark.sql.functions.monotonically_increasing_id())
-      .filter(s"_idx >= $skipRows")
-      .select("value").as[String]
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .options(csvOptions)
-      .csv(lines)
+    if (!new File(path).isFile) throw new FileNotFoundException(s"$path: not a regular file")
+    typed(spark, path, schema, skipRows) { (file, options) =>
+      val settings = options.asParserSettings
+      settings.setSkipEmptyLines(false)
+      settings.setNormalizeLineEndingsWithinQuotes(false)
+      settings.setLineSeparatorDetectionEnabled(true)
+      val parser = new CsvParser(settings)
+      val reader = new InputStreamReader(new FileInputStream(file), UTF_8)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
+      parser.beginParsing(reader)
+      Iterator.continually(parser.parseNext()).takeWhile(_ != null)
+    }
   }
 
-  /** Excel sheet → DataFrame: the reference's
-    * `pd.read_excel(sheet_name, skiprows=N)` end-to-end (reference
-    * src/main.py:112-113). The driver opens the workbook only to resolve
-    * the sheet, so a corrupt file (`ZipException`) or a missing sheet (the
-    * named `IllegalArgumentException`) fails here, before any job; the rows
-    * are read inside the task that consumes the frame (see the overload
-    * below). The workbook must be readable where the tasks run, as a
-    * staged CSV sheet must be for [[readSheet]]. */
+  /** Excel sheet → DataFrame. The driver opens the workbook only to
+    * resolve the sheet, so a corrupt file (`ZipException`) or a missing
+    * sheet (the named `IllegalArgumentException`) fails here, before any
+    * job; the rows are read in the frame's task, so the workbook, like a
+    * staged CSV, must be readable where the tasks run. */
   def readXlsxSheet(
       spark: SparkSession,
       path: String,
@@ -75,18 +75,8 @@ object Staging {
 
   /** As above, through a workbook the caller has open (the Runner reads
     * the adult workbook's Notes sheet through the same handle). Only the
-    * sheet is resolved through it; the frame does not hold the handle, so
-    * it may be closed once this returns.
-    *
-    * The frame's one partition opens the workbook in its task, streams the
-    * sheet's rows after `skipRows`, takes the header off them
-    * ([[dropHeader]]) and closes the workbook when the task completes.
-    * Each cell goes straight to the converter Spark's CSV parser builds
-    * for its column (`UnivocityParser.makeConverter`, from the
-    * `CSVOptions` [[readSheet]]'s `csv` builds from [[csvOptions]] and the
-    * session conf), so the rows are those of a staged CSV
-    * sheet in PERMISSIVE mode ([[typedRows]]) without a CSV line between
-    * the reader and the converter. */
+    * sheet is resolved through it: the frame's task opens the workbook
+    * again and closes it when the task completes. */
   def readXlsxSheet(
       spark: SparkSession,
       workbook: Xlsx.Workbook,
@@ -94,7 +84,20 @@ object Staging {
       schema: StructType,
       skipRows: Int): DataFrame = {
     workbook.sheetPart(sheetName)
-    val path = workbook.path
+    typed(spark, workbook.path, schema, skipRows) { (file, _) =>
+      val wb = new Xlsx.Workbook(file)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => wb.close())
+      wb.rows(sheetName)
+    }
+  }
+
+  /** The staged file at `path` as a frame of `schema` in one partition, as
+    * a staged file is one stream (a worksheet is one deflate stream, and a
+    * CSV record may span lines): its task opens the file's rows with `open`,
+    * drops `skipRows` of them and the header ([[dropHeader]]) and types the
+    * rest under the `CSVOptions` `csv()` would build ([[typedRows]]). */
+  private def typed(spark: SparkSession, path: String, schema: StructType, skipRows: Int)(
+      open: (String, CSVOptions) => Iterator[Array[String]]): DataFrame = {
     val conf = spark.sessionState.conf
     val options = new CSVOptions(csvOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
     // as csv(Dataset) does: the declared schema turns nullable (CSV columns
@@ -103,11 +106,8 @@ object Staging {
       if (conf.getConf(SQLConf.LEGACY_RESPECT_NULLABILITY_IN_TEXT_DATASET_CONVERSION)) schema
       else StructType(schema.map(_.copy(nullable = true)))
     ExprUtils.verifyColumnNameOfCorruptRecord(full, options.columnNameOfCorruptRecord)
-    // a worksheet is one deflate stream, so the workbook is one partition
     val rows = spark.sparkContext.parallelize(Seq(path), 1).mapPartitions { paths =>
-      val wb = new Xlsx.Workbook(paths.next())
-      TaskContext.get().addTaskCompletionListener[Unit](_ => wb.close())
-      dropHeader(wb.rows(sheetName).drop(skipRows)).map(typedRows(full, options))
+      dropHeader(open(paths.next(), options).drop(skipRows)).map(typedRows(full, options))
     }
     GraftSqlBridge.internalCreateDataFrame(spark, rows, full)
   }

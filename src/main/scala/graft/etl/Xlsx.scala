@@ -800,8 +800,8 @@ object Xlsx {
     withWorkbook(path)(_.rows(sheetName).map(cells => cells.toSeq.map(Option(_))).toVector)
 
   /** One row of cells (null = absent) as a CSV line (RFC-4180 quoting):
-    * the raw record a staged xlsx row reports in a `_corrupt_record`
-    * column ([[Staging.readXlsxSheet]]), as a staged CSV line would. */
+    * the raw record a bad row of either staged format, xlsx or CSV,
+    * reports in a `_corrupt_record` column ([[Staging]]). */
   def csvLine(cells: Array[String]): String =
     cells.iterator.map { v =>
       if (v == null) ""

@@ -174,12 +174,14 @@ class RunnerSpec extends SparkSpec {
   }
 
   /** Rows as a sheet's <sheetData> content, from sheet row `first` on;
-    * empty cells are left out, as Excel does. */
+    * empty cells are left out, as Excel does, and a carriage return is
+    * written as a character reference (XML reads a literal one as a line
+    * feed). */
   private def sheetRows(rows: Seq[Seq[String]], first: Int = 1): String =
     rows.zipWithIndex.map { case (cells, i) =>
       val r = first + i
       s"""<row r="$r">""" + cells.zipWithIndex.collect { case (v, c) if v.nonEmpty =>
-        s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t>$v</t></is></c>"""
+        s"""<c r="${('A' + c).toChar}$r" t="inlineStr"><is><t>${v.replace("\r", "&#13;")}</t></is></c>"""
       }.mkString + "</row>"
     }.mkString
 
@@ -259,8 +261,8 @@ class RunnerSpec extends SparkSpec {
   test("run: cells holding quotes, a backslash or a comma publish as written from a CSV and an xlsx staging alike") {
     // the three surviving Index rows get these Geography names, which the
     // pipeline carries to AREA_NAME unchanged; the CSV quotes them as
-    // RFC 4180 and pandas' to_csv do
-    val names = Seq("say \"hi\"", "\"quoted\", a\\\"b", "tail\\ x\\,y")
+    // RFC 4180 and pandas' to_csv do, line breaks (LF, CRLF, a lone CR) too
+    val names = Seq("say \"hi\"\nover two lines", "\"quoted\", a\\\"b\r\ncrlf", "tail\\ x\\,y\rlone cr")
     val index = indexRows.zipWithIndex.map { case (r, i) => if (i < names.size) r.updated(1, names(i)) else r }
     val csv = Files.createTempDirectory("graft-staging-quoted-csv")
     Files.writeString(csv.resolve("Index_2018.csv"), ((1 to 10).map(i => s"preamble $i") ++
@@ -463,56 +465,58 @@ class RunnerSpec extends SparkSpec {
     }
   }
 
-  // ---- the xlsx sheet is parsed inside the write's task ----------------------
+  // ---- the staged sheet is parsed inside the write's task --------------------
 
   test("run: one job and one task per destination over an Index and an adult workbook, and no header job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import scala.jdk.CollectionConverters._
-    val staging = xlsxStaging()
-    val out = Files.createTempDirectory("graft-tables-shape").toString
     val sc = spark.sparkContext
-    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()   // execution id -> plan
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Seq[Int])]() // job, execution, stages
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()          // stage of each finished task
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId.toString, s.physicalPlanDescription)
-        case _ =>
+    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging())) {
+      val out = Files.createTempDirectory("graft-tables-shape").toString
+      val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()   // execution id -> plan
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Seq[Int])]() // job, execution, stages
+      val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()          // stage of each finished task
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.put(s.executionId.toString, s.physicalPlanDescription)
+          case _ =>
+        }
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          jobs.add((j.jobId, Option(j.properties).map(_.getProperty("spark.sql.execution.id")).orNull, j.stageIds))
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(t.stageId)
       }
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.add((j.jobId, Option(j.properties).map(_.getProperty("spark.sql.execution.id")).orNull, j.stageIds))
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(t.stageId)
-    }
-    // events still queued from earlier work would reach the new listener
-    org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      Runner.run(spark, staging.toString, out)
+      // events still queued from earlier work would reach the new listener
       org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
-    } finally sc.removeSparkListener(listener)
-    // each job is attributed to the destination its SQL execution writes
-    def destination(execution: String): String =
-      Seq("INDEX", "ADULT_4").filter(t => Option(plans.get(execution)).exists(_.contains(s"$out/$t")))
-        .mkString("+")
-    val perDest = jobs.asScala.toSeq.groupBy { case (_, execution, _) => destination(execution) }
-    assert(perDest.keySet === Set("INDEX", "ADULT_4"), jobs.asScala.mkString("; "))
-    perDest.foreach { case (dest, js) =>
-      assert(js.size === 1, s"$dest ran ${js.size} jobs")
-      val stages = js.flatMap(_._3).toSet
-      assert(tasks.asScala.count(stages) === 1, s"$dest ran more than one task")
+      sc.addSparkListener(listener)
+      try {
+        Runner.run(spark, staging.toString, out)
+        org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+      } finally sc.removeSparkListener(listener)
+      // each job is attributed to the destination its SQL execution writes
+      def destination(execution: String): String =
+        Seq("INDEX", "ADULT_4").filter(t => Option(plans.get(execution)).exists(_.contains(s"$out/$t")))
+          .mkString("+")
+      val perDest = jobs.asScala.toSeq.groupBy { case (_, execution, _) => destination(execution) }
+      assert(perDest.keySet === Set("INDEX", "ADULT_4"), s"$format: ${jobs.asScala.mkString("; ")}")
+      perDest.foreach { case (dest, js) =>
+        assert(js.size === 1, s"$format: $dest ran ${js.size} jobs")
+        val stages = js.flatMap(_._3).toSet
+        assert(tasks.asScala.count(stages) === 1, s"$format: $dest ran more than one task")
+      }
+      assert(tasks.size === 2, format)
     }
-    assert(tasks.size === 2)
   }
 
-  test("run: a second load of the same xlsx staging compiles no class") {
+  test("run: a second load of the same staging compiles no class, CSV or xlsx") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val staging = xlsxStaging()
-    val out = Files.createTempDirectory("graft-tables-codegen").toString
-    Runner.run(spark, staging.toString, out)
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    Runner.run(spark, staging.toString, out)
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0)
+    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging())) {
+      val out = Files.createTempDirectory("graft-tables-codegen").toString
+      Runner.run(spark, staging.toString, out)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Runner.run(spark, staging.toString, out)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0, format)
+    }
   }
 
   test("run: a malformed Table 4 body fails the adult load in its write; ADULT_4 keeps the prior load, INDEX publishes") {

@@ -40,6 +40,13 @@ class StagingSpec extends SparkSpec {
     val quoted = Staging.readSheet(spark, q.toString, Schemas.rawIndexSheet, skipRows = 1)
     assert(quoted.select("Geography name", "Patient numbers").as[(String, Long)].collect().toSeq ===
       Seq("say \"hi\", a\\b" -> 100L))
+    // the file is decoded as UTF-8, a malformed byte as U+FFFD
+    val u = Files.createTempFile("sheet", ".csv")
+    Files.write(u, ("preamble\n" + Schemas.rawIndexSheet.fieldNames.mkString(",") + "\nCancer Alliance,Bäth ")
+      .getBytes("UTF-8") ++ Array(0xff.toByte) ++
+      ",E56000027,Breast,Female,All ages,Age-standardised,2018,1,100,71.5,70.0,73.0,1.0,0.5,\n".getBytes("UTF-8"))
+    assert(Staging.readSheet(spark, u.toString, Schemas.rawIndexSheet, skipRows = 1)
+      .select("Geography name").as[String].collect().toSeq === Seq("Bäth \uFFFD"))
   }
 
   test("staged adult sheet (skiprows=9) → Adult4Pipeline → benchmarkingRank chain") {
@@ -65,8 +72,9 @@ class StagingSpec extends SparkSpec {
     assert(row.getAs[String]("NCL_QUARTILE") === "-") // cohort < 4
   }
 
-  // ---- xlsx: the sheet is streamed inside the consuming task ----------------
-  // It must read back exactly as the driver-collected formulation it replaced.
+  // ---- both formats: the sheet is read inside the consuming task ------------
+  // An xlsx sheet, and the same rows staged as CSV, must read back exactly as
+  // the driver-collected formulation the xlsx staging replaced.
 
   /** The staging of an xlsx sheet before it moved into the load's task:
     * the rows collected on the driver as CSV lines, shipped as a local
@@ -112,13 +120,28 @@ class StagingSpec extends SparkSpec {
   private def multiset(df: DataFrame): Map[Row, Int] =
     df.collect().toSeq.groupBy(identity).map { case (r, same) => r -> same.size }
 
-  /** Both formulations over the same sheet, under both schemas; returns the
-    * task-side rows read with the plain schema. */
+  /** The sheet staged as CSV: each of its rows as a CSV line, an absent
+    * row as an empty line, every line ended by `eol`. */
+  private def csv(path: String, eol: String): String = {
+    val f = Files.createTempFile("graft-staging", ".csv")
+    Files.writeString(f, Xlsx.withWorkbook(path)(_.rows("S").map(Xlsx.csvLine(_) + eol).mkString))
+    f.toString
+  }
+
+  /** The task-side staging of the sheet, and of the sheet staged as CSV
+    * with LF and with CRLF line ends, against the driver-collected
+    * formulation under both schemas; returns the task-side rows of the
+    * xlsx sheet read with the plain schema. */
   private def same(path: String, skipRows: Int): Seq[Row] = {
+    val csvs = Seq("LF" -> "\n", "CRLF" -> "\r\n").map { case (name, eol) => name -> csv(path, eol) }
     for (s <- Seq(schema, withCorrupt)) {
-      val staged = Staging.readXlsxSheet(spark, path, "S", s, skipRows)
-      assert(staged.schema === s)
-      assert(multiset(staged) === multiset(driverCollected(path, "S", s, skipRows)), s"schema $s")
+      val expected = multiset(driverCollected(path, "S", s, skipRows))
+      val staged = ("xlsx" -> Staging.readXlsxSheet(spark, path, "S", s, skipRows)) +:
+        csvs.map { case (name, f) => s"CSV $name" -> Staging.readSheet(spark, f, s, skipRows) }
+      for ((format, df) <- staged) {
+        assert(df.schema === s, format)
+        assert(multiset(df) === expected, s"$format, schema $s")
+      }
     }
     Staging.readXlsxSheet(spark, path, "S", schema, skipRows).collect().toSeq
   }
@@ -214,5 +237,17 @@ class StagingSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Staging.readXlsxSheet(spark, workbook(1 -> header), "Nope", schema, 0))
     assert(e.getMessage.contains("sheet 'Nope' not found"))
+  }
+
+  test("readSheet on a missing path or a directory fails on the driver before any job, naming the path") {
+    val dir = Files.createTempDirectory("graft-staging-dir")
+    val sc = spark.sparkContext
+    for (path <- Seq(dir.resolve("absent.csv").toString, dir.toString)) {
+      val group = s"staging-spec-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "readSheet on a path that is no file")
+      val e = try intercept[Exception](Staging.readSheet(spark, path, schema, 0)) finally sc.clearJobGroup()
+      assert(e.getMessage.contains(path))
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty, path)
+    }
   }
 }
