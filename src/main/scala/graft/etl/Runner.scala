@@ -21,11 +21,13 @@ import scala.util.Try
   * writes one file per staged file, and a malformed sheet body fails the
   * write, not the driver; an xlsx workbook is opened on the driver only to
   * resolve its sheet and, for an adult workbook, the Notes snapshot.
-  * Both sink modes stamp `_TIMESTAMP` through [[Sink.stamped]], one
-  * instant per write that generated code reads by reference, so a repeated
-  * load of the same staging compiles no new class. One task per staged
-  * file is meant for reference-sized NHS sheets: its gain was measured on
-  * 20k-row sheets, and a much larger sheet's load is not measured.
+  * Each table is published by [[Sink.overwriteTable]], the reference's
+  * truncate-replace with its rollback: a failed load leaves the previous
+  * table readable and unchanged. Its `_TIMESTAMP` is one instant per write
+  * that generated code reads by reference, so a repeated load of the same
+  * staging compiles no new class. One task per staged file is meant for
+  * reference-sized NHS sheets: its gain was measured on 20k-row sheets,
+  * and a much larger sheet's load is not measured.
   *
   * Loads of different destination tables run at the same time, one
   * driver thread per destination (today INDEX and ADULT_4); files bound
@@ -57,21 +59,6 @@ object Runner {
         adult4 = env.getOrElse("GRAFT_DEST_ADULT4", "ADULT_4"))
   }
 
-  /** How table writes land. In either mode a failed load leaves the
-    * previous table readable and unchanged, and a failure in one table's
-    * load does not stop the other table's load, which still publishes.
-    * [[StagedOverwrite]] is the reference's truncate-replace with its
-    * rollback ([[Sink.overwriteTable]]): the write goes to a sibling
-    * directory that is renamed into place after it commits, so the table
-    * path is missing only between two renames.
-    * [[ManifestPointer]] publishes through [[Sink.Manifest]] generations —
-    * the same rows plus the same `_TIMESTAMP` stamp, with a pointer swap after
-    * the write, so the table path is never missing and a dashboard reader
-    * that resolved the previous generation keeps reading it. */
-  sealed trait SinkMode
-  case object StagedOverwrite extends SinkMode
-  case object ManifestPointer extends SinkMode
-
   /** @param stagingDir directory of staged workbooks (post-scrape state;
     *        reference ./data, src/main.py:390-393)
     * @param outDir root for the INDEX / ADULT_4 parquet tables
@@ -84,15 +71,10 @@ object Runner {
       stagingDir: String,
       outDir: String,
       targetGeographies: Seq[String] = Schemas.defaultTargetGeographies,
-      destinations: Destinations = Destinations(),
-      sinkMode: SinkMode = StagedOverwrite): Seq[LoadResult] = {
+      destinations: Destinations = Destinations()): Seq[LoadResult] = {
     def publish(df: DataFrame, dest: String): Long = {
       val (observed, obs) = Metrics.audited(df, observationName(dest), Nil)
-      sinkMode match {
-        case StagedOverwrite => Sink.overwriteTable(observed, dest)
-        case ManifestPointer =>
-          Sink.Manifest.overwrite(spark, dest, Sink.stamped(observed))
-      }
+      Sink.overwriteTable(observed, dest)
       obs.get("n_rows").asInstanceOf[Long]
     }
     def load(path: Path, kind: Ingest.PipelineKind, dest: String): LoadResult = {

@@ -1,7 +1,7 @@
 package graft.etl
 
-import com.univocity.parsers.csv.CsvParser
-import java.io.{File, FileInputStream, FileNotFoundException, InputStreamReader}
+import com.univocity.parsers.csv.{CsvFormat, CsvParser}
+import java.io.{BufferedReader, File, FileInputStream, FileNotFoundException, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
@@ -39,8 +39,8 @@ object Staging {
     * as U+FFFD). A missing path or one that is not a regular file fails
     * here, before any job. The file is tokenized under [[csvOptions]] with
     * empty lines kept (so a blank preamble line counts toward `skipRows`),
-    * line breaks inside quoted cells kept as written, and the line end (LF,
-    * CRLF or CR) detected from the file's first line break. */
+    * line breaks inside quoted cells kept as written, and the line end
+    * found by [[lineEnd]]. */
   def readSheet(
       spark: SparkSession,
       path: String,
@@ -51,13 +51,35 @@ object Staging {
       val settings = options.asParserSettings
       settings.setSkipEmptyLines(false)
       settings.setNormalizeLineEndingsWithinQuotes(false)
-      settings.setLineSeparatorDetectionEnabled(true)
+      settings.getFormat.setLineSeparator(lineEnd(file, settings.getFormat))
       val parser = new CsvParser(settings)
       val reader = new InputStreamReader(new FileInputStream(file), UTF_8)
       TaskContext.get().addTaskCompletionListener[Unit](_ => reader.close())
       parser.beginParsing(reader)
       Iterator.continually(parser.parseNext()).takeWhile(_ != null)
     }
+  }
+
+  /** The line end (LF, CRLF or CR) of the CSV at `path`: its first line
+    * break outside a quoted cell, where a quote opens a quoted cell only at
+    * the start of a cell and a doubled quote inside one stays inside it;
+    * LF when there is no such break. Univocity's own detection takes the
+    * first break even inside a quoted cell, so a first record holding a
+    * break of another kind would set the wrong line end. */
+  private def lineEnd(path: String, format: CsvFormat): String = {
+    val in = new BufferedReader(new InputStreamReader(new FileInputStream(path), UTF_8))
+    try {
+      var start = true   // the next char starts a cell
+      var quoted = false // inside a quoted cell
+      var closed = false // the last char closed a quoted cell: a quote reopens it
+      var c = in.read()
+      while (c >= 0 && (quoted || c != '\n' && c != '\r')) {
+        if (quoted) { if (c == format.getQuote) { quoted = false; closed = true } }
+        else { quoted = c == format.getQuote && (start || closed); closed = false; start = c == format.getDelimiter }
+        c = in.read()
+      }
+      if (c != '\r') "\n" else if (in.read() == '\n') "\r\n" else "\r"
+    } finally in.close()
   }
 
   /** Excel sheet → DataFrame. The driver opens the workbook only to

@@ -49,35 +49,6 @@ class RunnerSpec extends SparkSpec {
     assert(Views.benchmarkingStandards(adult.drop("_TIMESTAMP")).count() > 0)
   }
 
-  test("run: ManifestPointer mode publishes both tables as atomic generations") {
-    val staging = Files.createTempDirectory("graft-staging-m")
-    val out = Files.createTempDirectory("graft-tables-m").toString
-    val indexHeader = Schemas.rawIndexSheet.fieldNames.mkString(",")
-    Files.writeString(staging.resolve("Index_2018.csv"),
-      (1 to 10).map(i => s"preamble $i").mkString("\n") + "\n" +
-        indexHeader + "\n" +
-        "Cancer Alliance,NCL,E56000027,Breast,Female,All ages,Age-standardised,2018,1,100,71.5,70.0,73.0,1.0,0.5,\n")
-    val adultHeader = Schemas.rawAdultSheet.fieldNames.mkString(",")
-    Files.writeString(staging.resolve("adult_survival_2017_2021.csv"),
-      (1 to 9).map(i => s"preamble $i").mkString("\n") + "\n" +
-        adultHeader + "\n" +
-        "Cancer Alliance,NCL,E56000027,Breast,Female,Age-standardised (5 age groups),1,100,71.0,72.0\n")
-
-    val results = Runner.run(spark, staging.toString, out,
-      sinkMode = Runner.ManifestPointer)
-    assert(results.map(_.kind).sorted === Seq("adult4", "index"))
-    // the table roots are manifest tables, not bare parquet dirs
-    val index = Sink.Manifest.read(spark, s"$out/INDEX")
-    assert(index.columns.contains("_TIMESTAMP"))
-    assert(index.count() === results.find(_.kind == "index").get.rows)
-    // a re-run lands as the next generation; readers of the old one survive
-    val preSwap = index.cache(); preSwap.count()
-    Runner.run(spark, staging.toString, out, sinkMode = Runner.ManifestPointer)
-    assert(Sink.Manifest.read(spark, s"$out/INDEX").count() === index.count())
-    assert(preSwap.count() > 0)
-    preSwap.unpersist()
-  }
-
   test("run: env-driven destinations rename the sink tables (dev_ prefix switch)") {
     val staging = Files.createTempDirectory("graft-staging-dest")
     val out = Files.createTempDirectory("graft-tables-dest").toString
@@ -228,34 +199,25 @@ class RunnerSpec extends SparkSpec {
     staging
   }
 
-  private def readBack(table: String, mode: Runner.SinkMode) = mode match {
-    case Runner.StagedOverwrite => spark.read.parquet(table)
-    case Runner.ManifestPointer => Sink.Manifest.read(spark, table)
-  }
-
-  test("run: LoadResult.rows equals a direct count of the written table (CSV and xlsx, both sink modes)") {
-    val published = for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging());
-         mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) yield {
+  test("run: LoadResult.rows equals a direct count of the written table (CSV and xlsx)") {
+    val published = for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging())) yield {
       val out = Files.createTempDirectory("graft-tables-rows").toString
-      val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
-      assert(results.map(_.kind).sorted === Seq("adult4", "index"), s"$format/$mode")
+      val results = Runner.run(spark, staging.toString, out)
+      assert(results.map(_.kind).sorted === Seq("adult4", "index"), format)
       results.foreach { r =>
-        assert(r.rows === readBack(r.table, mode).count(), s"$format/$mode ${r.kind}")
+        assert(r.rows === spark.read.parquet(r.table).count(), s"$format ${r.kind}")
       }
       // index: 3 survivors; adult: 5 rows + Persons copies of the national
       // Breast row and the Larynx, Prostate and Ovary rows = 9, × 2 metrics
-      assert(results.map(r => r.kind -> r.rows).toMap === Map("index" -> 3L, "adult4" -> 18L),
-        s"$format/$mode")
+      assert(results.map(r => r.kind -> r.rows).toMap === Map("index" -> 3L, "adult4" -> 18L), format)
       // the published rows as a multiset, without the write's stamp and the
       // Notes snapshot, which only a workbook has
-      def rows(table: String) = readBack(s"$out/$table", mode).drop("_TIMESTAMP", "DATE_SNAPSHOT")
+      def rows(table: String) = spark.read.parquet(s"$out/$table").drop("_TIMESTAMP", "DATE_SNAPSHOT")
         .collect().map(_.toString).sorted.toSeq
-      (format, mode) -> Seq("INDEX", "ADULT_4").map(rows)
+      Seq("INDEX", "ADULT_4").map(rows)
     }
     // the two staged formats of the same sheets publish the same rows
-    val byRun = published.toMap
-    for (mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer))
-      assert(byRun(("csv", mode)) === byRun(("xlsx", mode)), s"$mode")
+    assert(published(0) === published(1))
   }
 
   test("run: cells holding quotes, a backslash or a comma publish as written from a CSV and an xlsx staging alike") {
@@ -316,13 +278,13 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("run: no job reads the destination tables during Runner.run (a listener sees every scan)") {
-    for ((staging, mode) <- Seq(csvStaging() -> Runner.StagedOverwrite, xlsxStaging() -> Runner.ManifestPointer)) {
+    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging())) {
       val out = Files.createTempDirectory("graft-tables-noscan").toString
-      val (results, scans) = scansUnder(out)(Runner.run(spark, staging.toString, out, sinkMode = mode))
+      val (results, scans) = scansUnder(out)(Runner.run(spark, staging.toString, out))
       assert(results.size === 2)
-      assert(scans.isEmpty, s"$mode: Runner.run read its destination: ${scans.mkString("; ")}")
+      assert(scans.isEmpty, s"$format: Runner.run read its destination: ${scans.mkString("; ")}")
       // the listener does see a read of the destination when one happens
-      val (_, recount) = scansUnder(out)(results.map(r => readBack(r.table, mode).count()))
+      val (_, recount) = scansUnder(out)(results.map(r => spark.read.parquet(r.table).count()))
       assert(recount.nonEmpty, "the listener missed a scan of the destination")
     }
   }
@@ -349,26 +311,24 @@ class RunnerSpec extends SparkSpec {
 
   test("run: files bound for one table load in listing order, the last wins; results keep listing order") {
     val index2017 = indexRows.map(_.updated(7, "2017"))
-    for (mode <- Seq(Runner.StagedOverwrite, Runner.ManifestPointer)) {
-      val staging = Files.createTempDirectory("graft-staging-same")
-      Files.writeString(staging.resolve("Index_2017.csv"), indexCsv(index2017))
-      Files.writeString(staging.resolve("Index_2018.csv"), indexCsv(indexRows))
-      Files.writeString(staging.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows))
+    val csv = Files.createTempDirectory("graft-staging-same")
+    Files.writeString(csv.resolve("Index_2017.csv"), indexCsv(index2017))
+    Files.writeString(csv.resolve("Index_2018.csv"), indexCsv(indexRows))
+    Files.writeString(csv.resolve("adult_survival_2017_2021.csv"), adultCsv(adultRows))
+    val xlsx = Files.createTempDirectory("graft-staging-same-xlsx")
+    indexWorkbook(xlsx, index2017, "Index_2017.xlsx")
+    indexWorkbook(xlsx)
+    adultWorkbook(xlsx)
+    for ((staging, ext, adult) <- Seq((csv, ".csv", "adult_survival_2017_2021.csv"),
+        (xlsx, ".xlsx", "adult_cancer_survival_2017_2021.xlsx"))) {
       val out = Files.createTempDirectory("graft-tables-same").toString
-      val results = Runner.run(spark, staging.toString, out, sinkMode = mode)
-      assert(results.map(_.file) === Seq("Index_2017.csv", "Index_2018.csv", "adult_survival_2017_2021.csv"), mode)
-      assert(results.map(r => r.kind -> r.rows) === Seq("index" -> 3L, "index" -> 3L, "adult4" -> 18L), mode)
-      val index = readBack(s"$out/INDEX", mode)
-      assert(index.count() === 3, mode)
-      assert(index.select("YEAR_OF_DIAGNOSIS").distinct().as[Long].collect().toSeq === Seq(2018L), mode)
-      assert(readBack(s"$out/ADULT_4", mode).count() === 18, mode)
-      if (mode == Runner.ManifestPointer) {
-        // one generation per load, in order: gen-0 is 2017's, gen-1 (live) 2018's
-        assert(Sink.Manifest.generations(spark, s"$out/INDEX") === Seq(0L, 1L))
-        assert(Sink.Manifest.readAt(spark, s"$out/INDEX", 0)
-          .select("YEAR_OF_DIAGNOSIS").distinct().as[Long].collect().toSeq === Seq(2017L))
-        assert(Sink.Manifest.generations(spark, s"$out/ADULT_4") === Seq(0L))
-      }
+      val results = Runner.run(spark, staging.toString, out)
+      assert(results.map(_.file) === Seq(s"Index_2017$ext", s"Index_2018$ext", adult))
+      assert(results.map(r => r.kind -> r.rows) === Seq("index" -> 3L, "index" -> 3L, "adult4" -> 18L), ext)
+      val index = spark.read.parquet(s"$out/INDEX")
+      assert(index.count() === 3, ext)
+      assert(index.select("YEAR_OF_DIAGNOSIS").distinct().as[Long].collect().toSeq === Seq(2018L), ext)
+      assert(spark.read.parquet(s"$out/ADULT_4").count() === 18, ext)
     }
   }
 

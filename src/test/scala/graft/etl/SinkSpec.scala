@@ -66,36 +66,43 @@ class SinkSpec extends SparkSpec {
     }
   }
 
-  test("Manifest: atomic pointer swap, previous generation retained, older retired") {
-    val base = java.nio.file.Files.createTempDirectory("graft-manifest").toString + "/t"
-    Sink.Manifest.overwrite(spark, base, (1 to 100).map(i => (i, s"v$i")).toDF("k", "v"))
-    assert(Sink.Manifest.read(spark, base).count() === 100)
-    // a reader that resolved gen-0 BEFORE this overwrite must still work after it
-    val preSwap = spark.read.parquet(s"$base/gen-0")
-    Sink.Manifest.overwrite(spark, base, Seq((9, "z")).toDF("k", "v"))
-    assert(Sink.Manifest.read(spark, base).select("k").as[Int].collect().toSeq === Seq(9))
-    assert(preSwap.count() === 100, "in-flight reader of the previous generation broke")
-    // third overwrite retires gen-0, keeps gen-1
-    Sink.Manifest.overwrite(spark, base, Seq((7, "y")).toDF("k", "v"))
-    assert(!new java.io.File(s"$base/gen-0").exists, "gen-0 should be retired")
-    assert(new java.io.File(s"$base/gen-1").exists, "previous generation must be retained")
-  }
+  test("overwriteTable after an interrupted swap") {
+    def siblings(t: String) = new java.io.File(t).getParentFile.list().toSeq.sorted
+    def tree(dir: String) = Files.walk(Path.of(dir)).iterator.asScala.filter(Files.isRegularFile(_))
+      .map(f => f.toString -> Files.readAllBytes(f).toSeq).toSeq.sortBy(_._1)
+    def keys(t: String) = spark.read.parquet(t).select("k").as[Int].collect().toSeq.sorted
+    // the task holding k = 3 throws, as in the mid-write test above
+    val failing = (1 to 8).toDF("k").repartition(4)
+      .select($"k", when($"k" === 3, raise_error(lit("injected write failure")))
+        .otherwise(concat(lit("w"), $"k".cast("string"))).as("v"))
 
-  test("Manifest time travel: readAt pins a generation, retention bounds it, retired reads fail loudly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-tt").toString + "/t"
-    (0 to 3).foreach { v =>
-      Sink.Manifest.overwrite(spark, base,
-        Seq((v, s"gen$v")).toDF("k", "v"), keepGenerations = 3)
-    }
-    assert(Sink.Manifest.generations(spark, base) === Seq(1L, 2L, 3L))
-    // AS OF semantics: each retained generation reads back its own data
-    (1 to 3).foreach { g =>
-      assert(Sink.Manifest.readAt(spark, base, g).select("v").head.getString(0) === s"gen$g")
-    }
-    assert(Sink.Manifest.read(spark, base).select("v").head.getString(0) === "gen3")
-    // a retired generation must error, never silently fall back to live
-    val e = intercept[RuntimeException](Sink.Manifest.readAt(spark, base, 0))
-    assert(e.getMessage.contains("retired"))
+    // (a) a crash between the renames: the previous table is only at <t>_old
+    val a = Files.createTempDirectory("graft-sink-crash-a").toString + "/t"
+    Sink.overwriteTable(Seq((1, "a")).toDF("k", "v"), a)
+    Files.move(Path.of(a), Path.of(a + "_old"))
+    val old = tree(a + "_old")
+    intercept[Exception](Sink.overwriteTable(failing, a))
+    assert(tree(a + "_old") === old, "a failed write touched the only copy")
+    assert(siblings(a) === Seq("t_old"))
+    Sink.overwriteTable(Seq((2, "b")).toDF("k", "v"), a)
+    assert(keys(a) === Seq(2))
+    assert(siblings(a) === Seq("t"))
+
+    // (b) the table and a stale <t>_old both exist
+    val b = Files.createTempDirectory("graft-sink-crash-b").toString + "/t"
+    Sink.overwriteTable(Seq((1, "a")).toDF("k", "v"), b)
+    Sink.overwriteTable(Seq((9, "z")).toDF("k", "v"), b + "_old")
+    Sink.overwriteTable(Seq((2, "b")).toDF("k", "v"), b)
+    assert(keys(b) === Seq(2))
+    assert(siblings(b) === Seq("t"))
+
+    // (c) a stale <t>_staging, left by a write that never finished
+    val c = Files.createTempDirectory("graft-sink-crash-c").toString + "/t"
+    Sink.overwriteTable(Seq((1, "a")).toDF("k", "v"), c)
+    Sink.overwriteTable(Seq((8, "y"), (9, "z")).toDF("k", "v"), c + "_staging")
+    Sink.overwriteTable(Seq((2, "b")).toDF("k", "v"), c)
+    assert(keys(c) === Seq(2))
+    assert(siblings(c) === Seq("t"))
   }
 
   // ---- _TIMESTAMP: one instant per write, on every path that stamps ----------
@@ -132,9 +139,8 @@ class SinkSpec extends SparkSpec {
       "overwriteTable" -> { () =>
         Sink.overwriteTable(batch(), s"$root/table"); spark.read.parquet(s"$root/table")
       },
-      "Runner ManifestPointer" -> { () =>
-        Runner.run(spark, staging, s"$root/runner", sinkMode = Runner.ManifestPointer)
-        Sink.Manifest.read(spark, s"$root/runner/INDEX")
+      "Runner" -> { () =>
+        Runner.run(spark, staging, s"$root/runner"); spark.read.parquet(s"$root/runner/INDEX")
       })
     for ((name, write) <- writePaths) {
       val runs = Seq.fill(2)(stampOf(write))

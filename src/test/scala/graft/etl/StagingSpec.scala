@@ -191,6 +191,26 @@ class StagingSpec extends SparkSpec {
       10L -> "lone\rcr"))
   }
 
+  test("a staged CSV's line end is its first line break outside a quoted cell") {
+    // the file's first record, a preamble row, holds a quoted line break of
+    // another kind than the file's line ends; the data rows hold all three.
+    // The last column is a string, so a stray CR at a record's end shows.
+    val lines = StructType(Seq(StructField("name", StringType), StructField("n", LongType),
+      StructField("note", StringType)))
+    val names = Seq("a\nb", "c\r\nd", "e\rf", "plain")
+    val data = names.zipWithIndex.map { case (v, i) => (i + 3) -> Seq(v, s"${i + 1}", s"note ${i + 1}") }
+    val cases = Seq(("LF", "x\r\ny", "\n"), ("CRLF", "x\ny", "\r\n"), ("CR", "x\ny", "\r"))
+    val wrong = for ((name, first, eol) <- cases; s <- Seq(lines, lines.add("_corrupt_record", StringType))) yield {
+      val path = workbook((Seq(1 -> Seq(first, "1"), 2 -> Seq("name", "n", "note")) ++ data): _*)
+      val expected = multiset(driverCollected(path, "S", s, skipRows = 1))
+      assert(expected.keySet.map(r => (r.getString(0), r.getString(2))) ===
+        names.zipWithIndex.map { case (v, i) => (v, s"note ${i + 1}") }.toSet)
+      val read = scala.util.Try(multiset(Staging.readSheet(spark, csv(path, eol), s, skipRows = 1)))
+      if (read.toOption.contains(expected)) None else Some(s"$name, schema $s: read $read, expected $expected")
+    }
+    assert(wrong.flatten.isEmpty, wrong.flatten.mkString("\n"))
+  }
+
   test("task-side staging equals the driver-collected formulation: rows wider than the header, and absent rows") {
     val path = workbook(1 -> Seq("preamble"), 2 -> header,
       3 -> Seq("wide", "1", "1.0", "extra", "more"),
