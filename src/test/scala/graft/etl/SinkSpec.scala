@@ -81,7 +81,9 @@ class SinkSpec extends SparkSpec {
     Sink.overwriteTable(Seq((1, "a")).toDF("k", "v"), a)
     Files.move(Path.of(a), Path.of(a + "_old"))
     val old = tree(a + "_old")
-    intercept[Exception](Sink.overwriteTable(failing, a))
+    val e = intercept[Exception](Sink.overwriteTable(failing, a))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected write failure")), e.toString)
     assert(tree(a + "_old") === old, "a failed write touched the only copy")
     assert(siblings(a) === Seq("t_old"))
     Sink.overwriteTable(Seq((2, "b")).toDF("k", "v"), a)
