@@ -18,10 +18,12 @@ import org.apache.spark.sql.SparkSession
   *    created in the JVM before the first session (by
   *    `FileSystem.getLocal(new Configuration())`, say) is the one every
   *    session gets, and it keeps forking.
-  * Nothing else: AQE runs on Spark's defaults, and no optimizer rule or
-  * strategy is injected — queries whose plans need one register it on
-  * their session, and [[graft.functions.GraftExtensions]] remains the
-  * deploy-wide route (`spark.sql.extensions`).
+  *  - `spark.sql.extensions` = [[graft.functions.GraftExtensions]]: the
+  *    engine's SQL functions, its two optimizer rules and the as-of join
+  *    strategy, installed once when the session is built. A
+  *    `newSession()` clone carries them too, and no query installs
+  *    anything, so a query plans the same whatever ran before it.
+  * Nothing else: AQE runs on Spark's defaults.
   */
 object Sessions {
   private val LocalN = """local\[(\*|\d+)\]""".r
@@ -36,7 +38,7 @@ object Sessions {
   }
 
   /** A builder carrying every pin, for callers that add a setting of their
-    * own (a test warehouse dir, extensions) before `getOrCreate()`. */
+    * own (a test warehouse dir, say) before `getOrCreate()`. */
   def builder(master: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -46,6 +48,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", parallelism(master).toString)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
 
   def build(master: String): SparkSession = builder(master).getOrCreate()
 }

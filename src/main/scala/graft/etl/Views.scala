@@ -20,6 +20,10 @@ object Views {
     col("CANCER_SITE"), col("GENDER"),
     col("YEARS_SINCE_DIAGNOSIS").cast("string"), col("DATE_DIAGNOSIS_WINDOW"))
 
+  /** SORT_GENDER: Persons before a single gender. */
+  private def sortGender: Column =
+    when(col("GENDER") === "Persons", 1).otherwise(2).cast("long")
+
   /** REPORTING.INDEX_BEST_CA (reference docs/reporting_index_best_ca.sql):
     * best non-core Cancer-Alliance survival per dimension combination —
     * GROUP BY ALL with constant literals in scope, NULL-typed filler
@@ -54,8 +58,7 @@ object Views {
     core.unionByName(indexBestCa(index).select(core.columns.toIndexedSeq.map(col): _*))
       .withColumn("SORT_SITE",
         when(col("CANCER_SITE") === "Overall", 1).otherwise(2).cast("long"))
-      .withColumn("SORT_GENDER",
-        when(col("GENDER") === "Persons", 1).otherwise(2).cast("long"))
+      .withColumn("SORT_GENDER", sortGender)
       .withColumn("SORT_AGE",
         when(col("AGE_AT_DIAGNOSIS") === "All ages", 1).otherwise(2).cast("long"))
   }
@@ -73,7 +76,7 @@ object Views {
           col("SURVIVAL_METRIC") === "Net Survival") ||
           col("AREA_CODE") === "E56000027")
       .withColumn("JOIN_KEY", joinKey)
-      .withColumn("SORT_GENDER", when(col("GENDER") === "Persons", 1).otherwise(2).cast("long"))
+      .withColumn("SORT_GENDER", sortGender)
 
   /** The dashboard-facing column renames of the published ADULT_4 layer
     * (reference docs/reporting_adult4.sql:21-43), which the published
@@ -102,13 +105,9 @@ object Views {
     * docs/reporting_cancer_alliance_reporting.sql:1-32): all Cancer
     * Alliances, age-standardised net survival only. */
   def cancerAllianceComparison(adult4: DataFrame): DataFrame =
-    adult4
-      .filter(
-        col("AREA_TYPE") === "Cancer Alliance" &&
-          col("STANDARDISATION_TYPE") === "Age-standardised" &&
-          col("SURVIVAL_METRIC") === "Net Survival")
+    caRows(adult4)
       .withColumn("JOIN_KEY", joinKey)
-      .withColumn("SORT_GENDER", when(col("GENDER") === "Persons", 1).otherwise(2).cast("long"))
+      .withColumn("SORT_GENDER", sortGender)
 
   /** PUBLISHED.CANCER_ALLIANCE_COMPARISON — dashboard-facing rename layer
     * over [[cancerAllianceComparison]] (reference

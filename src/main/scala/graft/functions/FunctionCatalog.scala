@@ -5,10 +5,9 @@ import org.apache.spark.sql.types._
 
 import graft.functions.VectorExpressions.KernelCall
 
-/** Every engine SQL function, in one table. The deploy-wide
-  * [[GraftExtensions]] injects it and the per-session
-  * [[VectorExpressions.register]] installs it, so both routes expose the
-  * same names with the same builders.
+/** Every engine SQL function, in one table. [[GraftExtensions]] injects
+  * it into every session [[graft.Sessions]] builds (and into any session
+  * of a deploy that sets `spark.sql.extensions` to it).
   *
   * Each entry states its argument count, and [[Entry.builder]] checks it
   * before the entry's own builder runs: a call with too few or too many

@@ -4,13 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point — deploy-wide registration, so a
-  * cluster configured with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` has every
-  * function of [[FunctionCatalog]] in every session's SQL surface (the
-  * same table [[VectorExpressions.register]] installs per session), plus
-  * the optimizer rules and the as-of join strategy, which a session
-  * without the extension registers itself.
+/** SparkSessionExtensions entry point, the one route by which the engine
+  * reaches a session: every function of [[FunctionCatalog]] in its SQL
+  * surface, the two optimizer rules and the as-of join strategy.
+  * [[graft.Sessions]] sets `spark.sql.extensions` to this class, so every
+  * factory session and its `newSession()` clones carry it from the start;
+  * a deploy building its own sessions sets the same key.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -283,9 +283,9 @@ object SketchAggregates {
   private[functions] def build(es: Seq[Expression]): Expression =
     KmvSketchAgg(es.head, FunctionCatalog.intLiteral("kmv_sketch", IntParam("k", 1), es(1)))
 
-  /** Column entry point (requires VectorExpressions.register(spark) or GraftExtensions). */
+  /** Column entry point (resolves through GraftExtensions). */
   def kmv_sketch(c: Column, k: Int): Column = call_function("kmv_sketch", c, lit(k))
 
-  /** Column entry point (requires VectorExpressions.register(spark) or GraftExtensions). */
+  /** Column entry point (resolves through GraftExtensions). */
   def mg_topk(c: Column, k: Int): Column = call_function("mg_topk", c, lit(k))
 }

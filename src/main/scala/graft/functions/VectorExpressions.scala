@@ -2,7 +2,7 @@ package graft.functions
 
 import java.lang.reflect.{InvocationTargetException, Method}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -24,9 +24,9 @@ import org.apache.spark.sql.types.{DataType, NullType}
   * scalar functions of [[FunctionCatalog]] are all this one expression;
   * they differ only in its fields.
   *
-  * Exposure is the fully-public path: [[register]] installs the
-  * [[FunctionCatalog]] (these and the other engine functions) in the
-  * session's FunctionRegistry; the Column helpers resolve by name via
+  * Exposure is the fully-public path: [[GraftExtensions]] injects the
+  * [[FunctionCatalog]] (these and the other engine functions) into every
+  * session [[graft.Sessions]] builds; the Column helpers resolve by name via
   * `call_function` (the `Column(expr)` bridge is private[sql] in Spark 4).
   */
 object VectorExpressions {
@@ -113,15 +113,7 @@ object VectorExpressions {
   private def fits(got: Class[_], want: Class[_]): Boolean =
     want.isAssignableFrom(got) || widening.indexOf(got) >= 0 && widening.indexOf(want) > widening.indexOf(got)
 
-  /** Install every [[FunctionCatalog]] entry in the session's
-    * FunctionRegistry (idempotent) — the per-session route to the table
-    * [[GraftExtensions]] injects deploy-wide. */
-  def register(spark: SparkSession): Unit =
-    FunctionCatalog.entries.foreach { e =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(e.name, e.builder, "built-in")
-    }
-
-  // Column-level entry points (require register(spark) or GraftExtensions)
+  // Column-level entry points (resolve through GraftExtensions)
   def vector_dot_f32(a: Column, b: Column): Column = call_function("vector_dot_f32", a, b)
   def vector_norm_f32(a: Column): Column = call_function("vector_norm_f32", a)
   def vector_dot_f64(a: Column, b: Column): Column = call_function("vector_dot_f64", a, b)

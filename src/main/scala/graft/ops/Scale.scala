@@ -334,7 +334,6 @@ object Scale {
       boundaries: Seq[org.apache.spark.sql.Row]): Column =
     if (boundaries.isEmpty) lit(0)
     else {
-      graft.functions.VectorExpressions.register(df.sparkSession)
       val keyCols = keys.map(k => col(k.name))
       val types = df.select(keyCols: _*).schema.fields.map(_.dataType)
       val descLit = array(keys.map(k => lit(k.desc)): _*)

@@ -72,7 +72,6 @@ object TemporalJoins {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val s = left.sparkSession
-    graft.plans.AsOfJoinPlan.ensureRegistered(s)
     val lp = left.queryExecution.analyzed
     // fresh-alias EVERY right column: when both sides derive from the
     // same source, their analyzed plans share exprIds; the analyzer's
@@ -115,7 +114,7 @@ object TemporalJoins {
       keys: Seq[String], leftTime: String, rightTime: String,
       windowMicros: Long): DataFrame = {
     // the bin column uses plans.RangeJoinBinning's marker name on purpose:
-    // when that rule is registered session-wide, the residual range filter
+    // every factory session runs that rule, the residual range filter
     // below gets pushed back into the join condition, and without the
     // marker the rule would re-bin this ALREADY-binned join (correct but
     // a wasted second explode)

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -35,10 +34,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * to the last in sort order — callers wanting determinism pre-dedupe,
   * as [[graft.queries.EventsMultimodal.asofJoin]] does.
   *
-  * Registered via [[graft.functions.GraftExtensions]]
-  * (injectPlannerStrategy) or lazily through [[AsOfJoinPlan.ensureRegistered]]
-  * (`spark.experimental.extraStrategies`, the same idempotent pattern as
-  * [[RangeJoinBinning]]).
+  * The strategy is installed by [[graft.functions.GraftExtensions]]
+  * (injectPlannerStrategy), which every [[graft.Sessions]] session
+  * carries.
   */
 case class AsOfJoin(
     left: LogicalPlan, right: LogicalPlan,
@@ -61,14 +59,6 @@ object AsOfJoinStrategy extends SparkStrategy {
       AsOfJoinExec(lk, rk, lt, rt, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
-}
-
-object AsOfJoinPlan {
-  /** Idempotent session registration (extraStrategies). */
-  def ensureRegistered(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.exists(_ eq AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
 }
 
 case class AsOfJoinExec(

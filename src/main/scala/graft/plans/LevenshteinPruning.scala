@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -27,9 +26,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * negation), and the rule is idempotent: the rewritten expression carries
   * a threshold and no longer matches the pattern.
   *
-  * Registration: cluster-wide via `graft.functions.GraftExtensions`
-  * (spark.sql.extensions), or per-session with [[register]] (used by the
-  * fuzzy-match query so the library's own plans benefit).
+  * Installed by `graft.functions.GraftExtensions` (spark.sql.extensions),
+  * which every `graft.Sessions` session carries, so the fuzzy-match
+  * query's plan and any other threshold filter get it alike.
   */
 object LevenshteinPruning extends Rule[LogicalPlan] {
 
@@ -92,10 +91,4 @@ object LevenshteinPruning extends Rule[LogicalPlan] {
       val newCond = rewriteCmp(cond)
       if (newCond.fastEquals(cond)) j else j.copy(condition = Some(newCond))
   }
-
-  /** Idempotent per-session registration (no cluster conf needed). */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(_ eq this))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ this
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -39,8 +38,9 @@ import org.apache.spark.sql.types.LongType
   * already carrying a `__graft_bin` attribute — that marker is also what
   * makes the rule idempotent.
   *
-  * Registration: cluster-wide via graft.functions.GraftExtensions
-  * (spark.sql.extensions), or per-session with [[register]].
+  * Installed by graft.functions.GraftExtensions (spark.sql.extensions),
+  * which every graft.Sessions session carries; to plan without it, exclude
+  * it with `spark.sql.optimizer.excludedRules`.
   */
 object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -119,10 +119,4 @@ object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
         case None => j
       }
   }
-
-  /** Idempotent per-session registration (no cluster conf needed). */
-  def register(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.exists(_ eq this))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ this
 }

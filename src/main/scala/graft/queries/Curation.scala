@@ -1542,7 +1542,6 @@ object Curation {
   private[graft] def contentChunks(df: DataFrame): DataFrame = {
     val W = CdcW
     val Mod = CdcMod
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val dd = df.select(col("doc_id"), col("text"),
       length(col("text")).cast("long").as("n"))
     // window_hash31 emits every window's hash in ONE O(doc) rolling pass;
@@ -1597,7 +1596,6 @@ object Curation {
                  CAST((len(skl) - 1) * 4294967296 // skl[-1] AS BIGINT) AS est_distinct
           FROM sk""") {
       (s, d) =>
-        graft.functions.VectorExpressions.register(s)
         docs(s, d)
           .select(col("source"), explode(split(col("text"), " ")).as("token"))
           .distinct()

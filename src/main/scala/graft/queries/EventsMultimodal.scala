@@ -309,7 +309,6 @@ object EventsMultimodal {
               CAST(na + nb - 2 * inter AS BIGINT) AS l1_dist
        FROM inter WHERE 20 * (na + nb - 2 * inter) <= na + nb""") {
     (s, d) =>
-      graft.functions.VectorExpressions.register(s)
       // fan out before the per-char explode (see multimodalBlockhash)
       val dd = graft.ops.Scale.fanOutScan(
         Tables.documents(s, d).select(
@@ -448,7 +447,6 @@ object EventsMultimodal {
               CAST(na + nb - 2 * inter AS BIGINT) AS block_l1
        FROM inter WHERE 20 * (na + nb - 2 * inter) <= na + nb""") {
     (s, d) =>
-      graft.functions.VectorExpressions.register(s)
       // fan out before the per-char explode — the O(total chars) key
       // projection is the query's CPU floor and otherwise runs one-task
       val dd = graft.ops.Scale.fanOutScan(
@@ -783,7 +781,6 @@ object EventsMultimodal {
           SELECT est.event_type, est.cm_estimate, exact.exact_count
           FROM est JOIN exact USING (event_type)""") {
       (s, d) =>
-        graft.functions.VectorExpressions.register(s)
         import graft.functions.VectorExpressions.rolling_hash31
         def bucket = rolling_hash31(
           concat(col("event_type"), lit("#"), col("d").cast("string"))) % W
@@ -1334,7 +1331,6 @@ object EventsMultimodal {
         AND epoch_us(b.ts) > epoch_us(a.ts)
         AND epoch_us(b.ts) <= epoch_us(a.ts) + 600000000""") {
     (s, d) =>
-      graft.plans.RangeJoinBinning.register(s)
       val ev = Tables.events(s, d)
       val a = ev.filter(col("event_type") === "click")
         .select(col("event_id").as("a_id"), col("user_id"), unix_micros(col("ts")).as("a_t"))
@@ -1472,7 +1468,6 @@ object EventsMultimodal {
               (SELECT CAST(count(*) AS BIGINT) FROM s1) AS n_clicked,
               (SELECT CAST(count(*) AS BIGINT) FROM s2) AS n_converted""") {
     (s, d) =>
-      graft.plans.RangeJoinBinning.register(s)
       val ev = Tables.events(s, d)
       def stage(t: String) = ev.filter(col("event_type") === t)
       val v = stage("view")

@@ -1060,7 +1060,6 @@ object Profiling {
        HAVING count(*) * 8 > (SELECT count(event_type) FROM events)
        ORDER BY event_type""") {
     (s, d) =>
-      graft.functions.VectorExpressions.register(s)
       import graft.functions.SketchAggregates.mg_topk
       val ev = Tables.events(s, d).select("event_type")
         .filter(col("event_type").isNotNull)

@@ -760,7 +760,6 @@ object Relational {
     (s, d) =>
       // the threshold filter below is rewritten to the banded O(k·n) DP +
       // length pre-filter by the custom optimizer rule (PlanSpec pins it)
-      graft.plans.LevenshteinPruning.register(s)
       val p = Tables.part(s, d)
         .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"),
           element_at(split(col("p_name"), " "), 1).as("tok0"))
@@ -829,7 +828,6 @@ object Relational {
   /** The raw builder — PlanSpec uses this, since the memoized form
     * plans as an InMemoryTableScan (same convention as TextDedup). */
   private[graft] def fuzzyDamerauFresh(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
     import graft.functions.VectorExpressions.damerau_levenshtein
     val p = Tables.part(s, d)
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size"),
@@ -1154,7 +1152,6 @@ object Relational {
           $steps
           SELECT o_orderkey, o_custkey, CAST(d AS BIGINT) AS h FROM h$bits""") {
       (s, d) =>
-        graft.functions.VectorExpressions.register(s)
         Tables.orders(s, d).select(
           col("o_orderkey"), col("o_custkey"),
           graft.functions.VectorExpressions.hilbert_d2(

@@ -34,7 +34,6 @@ object Similarity {
   /** Embeddings with a precomputed L2 norm — computed once, reused by every
     * pairwise comparison. */
   private def withNorm(s: SparkSession, d: String): DataFrame = {
-    VectorExpressions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding"),
         vector_norm_f32(col("embedding")).as("nrm"))
@@ -219,7 +218,6 @@ object Similarity {
               FROM scored) t
         WHERE rnk <= 3""") {
     (s, d) =>
-      VectorExpressions.register(s)
       val adv = Tables.embeddings(s, d).select(col("vec_id"),
         when(col("vec_id") % 2 === 0, typedLit(Seq.fill(64)(0.5f)))
           .otherwise(col("embedding")).as("embedding"))
@@ -803,7 +801,6 @@ object Similarity {
     * integer distance table (`dists`, leased — feeds both the encode
     * argmin and the query LUTs). */
   private def pqParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    VectorExpressions.register(s)
     import VectorExpressions.vector_distsq_i64
     val e = Tables.embeddings(s, d)
     // int8 per-dim absmax quantization — the q_embed_quantize scheme
@@ -900,7 +897,6 @@ object Similarity {
           JOIN qv qb ON qb.vec_id = t.neighbor_id
           WHERE t.rnk <= 3""") {
       (s, d) =>
-        VectorExpressions.register(s)
         import VectorExpressions.vector_distsq_i64
         val (qv, dists) = pqParts(s, d)
         val codes = pqCodes(dists)
@@ -963,7 +959,6 @@ object Similarity {
               FROM ivfpq_adc) t
         WHERE rnk <= 3""") {
     (s, d) =>
-      VectorExpressions.register(s)
       val (_, dists) = pqParts(s, d)
       val codes = pqCodes(dists)
       val lut = pqLut(dists)
@@ -1136,7 +1131,6 @@ object Similarity {
         SELECT label, ${graft.Exact.sumSql("best")} AS maxsim_score
         FROM m GROUP BY label""") {
     (s, d) =>
-      VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
       val tok = e
         .withColumn("tr", row_number().over(

@@ -227,7 +227,6 @@ object TextDedup {
     (s, d) => {
       // codegen kernel call (graft.functions.VectorKernels.rollingHash31) — the
       // aggregate() HOF form is semantically identical but interpreted
-      VectorExpressions.register(s)
       docs(s, d).select(
         col("doc_id"),
         VectorExpressions.rolling_hash31(col("text")).as("fingerprint"))
@@ -526,7 +525,6 @@ object TextDedup {
       s"md5_seeded8/minhash_bands8 kernels are built for MinhashK=8, " +
         s"BandSize=2; got MinhashK=$MinhashK, BandSize=$BandSize — " +
         "extend VectorKernels.md5Seeded8/minhashBands8 in lockstep")
-    graft.functions.VectorExpressions.register(sh.sparkSession)
     val withHs = sh.withColumn("hs8",
       graft.functions.VectorExpressions.md5_seeded8(col("shingle")))
     val hashCols = (0 until MinhashK).map(i =>
@@ -583,7 +581,6 @@ object TextDedup {
     // pass; <k-word rows return an empty array, so posexplode subsumes
     // the filter. Bitwise equality vs the aggregate derivation stays
     // pinned by TextDedupSpec; the DuckDB oracles are unchanged.
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       posexplode(graft.functions.VectorExpressions.minhash_bands8(
         col("text"), lit(k))).as(Seq("band_id", "band_val")))

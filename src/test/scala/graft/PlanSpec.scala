@@ -316,37 +316,35 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_range_join_auto: the RangeJoinBinning rule fires — bin explode, no nested loop") {
+    def explodes(s: org.apache.spark.sql.SparkSession) = {
+      val opt = SparkEntry.queries("q_range_join_auto")(s, sf).queryExecution.optimizedPlan
+      (opt.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size, opt)
+    }
+    val (n, opt) = explodes(spark)
+    assert(n == 1, s"expected the bin explode:\n$opt")
+    // the explode is the rule's: a clone without it plans none
+    assert(explodes(excluding(spark, graft.plans.RangeJoinBinning))._1 == 0)
     val df = SparkEntry.queries("q_range_join_auto")(spark, sf)
-    try {
-      val opt = df.queryExecution.optimizedPlan
-      assert(opt.collect {
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-      }.size == 1, s"expected the bin explode:\n$opt")
-      val phys = df.queryExecution.executedPlan.toString
-      assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
-        s"naive range join must not plan as a nested loop:\n$phys")
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RangeJoinBinning)
+    val phys = df.queryExecution.executedPlan.toString
+    assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
+      s"naive range join must not plan as a nested loop:\n$phys")
   }
 
   test("q_funnel3: BOTH naive range joins rewrite to binned equi-joins through the aggregation") {
     val df = SparkEntry.queries("q_funnel3")(spark, sf)
-    try {
-      val opt = df.queryExecution.optimizedPlan
-      // s1's rewritten subtree appears twice (stage-2 input + its own
-      // count branch), so ≥2 distinct explodes is the invariant
-      assert(opt.collect {
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-      }.size >= 2, s"expected a bin explode per funnel stage:\n$opt")
-      // the only remaining non-equi joins must be the 1-row summary
-      // crossJoins, never a range stage: every range join carries a bin key
-      val rangeJoins = opt.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.condition.exists(_.references.exists(_.name.startsWith("__graft_bin"))) => j
-      }
-      assert(rangeJoins.size >= 2, s"both stages must join on the bin key:\n$opt")
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RangeJoinBinning)
+    val opt = df.queryExecution.optimizedPlan
+    // s1's rewritten subtree appears twice (stage-2 input + its own
+    // count branch), so ≥2 distinct explodes is the invariant
+    assert(opt.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    }.size >= 2, s"expected a bin explode per funnel stage:\n$opt")
+    // the only remaining non-equi joins must be the 1-row summary
+    // crossJoins, never a range stage: every range join carries a bin key
+    val rangeJoins = opt.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+        if j.condition.exists(_.references.exists(_.name.startsWith("__graft_bin"))) => j
+    }
+    assert(rangeJoins.size >= 2, s"both stages must join on the bin key:\n$opt")
   }
 
   test("q_inverted_index: one exploded pass, no joins") {

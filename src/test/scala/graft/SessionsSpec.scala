@@ -5,6 +5,9 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.functions.FunctionCatalog
+import graft.plans.{AsOfJoinStrategy, LevenshteinPruning, RangeJoinBinning}
+
 /** Pins what [[Sessions]] builds, for every main and for the test
   * session alike. */
 class SessionsSpec extends SparkSpec {
@@ -30,7 +33,7 @@ class SessionsSpec extends SparkSpec {
       .collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.nonEmpty
   }
 
-  test("a fresh factory session carries every pin and no graft optimizer rule or strategy") {
+  test("a fresh factory session and its clone carry every pin, the engine functions, both rules and the as-of strategy") {
     val (default, active) = (SparkSession.getDefaultSession, SparkSession.getActiveSession)
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
@@ -38,19 +41,36 @@ class SessionsSpec extends SparkSpec {
       val s = Sessions.build("local[4]")
       assert(default.forall(_ ne s), "expected a new session, not the shared one")
       assertPinned(s)
-      assert(s.experimental.extraOptimizations.isEmpty && s.experimental.extraStrategies.isEmpty)
-      assert(!s.sessionState.planner.strategies.exists(_.getClass.getName.startsWith("graft.")),
-        "no graft planner strategy may be injected")
-      // the two graft optimizer rules leave these plans alone ...
-      assert(!levenshteinBanded(s) && !rangeJoinBinned(s))
-      // ... and rewrite them once registered, so the check above is live
-      graft.plans.LevenshteinPruning.register(s)
-      graft.plans.RangeJoinBinning.register(s)
+      for (x <- Seq(s, s.newSession())) {
+        val missing = FunctionCatalog.entries.map(_.name).filterNot(x.catalog.functionExists)
+        assert(missing.isEmpty, s"unresolved engine functions: $missing")
+        assert(levenshteinBanded(x) && rangeJoinBinned(x))
+        assert(x.sessionState.planner.strategies.exists(_ eq AsOfJoinStrategy),
+          "the as-of join strategy must be planned")
+        assert(x.experimental.extraOptimizations.isEmpty && x.experimental.extraStrategies.isEmpty)
+      }
+      // a clone excluding both rules plans without them, so the checks
+      // above are live, and the session it came from keeps them
+      val off = excluding(s, LevenshteinPruning, RangeJoinBinning)
+      assert(!levenshteinBanded(off) && !rangeJoinBinned(off))
       assert(levenshteinBanded(s) && rangeJoinBinned(s))
     } finally {
       default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
       active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
     }
+  }
+
+  test("a query plans the same whatever was built before it in its session, and building installs nothing") {
+    val s = spark.newSession()
+    val sf = "/root/testdata/sf0.001"
+    def snmPlan: String = "#\\d+".r.replaceAllIn(
+      SparkEntry.queries("q_snm_pairs")(s, sf).queryExecution.optimizedPlan.toString, "#")
+    val before = snmPlan
+    // three queries whose plans the two rules rewrite
+    for (q <- Seq("q_fuzzy_match", "q_range_join_auto", "q_funnel3"))
+      SparkEntry.queries(q)(s, sf).queryExecution.optimizedPlan
+    assert(snmPlan === before)
+    assert(s.experimental.extraOptimizations.isEmpty && s.experimental.extraStrategies.isEmpty)
   }
 
   test("the shared test session comes from the factory") {

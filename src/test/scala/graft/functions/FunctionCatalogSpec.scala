@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorExpressions.KernelCall
 
-/** Both routes install the whole [[FunctionCatalog]]: a session built with
-  * [[GraftExtensions]] and a plain session after
-  * [[VectorExpressions.register]] resolve every entry to the same answer,
-  * and a call with the wrong number of arguments fails with an error that
+/** [[GraftExtensions]], which every [[graft.Sessions]] session carries,
+  * installs the whole [[FunctionCatalog]]: a fresh factory session and its
+  * `newSession()` clone resolve every entry to the same answer, and a call
+  * with the wrong number of arguments fails with an error that
   * names the function and the count it got. Each scalar kernel entry gives
   * the same bits through generated and interpreted code, and a literal Int
   * argument is read only when it is an integer in range. */
@@ -41,20 +41,13 @@ class FunctionCatalogSpec extends AnyFunSuite {
     SparkSession.clearActiveSession()
   }
 
-  // fresh sessions on the shared context (getOrCreate would return a
-  // shared one and skip extension application), same master as SparkSpec
-  private lazy val (plain, extended, missingBeforeInstall) = {
+  // a fresh session on the shared context (getOrCreate would return a
+  // shared one), same master as SparkSpec, and its clone
+  private lazy val (factory, cloned) = {
     fresh()
-    val plain = graft.Sessions.build("local[4]")
-    val missing = FunctionCatalog.entries.map(_.name)
-      .filterNot(n => plain.catalog.functionExists(n)).toSet
-    VectorExpressions.register(plain)
+    val factory = graft.Sessions.build("local[4]")
     fresh()
-    val extended = graft.Sessions.builder("local[4]")
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    fresh()
-    (plain, extended, missing)
+    (factory, factory.newSession())
   }
 
   private def run(s: SparkSession, call: String): Seq[Row] =
@@ -69,13 +62,12 @@ class FunctionCatalogSpec extends AnyFunSuite {
   FunctionCatalog.entries.foreach { e =>
     test(s"${e.name}: resolves through the extension and the per-session installer; a wrong argument count names it") {
       val call = calls(e.name)
-      assert(missingBeforeInstall.contains(e.name), s"${e.name} resolved before install")
-      val viaExtension = run(extended, call)
-      val viaRegister = run(plain, call)
-      assert(viaExtension.size === 1)
-      assert(viaExtension === viaRegister)
+      assert(factory.catalog.functionExists(e.name) && cloned.catalog.functionExists(e.name))
+      val viaFactory = run(factory, call)
+      assert(viaFactory.size === 1)
+      assert(viaFactory === run(cloned, call))
       val wrong = if (e.variadic) Seq(e.args - 1) else Seq(e.args - 1, e.args + 1).filter(_ >= 0)
-      for (s <- Seq(extended, plain); n <- wrong) {
+      for (s <- Seq(factory, cloned); n <- wrong) {
         val ex = intercept[Exception](run(s, s"${e.name}(${Seq.fill(n)("x").mkString(", ")})"))
         assert(ex.getMessage.contains(e.name) && ex.getMessage.contains(s"got $n"),
           s"${e.name} with $n arguments: ${ex.getMessage}")
@@ -98,7 +90,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
       "kmv_sketch(x, 4294967298)" -> ("kmv_sketch", "k"),
       "mg_topk(s, 2.5D)" -> ("mg_topk", "k"),
       "mg_topk(s, -2147483647L)" -> ("mg_topk", "k"))
-    for (s <- Seq(extended, plain); (call, (fn, arg)) <- bad) {
+    for (s <- Seq(factory, cloned); (call, (fn, arg)) <- bad) {
       val ex = intercept[Exception](run(s, call))
       val named = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).exists {
         case e: IllegalArgumentException => e.getMessage.contains(s"$fn: $arg must be")
@@ -107,7 +99,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
       assert(named, s"$call: ${ex.getMessage}")
     }
     // an in-range literal of any integral width reads as its value
-    for (s <- Seq(extended, plain)) {
+    for (s <- Seq(factory, cloned)) {
       assert(run(s, "hilbert_d2(3L, x, 4L)") === run(s, "hilbert_d2(3L, x, 4)"))
       assert(run(s, "hilbert_d2(3L, x, CAST(4 AS TINYINT))") === run(s, "hilbert_d2(3L, x, 4)"))
       assert(run(s, "kmv_sketch(x, 2L)") === run(s, "kmv_sketch(x, 2)"))
@@ -125,7 +117,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
       "hilbert_d2(s, x, 4)" -> ("hilbert_d2", 1),
       "hilbert_d2(3L, 2.5D, 4)" -> ("hilbert_d2", 2),
       "damerau_levenshtein('a', x)" -> ("damerau_levenshtein", 2))
-    for (s <- Seq(extended, plain); (call, (fn, arg)) <- bad) {
+    for (s <- Seq(factory, cloned); (call, (fn, arg)) <- bad) {
       // analysis runs when the query is built; nothing is executed
       val ex = intercept[AnalysisException](s.sql(s"SELECT $call AS r FROM VALUES (5L, 'a') AS t(x, s)"))
       assert(ex.getMessage.contains(s"$fn: argument $arg is"), s"$call: ${ex.getMessage}")
@@ -133,7 +125,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
   }
 
   test("an argument Java widens to the kernel's parameter, or a NULL, is taken as before") {
-    for (s <- Seq(extended, plain)) {
+    for (s <- Seq(factory, cloned)) {
       assert(run(s, "hilbert_d2(CAST(3 AS INT), CAST(x AS SMALLINT), 4)") === run(s, "hilbert_d2(3L, x, 4)"))
       assert(run(s, "hilbert_d2(CAST(3 AS TINYINT), x, 4)") === run(s, "hilbert_d2(3L, x, 4)"))
       assert(run(s, "rolling_hash31(NULL)") === Seq(Row(null)))
@@ -171,7 +163,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
     * and the floats are not exact binary fractions. */
   private lazy val kernelInput: String = {
     val path = java.nio.file.Files.createTempDirectory("graft-kernels").resolve("input").toString
-    plain.range(0, 240, 1, 2).selectExpr("id",
+    factory.range(0, 240, 1, 2).selectExpr("id",
       "transform(sequence(0, id % 7), i -> CAST((id * 0.37 + i * 1.3) % 5.1 - 2.2 AS FLOAT)) AS fa",
       "transform(sequence(0, id % 5), i -> CAST((id * 0.11 - i * 0.7) % 3.3 AS FLOAT)) AS fb",
       "transform(sequence(0, 8), i -> (id * 31 + i * 7) % 23 - 11) AS la",
@@ -196,9 +188,9 @@ class FunctionCatalogSpec extends AnyFunSuite {
     * columns are all non-null (so generated code takes its non-nullable
     * branch): for each, the results by id and the executed plan. */
   private def kernelRun(call: String, conf: Map[String, String]): Seq[(Seq[Seq[Any]], SparkPlan)] = {
-    conf.foreach { case (k, v) => plain.conf.set(k, v) }
+    conf.foreach { case (k, v) => factory.conf.set(k, v) }
     try {
-      val all = plain.read.parquet(kernelInput)
+      val all = factory.read.parquet(kernelInput)
       val nonNull = all.where(all.columns.map(c => s"$c IS NOT NULL").mkString(" AND "))
       Seq(all, nonNull).map { in =>
         val df = in.selectExpr("id", s"$call AS r")
@@ -208,7 +200,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
         })
         (rows, df.queryExecution.executedPlan)
       }
-    } finally conf.keys.foreach(plain.conf.unset)
+    } finally conf.keys.foreach(factory.conf.unset)
   }
 
   private def kernelProject(p: SparkPlan): Boolean = p.exists {
@@ -221,7 +213,7 @@ class FunctionCatalogSpec extends AnyFunSuite {
     val unsorted = "array(named_struct('k', 1001L, 'c', 3L), named_struct('k', 1L, 'c', 2L))"
     val repeated = "array(named_struct('k', 1L, 'c', 2L), named_struct('k', 1L, 'c', 3L))"
     // sorted input counts as before, through both routes
-    for (s <- Seq(plain, extended)) {
+    for (s <- Seq(factory, cloned)) {
       assert(run(s, s"aligned_counts($sorted, array(1001L, 1L, 2L))").head.getSeq[Long](0) === Seq(3L, 2L, 0L))
       assert(run(s, s"marginal_counts($sorted, array(1L, 5L))").head.getSeq[Long](0) === Seq(5L, 0L))
     }
@@ -233,14 +225,14 @@ class FunctionCatalogSpec extends AnyFunSuite {
       "marginal_counts" -> s"marginal_counts($sorted, array(5L, 1L))",
       "marginal_counts" -> s"marginal_counts($sorted, array(1L, 1L))")
     for ((name, call) <- bad; mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      plain.conf.set("spark.sql.codegen.factoryMode", mode)
+      factory.conf.set("spark.sql.codegen.factoryMode", mode)
       try {
-        val e = intercept[Exception](run(plain, call))
+        val e = intercept[Exception](run(factory, call))
         val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
         assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
           c.getMessage.startsWith(s"$name:") && (c.getMessage.contains("sorted") || c.getMessage.contains("ascending"))),
           s"$mode $call: ${chain.mkString("\n")}")
-      } finally plain.conf.unset("spark.sql.codegen.factoryMode")
+      } finally factory.conf.unset("spark.sql.codegen.factoryMode")
     }
   }
 

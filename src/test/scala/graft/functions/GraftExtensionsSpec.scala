@@ -3,20 +3,20 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
-/** Session built WITH the extensions exposes the functions in plain SQL. */
+/** A factory session carries the extensions: the functions in plain SQL
+  * and both optimizer rules live. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("withExtensions(GraftExtensions) registers the function family for SQL") {
-    // force a FRESH session (getOrCreate would silently return a shared one
-    // and skip extension application); the underlying context is reused
+  test("a factory session has the function family in SQL and both optimizer rules") {
+    // force a FRESH session (getOrCreate would silently return a shared
+    // one); the underlying context is reused
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     // same master as SparkSpec: whichever suite starts the shared context
     // fixes its parallelism for the rest of the run
-    val spark = graft.Sessions.builder("local[4]")
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
+    val spark = graft.Sessions.build("local[4]")
     try {
+      assert(spark.sparkContext.getConf.get("spark.sql.extensions") === classOf[GraftExtensions].getName)
       val r = spark.sql(
         """SELECT vector_dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
           |                      array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,

@@ -20,7 +20,6 @@ class RangeBucketSearchSpec extends SparkSpec {
   }
 
   test("SQL surface: bucket = count of boundaries ≤ row, asc and desc") {
-    VectorExpressions.register(spark)
     val df = Seq(1L, 5L, 10L, 15L, 20L).toDF("v")
     // asc boundaries 5, 15: v=1 → 0; v=5,10 → 1; v=15,20 → 2
     val asc = df.selectExpr(
@@ -39,7 +38,6 @@ class RangeBucketSearchSpec extends SparkSpec {
   }
 
   test("builder rejects non-literal metadata and type-mismatched boundaries") {
-    VectorExpressions.register(spark)
     val df = Seq((1L, "a")).toDF("v", "s")
     // non-foldable desc flags
     val e1 = intercept[Exception] {
@@ -85,7 +83,6 @@ class RangeBucketSearchSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen (null keys included)") {
-    VectorExpressions.register(spark)
     val df = Seq(Some(1L), Some(7L), None, Some(20L)).toDF("v")
     val q = """range_bucket_search(array(false),
                array(struct(CAST(5 AS BIGINT)), struct(CAST(15 AS BIGINT))), v) AS b"""

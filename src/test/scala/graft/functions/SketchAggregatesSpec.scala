@@ -13,7 +13,6 @@ class SketchAggregatesSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val data = {
-    VectorExpressions.register(spark)
     // 3 groups × 400 rows with duplicates (each value appears twice)
     (0 until 1200).map(i => (s"g${i % 3}", (i / 2 * 2654435761L) % 1000000007L))
       .toDF("g", "hv")

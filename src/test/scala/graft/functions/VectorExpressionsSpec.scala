@@ -11,7 +11,6 @@ class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val vecs = {
-    VectorExpressions.register(spark)
     Seq(
       (1L, Array(0.25f, -0.5f, 0.125f, 3.0f)),
       (2L, Array(1.5f, 2.5f, -0.75f, 0.0f)),
@@ -55,7 +54,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("rolling_hash31 matches the aggregate() fold and handles empty strings") {
-    VectorExpressions.register(spark)
     val out = Seq("hello world", "", "a", "spark graft engine")
       .toDF("text")
       .select(
@@ -69,7 +67,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("window_hash31 == per-substring rolling_hash31 at every position; short strings empty") {
-    VectorExpressions.register(spark)
     val out = Seq("hello world", "abcdefgh", "abcdefghi", "mississippi river banks", "abc", "")
       .toDF("text")
       .select(col("text"),
@@ -102,7 +99,6 @@ class VectorExpressionsSpec extends SparkSpec {
       }
     }
     // the expression agrees with the kernel through codegen + SQL surface
-    VectorExpressions.register(spark)
     val rows = spark.range(64)
       .selectExpr("id % 8 AS x", "id div 8 AS y")
       .selectExpr("x", "y", "hilbert_d2(x, y, 3) AS h")
@@ -184,7 +180,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("damerau_levenshtein codegen path agrees with the kernel and lev lower-bounds it") {
-    VectorExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     val pairs = (1 to 200).map { i =>
       def word = (0 until 3 + rnd.nextInt(8)).map(_ => ('a' + rnd.nextInt(4)).toChar).mkString
@@ -205,8 +200,7 @@ class VectorExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("expressions work through the SQL surface after register()") {
-    VectorExpressions.register(spark)
+  test("expressions work through the SQL surface of a factory session") {
     vecs.createOrReplaceTempView("vecs_t")
     val r = spark.sql(
       "SELECT vector_dot_f32(v, v) AS d, vector_norm_f32(v) AS n FROM vecs_t WHERE id = 1")

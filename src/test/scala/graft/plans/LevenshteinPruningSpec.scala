@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
 class LevenshteinPruningSpec extends SparkSpec {
   import spark.implicits._
 
-  LevenshteinPruning.register(spark)
-
   private val pairs = Seq(
     ("kitten", "sitting"),      // dist 3
     ("kitten", "kitten"),       // dist 0

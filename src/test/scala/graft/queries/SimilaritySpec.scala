@@ -101,7 +101,6 @@ class SimilaritySpec extends SparkSpec {
     // expectation (top-3 of 499 ≈ 0.18 hits), so a regression to chance
     // fails loudly while data-draw sensitivity does not.
     import graft.functions.VectorExpressions._
-    register(spark)
     val pqSf = "/root/testdata/sf0.01"
     val out = Similarity.topkPq.fn(spark, pqSf).cache()
     assert(out.count() === 30, "10 queries x top-3")
