@@ -316,15 +316,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q_range_join_auto: the RangeJoinBinning rule fires — bin explode, no nested loop") {
-    def explodes(s: org.apache.spark.sql.SparkSession) = {
-      val opt = SparkEntry.queries("q_range_join_auto")(s, sf).queryExecution.optimizedPlan
-      (opt.collect { case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size, opt)
-    }
-    val (n, opt) = explodes(spark)
-    assert(n == 1, s"expected the bin explode:\n$opt")
-    // the explode is the rule's: a clone without it plans none
-    assert(explodes(excluding(spark, graft.plans.RangeJoinBinning))._1 == 0)
+    def explodes(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
+    }.size
     val df = SparkEntry.queries("q_range_join_auto")(spark, sf)
+    assert(explodes(df) == 1, s"expected the bin explode:\n${df.queryExecution.optimizedPlan}")
+    // the explode is the rule's: a clone without it plans none
+    val off = SparkEntry.queries("q_range_join_auto")(excluding(spark, graft.plans.RangeJoinBinning), sf)
+    assert(explodes(off) == 0)
     val phys = df.queryExecution.executedPlan.toString
     assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
       s"naive range join must not plan as a nested loop:\n$phys")
