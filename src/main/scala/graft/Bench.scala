@@ -1,32 +1,23 @@
 package graft
+/** The operator-suite bench: every [[SparkEntry.queries]] query once, in
+  * name order, after the shared-table prewarm, each timed and counted by
+  * [[Meter.measure]], then a warm re-run of the slowest rows. Writes the
+  * full per-query artifact to `SPARK_GRAFT_BENCH_OUT` (default
+  * `target/bench.json`) and ends stdout with a compact summary line.
+  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+  * (default 4), SPARK_GRAFT_ONLY.
+  */
 object Bench {
-  private val gcBeans = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.toSeq
+  /** One measured query. `sec` is its wall seconds, −1 when it failed. */
+  final case class Row(name: String, run: Meter.Run) {
+    def sec: Double = if (run.failure.isEmpty) run.total else -1.0
   }
-  /** Cumulative stop-the-world GC time, ms. */
-  private def gcMillis: Long = gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum
-  /** Cumulative process CPU time, ms (-1 if the platform bean is absent). */
-  private def cpuMillis: Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1000000L
-      case _ => -1L
-    }
-
-  /** One measured query: wall seconds (−1 = failed), the gc-pause and
-    * process-CPU deltas that attribute a wall outlier to pause vs plan
-    * cost, and the shuffle bytes the query's tasks wrote ([[Meter]]'s
-    * write side, which counts each exchange once: "shuffles carry band
-    * keys, not text" is enforced by the artifact every round). */
-  final case class Row(name: String, sec: Double, gcMs: Long, cpuMs: Long,
-      shuffleBytes: Long)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.build(s"local[$cpus]")
     spark.sparkContext.setLogLevel("WARN")
-    val meter = Meter(spark.sparkContext)
     // absorb session/executor init so it isn't billed to whichever query
     // happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -66,37 +57,14 @@ object Bench {
       System.err.println(f"[bench] prewarm $prewarmSec%.1f s (" +
         prewarmFamilies.map { case (f, t) => f"$f $t%.1f" }.mkString(", ") + ")")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      // settled reads run OUTSIDE the timed window, so a query's trailing
-      // task-end events bill to it, not to the next row
-      val sh0 = meter.settled().shuffleWriteBytes
-      val gc0 = gcMillis
-      val cpu0 = cpuMillis
-      val t0 = System.nanoTime()
-      // noop-datasource write, NOT count(): count() lets Catalyst prune the
-      // final projection, so pure-projection queries (string kernels,
-      // fingerprints…) would be timed as scan-and-count. The noop sink
-      // evaluates every output column and discards the rows.
-      val ok = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-      } catch {
-        case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-      }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val gcMs = gcMillis - gc0
-      val cpuMs = if (cpu0 < 0) -1L else cpuMillis - cpu0
-      // a failed query's in-flight tasks may report bytes seconds later —
-      // wait them out (<= ~5 s) so they bill to this row, not the next
-      val shBytes = meter.settled(maxSpins = if (ok) 40 else 1000).shuffleWriteBytes - sh0
-      // release this query's scratch caches so storage memory doesn't
-      // accumulate across the suite (the r4 sketch-family regression);
-      // session-shared memos are not leased and survive
-      graft.ops.Caches.drain()
-      // a failed query reports -1, never a plausible elapsed time
-      Row(name, if (ok) elapsed else -1.0, gcMs, cpuMs, shBytes)
+    def measured(label: String)(name: String): Row = {
+      val r = Row(name, Meter.measure(spark)(SparkEntry.queries(name)(spark, sfDir)))
+      r.run.failure.foreach(e => System.err.println(s"[bench] $label$name FAILED: ${e.getMessage}"))
+      r
     }
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map(measured(""))
     // Self-refuting outlier pass: re-run the slowest rows once, warm, and
     // record the second timing beside the first — a transient row refutes
     // itself (retry ≪ first) while a real plan cost reproduces. Coverage
@@ -104,32 +72,13 @@ object Bench {
     // (a contended pass can park several noise rows just under it, still
     // polluting the total un-refuted), so the top-10 wall-time rows get a
     // retry regardless of magnitude. The reported `value`/`queries` stay
-    // the honest single-pass numbers.
+    // the honest single-pass numbers; a failed retry reports -1, so a
+    // quick throw cannot "refute" a real regression.
     val retries = retrySelection(results)
-      .map { r =>
-        val t0 = System.nanoTime()
-        // same measurement discipline as the first pass: failure reports
-        // -1 (a quick throw must not masquerade as a fast retry and
-        // "refute" a real regression), and the cache drain runs OUTSIDE
-        // the timed window, exactly like the main loop
-        val ok = try {
-          SparkEntry.queries(r.name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] retry ${r.name} FAILED: ${e.getMessage}"); false
-        }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        graft.ops.Caches.drain()
-        r.name -> (if (ok) elapsed else -1.0)
-      }
+      .map(r => r.name -> measured("retry ")(r.name).sec)
     val (total, failed, gcTotal) = totals(results)
     val heapMax = Runtime.getRuntime.maxMemory / (1024 * 1024)
-    val inflation = cpuInflation(results, baselineFor(sfDir))
-    if (rerunAdvised(inflation))
-      System.err.println(f"[bench] RERUN-ADVISED: cpu_inflation $inflation%.2f > " +
-        f"$InflationRerunThreshold — contended pass; re-run before committing this artifact")
-    val full = fullJson(results, retries, prewarmFamilies, prewarmSec, heapMax, sfDir,
-      inflation)
+    val full = fullJson(results, retries, prewarmFamilies, prewarmSec, heapMax, sfDir)
     // full per-query map goes to a file: the driver keeps only the last
     // ~2000 chars of stdout, and the 200+-query map is >6 KB — it can never
     // fit there
@@ -153,14 +102,18 @@ object Bench {
     // build.sbt's StdoutOutput/showSuccess settings keep sbt from
     // prefixing or appending to it.
     println(summaryJson(total, results.size, failed, prewarmSec, gcTotal,
-      effectiveCores(results), inflation, sfDir, out))
+      taskCpuCores(results), sfDir, out))
   }
 
   /** (wall-seconds total excluding failed rows' −1 sentinel, failed
-    * count, gc-ms total) — the ONE derivation both artifacts use, so
+    * count, task-GC-ms total) — the ONE derivation both artifacts use, so
     * bench.json and the stdout summary can never disagree. */
   private[graft] def totals(results: Seq[Row]): (Double, Int, Long) =
-    (results.map(_.sec).filter(_ >= 0).sum, results.count(_.sec < 0), results.map(_.gcMs).sum)
+    (results.map(_.sec).filter(_ >= 0).sum, results.count(_.sec < 0),
+      results.map(_.run.counts.gcMs).sum)
+
+  /** Task CPU of a row, ms. */
+  private def cpuMs(r: Row): Long = r.run.counts.cpuNs / 1000000L
 
   // ---- artifact builders, separated from main so BenchFormatSpec can pin
   // the driver contract (a bare single-line JSON payload) as a unit test
@@ -169,16 +122,15 @@ object Bench {
   private def jmap(entries: Seq[(String, String)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** Effective cores this run actually got: suite process-CPU seconds /
-    * suite wall seconds. The sandbox VM is time-shared by its host —
-    * identical code measured 145.5 s and 184.0 s minutes apart with
-    * per-query CPU uniformly inflated — so a slow PASS (vs a slow QUERY,
-    * which gc_ms/cpu_ms already attribute) needs its own tell. A healthy
-    * 32-thread suite reads ~6–12; a contended pass reads visibly lower
-    * WITH proportionally higher wall. -1 if the CPU bean is absent. */
-  private[graft] def effectiveCores(results: Seq[Row]): Double = {
-    val wall = results.map(_.sec).filter(_ >= 0).sum
-    val cpu = results.collect { case r if r.sec >= 0 && r.cpuMs >= 0 => r.cpuMs }.sum
+  /** Cores the suite's tasks kept busy: task-CPU seconds over wall
+    * seconds, both over the rows that passed (2 decimals; −1 without
+    * either). The host is time-shared, so a pass slow for want of CPU
+    * (rather than one slow query) reads low here with proportionally
+    * higher wall. */
+  private[graft] def taskCpuCores(results: Seq[Row]): Double = {
+    val ok = results.filter(_.sec >= 0)
+    val wall = ok.map(_.sec).sum
+    val cpu = ok.map(cpuMs).sum
     if (wall <= 0 || cpu <= 0) -1.0
     else math.rint(cpu / 10.0 / wall) / 100.0 // cpu ms → cores, 2 decimals
   }
@@ -186,73 +138,6 @@ object Bench {
   /** Host load average at call time (OS bean; -1 where unsupported). */
   private def loadAvg: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
-  /** The run-level contention tell effective_cores can't provide.
-    * CACHE-THRASH contention (another tenant evicting this JVM's cache
-    * lines) inflates process-CPU time in lockstep with wall time, so
-    * cpu/wall reads healthy on a pass that is uniformly 1.4× slower —
-    * the r9 204 s-vs-150 s driver/judge gap where both passes read
-    * effective_cores 5.08. Comparing each query's cpu_ms against a
-    * COMMITTED warm baseline separates the cases: plan changes move a
-    * few queries a lot (the retry column attributes those); host
-    * contention moves the MEDIAN ratio uniformly above 1. Healthy ≈
-    * 0.9–1.1; the r9 driver pass would have read ~1.35. Returns the
-    * median of per-query cpu_ms / baseline_cpu_ms over queries present
-    * in both (failed rows and absent-CPU-bean rows excluded); −1 when no
-    * baseline applies (different sf, missing resource, empty overlap). */
-  private[graft] def cpuInflation(results: Seq[Row], baseline: Map[String, Long]): Double = {
-    val ratios = results.collect {
-      case r if r.sec >= 0 && r.cpuMs > 0 && baseline.getOrElse(r.name, 0L) > 0L =>
-        r.cpuMs.toDouble / baseline(r.name)
-    }.sorted
-    val n = ratios.length
-    if (n == 0) -1.0
-    else {
-      val med = if (n % 2 == 1) ratios(n / 2) else (ratios(n / 2 - 1) + ratios(n / 2)) / 2
-      math.rint(med * 100) / 100
-    }
-  }
-
-  /** Committed warm per-query cpu_ms baseline, loaded from the classpath
-    * resource `graft/bench_cpu_baseline.tsv`. Format: a `# sf=<basename>`
-    * header naming the tier the baseline was measured at, then
-    * `name<TAB>cpuMs` lines. Returns empty (→ cpu_inflation −1) when the
-    * resource is absent or was measured at a DIFFERENT sf tier than
-    * `sfDir` — a ratio across tiers would be meaningless. */
-  private[graft] def baselineFor(sfDir: String): Map[String, Long] = {
-    val in = getClass.getClassLoader.getResourceAsStream("graft/bench_cpu_baseline.tsv")
-    if (in == null) Map.empty
-    else try {
-      val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      val sfName = new java.io.File(sfDir).getName
-      val declared = lines.collectFirst {
-        case l if l.startsWith("# sf=") => l.stripPrefix("# sf=").trim
-      }
-      if (!declared.contains(sfName)) Map.empty
-      else lines.filterNot(_.startsWith("#")).flatMap { l =>
-        l.split('\t') match {
-          case Array(name, ms) => scala.util.Try(name -> ms.trim.toLong).toOption
-          case _ => None
-        }
-      }.toMap
-    } catch {
-      case scala.util.control.NonFatal(_) => Map.empty
-    } finally in.close()
-  }
-
-  /** Pass-health self-gate (the r10 lesson: the committed BENCH_r10.json
-    * was the round's noisiest pass at inflation 1.25 while four healthy
-    * same-HEAD passes existed). Above this [[cpuInflation]] the artifact
-    * carries `rerun_advised: true` and main prints a loud stderr marker —
-    * the round-close procedure re-runs once before committing instead of
-    * leading the record with a contended sample. 1.15 is the top of the
-    * calibrated healthy band (NOTES r10: healthy passes read 1.0–1.15). */
-  private[graft] val InflationRerunThreshold = 1.15
-
-  /** True when the pass self-reports contention worth a re-run; the −1
-    * no-baseline sentinel is NOT advice to re-run (nothing to compare). */
-  private[graft] def rerunAdvised(inflation: Double): Boolean =
-    inflation > InflationRerunThreshold
 
   /** Rows at or above this first-pass elapsed get one warm re-run whose
     * timing lands in `retry_sec` — the designed floors (iterative CC,
@@ -276,35 +161,34 @@ object Bench {
   }
 
   /** The full artifact written to target/bench.json: per-query wall
-    * seconds plus the gc-pause / process-CPU deltas and shuffle-write
-    * bytes that attribute any wall-time outlier to pause vs plan vs
-    * data-volume cost, per-family prewarm seconds, the run-level
-    * contention tells (effective_cores, load_avg_end), and a warm
-    * `retry_sec` re-run of every slowest row so a transient outlier
-    * refutes itself in the artifact. */
+    * seconds, its build/plan/exec split, jobs and tasks, and the task-GC,
+    * task-CPU and shuffle-write figures that attribute any wall-time
+    * outlier to pause vs compute vs data-volume cost (all from the row's
+    * [[Meter.Run]]), per-family prewarm seconds, the run-level tells
+    * (task_cpu_cores, load_avg_end), and a warm `retry_sec` re-run of
+    * every slowest row so a transient outlier refutes itself in the
+    * artifact. */
   private[graft] def fullJson(
       results: Seq[Row],
       retries: Seq[(String, Double)],
       prewarmFamilies: Seq[(String, Double)],
-      prewarmSec: Double, heapMaxMb: Long, sfDir: String,
-      cpuInflation: Double = -1.0): String = {
-    val qs = jmap(results.map(r => r.name -> r.sec.toString))
-    val gcs = jmap(results.map(r => r.name -> r.gcMs.toString))
-    val cpus = jmap(results.map(r => r.name -> r.cpuMs.toString))
+      prewarmSec: Double, heapMaxMb: Long, sfDir: String): String = {
+    def per(f: Row => Any) = jmap(results.map(r => r.name -> f(r).toString))
     // bytes → decimal MB at 3 decimals: readable in the artifact, still
     // resolves a 1 KB band-key shuffle from a 100 MB text shuffle
-    val shs = jmap(results.map(r =>
-      r.name -> (math.rint(r.shuffleBytes / 1000.0) / 1000.0).toString))
+    val shs = per(r => math.rint(r.run.counts.shuffleWriteBytes / 1000.0) / 1000.0)
     val rts = jmap(retries.map { case (k, v) => k -> v.toString })
     val pws = jmap(prewarmFamilies.map { case (k, v) => k -> v.toString })
     val (total, _, gcTotal) = totals(results)
     s"""{"metric":"total","value":$total,"unit":"sec","prewarm_sec":$prewarmSec,""" +
       s""""prewarm_family_sec":$pws,""" +
-      s""""gc_ms_total":$gcTotal,"heap_max_mb":$heapMaxMb,""" +
-      s""""effective_cores":${effectiveCores(results)},"load_avg_end":$loadAvg,""" +
-      s""""cpu_inflation":$cpuInflation,"rerun_advised":${rerunAdvised(cpuInflation)},""" +
-      s""""queries":$qs,"gc_ms":$gcs,"cpu_ms":$cpus,"shuffle_mb":$shs,""" +
-      s""""retry_sec":$rts,"sf":"$sfDir"}"""
+      s""""task_gc_ms_total":$gcTotal,"heap_max_mb":$heapMaxMb,""" +
+      s""""task_cpu_cores":${taskCpuCores(results)},"load_avg_end":$loadAvg,""" +
+      s""""queries":${per(_.sec)},"build_sec":${per(_.run.build)},""" +
+      s""""plan_sec":${per(_.run.plan)},"exec_sec":${per(_.run.exec)},""" +
+      s""""jobs":${per(_.run.counts.jobs)},"tasks":${per(_.run.counts.tasks)},""" +
+      s""""task_gc_ms":${per(_.run.counts.gcMs)},"task_cpu_ms":${per(cpuMs)},""" +
+      s""""shuffle_mb":$shs,"retry_sec":$rts,"sf":"$sfDir"}"""
   }
 
   /** The compact final-stdout-line summary the driver parses; must stay
@@ -312,11 +196,8 @@ object Bench {
     * ~2000 chars of stdout). */
   private[graft] def summaryJson(
       total: Double, n: Int, failed: Int, prewarmSec: Double,
-      gcTotal: Long, effCores: Double, cpuInflation: Double,
-      sfDir: String, detail: String): String =
+      gcTotal: Long, taskCpuCores: Double, sfDir: String, detail: String): String =
     s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,""" +
-      s""""prewarm_sec":$prewarmSec,"gc_ms_total":$gcTotal,""" +
-      s""""effective_cores":$effCores,"cpu_inflation":$cpuInflation,""" +
-      s""""rerun_advised":${rerunAdvised(cpuInflation)},""" +
-      s""""sf":"$sfDir","detail":"$detail"}"""
+      s""""prewarm_sec":$prewarmSec,"task_gc_ms_total":$gcTotal,""" +
+      s""""task_cpu_cores":$taskCpuCores,"sf":"$sfDir","detail":"$detail"}"""
 }

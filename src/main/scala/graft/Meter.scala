@@ -4,12 +4,15 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Per-SparkContext execution statistics: the one listener that counts
   * what queries cost in jobs, stages, tasks and task metrics, and keeps
   * each recent job's wall time, stage count and callsite. Obtain it with
   * `Meter(sc)`, which registers it once per context; a span of work costs
-  * the difference of two [[settled]] reads taken around it.
+  * the difference of two [[settled]] reads taken around it, and one query
+  * costs the [[Meter.Run]] that [[Meter.measure]] returns.
   */
 final class Meter private (sc: SparkContext) extends SparkListener {
   import Meter._
@@ -108,6 +111,47 @@ object Meter {
   /** One job: submission time (`System.nanoTime`), wall seconds, the
     * stages it planned (skipped ones included) and its callsite. */
   final case class Job(id: Int, startNs: Long, seconds: Double, stages: Int, callSite: String)
+
+  /** One measured query: driver seconds per phase, the meter's counts
+    * over the run, the jobs it submitted, and what it threw, if it did. */
+  final case class Run(build: Double, plan: Double, exec: Double, counts: Counts,
+      jobs: Seq[Job], failure: Option[Throwable]) {
+    def total: Double = build + plan + exec
+  }
+
+  /** The one measurement of a query, which Bench and Probe share. Times
+    * three driver phases: `build`, the `query` closure (DataFrame
+    * construction, relation resolution, analysis); `plan`, forcing the
+    * executed plan (optimizer and physical planning); `exec`, running that
+    * same plan with every output column evaluated (codegen, job
+    * round-trips, tasks). The plan is made once: a noop write would plan
+    * the query again inside its own command, and `count()` would let the
+    * optimizer prune the final projection. Then it settles the meter,
+    * waiting longer after a failure (a failed job's tasks can report
+    * seconds after it), and drains the query's [[graft.ops.Caches]]
+    * leases. A failure in any phase ends the run and is returned, not
+    * thrown; the phases it did not reach read as zero. */
+  def measure(spark: SparkSession)(query: => DataFrame): Run = {
+    val meter = Meter(spark.sparkContext)
+    val c0 = meter.settled()
+    val marks = mutable.ArrayBuffer(System.nanoTime())
+    def mark(): Unit = marks += System.nanoTime()
+    val failure = try {
+      val qe = query.queryExecution
+      mark()
+      qe.executedPlan
+      mark()
+      SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+      None
+    } catch {
+      case e: Throwable => Some(e)
+    }
+    while (marks.size < 4) mark()
+    val counts = meter.settled(maxSpins = if (failure.isEmpty) 40 else 1000) - c0
+    graft.ops.Caches.drain()
+    def sec(i: Int) = (marks(i + 1) - marks(i)) / 1e9
+    Run(sec(0), sec(1), sec(2), counts, meter.jobsSince(marks.head), failure)
+  }
 
   private val meters = mutable.HashMap.empty[SparkContext, Meter]
 

@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Layer-by-layer cost of suite queries. For each query and each data dir
   * it does a first run (session memos and schema inference cold) and a
-  * warm run, each with Bench's noop sink and `Caches.drain` hygiene, and
+  * warm run, each measured by [[Meter.measure]] as Bench measures it, and
   * prints one `PROBE` line per run:
   *  - driver seconds: `build` (the query closure: DataFrame construction,
   *    relation resolution, analysis), `plan` (optimizer and physical
-  *    planning), `exec` (the noop write: codegen, job round-trips, tasks);
+  *    planning), `exec` (the planned query run: codegen, job round-trips,
+  *    tasks);
   *  - the [[Meter]] counts of the run: jobs, stages, tasks; task run, CPU,
   *    GC and blocked seconds; shuffle write/read MB (1e6 bytes), shuffle
   *    write time, fetch wait; memory and disk spill MB; input records;
@@ -66,29 +67,13 @@ object Probe {
       "q_sim_lsh_multiprobe", "q_sim_maxsim", "q_sim_pq", "q_sim_recall", "q_sim_topk",
       "q_sketch_countmin", "q_text_fingerprint"))
 
-  /** One measured run: driver seconds per phase, the meter's counts over
-    * it and the jobs it submitted. */
-  private final case class Run(build: Double, plan: Double, exec: Double,
-      counts: Meter.Counts, jobs: Seq[Meter.Job]) {
-    def total: Double = build + plan + exec
+  private def run(spark: SparkSession, name: String, dir: String): Meter.Run = {
+    val r = Meter.measure(spark)(SparkEntry.queries(name)(spark, dir))
+    r.failure.foreach(throw _)
+    r
   }
 
-  private def run(spark: SparkSession, name: String, dir: String): Run = {
-    val meter = Meter(spark.sparkContext)
-    val c0 = meter.settled()
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, dir)
-    val t1 = System.nanoTime()
-    df.queryExecution.executedPlan
-    val t2 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    val t3 = System.nanoTime()
-    graft.ops.Caches.drain()
-    Run((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, meter.settled() - c0,
-      meter.jobsSince(t0))
-  }
-
-  private def line(name: String, dir: String, label: String, r: Run, prev: Option[Double]): String = {
+  private def line(name: String, dir: String, label: String, r: Meter.Run, prev: Option[Double]): String = {
     val c = r.counts
     def mb(b: Long) = b / 1e6
     val run = c.runMs / 1e3

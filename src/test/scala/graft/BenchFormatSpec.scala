@@ -14,19 +14,30 @@ class BenchFormatSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
 
+  /** A row whose measured run took `sec` (a quarter building, a quarter
+    * planning, half executing) in 2 jobs of 8 tasks, or that failed after
+    * 0.5 s when `sec` is −1. */
+  private def row(name: String, sec: Double, gcMs: Long, cpuMs: Long, shuffleBytes: Long) = {
+    val t = if (sec < 0) 0.5 else sec
+    Bench.Row(name, Meter.Run(t / 4, t / 4, t / 2,
+      Meter.Counts(jobs = 2, tasks = 8, cpuNs = cpuMs * 1000000L, gcMs = gcMs,
+        shuffleWriteBytes = shuffleBytes),
+      Nil, if (sec < 0) Some(new RuntimeException("boom")) else None))
+  }
+
   // representative result rows: a sub-second query, a long one whose
   // Double renders in scientific-notation-free form, and a FAILED row
   // (elapsed −1, the sentinel the driver must be able to tell apart)
   private val results = Seq(
-    Bench.Row("q_alpha", 0.123456789, 12L, 340L, 2048L),
-    Bench.Row("q_beta", 35.900000001, 18000L, 113000L, 104857600L),
-    Bench.Row("q_failed", -1.0, 0L, -1L, 0L))
+    row("q_alpha", 0.123456789, 12L, 340L, 2048L),
+    row("q_beta", 35.900000001, 18000L, 113000L, 104857600L),
+    row("q_failed", -1.0, 0L, 9000L, 0L))
 
   test("full artifact is one line of strict JSON with per-query maps") {
     val s = Bench.fullJson(results, Seq("q_beta" -> 1.07),
       prewarmFamilies = Seq("dedup" -> 12.5, "curation" -> 3.25),
       prewarmSec = 41.93, heapMaxMb = 24576L,
-      sfDir = "/root/testdata/sf0.1", cpuInflation = 1.08)
+      sfDir = "/root/testdata/sf0.1")
     assert(!s.contains("\n"), "artifact must be a single line")
     val node = mapper.readTree(s) // throws on any malformed JSON
     assert(node.get("metric").asText() == "total")
@@ -35,24 +46,31 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(math.abs(node.get("value").asDouble() - (0.123456789 + 35.900000001)) < 1e-9)
     assert(node.get("queries").size() == 3)
     assert(node.get("queries").get("q_failed").asDouble() == -1.0)
-    assert(node.get("gc_ms").get("q_beta").asLong() == 18000L)
-    assert(node.get("cpu_ms").get("q_alpha").asLong() == 340L)
+    // the layers of each row's measured run; a failed row keeps its phases
+    assert(node.get("build_sec").get("q_beta").asDouble() == 35.900000001 / 4)
+    assert(node.get("plan_sec").get("q_beta").asDouble() == 35.900000001 / 4)
+    assert(node.get("exec_sec").get("q_beta").asDouble() == 35.900000001 / 2)
+    assert(node.get("exec_sec").get("q_failed").asDouble() == 0.25)
+    assert(node.get("jobs").get("q_alpha").asLong() == 2L)
+    assert(node.get("tasks").get("q_alpha").asLong() == 8L)
+    // task GC and task CPU, renamed from the process figures of r10–r13
+    assert(node.get("task_gc_ms").get("q_beta").asLong() == 18000L)
+    assert(node.get("task_cpu_ms").get("q_alpha").asLong() == 340L)
+    for (gone <- Seq("gc_ms", "cpu_ms", "gc_ms_total", "effective_cores",
+        "cpu_inflation", "rerun_advised"))
+      assert(!node.has(gone), gone)
     assert(node.get("prewarm_sec").asDouble() == 41.93)
     // per-family prewarm attribution: a 3× regression in one family's
     // snapshot build must be visible in the artifact, not one lump
     assert(node.get("prewarm_family_sec").get("dedup").asDouble() == 12.5)
     assert(node.get("prewarm_family_sec").get("curation").asDouble() == 3.25)
     assert(node.get("heap_max_mb").asLong() == 24576L)
-    assert(node.get("gc_ms_total").asLong() == 18012L)
-    // contention tells: cpu only over non-failed rows (340 + 113000 ms
-    // over 36.02 wall-s ≈ 3.15 cores); load_avg is whatever the OS bean
+    assert(node.get("task_gc_ms_total").asLong() == 18012L)
+    // contention tells: task cpu only over non-failed rows (340 + 113000
+    // ms over 36.02 wall-s ≈ 3.15 cores); load_avg is whatever the OS bean
     // says but must parse as a number
-    assert(math.abs(node.get("effective_cores").asDouble() - 3.15) < 0.01)
+    assert(math.abs(node.get("task_cpu_cores").asDouble() - 3.15) < 0.01)
     assert(node.get("load_avg_end").isNumber)
-    // the run-level cache-thrash tell rides in the artifact, with the
-    // self-gate verdict beside it (1.08 is inside the healthy band)
-    assert(node.get("cpu_inflation").asDouble() == 1.08)
-    assert(!node.get("rerun_advised").asBoolean())
     // outlier re-runs: a transient 35.9s row carrying a 1.07s retry
     // refutes itself inside the artifact
     assert(node.get("retry_sec").get("q_beta").asDouble() == 1.07)
@@ -66,8 +84,8 @@ class BenchFormatSpec extends AnyFunSuite {
     // 12 sub-threshold rows (0.1..1.2 s) + one over threshold + one failed:
     // the hard 2.5 s edge alone would retry only q_big; top-K must pull in
     // the 10 slowest passing rows too, and q_failed must never appear
-    val rows = (1 to 12).map(i => Bench.Row(f"q_r$i%02d", i * 0.1, 0L, 0L, 0L)) ++
-      Seq(Bench.Row("q_big", 9.9, 0L, 0L, 0L), Bench.Row("q_failed", -1.0, 0L, 0L, 0L))
+    val rows = (1 to 12).map(i => row(f"q_r$i%02d", i * 0.1, 0L, 0L, 0L)) ++
+      Seq(row("q_big", 9.9, 0L, 0L, 0L), row("q_failed", -1.0, 0L, 0L, 0L))
     val picked = Bench.retrySelection(rows).map(_.name)
     assert(picked.contains("q_big"))
     assert(!picked.contains("q_failed"))
@@ -79,8 +97,8 @@ class BenchFormatSpec extends AnyFunSuite {
 
   test("compact summary is one line of strict JSON small enough for the driver's tail") {
     val s = Bench.summaryJson(total = 152.7682598430001, n = 210, failed = 0,
-      prewarmSec = 36.920548792, gcTotal = 828L, effCores = 7.42,
-      cpuInflation = 1.02, sfDir = "/root/testdata/sf0.1", detail = "target/bench.json")
+      prewarmSec = 36.920548792, gcTotal = 828L, taskCpuCores = 3.42,
+      sfDir = "/root/testdata/sf0.1", detail = "target/bench.json")
     assert(!s.contains("\n"))
     // the driver keeps only the last ~2000 chars of stdout; leave ample
     // headroom so field additions can't silently push it over
@@ -90,67 +108,11 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(node.get("n").asInt() == 210)
     assert(node.get("failed").asInt() == 0)
     assert(node.get("value").asDouble() > 0)
-    assert(node.get("cpu_inflation").asDouble() == 1.02)
-    assert(!node.get("rerun_advised").asBoolean())
+    assert(node.get("task_gc_ms_total").asLong() == 828L)
+    assert(node.get("task_cpu_cores").asDouble() == 3.42)
+    for (gone <- Seq("gc_ms_total", "effective_cores", "cpu_inflation", "rerun_advised"))
+      assert(!node.has(gone), gone)
     assert(node.get("detail").asText() == "target/bench.json")
-  }
-
-  test("rerun_advised: fires above the calibrated healthy band only") {
-    // the r10 lesson: the committed artifact was an inflation-1.25 pass
-    // while four healthy same-HEAD passes existed — the artifact must
-    // self-adjudicate so the round-close procedure re-runs instead of
-    // committing the noisiest sample. The no-baseline −1 sentinel means
-    // "nothing to compare", never "re-run".
-    assert(!Bench.rerunAdvised(1.0))
-    assert(!Bench.rerunAdvised(Bench.InflationRerunThreshold)) // at the line: healthy
-    assert(Bench.rerunAdvised(1.25))
-    assert(!Bench.rerunAdvised(-1.0))
-    // and the flag rides in both artifacts when a pass IS contended
-    val contended = Bench.summaryJson(100.0, 10, 0, 1.0, 5L, 5.0, 1.25,
-      "/root/testdata/sf0.1", "target/bench.json")
-    assert(mapper.readTree(contended).get("rerun_advised").asBoolean())
-    val full = Bench.fullJson(results, Seq.empty, Seq.empty, 0.0, 1L, "sf",
-      cpuInflation = 1.31)
-    assert(mapper.readTree(full).get("rerun_advised").asBoolean())
-  }
-
-  test("cpu_inflation: median ratio over the baseline overlap; -1 when inapplicable") {
-    // 5 overlapping rows: ratios 1.0, 1.0, 1.4, 2.0, 0.5 → median 1.0
-    // even though two rows spiked (plan outliers belong to retry_sec, the
-    // MEDIAN isolates uniform cache-thrash contention); failed rows and
-    // rows missing from the baseline are excluded
-    val rows = Seq(
-      Bench.Row("q_a", 1.0, 0L, 1000L, 0L),
-      Bench.Row("q_b", 1.0, 0L, 2000L, 0L),
-      Bench.Row("q_c", 1.0, 0L, 1400L, 0L),
-      Bench.Row("q_d", 1.0, 0L, 4000L, 0L),
-      Bench.Row("q_e", 1.0, 0L, 500L, 0L),
-      Bench.Row("q_failed", -1.0, 0L, 9000L, 0L), // excluded: failed
-      Bench.Row("q_nobase", 1.0, 0L, 9000L, 0L)) // excluded: not in baseline
-    val base = Map("q_a" -> 1000L, "q_b" -> 2000L, "q_c" -> 1000L,
-      "q_d" -> 2000L, "q_e" -> 1000L, "q_failed" -> 1000L)
-    assert(Bench.cpuInflation(rows, base) == 1.0)
-    // uniform 1.35x contention (the r9 204-vs-150 shape) reads as 1.35
-    val contended = rows.take(5).map(r => r.copy(cpuMs = (r.cpuMs * 1.35).toLong))
-    assert(math.abs(Bench.cpuInflation(contended, base) - 1.35) <= 0.01)
-    // no baseline overlap → -1 sentinel
-    assert(Bench.cpuInflation(rows, Map.empty) == -1.0)
-    // even-count overlap: median is the midpoint of the two middle ratios
-    assert(Bench.cpuInflation(rows.take(4), base) == 1.2)
-  }
-
-  test("baselineFor: applies only at the recorded sf tier") {
-    // the committed resource is measured at sf0.1 — a ratio against a
-    // different tier's cpu would be meaningless and must disable itself
-    val atTier = Bench.baselineFor("/root/testdata/sf0.1")
-    val offTier = Bench.baselineFor("/root/testdata/sf0.001")
-    assert(offTier.isEmpty, "baseline must not apply across sf tiers")
-    // if the resource is committed it must parse to a non-empty map with
-    // plausible cpu values
-    if (atTier.nonEmpty) {
-      assert(atTier.valuesIterator.forall(_ > 0L))
-      assert(atTier.keysIterator.forall(_.startsWith("q_")))
-    }
   }
 
   test("extreme Double values still render as valid JSON numbers") {
@@ -158,7 +120,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // that IS valid JSON — pin that a parser agrees, so a pathological
     // timing can never corrupt the artifact
     val s = Bench.fullJson(
-      Seq(Bench.Row("q_x", 1.0e-4, 0L, 0L, 0L), Bench.Row("q_y", 9.87654321e7, 1L, 2L, 0L)),
+      Seq(row("q_x", 1.0e-4, 0L, 0L, 0L), row("q_y", 9.87654321e7, 1L, 2L, 0L)),
       Seq.empty, Seq.empty, 0.0, 1L, "sf")
     val node = mapper.readTree(s)
     assert(node.get("queries").get("q_x").asDouble() == 1.0e-4)
