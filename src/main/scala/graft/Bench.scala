@@ -4,8 +4,8 @@ package graft
   * [[Meter.measure]], then a warm re-run of the slowest rows. Writes the
   * full per-query artifact to `SPARK_GRAFT_BENCH_OUT` (default
   * `target/bench.json`) and ends stdout with a compact summary line.
-  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-  * (default 4), SPARK_GRAFT_ONLY.
+  * Env: SPARK_GRAFT_SF_DIR (the data directory, default the sf0.1 test
+  * tier), SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_ONLY.
   */
 object Bench {
   /** One measured query. `sec` is its wall seconds, −1 when it failed. */

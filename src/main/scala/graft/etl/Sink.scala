@@ -2,6 +2,7 @@ package graft.etl
 
 import java.time.Instant
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, LeafExpression}
@@ -66,16 +67,32 @@ object Sink {
     * once the write job has committed. A failed write removes the staging
     * directory and leaves the previous table as it was. */
   private def replaceStaged(df: DataFrame, path: String): Unit = {
+    val sc = df.sparkSession.sparkContext
     val dst = new Path(path)
-    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = dst.getFileSystem(sc.hadoopConfiguration)
     val staged = dst.suffix("_staging")
+    val tag = s"graft-sink-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
     try df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
     catch {
       case e: Throwable =>
+        awaitTasks(sc, tag)
         Try(fs.delete(staged, true)).failed.foreach(e.addSuppressed)
         throw e
-    }
+    } finally sc.removeJobTag(tag)
     swapIn(fs, staged, dst)
+  }
+
+  /** Wait, at most 10 s, until no task of the jobs tagged `tag` runs. A
+    * failed job returns while its other tasks are still being killed, and
+    * one of them can still write a file under the staging directory. */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(10)
+    GraftSqlBridge.drainListeners(sc)
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
   /** Replace `dst` with the fully written sibling directory `staged`:

@@ -37,7 +37,7 @@ class BenchFormatSpec extends AnyFunSuite {
     val s = Bench.fullJson(results, Seq("q_beta" -> 1.07),
       prewarmFamilies = Seq("dedup" -> 12.5, "curation" -> 3.25),
       prewarmSec = 41.93, heapMaxMb = 24576L,
-      sfDir = "/root/testdata/sf0.1")
+      sfDir = "testdata/sf0.1")
     assert(!s.contains("\n"), "artifact must be a single line")
     val node = mapper.readTree(s) // throws on any malformed JSON
     assert(node.get("metric").asText() == "total")
@@ -98,7 +98,7 @@ class BenchFormatSpec extends AnyFunSuite {
   test("compact summary is one line of strict JSON small enough for the driver's tail") {
     val s = Bench.summaryJson(total = 152.7682598430001, n = 210, failed = 0,
       prewarmSec = 36.920548792, gcTotal = 828L, taskCpuCores = 3.42,
-      sfDir = "/root/testdata/sf0.1", detail = "target/bench.json")
+      sfDir = "testdata/sf0.1", detail = "target/bench.json")
     assert(!s.contains("\n"))
     // the driver keeps only the last ~2000 chars of stdout; leave ample
     // headroom so field additions can't silently push it over

@@ -89,8 +89,8 @@ class MeterSpec extends SparkSpec {
     val run = Meter.measure(s)(shuffleJoin(s))
     assert(run.failure.isEmpty, run.failure)
     assert(rule.runs.get === 1, "one measured run, one optimizer pass")
-    // the sequence Probe used before measure existed: the noop write is a
-    // command with its own query execution, which optimizes the query again
+    // forcing the plan, then a noop write: the write is a command with its
+    // own query execution, which optimizes the query again
     rule.runs.set(0)
     val df = shuffleJoin(s)
     df.queryExecution.executedPlan

@@ -66,6 +66,34 @@ class SinkSpec extends SparkSpec {
     }
   }
 
+  test("overwriteTable: a failed write returns only after the failed job's other tasks end") {
+    val dir = Files.createTempDirectory("graft-sink-await").toString + "/t"
+    // partition 0 throws on its first row; partitions 1-3 hold their first
+    // row for 300 ms through the kill, so they run on after the job fails
+    val hold = udf { (k: Long) =>
+      if (k > 0 && k % 500 == 0) {
+        val end = System.nanoTime() + 300000000L
+        while (System.nanoTime() < end) try Thread.sleep(10) catch { case _: InterruptedException => }
+      }
+      k
+    }
+    val failing = spark.range(0, 2000, 1, 4).select(hold($"id").as("k"))
+      .select($"k", when($"k" === 0, raise_error(lit("injected write failure")))
+        .otherwise(lit("w")).as("v"))
+    val sc = spark.sparkContext
+    val tag = "sink-await-test"
+    sc.addJobTag(tag)
+    try intercept[Exception](Sink.overwriteTable(failing, dir))
+    finally sc.removeJobTag(tag)
+    org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+    val st = sc.statusTracker
+    val stages = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo(_)).flatMap(_.stageIds)
+    assert(stages.nonEmpty)
+    assert(stages.flatMap(st.getStageInfo(_)).map(_.numActiveTasks).sum === 0,
+      "a task still running can write under the staging directory after it is deleted")
+    assert(new java.io.File(dir).getParentFile.list().toSeq === Seq.empty)
+  }
+
   test("overwriteTable after an interrupted swap") {
     def siblings(t: String) = new java.io.File(t).getParentFile.list().toSeq.sorted
     def tree(dir: String) = Files.walk(Path.of(dir)).iterator.asScala.filter(Files.isRegularFile(_))
