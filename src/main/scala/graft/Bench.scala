@@ -161,7 +161,8 @@ object Bench {
   }
 
   /** The full artifact written to target/bench.json: per-query wall
-    * seconds, its build/plan/exec split, jobs and tasks, and the task-GC,
+    * seconds, its build/plan/exec split, the driver thread's CPU seconds
+    * over those phases, jobs and tasks, and the task-GC,
     * task-CPU and shuffle-write figures that attribute any wall-time
     * outlier to pause vs compute vs data-volume cost (all from the row's
     * [[Meter.Run]]), per-family prewarm seconds, the run-level tells
@@ -186,6 +187,7 @@ object Bench {
       s""""task_cpu_cores":${taskCpuCores(results)},"load_avg_end":$loadAvg,""" +
       s""""queries":${per(_.sec)},"build_sec":${per(_.run.build)},""" +
       s""""plan_sec":${per(_.run.plan)},"exec_sec":${per(_.run.exec)},""" +
+      s""""driver_cpu_sec":${per(_.run.driverCpu)},""" +
       s""""jobs":${per(_.run.counts.jobs)},"tasks":${per(_.run.counts.tasks)},""" +
       s""""task_gc_ms":${per(_.run.counts.gcMs)},"task_cpu_ms":${per(cpuMs)},""" +
       s""""shuffle_mb":$shs,"retry_sec":$rts,"sf":"$sfDir"}"""

@@ -112,11 +112,14 @@ object Meter {
     * stages it planned (skipped ones included) and its callsite. */
   final case class Job(id: Int, startNs: Long, seconds: Double, stages: Int, callSite: String)
 
-  /** One measured query: driver seconds per phase, the meter's counts
-    * over the run, the jobs it submitted, and what it threw, if it did. */
-  final case class Run(build: Double, plan: Double, exec: Double, counts: Counts,
+  /** One measured query: driver wall and driver-thread CPU seconds per
+    * phase, the meter's counts over the run, the jobs it submitted, and
+    * what it threw, if it did. */
+  final case class Run(build: Double, plan: Double, exec: Double,
+      buildCpu: Double, planCpu: Double, execCpu: Double, counts: Counts,
       jobs: Seq[Job], failure: Option[Throwable]) {
     def total: Double = build + plan + exec
+    def driverCpu: Double = buildCpu + planCpu + execCpu
   }
 
   /** The one measurement of a query, which Bench and Probe share. Times
@@ -126,16 +129,20 @@ object Meter {
     * same plan with every output column evaluated (codegen, job
     * round-trips, tasks). The plan is made once: a noop write would plan
     * the query again inside its own command, and `count()` would let the
-    * optimizer prune the final projection. Then it settles the meter,
-    * waiting longer after a failure (a failed job's tasks can report
-    * seconds after it), and drains the query's [[graft.ops.Caches]]
-    * leases. A failure in any phase ends the run and is returned, not
-    * thrown; the phases it did not reach read as zero. */
+    * optimizer prune the final projection. Each phase also reads the
+    * calling thread's CPU time, which leaves out tasks and the JVM's JIT
+    * and GC threads. Then it settles the meter, waiting longer after a
+    * failure (a failed job's tasks can report seconds after it), and
+    * drains the query's [[graft.ops.Caches]] leases. A failure in any
+    * phase ends the run and is returned, not thrown; the phases it did not
+    * reach read as zero. */
   def measure(spark: SparkSession)(query: => DataFrame): Run = {
     val meter = Meter(spark.sparkContext)
     val c0 = meter.settled()
-    val marks = mutable.ArrayBuffer(System.nanoTime())
-    def mark(): Unit = marks += System.nanoTime()
+    val threadBean = java.lang.management.ManagementFactory.getThreadMXBean
+    val marks = mutable.ArrayBuffer.empty[(Long, Long)]
+    def mark(): Unit = marks += ((System.nanoTime(), threadBean.getCurrentThreadCpuTime))
+    mark()
     val failure = try {
       val qe = query.queryExecution
       mark()
@@ -149,8 +156,10 @@ object Meter {
     while (marks.size < 4) mark()
     val counts = meter.settled(maxSpins = if (failure.isEmpty) 40 else 1000) - c0
     graft.ops.Caches.drain()
-    def sec(i: Int) = (marks(i + 1) - marks(i)) / 1e9
-    Run(sec(0), sec(1), sec(2), counts, meter.jobsSince(marks.head), failure)
+    def sec(i: Int) = (marks(i + 1)._1 - marks(i)._1) / 1e9
+    def cpu(i: Int) = math.max(0L, marks(i + 1)._2 - marks(i)._2) / 1e9
+    Run(sec(0), sec(1), sec(2), cpu(0), cpu(1), cpu(2), counts,
+      meter.jobsSince(marks.head._1), failure)
   }
 
   private val meters = mutable.HashMap.empty[SparkContext, Meter]

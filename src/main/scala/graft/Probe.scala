@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *  - driver seconds: `build` (the query closure: DataFrame construction,
   *    relation resolution, analysis), `plan` (optimizer and physical
   *    planning), `exec` (the planned query run: codegen, job round-trips,
-  *    tasks);
+  *    tasks), and the driver thread's CPU seconds in each of the three;
   *  - the [[Meter]] counts of the run: jobs, stages, tasks; task run, CPU,
   *    GC and blocked seconds; shuffle write/read MB (1e6 bytes), shuffle
   *    write time, fetch wait; memory and disk spill MB; input records;
@@ -81,7 +81,8 @@ object Probe {
     val gc = c.gcMs / 1e3
     val perRecord = if (c.recordsRead > 0) r.total * 1e6 / c.recordsRead else Double.NaN
     f"PROBE $name $dir $label total=${r.total}%.3f build=${r.build}%.3f " +
-      f"plan=${r.plan}%.3f exec=${r.exec}%.3f jobs=${c.jobs} stages=${c.stages} " +
+      f"plan=${r.plan}%.3f exec=${r.exec}%.3f build_cpu=${r.buildCpu}%.3f " +
+      f"plan_cpu=${r.planCpu}%.3f exec_cpu=${r.execCpu}%.3f jobs=${c.jobs} stages=${c.stages} " +
       f"tasks=${c.tasks} task_run=$run%.2f task_cpu=$cpu%.2f gc=$gc%.2f " +
       f"blocked=${math.max(0.0, run - cpu - gc)}%.2f " +
       f"shuffle_write_mb=${mb(c.shuffleWriteBytes)}%.3f " +

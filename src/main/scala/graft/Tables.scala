@@ -27,10 +27,8 @@ object Tables {
     * freshly WRITTEN scratch dirs stay on direct
     * `spark.read.parquet` (their files change under the path). A
     * [[graft.ops.SessionMemo]], so a stopped session's entries are
-    * released; its cap is far above the number of tables a session
-    * reads. */
-  private val schemaMemo =
-    new graft.ops.SessionMemo[String, org.apache.spark.sql.types.StructType](maxEntries = 1024)
+    * released. */
+  private val schemaMemo = new graft.ops.SessionMemo[String, org.apache.spark.sql.types.StructType]
 
   /** Plain single-file scans. NOTE the testdata parquet is single
     * row group, so every scan is ONE task until the first exchange —

@@ -11,8 +11,9 @@ import org.apache.spark.sql.Dataset
   * memory, and the resulting heap/GC pressure measurably slows
   * late-alphabet queries (the r4 sketch-family regression — q_sketch_hll
   * 1.4s → 9.9s with identical query code). [[lease]] marks a cache as
-  * query-scoped; the harness (`Bench`, `Verify`) calls [[drain]] after
-  * each query's action, so steady-state storage holds only the
+  * query-scoped; [[drain]] runs after each query's action, in
+  * `Meter.measure` (so in `Bench` and `Probe`), `Verify` and
+  * `TierInvariants`, so steady-state storage holds only the
   * deliberately session-shared memos (the dedup shingle/signature tables,
   * the 3-gram hash universe, the ETL pipeline snapshots).
   *
@@ -22,14 +23,13 @@ import org.apache.spark.sql.Dataset
   * once and scan them, which is what the memo stands in for).
   */
 object Caches {
-  private val leases = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
-  private val rddLeases =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  /** One release action per outstanding lease. */
+  private val leases = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
   /** Cache `ds` and register it for release at the next [[drain]]. */
   def lease[T](ds: Dataset[T]): Dataset[T] = {
     ds.cache()
-    leases.add(ds)
+    leases.add(() => ds.unpersist(false))
     ds
   }
 
@@ -49,7 +49,7 @@ object Caches {
     require(rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE,
       s"leaseRdd requires a persisted (localCheckpoint-backed) RDD; " +
         s"RDD ${rdd.id} has storage level NONE")
-    rddLeases.add(rdd)
+    leases.add(() => rdd.unpersist(false))
     ()
   }
 
@@ -58,23 +58,17 @@ object Caches {
     * by contract, so nothing else can be holding them. */
   def drain(): Int = {
     var n = 0
-    var d = leases.poll()
-    while (d != null) {
+    var release = leases.poll()
+    while (release != null) {
       // a lease can outlive its session in tests; unpersist on a stopped
       // context is a no-op we don't want to throw over
-      try d.unpersist(false) catch { case _: Throwable => () }
+      try release() catch { case _: Throwable => () }
       n += 1
-      d = leases.poll()
-    }
-    var r = rddLeases.poll()
-    while (r != null) {
-      try r.unpersist(false) catch { case _: Throwable => () }
-      n += 1
-      r = rddLeases.poll()
+      release = leases.poll()
     }
     n
   }
 
   /** Outstanding (not yet drained) lease count — test hook. */
-  def outstanding: Int = leases.size + rddLeases.size
+  def outstanding: Int = leases.size
 }

@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** Session-keyed memoization that does not outlive its session.
   *
@@ -12,13 +13,15 @@ import scala.collection.concurrent.TrieMap
   * tables, the IVF quantizer fit, BPE merges, the processed ETL tables)
   * per (session, input-dir). A plain `TrieMap[(SparkSession, …), …]`
   * pins every session it has ever seen — plans, encoders, the session
-  * state — for the life of the JVM: in a long-lived multi-session
-  * deployment (a Spark Connect server, a notebook gateway) that is an
-  * unbounded leak of stopped sessions.
+  * state — for the life of the JVM.
   *
-  * Entries are released two ways, belt and braces:
+  * One lifetime rule: an entry lives until its session's context stops.
+  * Nothing evicts it before then, so a frame handed out (a
+  * `localCheckpoint` snapshot included, whose blocks cannot be
+  * recomputed) stays readable for the whole session. Entries are released
+  * two ways:
   *   - an application-end listener (registered once per SparkContext, on
-  *     first insert) sweeps every registered memo when the context stops,
+  *     first access) sweeps every registered memo when the context stops,
   *     so release is prompt even if no memo is touched again;
   *   - every access sweeps entries whose owning session's context has
   *     stopped, covering contexts that died without the listener firing.
@@ -26,101 +29,30 @@ import scala.collection.concurrent.TrieMap
   * blocks die with their context; dropping the map entry is what lets
   * the session object itself be collected.
   *
-  * CONTEXT-CHURN FALLBACK: eviction above is keyed on CONTEXT stop.
-  * Sessions that churn over one long-lived shared SparkContext
-  * (`newSession()` clones on a Spark Connect gateway) are never seen as
-  * stopped — Spark exposes no session-close signal to hook. A
-  * bounded-size cap (`maxEntries`, default 64) converts that from
-  * "unbounded for context lifetime" to "bounded, recomputable": beyond
-  * the cap an entry is dropped and its value released through `onEvict`
-  * (by default, any `Dataset` in the value — including inside tuples —
-  * is released, `cache()`- and `localCheckpoint()`-backed alike, so a
-  * leased build frees its storage blocks; an evicted entry simply
-  * rebuilds on next access). Victim choice, in order:
-  *   1. entries owned by a session OTHER than the inserting caller's —
-  *      on the gateway topology this cap exists for, those are the dead
-  *      `newSession()` clones, while the caller's own entries may be
-  *      mid-consumption (the default onEvict drains localCheckpoint
-  *      blocks, which are NOT recomputable for an in-flight reader);
-  *   2. least-recently-USED within that pool: every memo HIT bumps the
-  *      entry's sequence, so a hot snapshot read on every query cannot
-  *      be the victim merely because it was built first — under churn
-  *      the first-built entry is typically the one entry still in use.
-  * The context-stop sweep remains the primary path.
+  * KNOWN LIMIT: a `newSession()` clone over a live context keeps its
+  * entries until that context stops (Spark has no session-close signal);
+  * no entry point here creates one, each builds one session in `Sessions`.
   */
-final class SessionMemo[K, V](
-    maxEntries: Int = 64,
-    onEvict: V => Unit = SessionMemo.releaseValue _) {
-  require(maxEntries >= 1, "maxEntries must be positive")
-  private val m = TrieMap.empty[(SparkSession, K), (Long, V)]
-  private val insertSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+final class SessionMemo[K, V] {
+  private val m = TrieMap.empty[(SparkSession, K), V]
   private val buildLock = new Object
   SessionMemos.register(this)
 
   /** Get-or-build, keyed by session; the build is ATOMIC per memo.
-    * TrieMap.getOrElseUpdate alone evaluates `build` optimistically
-    * outside any lock, so two threads racing a cold key would both run
-    * the (expensive, possibly eagerly-checkpointing) build and the
-    * loser's blocks would linger unreferenced for the session. The lock
-    * is per-MEMO, not per-key — coarse, but builds are rare one-time
-    * corpus-snapshot materializations and the hot path (memo hit) never
-    * takes it. */
+    * TrieMap.getOrElseUpdate alone evaluates `build` outside any lock, so
+    * two threads racing a cold key would both run the (expensive, possibly
+    * eagerly-checkpointing) build. The lock is per-MEMO: builds are rare
+    * one-time snapshot materializations, and a memo hit never takes it. */
   def getOrElseUpdate(s: SparkSession, k: K)(build: => V): V = {
     SessionMemos.watch(s)
     evictStopped()
-    m.get((s, k)) match {
-      case Some(hit @ (_, v)) => touch((s, k), hit); v
-      case None => buildLock.synchronized {
-        m.get((s, k)) match {
-          case Some(hit @ (_, v)) => touch((s, k), hit); v
-          case None =>
-            val v = build
-            m.put((s, k), (insertSeq.incrementAndGet(), v))
-            // size-cap fallback: evict least-recently-USED (reads bump
-            // the sequence), preferring entries whose session is NOT the
-            // inserting caller's — see the class scaladoc. The
-            // just-inserted key carries the max sequence so it can never
-            // be the victim (maxEntries >= 1). O(n) scan per insert —
-            // builds are rare corpus-snapshot materializations, n <= cap.
-            // Scan a SNAPSHOT: evictStopped runs outside this lock on
-            // every access, so a bare minBy could race a concurrent
-            // sweep onto an emptied map.
-            var shrinking = m.size > maxEntries
-            while (shrinking) {
-              val snap = m.readOnlySnapshot().toSeq
-              val pool = {
-                val others = snap.filter { case ((sess, _), _) => sess ne s }
-                if (others.nonEmpty) others else snap
-              }
-              pool.sortBy(_._2._1).headOption match {
-                case Some((key, _)) if m.size > maxEntries =>
-                  m.remove(key).foreach { case (_, ov) =>
-                    try onEvict(ov)
-                    catch { case scala.util.control.NonFatal(_) => () }
-                  }
-                  shrinking = m.size > maxEntries
-                case _ => shrinking = false
-              }
-            }
-            v
-        }
-      }
-    }
+    m.getOrElse((s, k), buildLock.synchronized {
+      m.getOrElse((s, k), { val v = build; m.put((s, k), v); v })
+    })
   }
 
-  /** Best-effort LRU bump on a memo hit: CAS against the exact observed
-    * (sequence, value) pair so a concurrent evict-then-rebuild can never
-    * be clobbered with the stale value (an unconditional replace after a
-    * rebuild raced in would silently regress the entry). A lost race is
-    * fine — the touch is an eviction-order hint, not state. */
-  private def touch(key: (SparkSession, K), old: (Long, V)): Unit = {
-    m.replace(key, old, (insertSeq.incrementAndGet(), old._2))
-    ()
-  }
-
-  /** Context-stop sweep. No `onEvict` here: a stopped context's
-    * cached/checkpointed blocks are already gone with the context, and
-    * calling into its Datasets would throw. */
+  /** Context-stop sweep: a stopped context's cached/checkpointed blocks
+    * are already gone with the context, so only the entry is dropped. */
   private[ops] def evictStopped(): Int = {
     var n = 0
     m.keySet.foreach { key =>
@@ -131,57 +63,6 @@ final class SessionMemo[K, V](
 
   /** Live entry count for `s` — test hook. */
   def entriesFor(s: SparkSession): Int = m.count { case ((sess, _), _) => sess eq s }
-}
-
-object SessionMemo {
-  /** Default `onEvict`: release every `Dataset` reachable through the
-    * value, including components of tuple-valued memos (the
-    * `(metadata, DataFrame)` shape) — a size-cap eviction of a leased
-    * cache build must release its storage blocks, not just the map
-    * entry. Two release paths per Dataset, because the memo classes use
-    * both persistence forms:
-    *   - `Dataset.unpersist()` clears a `cache()`-backed value through
-    *     the CacheManager;
-    *   - a `localCheckpoint()`-backed value (the LSH candidate / simhash
-    *     snapshot shape) is INVISIBLE to `Dataset.unpersist` — the
-    *     blocks belong to the `LogicalRDD` the checkpointed plan wraps
-    *     (the `Caches.leaseRdd` lesson) — so the backing RDDs are
-    *     unpersisted directly off the analyzed plan. A drained
-    *     checkpoint cannot be recomputed, which is exactly the eviction
-    *     contract: the entry is GONE and the next access rebuilds from
-    *     scratch; an in-flight consumer of a just-evicted build is the
-    *     residual hazard the context-churn cap accepts, and the victim
-    *     policy minimizes it (other-session entries first — the dead
-    *     `newSession()` clones — then least-recently-used, so a build
-    *     handed out on the current access holds the max sequence and
-    *     cannot be drained by the insert that follows it).
-    * Non-Dataset values need no release.
-    *
-    * Traversal is an explicit WORKLIST, not recursion: `::` cons cells
-    * are Product2, so a memo value containing a long `List` (the
-    * `(Seq[merges], DataFrame)` shape) would otherwise recurse one
-    * frame per element and StackOverflow on eviction. Collections are
-    * enumerated via their iterator (one worklist entry per ELEMENT, at
-    * nesting depth not length); the Product branch then only sees
-    * non-collection products (tuples, case classes). */
-  private[ops] def releaseValue(v: Any): Unit = {
-    val work = scala.collection.mutable.ArrayDeque[Any](v)
-    while (work.nonEmpty) {
-      work.removeHead() match {
-        case ds: org.apache.spark.sql.Dataset[_] =>
-          ds.unpersist()
-          ds.queryExecution.analyzed.foreach {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              try lr.rdd.unpersist(false) catch { case _: Throwable => () }
-            case _ => ()
-          }
-        case it: Iterable[_] => it.iterator.foreach(work.append)
-        case a: Array[_] => a.foreach(work.append)
-        case p: Product => p.productIterator.foreach(work.append)
-        case _ => ()
-      }
-    }
-  }
 }
 
 /** Registry of every [[SessionMemo]] in the JVM, so one context-stop
@@ -201,18 +82,20 @@ object SessionMemos {
     ()
   }
 
-  /** Registered (not-yet-collected) memo count — test hook. */
-  private[ops] def registrySize: Int = {
+  /** The memos not yet collected; prunes the cleared references. */
+  private def live: Seq[SessionMemo[_, _]] = {
     memos.removeIf(r => r.get == null)
-    memos.size
+    memos.asScala.toSeq.flatMap(r => Option(r.get))
   }
+
+  /** Registered (not-yet-collected) memo count — test hook. */
+  private[ops] def registrySize: Int = live.size
 
   /** Ensure exactly one application-end listener per SparkContext. Also
     * prunes `watched` keys whose context has stopped: if the listener
     * never fired (listener bus dropped the event or was stopped before
     * it drained), the sweep-on-access path reclaims the memo ENTRIES but
-    * this map would otherwise pin one stopped SparkContext per churn —
-    * the leak class this file exists to close. */
+    * this map would otherwise pin every stopped SparkContext it saw. */
   private[ops] def watch(s: SparkSession): Unit = {
     watched.keySet.foreach(c => if (c.isStopped) watched.remove(c))
     val sc = s.sparkContext
@@ -229,15 +112,8 @@ object SessionMemos {
 
   /** Drop every memo entry owned by a stopped session; returns how many
     * were released. */
-  def sweep(): Int = {
-    import scala.jdk.CollectionConverters._
-    memos.removeIf(r => r.get == null)
-    memos.asScala.flatMap(r => Option(r.get)).map(_.evictStopped()).sum
-  }
+  def sweep(): Int = live.map(_.evictStopped()).sum
 
   /** Total live entries across all memos for `s` — test hook. */
-  def entriesFor(s: SparkSession): Int = {
-    import scala.jdk.CollectionConverters._
-    memos.asScala.flatMap(r => Option(r.get)).map(_.entriesFor(s)).sum
-  }
+  def entriesFor(s: SparkSession): Int = live.map(_.entriesFor(s)).sum
 }

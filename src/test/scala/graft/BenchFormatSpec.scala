@@ -15,11 +15,12 @@ class BenchFormatSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
 
   /** A row whose measured run took `sec` (a quarter building, a quarter
-    * planning, half executing) in 2 jobs of 8 tasks, or that failed after
-    * 0.5 s when `sec` is −1. */
+    * planning, half executing; the driver thread busy for a fifth of each
+    * phase) in 2 jobs of 8 tasks, or that failed after 0.5 s when `sec`
+    * is −1. */
   private def row(name: String, sec: Double, gcMs: Long, cpuMs: Long, shuffleBytes: Long) = {
     val t = if (sec < 0) 0.5 else sec
-    Bench.Row(name, Meter.Run(t / 4, t / 4, t / 2,
+    Bench.Row(name, Meter.Run(t / 4, t / 4, t / 2, t / 20, t / 20, t / 10,
       Meter.Counts(jobs = 2, tasks = 8, cpuNs = cpuMs * 1000000L, gcMs = gcMs,
         shuffleWriteBytes = shuffleBytes),
       Nil, if (sec < 0) Some(new RuntimeException("boom")) else None))
@@ -51,6 +52,9 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(node.get("plan_sec").get("q_beta").asDouble() == 35.900000001 / 4)
     assert(node.get("exec_sec").get("q_beta").asDouble() == 35.900000001 / 2)
     assert(node.get("exec_sec").get("q_failed").asDouble() == 0.25)
+    // driver-thread CPU: the sum of the three phases' CPU
+    assert(math.abs(node.get("driver_cpu_sec").get("q_beta").asDouble() - 35.900000001 / 5) < 1e-9)
+    assert(math.abs(node.get("driver_cpu_sec").get("q_failed").asDouble() - 0.1) < 1e-9)
     assert(node.get("jobs").get("q_alpha").asLong() == 2L)
     assert(node.get("tasks").get("q_alpha").asLong() == 8L)
     // task GC and task CPU, renamed from the process figures of r10–r13

@@ -126,4 +126,16 @@ class MeterSpec extends SparkSpec {
       s"measured ${run.counts} vs noop write $write")
     assert(run.jobs.size.toLong === run.counts.jobs)
   }
+
+  test("measure: each phase's driver CPU lies between 0 and its wall time") {
+    noopWrite(shuffleJoin(spark)) // warm
+    val run = Meter.measure(spark)(shuffleJoin(spark))
+    assert(run.failure.isEmpty, run.failure)
+    // the thread's CPU clock and the wall clock are read back to back at
+    // each mark; 10 ms absorbs the skew between the two reads
+    for ((phase, cpu, wall) <- Seq(("build", run.buildCpu, run.build),
+        ("plan", run.planCpu, run.plan), ("exec", run.execCpu, run.exec)))
+      assert(cpu >= 0 && cpu <= wall + 0.010, s"$phase: cpu $cpu s, wall $wall s")
+    assert(run.driverCpu > 0, run)
+  }
 }

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the expensive build — with the eager localCheckpoint memos
   * (minhashCandShared) the loser's blocks would linger unreferenced for
   * the session. The memo must run the build exactly once per key no
-  * matter how many threads race it. The builds here are plain Ints —
-  * the property under test is the locking; SessionMemoSpec owns the
-  * Spark lifecycle side. */
+  * matter how many threads race it, and must keep what it built for the
+  * whole session. SessionMemoSpec owns the context-stop release. */
 class SessionMemoBuildSpec extends graft.SparkSpec {
 
   test("racing threads on a cold key run the build exactly once") {
@@ -46,110 +45,23 @@ class SessionMemoBuildSpec extends graft.SparkSpec {
     assert(memo.entriesFor(s) === 2)
   }
 
-  test("size cap evicts oldest-inserted and releases the value via onEvict") {
-    // the sessions-churn fallback: a gateway cloning newSession() forever
-    // never trips the context-stop sweep, so the memo must bound itself —
-    // evict-oldest beyond maxEntries, releasing each victim exactly once
-    val evicted = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val memo = new SessionMemo[Int, Int](maxEntries = 8, onEvict = evicted += _)
+  test("a memo keeps every entry for its session: 70 localCheckpoint frames stay readable") {
+    // one lifetime rule: nothing evicts an entry before its context stops,
+    // so a checkpointed frame handed out early (whose blocks cannot be
+    // recomputed) still reads after many later inserts, and its key hits
+    val memo = new SessionMemo[Int, org.apache.spark.sql.DataFrame]
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val s = spark
-    (1 to 20).foreach(i => memo.getOrElseUpdate(s, i)(i * 10))
-    assert(memo.entriesFor(s) === 8, "live entries must stay at the cap")
-    assert(evicted.toSeq === (1 to 12).map(_ * 10),
-      "victims must be the oldest inserts, released in insertion order")
-    // the survivors are the newest 8, still memo hits (no rebuild)
-    (13 to 20).foreach(i =>
-      assert(memo.getOrElseUpdate(s, i)(-1) === i * 10, s"key $i must survive"))
-    // an evicted key rebuilds (recomputable, not lost state)
-    assert(memo.getOrElseUpdate(s, 1)(111) === 111)
-  }
-
-  test("touch-on-read: a hot entry survives churn while cold ones are evicted (LRU, not FIFO)") {
-    // the r10-judge finding: FIFO eviction made the FIRST-built entry the
-    // first victim under newSession() churn — precisely the hot leased
-    // snapshot every query reads. Reads now bump the sequence, so a hot
-    // key inserted FIRST must survive 64+ churn inserts.
-    val memo = new SessionMemo[Int, Int](maxEntries = 4, onEvict = _ => ())
-    val s = spark
-    memo.getOrElseUpdate(s, 0)(42) // the hot entry, oldest INSERT
-    (1 to 70).foreach { i =>
-      memo.getOrElseUpdate(s, i)(i)
-      assert(memo.getOrElseUpdate(s, 0)(-1) === 42,
-        s"hot entry must survive churn insert $i (was it evicted as 'oldest'?)")
+    def frame(i: Int) = memo.getOrElseUpdate(s, i) {
+      builds.incrementAndGet()
+      s.range(0, i, 1, 1).toDF("id").localCheckpoint()
     }
-    // and the cold churn keys really were evicted around it
-    assert(memo.entriesFor(s) === 4)
-    assert(memo.getOrElseUpdate(s, 1)(111) === 111, "cold key must have been evicted")
-  }
-
-  test("size-cap victim prefers another session's entry over the caller's older one") {
-    // gateway shape: the caller's own (possibly mid-consumption) build
-    // must not be drained while a dead newSession() clone's entry exists —
-    // even when the caller's entry is the least-recently-used one
-    val evicted = scala.collection.mutable.ArrayBuffer.empty[String]
-    val memo = new SessionMemo[Int, String](maxEntries = 2, onEvict = evicted += _)
-    val s = spark
-    val clone = s.newSession()
-    memo.getOrElseUpdate(s, 1)("mine-old") // oldest overall
-    memo.getOrElseUpdate(clone, 2)("clone")
-    memo.getOrElseUpdate(s, 3)("mine-new") // over cap: victim must be the clone's
-    assert(evicted.toSeq === Seq("clone"),
-      "victim must be the other session's entry, not the caller's older one")
-    // fall back to least-recently-used overall only when every remaining
-    // entry is the caller's — "mine-old" being the victim NOW also proves
-    // it survived the first eviction
-    memo.getOrElseUpdate(s, 4)("mine-4")
-    assert(evicted.toSeq === Seq("clone", "mine-old"))
-    assert(memo.getOrElseUpdate(s, 3)("rebuilt") === "mine-new")
-  }
-
-  test("default onEvict releases a value containing a long List without StackOverflow") {
-    // :: cons cells are Product2 — the recursive Product walk overflowed
-    // one frame per element; the worklist form must handle a list far
-    // deeper than any thread stack and still reach the Dataset inside
-    val s = spark
-    val memo = new SessionMemo[Int, (List[Int], org.apache.spark.sql.DataFrame)](maxEntries = 1)
-    val df = s.range(10).toDF("id").cache()
-    df.count()
-    memo.getOrElseUpdate(s, 1)((List.fill(200000)(7), df))
-    memo.getOrElseUpdate(s, 2)((Nil, s.range(1).toDF("id"))) // evicts key 1
-    assert(df.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
-      "the Dataset beside the long List must still be unpersisted")
-  }
-
-  test("default onEvict unpersists Dataset values, including inside tuples") {
-    val s = spark
-    val memo = new SessionMemo[Int, (String, org.apache.spark.sql.DataFrame)](maxEntries = 1)
-    val df1 = s.range(10).toDF("id").cache()
-    df1.count() // materialize the blocks
-    memo.getOrElseUpdate(s, 1)(("meta", df1))
-    assert(df1.storageLevel.useMemory, "leased build must be cached before eviction")
-    val df2 = s.range(5).toDF("id").cache()
-    memo.getOrElseUpdate(s, 2)(("meta", df2)) // evicts key 1
-    assert(memo.entriesFor(s) === 1)
-    assert(df1.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
-      "evicted tuple's Dataset must be unpersisted by the default onEvict")
-    df2.unpersist()
-  }
-
-  test("default onEvict releases localCheckpoint-backed values (blocks Dataset.unpersist can't reach)") {
-    // the production memo shape (TextDedup's LSH candidate snapshot) is a
-    // localCheckpoint, whose blocks belong to the LogicalRDD the plan
-    // wraps — Dataset.unpersist alone would drop the map entry but leak
-    // the blocks, defeating the churn cap for exactly the heaviest class
-    val s = spark
-    def persistedRddIds: Set[Int] =
-      s.sparkContext.getPersistentRDDs.keySet.toSet
-    val before = persistedRddIds
-    val memo = new SessionMemo[Int, org.apache.spark.sql.DataFrame](maxEntries = 1)
-    val ck = s.range(20).toDF("id").localCheckpoint()
-    val ckRdds = persistedRddIds -- before
-    assert(ckRdds.nonEmpty, "localCheckpoint must persist backing RDD blocks")
-    memo.getOrElseUpdate(s, 1)(ck)
-    memo.getOrElseUpdate(s, 2)(s.range(1).toDF("id")) // evicts key 1
-    assert(memo.entriesFor(s) === 1)
-    val after = persistedRddIds
-    assert(ckRdds.forall(id => !after.contains(id)),
-      "evicted localCheckpoint's backing RDD blocks must be released")
+    val handedOut = (1 to 70).map(frame)
+    handedOut.zipWithIndex.foreach { case (df, i) =>
+      assert(df.count() === i + 1, s"frame ${i + 1} must still count its rows")
+    }
+    assert(frame(1) eq handedOut.head, "a hit on key 1 must return the first frame")
+    assert(builds.get() === 70, "a memo hit must not rebuild")
+    assert(memo.entriesFor(s) === 70)
   }
 }
