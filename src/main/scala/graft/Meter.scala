@@ -157,7 +157,7 @@ object Meter {
     val counts = meter.settled(maxSpins = if (failure.isEmpty) 40 else 1000) - c0
     graft.ops.Caches.drain()
     def sec(i: Int) = (marks(i + 1)._1 - marks(i)._1) / 1e9
-    def cpu(i: Int) = math.max(0L, marks(i + 1)._2 - marks(i)._2) / 1e9
+    def cpu(i: Int) = (marks(i + 1)._2 - marks(i)._2) / 1e9
     Run(sec(0), sec(1), sec(2), cpu(0), cpu(1), cpu(2), counts,
       meter.jobsSince(marks.head._1), failure)
   }
