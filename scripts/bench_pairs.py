@@ -21,7 +21,9 @@ relative move of the median, the pairs the change won (by the metric's
 "better" direction), whether the median gap exceeds the parent's
 interquartile distance, and, for a metric with a `bound`, whether the
 change's median is worse than the parent's by more than that bound (the
-rule by which the benchmark rejects a change). A run that exits non-zero
+rule by which the benchmark rejects a change). Before that table it
+prints each side's share of failed operations, and whether the change's
+share is larger than the parent's (the benchmark's other rejection rule). A run that exits non-zero
 is reported as it happens, with its side, seed, exit code and the end of
 its stderr, and counted in the summary. The temporary directory is
 removed at the end.
@@ -149,12 +151,18 @@ def main():
     print(f"{args.workload}: parent {shas['parent'][:10]} vs change {shas['change'][:10]}, "
           f"{len(runs)} pairs, seeds {' '.join(map(str, args.seeds))}, {seconds:g} s a run"
           f"{', traced' if args.trace else ''}")
+    shares = {}
     for side, idx in (("parent", 0), ("change", 1)):
         rs = [r[idx] for r in runs]
         exited = [f"seed {seed} (exit {r['exit']})" for seed, r in zip(args.seeds, rs) if r["exit"] != 0]
+        failed, attempted = sum(r['failed'] for r in rs), sum(r['attempted'] for r in rs)
+        shares[side] = failed / attempted if attempted else 0.0
         print(f"{side}: {sum(r['ok'] for r in rs)}/{len(rs)} runs correct, "
-              f"{sum(r['failed'] for r in rs)} of {sum(r['attempted'] for r in rs)} operations failed, "
+              f"{failed} of {attempted} operations failed, "
               f"{len(exited)} exited non-zero" + (f": {', '.join(exited)}" if exited else ""))
+    # the benchmark also rejects a change whose share of failed operations is larger
+    print(f"failed share: parent {shares['parent']:.3%}, change {shares['change']:.3%}; "
+          f"change larger: {shares['change'] > shares['parent']}")
     summarise(specs, runs)
 
 

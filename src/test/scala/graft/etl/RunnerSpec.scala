@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.max
 
 /** Full orchestration: staged workbooks in, modelling tables out
@@ -533,5 +534,172 @@ class RunnerSpec extends SparkSpec {
       assert(stamp("ADULT_4").after(adultBefore), fault)
       assert(rows("ADULT_4").size === 4, fault)
     }
+  }
+
+  // ---- repeated view reads are served from the session's result memo --------
+
+  /** The ten views, each with the table it reads. */
+  private val views: Seq[(String, String, DataFrame => DataFrame)] = Seq(
+    ("indexBestCa", "INDEX", Views.indexBestCa),
+    ("reportingIndex", "INDEX", Views.reportingIndex),
+    ("processedAdult4", "ADULT_4", Views.processedAdult4),
+    ("publishedAdult4", "ADULT_4", Views.publishedAdult4),
+    ("cancerAllianceComparison", "ADULT_4", Views.cancerAllianceComparison),
+    ("publishedCancerAllianceComparison", "ADULT_4", Views.publishedCancerAllianceComparison),
+    ("benchmarkingRank", "ADULT_4", (a: DataFrame) => Views.benchmarkingRank(a)),
+    ("publishedBenchmarkingRank", "ADULT_4", Views.publishedBenchmarkingRank),
+    ("benchmarkingStandards", "ADULT_4", Views.benchmarkingStandards),
+    ("publishedBenchmarkingStandards", "ADULT_4", Views.publishedBenchmarkingStandards))
+
+  /** A published table as a dashboard reads it: the served input shape. */
+  private def published(out: String, table: String) = spark.read.parquet(s"$out/$table").drop("_TIMESTAMP")
+
+  /** A view's schema and rows as a multiset. */
+  private def result(df: DataFrame) = (df.schema, df.collect().map(_.toString).sorted.toSeq)
+
+  /** Each view's result over a published table the memo does not serve
+    * (a filtered read), computed as a plain frame. */
+  private def computed(out: String) = views.map { case (name, table, fn) =>
+    name -> result(fn(published(out, table).filter(org.apache.spark.sql.functions.lit(true))))
+  }.toMap
+
+  /** Each view's result as served, with the jobs its read ran; the input
+    * frame is built first, so its schema job is not counted. */
+  private def served(out: String) = views.map { case (name, table, fn) =>
+    val input = published(out, table)
+    val (r, jobs) = jobsDuring(result(fn(input)))
+    name -> (r, jobs)
+  }.toMap
+
+  /** `body` and the number of jobs that started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The survival figures of a sheet's rows raised by `by`, so every view's
+    * result changes. */
+  private def raised(rows: Seq[Seq[String]], cols: Seq[Int], by: Double) =
+    rows.map(r => cols.foldLeft(r)((r, c) => if (r(c).isEmpty) r else r.updated(c, (r(c).toDouble + by).toString)))
+
+  private def raisedStaging(by: Double) =
+    csvStaging(raised(indexRows, Seq(10, 11, 12), by), raised(adultRows, Seq(8, 9), by))
+
+  test("views: a served read equals the computed view for all ten, CSV and xlsx; a second read runs no job") {
+    for ((format, staging) <- Seq("csv" -> csvStaging(), "xlsx" -> xlsxStaging())) {
+      val out = Files.createTempDirectory("graft-tables-served").toString
+      Runner.run(spark, staging.toString, out)
+      val want = computed(out)
+      val first = served(out)
+      val second = served(out)
+      views.foreach { case (name, _, _) =>
+        assert(want(name)._2.nonEmpty, s"$format $name: the check needs rows")
+        assert(first(name)._1 === want(name), s"$format $name: first read")
+        assert(second(name)._1 === want(name), s"$format $name: second read")
+        assert(first(name)._2 > 0, s"$format $name: the first read computes")
+        assert(second(name)._2 === 0, s"$format $name: the second read ran jobs")
+      }
+    }
+  }
+
+  test("views: a republish with different values changes every served result to the new computed one") {
+    val out = Files.createTempDirectory("graft-tables-republish").toString
+    Runner.run(spark, csvStaging().toString, out)
+    val before = served(out)
+    Runner.run(spark, raisedStaging(1.5).toString, out)
+    val want = computed(out)
+    val after = served(out)
+    views.foreach { case (name, _, _) =>
+      assert(want(name) !== before(name)._1, s"$name: the republish must change the view")
+      assert(after(name)._1 === want(name), name)
+      assert(after(name)._2 > 0, s"$name: a republish recomputes")
+    }
+  }
+
+  test("views: a failed republish leaves the previous table and its served results readable and unchanged") {
+    val out = Files.createTempDirectory("graft-tables-failed-republish").toString
+    Runner.run(spark, xlsxStaging().toString, out)
+    val before = served(out)
+    val priorAdult = spark.read.parquet(s"$out/ADULT_4").collect().map(_.toString).sorted.toSeq
+    // the malformed Table 4 body of the spec above: INDEX publishes, ADULT_4 does not
+    val staging = Files.createTempDirectory("graft-staging-failed-republish")
+    indexWorkbook(staging, indexRows.take(1))
+    adultWorkbook(staging, body = sheetRows(adultRows.take(1), first = 11) +
+      """<row r="12"><c r="A12" t="s"><v>7</v></c></row>""")
+    intercept[org.apache.spark.SparkException](Runner.run(spark, staging.toString, out))
+    assert(spark.read.parquet(s"$out/ADULT_4").collect().map(_.toString).sorted.toSeq === priorAdult)
+    val want = computed(out)
+    val after = served(out)
+    views.foreach { case (name, table, _) =>
+      assert(after(name)._1 === want(name), name)
+      if (table == "ADULT_4") {
+        assert(after(name)._1 === before(name)._1, s"$name: ADULT_4 did not change")
+        assert(after(name)._2 === 0, s"$name: still served")
+      }
+    }
+  }
+
+  test("views: flipping spark.sql.ansi.enabled recomputes a served view; flipping back serves it again") {
+    val out = Files.createTempDirectory("graft-tables-ansi").toString
+    Runner.run(spark, csvStaging().toString, out)
+    val want = computed(out)
+    served(out)
+    val key = "spark.sql.ansi.enabled"
+    // restored as it was, unset when it was: a conf set to its default is another conf
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, (!spark.conf.get(key).toBoolean).toString)
+    val flipped = try served(out) finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val back = served(out)
+    views.foreach { case (name, _, _) =>
+      assert(flipped(name)._1 === want(name), name)
+      assert(flipped(name)._2 > 0, s"$name: another conf recomputes")
+      assert(back(name)._2 === 0, s"$name: the first conf's result is still served")
+    }
+  }
+
+  test("views: after 3 republishes the session keeps one served result per view and input") {
+    val out = Files.createTempDirectory("graft-tables-bounded").toString
+    val base = Views.servedEntries(spark)
+    Runner.run(spark, csvStaging().toString, out)
+    served(out)
+    assert(Views.servedEntries(spark) - base === views.size)
+    for (by <- Seq(1.0, 2.0, 3.0)) {
+      Runner.run(spark, raisedStaging(by).toString, out)
+      served(out)
+      assert(Views.servedEntries(spark) - base === views.size, s"after the republish raised by $by")
+    }
+  }
+
+  test("views: 8 threads reading the ten views right after a publish get the serial rows") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val out = Files.createTempDirectory("graft-tables-racing").toString
+    Runner.run(spark, xlsxStaging().toString, out)
+    val want = computed(out)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      // reader t starts at view t, so the first reads race different misses
+      val reads = (0 until 8).map { t =>
+        Future(views.indices.map { k =>
+          val (name, table, fn) = views((t + k) % views.size)
+          name -> result(fn(published(out, table)))
+        })
+      }
+      reads.flatMap(Await.result(_, 5.minutes)).foreach { case (name, got) =>
+        assert(got === want(name), name)
+      }
+    } finally pool.shutdown()
   }
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reporting-view semantics on hand-built modelling tables. */
@@ -77,19 +78,21 @@ class ViewsSpec extends SparkSpec {
     assert(out.select("JOIN_KEY").head().getString(0) === "BreastPersons12017-2021")
   }
 
+  /** Minimal INDEX frame: two non-core Cancer Alliances and the core NCL. */
+  private def index = Seq(
+    ("E56000014", "WY", false, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 10L, 80.0),
+    ("E56000015", "HNY", false, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 20L, 85.0),
+    ("E56000027", "NCL", true, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 30L, 70.0))
+    .toDF("AREA_CODE", "AREA_NAME", "IS_AREA_CORE", "CANCER_SITE", "GENDER",
+      "AGE_AT_DIAGNOSIS", "STANDARDISATION_TYPE", "YEAR_OF_DIAGNOSIS",
+      "YEARS_SINCE_DIAGNOSIS", "PATIENT_NUMBERS", "SURVIVAL_PERCENT")
+    .withColumn("LOWER_CI", lit(null).cast("double"))
+    .withColumn("UPPER_CI", lit(null).cast("double"))
+    .withColumn("PRECISION", lit(null).cast("double"))
+    .withColumn("STANDARD_ERROR", lit(null).cast("double"))
+    .withColumn("IS_DATA_SUBTITUTED", lit(false))
+
   test("indexBestCa: GROUP BY ALL over non-core with literal area and null fillers") {
-    val index = Seq(
-      ("E56000014", "WY", false, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 10L, 80.0),
-      ("E56000015", "HNY", false, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 20L, 85.0),
-      ("E56000027", "NCL", true, "Breast", "Persons", "All ages", "Age-standardised", 2018L, 1L, 30L, 70.0))
-      .toDF("AREA_CODE", "AREA_NAME", "IS_AREA_CORE", "CANCER_SITE", "GENDER",
-        "AGE_AT_DIAGNOSIS", "STANDARDISATION_TYPE", "YEAR_OF_DIAGNOSIS",
-        "YEARS_SINCE_DIAGNOSIS", "PATIENT_NUMBERS", "SURVIVAL_PERCENT")
-      .withColumn("LOWER_CI", lit(null).cast("double"))
-      .withColumn("UPPER_CI", lit(null).cast("double"))
-      .withColumn("PRECISION", lit(null).cast("double"))
-      .withColumn("STANDARD_ERROR", lit(null).cast("double"))
-      .withColumn("IS_DATA_SUBTITUTED", lit(false))
     val best = Views.indexBestCa(index)
     assert(best.count() === 1)
     val row = best.head()
@@ -100,5 +103,83 @@ class ViewsSpec extends SparkSpec {
     val rep = Views.reportingIndex(index)
     assert(rep.count() === 2) // NCL core row + best-CA row
     assert(rep.filter($"SORT_SITE" === 2 && $"SORT_GENDER" === 1 && $"SORT_AGE" === 1).count() === 2)
+  }
+
+  // ---- served reads ---------------------------------------------------------
+
+  /** `frame` published as a table is (without `_TIMESTAMP`), and a read of it
+    * as a dashboard makes one. */
+  private def publishedRead(frame: DataFrame): () => DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-views-table").resolve("T").toString
+    Sink.overwriteTable(frame, dir)
+    () => spark.read.parquet(dir).drop("_TIMESTAMP")
+  }
+
+  /** The nodes of `df`'s executed plan after a collect, query stages
+    * included. */
+  private def executedNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("benchmarkingRank over a published ADULT_4: two file scans and two shuffles, none reused") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // a filter the optimizer drops: the plan of an unserved read of the table
+    val read = publishedRead(adult4(withNcl = true))
+    val nodes = executedNodes(Views.benchmarkingRank(read().filter(lit(true))))
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) === 2)
+    assert(nodes.count(_.isInstanceOf[ShuffleQueryStageExec]) === 2)
+    assert(nodes.count(_.isInstanceOf[ReusedExchangeExec]) === 0)
+  }
+
+  test("served: each refused input computes its views; a published read whole is served") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    type View = DataFrame => DataFrame
+    val adult4Views = Seq[View](
+      Views.processedAdult4, Views.publishedAdult4, Views.cancerAllianceComparison,
+      Views.publishedCancerAllianceComparison, Views.benchmarkingRank(_),
+      Views.publishedBenchmarkingRank, Views.benchmarkingStandards, Views.publishedBenchmarkingStandards)
+    val indexViews = Seq[View](
+      Views.indexBestCa, Views.reportingIndex)
+    val adult = publishedRead(adult4(withNcl = true))
+    val indexTable = publishedRead(index)
+    def served(df: DataFrame) = df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    def scans[T: scala.reflect.ClassTag](df: DataFrame) =
+      executedNodes(df).exists(implicitly[scala.reflect.ClassTag[T]].runtimeClass.isInstance)
+    def refuses(what: String, input: () => DataFrame, fns: Seq[View],
+        reads: DataFrame => Boolean): Unit = fns.foreach { fn =>
+      val out = fn(input())
+      assert(!served(out), what)
+      assert(reads(out), s"$what: the view reads its input\n${out.queryExecution.executedPlan}")
+    }
+    val entries = Views.servedEntries(spark)
+    refuses("filtered", () => adult().filter($"AREA_CODE".isNotNull), adult4Views, scans[FileSourceScanExec])
+    refuses("filtered index", () => indexTable().filter(lit(true)), indexViews, scans[FileSourceScanExec])
+    refuses("in-memory", () => adult4(withNcl = true), adult4Views, scans[LocalTableScanExec])
+    refuses("in-memory index", () => index, indexViews, scans[LocalTableScanExec])
+    refuses("not read from files", () => spark.createDataFrame(adult().rdd, adult().schema), adult4Views,
+      scans[RDDScanExec])
+    // last: while it is cached, every read of the table reads the cache
+    val cached = adult().cache()
+    try refuses("cached", () => cached, adult4Views, scans[InMemoryTableScanExec])
+    finally cached.unpersist(blocking = true)
+    assert(Views.servedEntries(spark) === entries)
+    // the same table read whole is served, under the computed view's schema
+    for ((read, fns) <- Seq(adult -> adult4Views, indexTable -> indexViews); fn <- fns) {
+      val out = fn(read())
+      assert(served(out))
+      assert(out.schema === fn(read().filter(lit(true))).schema)
+    }
   }
 }
