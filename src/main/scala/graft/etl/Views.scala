@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.ops.SessionMemo
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
@@ -104,7 +104,7 @@ object Views {
     }
 
   /** Live served results for `s` — test hook. */
-  private[etl] def servedEntries(s: org.apache.spark.sql.SparkSession): Int = results.entriesFor(s)
+  private[etl] def servedEntries(s: SparkSession): Int = results.entriesFor(s)
 
   /** JOIN_KEY = CONCAT(site, gender, years, window) with Snowflake's
     * integer rendering (no decimal point) — reference
